@@ -21,9 +21,9 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the reference's hourly
     sentiment ETL (EP3) as one Spark plan -- validate -> lexicon kernel ->
     classify -> sentiment-distribution terms agg."""
-    from sentiment_analysis_data_pipeline_spark.queries import q_sentiment_terms_agg
+    from sentiment_analysis_data_pipeline_spark.queries import REGISTRY
 
-    return q_sentiment_terms_agg(spark, "/root/testdata/sf0.001")
+    return REGISTRY["sentiment_terms_agg"][0](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -337,6 +337,7 @@ INDEXED_QUERIES = {
     "cosine_threshold_sweep",
     "dbscan_labels",
     "dedup_clusters",
+    "dedup_evidence_clusters",
     "dedup_graph_degrees",
     "dedup_keep",
     "dedup_savings",

@@ -305,6 +305,9 @@ def _kernel_join_sql(d: str, base: str, id_col: str, final: str, suffix: str = "
 
 
 def _flagship_sql(d: str) -> str:
+    """Flagship EP3: validate -> kernel -> classify -> terms agg (A4/O3).
+    (The equivalent DataFrame-API pipeline lives in plans/pipeline.py and is
+    exercised by tests; the SQL template keeps driver parity structural.)"""
     base = f"SELECT doc_id, {TEXT} AS text FROM documents WHERE trim({TEXT}) <> ''"
     scored = _kernel_join_sql(d, base, "doc_id", "SELECT overall AS key")
     return f"""
@@ -314,15 +317,8 @@ def _flagship_sql(d: str) -> str:
     """
 
 
-def q_sentiment_terms_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship EP3: validate -> kernel -> classify -> terms agg (A4/O3).
-    (The equivalent DataFrame-API pipeline lives in plans/pipeline.py and is
-    exercised by tests; the SQL template keeps driver parity structural.)"""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_flagship_sql(D.SPARK))
-
-
 def _sentiment_scores_sql(d: str) -> str:
+    """U1+U2+F8-F11 per document, full corpus."""
     return _kernel_join_sql(
         d,
         f"SELECT doc_id, {TEXT} AS text FROM documents",
@@ -331,18 +327,13 @@ def _sentiment_scores_sql(d: str) -> str:
     )
 
 
-def q_sentiment_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U1+U2+F8-F11 per document, full corpus."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_sentiment_scores_sql(D.SPARK))
-
-
 # =========================================================================
 # §2.2 -- validation predicates (P1/P2/P7) and sanitize (P11/F4)
 # =========================================================================
 
 
 def _validate_sql(d: str) -> str:
+    """P1+P2+P7: required fields, URL regex, non-empty text."""
     url = DOC_URL_SQL[d]
     # corrupt every 17th URL deterministically to exercise the P2 reject path
     curl = f"case when doc_id % 17 = 0 then 'not a url' else {url} end"
@@ -358,22 +349,11 @@ def _validate_sql(d: str) -> str:
     """
 
 
-def q_validate_articles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1+P2+P7: required fields, URL regex, non-empty text."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_validate_sql(D.SPARK))
-
-
 def _sanitize_sql(d: str) -> str:
-    clean = TX.sanitize(d, "concat('  ', coalesce(text, ''), '  ')")
-    return f"SELECT doc_id, {clean} AS clean_text FROM documents"
-
-
-def q_sanitize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P11/F4: NUL-strip + trim (NULs synthesized via padding -- parquet text
     contains none)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_sanitize_sql(D.SPARK))
+    clean = TX.sanitize(d, "concat('  ', coalesce(text, ''), '  ')")
+    return f"SELECT doc_id, {clean} AS clean_text FROM documents"
 
 
 # =========================================================================
@@ -435,6 +415,8 @@ def q_top_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pricing_summary_sql(d: str) -> str:
+    """TPC-H Q1 shape: the engine's general groupBy/agg surface (partial
+    aggregation map-side; one shuffle of group rows only)."""
     return f"""
         SELECT l_returnflag, l_linestatus,
                {_dsum("l_quantity", "sum_qty")},
@@ -449,14 +431,9 @@ def _pricing_summary_sql(d: str) -> str:
     """
 
 
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: the engine's general groupBy/agg surface (partial
-    aggregation map-side; one shuffle of group rows only)."""
-    _view(spark, sf_dir, "lineitem")
-    return spark.sql(_pricing_summary_sql(D.SPARK))
-
-
 def _freshness_sql(d: str) -> str:
+    """A1/P5/T6: freshness monitor -- rows in the trailing 2 h window
+    (anchored at max(ts) for determinism on a static corpus)."""
     ts = _ts_us(d)
     return f"""
         SELECT cast(count(*) as bigint) AS recent_count
@@ -465,14 +442,9 @@ def _freshness_sql(d: str) -> str:
     """
 
 
-def q_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1/P5/T6: freshness monitor -- rows in the trailing 2 h window
-    (anchored at max(ts) for determinism on a static corpus)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_freshness_sql(D.SPARK))
-
-
 def _quality_rate_sql(d: str) -> str:
+    """A2/P6/T6: single-pass total/missing/rate (reference does two Mongo
+    count round-trips, dags/data_quality.py:50-67)."""
     return f"""
         WITH agg AS (
             SELECT cast(count(*) as bigint) AS total,
@@ -487,14 +459,9 @@ def _quality_rate_sql(d: str) -> str:
     """
 
 
-def q_quality_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2/P6/T6: single-pass total/missing/rate (reference does two Mongo
-    count round-trips, dags/data_quality.py:50-67)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_quality_rate_sql(D.SPARK))
-
-
 def _term_query_sql(d: str) -> str:
+    """Q2/O1/O2: term filter + sort desc + limit -> TakeOrderedAndProject
+    (top-k without a global sort)."""
     return _kernel_join_sql(
         d,
         f"SELECT doc_id, n_chars, {TEXT} AS text FROM documents",
@@ -504,19 +471,14 @@ def _term_query_sql(d: str) -> str:
     )
 
 
-def q_term_query_positive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2/O1/O2: term filter + sort desc + limit -> TakeOrderedAndProject
-    (top-k without a global sort)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_term_query_sql(D.SPARK))
-
-
 # =========================================================================
 # §2.7 -- scalar function suite (F1-F6, F12)
 # =========================================================================
 
 
 def _scalar_suite_sql(d: str) -> str:
+    """F1 (assembly), F2 (truncation), F3 (md5 id), F5 (key construction),
+    F12 (word/char/has_content stats) in one projection."""
     url = DOC_URL_SQL[d]
     title = f"substring({TEXT}, 1, 64)"
     assembled = TX.assemble_text(d, title, "'synthetic'", TEXT)
@@ -531,13 +493,6 @@ def _scalar_suite_sql(d: str) -> str:
                {TX.has_content(d, 'text')} AS has_content
         FROM documents
     """
-
-
-def q_scalar_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1 (assembly), F2 (truncation), F3 (md5 id), F5 (key construction),
-    F12 (word/char/has_content stats) in one projection."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_scalar_suite_sql(D.SPARK))
 
 
 # =========================================================================
@@ -579,6 +534,8 @@ HOUR_US = 3_600_000_000
 
 
 def _hourly_window_sql(d: str) -> str:
+    """T3 batch analog: tumbling 1-h window counts + sums (bucket = epoch
+    hour index -- integer math, engine-neutral)."""
     ts = _ts_us(d)
     bucket = D.int_div(d, ts, str(HOUR_US))
     return f"""
@@ -590,14 +547,9 @@ def _hourly_window_sql(d: str) -> str:
     """
 
 
-def q_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T3 batch analog: tumbling 1-h window counts + sums (bucket = epoch
-    hour index -- integer math, engine-neutral)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_hourly_window_sql(D.SPARK))
-
-
 def _json_extract_sql(d: str) -> str:
+    """JSON scalar surface (kafka envelope parsing analog -- SURVEY.md §2.7
+    note on to_json/from_json)."""
     k = (
         "cast(get_json_object(props, '$.k') as bigint)"
         if d == D.SPARK
@@ -612,14 +564,9 @@ def _json_extract_sql(d: str) -> str:
     """
 
 
-def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON scalar surface (kafka envelope parsing analog -- SURVEY.md §2.7
-    note on to_json/from_json)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_json_extract_sql(D.SPARK))
-
-
 def _sessions_sql(d: str) -> str:
+    """Sessionization (30-min inactivity gap): lag + running-sum windows over
+    one (user) partitioning -- a single shuffle."""
     ts = _ts_us(d)
     gap_us = 30 * 60 * 1_000_000
     return f"""
@@ -636,14 +583,8 @@ def _sessions_sql(d: str) -> str:
     """
 
 
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization (30-min inactivity gap): lag + running-sum windows over
-    one (user) partitioning -- a single shuffle."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_sessions_sql(D.SPARK))
-
-
 def _topk_per_type_sql(d: str) -> str:
+    """Top-k per group via ranking window (O-series generalization)."""
     return """
         SELECT event_type, event_id, value FROM (
             SELECT event_type, event_id, value,
@@ -651,12 +592,6 @@ def _topk_per_type_sql(d: str) -> str:
             FROM events
         ) t WHERE rnk <= 3
     """
-
-
-def q_topk_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k per group via ranking window (O-series generalization)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_topk_per_type_sql(D.SPARK))
 
 
 # =========================================================================
@@ -897,6 +832,7 @@ def q_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fingerprint_sql(d: str) -> str:
+    """Token-set fingerprint groups (word-order/punct-insensitive dup keys)."""
     fp = TX.fingerprint(d, TEXT)
     return f"""
         SELECT {fp} AS fingerprint,
@@ -907,18 +843,13 @@ def _fingerprint_sql(d: str) -> str:
     """
 
 
-def q_fingerprint_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-set fingerprint groups (word-order/punct-insensitive dup keys)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_fingerprint_sql(D.SPARK))
-
-
 # =========================================================================
 # North-star: text analysis
 # =========================================================================
 
 
 def _langid_sql(d: str) -> str:
+    """Language-ID heuristic (stopword-marker argmax) vs labeled lang."""
     toks = TX.tokenize(d, TEXT)
     pred = TX.lang_id(d, "toks")
     return f"""
@@ -926,12 +857,6 @@ def _langid_sql(d: str) -> str:
         SELECT lang, {pred} AS predicted, cast(count(*) as bigint) AS n
         FROM tokd GROUP BY lang, predicted
     """
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID heuristic (stopword-marker argmax) vs labeled lang."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_langid_sql(D.SPARK))
 
 
 LANG_MIX_CHUNKS = 4
@@ -1015,22 +940,10 @@ def _lang_mix_sql(d: str) -> str:
     """
 
 
-def q_lang_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixed-language (code-switching) audit per source (see
-    _lang_mix_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_lang_mix_sql(D.SPARK))
-
-
 def _quality_score_sql(d: str) -> str:
+    """Composite quality heuristic per doc (length/stopword/punct terms)."""
     qs = TX.quality_score(d, TEXT)
     return f"SELECT doc_id, {qs} AS quality_score FROM documents"
-
-
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite quality heuristic per doc (length/stopword/punct terms)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_quality_score_sql(D.SPARK))
 
 
 # =========================================================================
@@ -1071,18 +984,16 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _distinct_sources_sql(d: str) -> str:
-    return "SELECT DISTINCT source FROM documents"
-
-
-def q_distinct_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: distributed distinct-set (the reference collects all processed
     URLs into a Python set, dags/sentiment_analysis_dag.py:36-38; this stays
     distributed -- partial distinct before the shuffle)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_distinct_sources_sql(D.SPARK))
+    return "SELECT DISTINCT source FROM documents"
 
 
 def _rollup_sql(d: str) -> str:
+    """Hierarchical totals via ROLLUP (grouping-sets family; one pass,
+    partial aggregation per grouping set). Null grouping keys are labeled so
+    no nullable column reaches the hash compare."""
     return f"""
         SELECT coalesce(l_returnflag, '<all>') AS returnflag,
                coalesce(l_linestatus, '<all>') AS linestatus,
@@ -1091,14 +1002,6 @@ def _rollup_sql(d: str) -> str:
         FROM lineitem
         GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """
-
-
-def q_rollup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical totals via ROLLUP (grouping-sets family; one pass,
-    partial aggregation per grouping set). Null grouping keys are labeled so
-    no nullable column reaches the hash compare."""
-    _view(spark, sf_dir, "lineitem")
-    return spark.sql(_rollup_sql(D.SPARK))
 
 
 def _pivot_sql(d: str) -> str:
@@ -1135,6 +1038,9 @@ def q_pivot_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _running_revenue_sql(d: str) -> str:
+    """Running per-customer revenue: window aggregate over one (custkey)
+    shuffle. The decimal cast inside the frame keeps the running sums exact,
+    so cross-engine accumulation order cannot drift."""
     return """
         SELECT o_custkey, o_orderkey,
                cast(sum(cast(o_totalprice as decimal(18,6)))
@@ -1142,14 +1048,6 @@ def _running_revenue_sql(d: str) -> str:
                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) as double) AS running_total
         FROM orders
     """
-
-
-def q_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running per-customer revenue: window aggregate over one (custkey)
-    shuffle. The decimal cast inside the frame keeps the running sums exact,
-    so cross-engine accumulation order cannot drift."""
-    _view(spark, sf_dir, "orders")
-    return spark.sql(_running_revenue_sql(D.SPARK))
 
 
 def _asof_sql(d: str) -> str:
@@ -1166,21 +1064,16 @@ def _asof_sql(d: str) -> str:
 
 
 def _asof_outer_sql(d: str) -> str:
-    return f"""
-        SELECT event_id, last_signup_us
-        FROM ({_asof_sql(d)}) t
-        WHERE event_type = 'purchase'
-    """
-
-
-def q_asof_last_signup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (Spark has no native one -- SURVEY.md §4 / guide pattern):
     each purchase matched to the user's most recent signup at-or-before its
     event time, via a RANGE-framed window over epoch-nanos -- one shuffle on
     user_id, no per-row subqueries. -1 = no prior signup (null-free output).
     """
-    _events_view(spark, sf_dir)
-    return spark.sql(_asof_outer_sql(D.SPARK))
+    return f"""
+        SELECT event_id, last_signup_us
+        FROM ({_asof_sql(d)}) t
+        WHERE event_type = 'purchase'
+    """
 
 
 # Canonical plane generator lives with the persisted-index builders so the
@@ -1432,6 +1325,9 @@ def _token_counts_sql(d: str) -> str:
     # GPT-2-style pretokenizer approximation: letter runs | digit runs |
     # single non-alnum-non-space. Simple enough to behave identically in
     # Java regex (Spark) and RE2 (DuckDB).
+    """Token counting (north-star text-analysis op): whitespace tokens plus a
+    BPE-style pretokenizer count (letter/digit runs + punctuation singles) --
+    the cheap proxy for LLM token budgeting over a corpus."""
     pat = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
     if d == D.SPARK:
         bpe = f"size(regexp_extract_all({TEXT}, '{pat}', 0))"
@@ -1446,15 +1342,13 @@ def _token_counts_sql(d: str) -> str:
     """
 
 
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting (north-star text-analysis op): whitespace tokens plus a
-    BPE-style pretokenizer count (letter/digit runs + punctuation singles) --
-    the cheap proxy for LLM token budgeting over a corpus."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_token_counts_sql(D.SPARK))
-
-
 def _label_centroids_sql(d: str) -> str:
+    """Per-label embedding centroids (the building block for IVF-style ANN
+    partitioning and class prototypes): posexplode to (label, dim, value)
+    rows -> partial-aggregated sums per (label, dim). The floor-quantized
+    decimal sums (_qmean) make the float means order-independent AND
+    tie-unambiguous across engines, so the result is exact at any
+    parallelism."""
     v = V.to_double_array(d, "embedding")
     if d == D.SPARK:
         ex = "SELECT label, posexplode(v) AS (idx, x) FROM emb"
@@ -1467,17 +1361,6 @@ def _label_centroids_sql(d: str) -> str:
                {_qmean('x', 'centroid')}
         FROM ex GROUP BY label, idx
     """
-
-
-def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label embedding centroids (the building block for IVF-style ANN
-    partitioning and class prototypes): posexplode to (label, dim, value)
-    rows -> partial-aggregated sums per (label, dim). The floor-quantized
-    decimal sums (_qmean) make the float means order-independent AND
-    tie-unambiguous across engines, so the result is exact at any
-    parallelism."""
-    _view(spark, sf_dir, "embeddings")
-    return spark.sql(_label_centroids_sql(D.SPARK))
 
 
 
@@ -1527,7 +1410,17 @@ def _ivf_ann_sql(d: str) -> str:
 
     Norms are hoisted into the per-vector/per-centroid CTEs (computed once
     each); cosine at join time is dot/(n1*n2) -- one fold per pair instead
-    of three."""
+    of three.
+
+    The centroid codebook is decimal-sum exact, so the cells are
+    deterministic at any parallelism; the cell equi-join restricts
+    candidates to ~1/nlist of the corpus, with an exact cosine re-rank
+    within the cell.
+
+    (r11 note: materializing `assign0` for the two consumers was tried
+    and measured SLOWER -- 1.85 -> 2.2 s: checkpointing 10k rows of
+    64-double arrays costs more than re-deriving the cheap assignment
+    pipeline -- so the single statement stays.)"""
     dot_cand = V.dot(d, "a.v", "q.qv", EMB_DIM)
     return f"""
         WITH {_ivf_assign_ctes(d)}
@@ -1617,20 +1510,6 @@ def q_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY s.n_vectors DESC, s.cell ASC
     """
     )
-
-
-def q_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF inverted-file ANN (complements the hyperplane-LSH path): exact
-    centroid codebook (decimal-sum exact, so the cells are deterministic at
-    any parallelism), cell equi-join restricts candidates to ~1/nlist of the
-    corpus, exact cosine re-rank within the cell.
-
-    (r11 note: materializing `assign0` for the two consumers was tried and
-    measured SLOWER -- 1.85 -> 2.2 s: checkpointing 10k rows of 64-double
-    arrays costs more than re-deriving the cheap assignment pipeline --
-    so the single statement stays.)"""
-    _view(spark, sf_dir, "embeddings")
-    return spark.sql(_ivf_ann_sql(D.SPARK))
 
 
 def _ann_recall_sql(d: str) -> str:
@@ -1790,7 +1669,7 @@ def _ensure_ann_arm_results(spark: SparkSession, sf_dir: str) -> str:
         _build_annlsh_bands(spark, sf_dir)
         rows: list[tuple[str, int, int]] = []
         for method, fn in (
-            ("ivf", lambda s, d: q_ivf_ann(s, d)),
+            ("ivf", lambda s, d: REGISTRY["ivf_ann"][0](s, d)),
             ("lsh", lambda s, d: _annlsh_topk(s, multiprobe=False)),
             ("lsh_mp", lambda s, d: _annlsh_topk(s, multiprobe=True)),
             ("pq", lambda s, d: q_pq_ann(s, d)),
@@ -1914,6 +1793,9 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _regional_revenue_sql(d: str) -> str:
+    """TPC-H Q5 shape: 5-table join chain. The three dimension joins
+    (customer/nation/region) broadcast; only the fact-to-orders join can
+    shuffle -- the plan every star-schema query should compile to."""
     return f"""
         SELECT r.r_name AS region, n.n_name AS nation,
                {_dsum("l.l_extendedprice * (1 - l.l_discount)", "revenue")},
@@ -1928,21 +1810,16 @@ def _regional_revenue_sql(d: str) -> str:
     """
 
 
-def q_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: 5-table join chain. The three dimension joins
-    (customer/nation/region) broadcast; only the fact-to-orders join can
-    shuffle -- the plan every star-schema query should compile to."""
-    _view(spark, sf_dir, "lineitem", "orders", "customer", "nation", "region")
-    return spark.sql(_regional_revenue_sql(D.SPARK))
-
-
 
 
 def _value_stats_sql(d: str) -> str:
     """Distinct-aggregate + exact quantiles per group. Exact (not approx)
     forms on both sides: Spark percentile() and DuckDB quantile_cont() share
     the interpolated-quantile definition, and the inputs are identical
-    doubles, so results hash-match bit-for-bit."""
+    doubles, so results hash-match bit-for-bit.
+
+    approx_percentile / approx_count_distinct are the at-scale variants
+    and swap in without plan-shape changes."""
     med = "percentile(value, 0.5)" if d == D.SPARK else "quantile_cont(value, 0.5)"
     p90 = "percentile(value, 0.9)" if d == D.SPARK else "quantile_cont(value, 0.9)"
     return f"""
@@ -1954,14 +1831,6 @@ def _value_stats_sql(d: str) -> str:
         FROM events
         GROUP BY event_type
     """
-
-
-def q_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct-agg + exact interpolated quantiles per event type (the
-    engine's statistics family; approx_percentile / approx_count_distinct
-    are the at-scale variants and swap in without plan-shape changes)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_value_stats_sql(D.SPARK))
 
 
 def _embedding_dedup_sql(d: str) -> str:
@@ -2230,6 +2099,10 @@ def _verify_embedding_cand(spark: SparkSession, cand: DataFrame) -> DataFrame:
 
 
 def _grouping_sets_sql(d: str) -> str:
+    """GROUPING SETS multi-level aggregate (detail + subtotal + grand total
+    in one pass; grouping() disambiguates real keys from subtotal rows).
+    Complements rollup_summary/pivot_status_priority in the multi-level agg
+    family -- Spark expands sets via a single Expand node, one shuffle."""
     return f"""
         SELECT coalesce(o_orderstatus, 'ALL') AS status,
                coalesce(o_orderpriority, 'ALL') AS priority,
@@ -2243,16 +2116,11 @@ def _grouping_sets_sql(d: str) -> str:
     """
 
 
-def q_grouping_sets_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPING SETS multi-level aggregate (detail + subtotal + grand total
-    in one pass; grouping() disambiguates real keys from subtotal rows).
-    Complements rollup_summary/pivot_status_priority in the multi-level agg
-    family -- Spark expands sets via a single Expand node, one shuffle."""
-    _view(spark, sf_dir, "orders")
-    return spark.sql(_grouping_sets_sql(D.SPARK))
-
-
 def _late_ship_exists_sql(d: str) -> str:
+    """TPC-H Q4 shape: correlated EXISTS (orders with any lineitem shipped
+    >60 days after order date), counted by priority. Catalyst rewrites the
+    subquery into a left-semi hash join on l_orderkey -- the decorrelation
+    every EXISTS should compile to (no per-row probe)."""
     itv = "INTERVAL '60' DAY" if d == D.SPARK else "INTERVAL 60 DAY"
     return f"""
         SELECT o_orderpriority, cast(count(*) as bigint) AS n_orders
@@ -2266,18 +2134,12 @@ def _late_ship_exists_sql(d: str) -> str:
     """
 
 
-def q_late_ship_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: correlated EXISTS (orders with any lineitem shipped
-    >60 days after order date), counted by priority. Catalyst rewrites the
-    subquery into a left-semi hash join on l_orderkey -- the decorrelation
-    every EXISTS should compile to (no per-row probe)."""
-    _view(spark, sf_dir, "orders", "lineitem")
-    return spark.sql(_late_ship_exists_sql(D.SPARK))
-
-
 def _small_qty_revenue_sql(d: str) -> str:
     # l_quantity is integer-valued (stored double): double sums are exact at
     # any order, so avg -- and 0.2 * avg -- is bit-identical cross-engine.
+    """TPC-H Q17 shape: correlated scalar subquery (per-part average filters
+    the fact rows). Catalyst decorrelates into an aggregate on l_partkey +
+    join -- one extra pass over lineitem, not a per-row subquery."""
     return f"""
         SELECT p.p_brand,
                cast(count(*) as bigint) AS n_small,
@@ -2292,14 +2154,6 @@ def _small_qty_revenue_sql(d: str) -> str:
     """
 
 
-def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: correlated scalar subquery (per-part average filters
-    the fact rows). Catalyst decorrelates into an aggregate on l_partkey +
-    join -- one extra pass over lineitem, not a per-row subquery."""
-    _view(spark, sf_dir, "lineitem", "part")
-    return spark.sql(_small_qty_revenue_sql(D.SPARK))
-
-
 def _session_window_sql(d: str) -> str:
     """Spark-side: the NATIVE session_window operator (one shuffle on the
     grouping key, sessions merged by the engine -- the same operator works
@@ -2307,7 +2161,11 @@ def _session_window_sql(d: str) -> str:
     equivalent gaps-and-islands construction (lag + running sum + group), a
     well-defined ANSI formulation of identical semantics: a session spans
     events with <= 30 min between neighbors, window end = last event + gap.
-    All arithmetic in epoch-us integers."""
+    All arithmetic in epoch-us integers.
+
+    Reports start/end/event count/value sum per session. Complements
+    sessionize (which only counts sessions); this one is the form that
+    transfers directly to readStream + withWatermark."""
     gap_us = 30 * 60 * 1_000_000
     if d == D.SPARK:
         return f"""
@@ -2347,19 +2205,13 @@ def _session_window_sql(d: str) -> str:
     """
 
 
-def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user session windows (30-min inactivity gap) via Spark's native
-    session_window operator: start/end/evt-count/value-sum per session.
-    Complements q_sessionize (which only counts sessions); this one is the
-    form that transfers directly to readStream + withWatermark."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_session_window_sql(D.SPARK))
-
-
 def _doc_set_ops_sql(d: str) -> str:
     """INTERSECT / EXCEPT (the §2.6 set-op family beyond UNION): English docs
     split by whether they are also long-form. Both engines implement ANSI
-    distinct set semantics, so results align structurally."""
+    distinct set semantics, so results align structurally.
+
+    Spark plans both as hash joins (left-semi / left-anti after
+    aggregate) -- one shuffle each on the already-narrow doc_id column."""
     return """
         SELECT 'en_and_long' AS which, doc_id FROM (
             SELECT doc_id FROM documents WHERE lang = 'en'
@@ -2375,18 +2227,13 @@ def _doc_set_ops_sql(d: str) -> str:
     """
 
 
-def q_doc_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT/EXCEPT over document subsets. Spark plans both as hash
-    joins (left-semi / left-anti after aggregate) -- one shuffle each on the
-    already-narrow doc_id column."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_doc_set_ops_sql(D.SPARK))
-
-
 def _value_ranks_sql(d: str) -> str:
     """Ranking-window family: ntile / percent_rank / cume_dist. All three
     derive from integer rank arithmetic over a total order (value, event_id),
-    so the doubles are exact ratios -- bit-identical across engines."""
+    so the doubles are exact ratios -- bit-identical across engines.
+
+    Plan: one shuffle on the grouping key, one sort within partitions --
+    the standard distribution-rank plan."""
     return """
         SELECT event_id, event_type,
                cast(ntile(4) OVER w as bigint) AS quartile,
@@ -2395,14 +2242,6 @@ def _value_ranks_sql(d: str) -> str:
         FROM events
         WINDOW w AS (PARTITION BY event_type ORDER BY value ASC, event_id ASC)
     """
-
-
-def q_value_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ntile/percent_rank/cume_dist per event type: one shuffle on the
-    grouping key, one sort within partitions -- the standard distribution-
-    rank plan."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_value_ranks_sql(D.SPARK))
 
 
 def _value_band_totals_sql(d: str) -> str:
@@ -2434,19 +2273,15 @@ def _value_band_totals_sql(d: str) -> str:
     """
 
 
-def q_value_band_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range (non-equi) join of the events fact against a broadcast band
-    dimension, then aggregate per band."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_value_band_totals_sql(D.SPARK))
-
-
 def _events_calendar_sql(d: str) -> str:
     """Calendar/date-function family (F6/F7 depth): truncation, day-of-week,
     hour-of-day rollup. Day boundaries via date_trunc in UTC; outputs are
     epoch-us integers + small ints, so parity is structural. DOW normalized
     to 0..6 Sunday-based: Spark's extract(dow) is 1-based, DuckDB's 0-based
-    (verified empirically -- the docs are easy to misread here)."""
+    (verified empirically -- the docs are easy to misread here).
+
+    Plan: one shuffle on the composite calendar key; all keys derived in
+    the scan projection."""
     if d == D.SPARK:
         day = "unix_micros(date_trunc('day', tsm))"
         base = "SELECT timestamp_micros(ts div 1000) AS tsm, value FROM events"
@@ -2464,13 +2299,6 @@ def _events_calendar_sql(d: str) -> str:
                {_dsum("value", "value_sum")}
         FROM ev GROUP BY 1, 2, 3
     """
-
-
-def q_events_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day/dow/hour calendar rollup over event time: one shuffle on the
-    composite calendar key; all keys derived in the scan projection."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_events_calendar_sql(D.SPARK))
 
 
 def pack_shards() -> int:
@@ -2522,20 +2350,16 @@ def _sequence_packing_sql(d: str, shards: int | None = None) -> str:
     """
 
 
-def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget sequence packing (4096-token bins, 8 shards): the step
-    between a cleaned corpus and fixed-length training sequences. One window
-    shuffle on the shard key, one aggregation."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_sequence_packing_sql(D.SPARK))
-
-
 def _stratified_sample_sql(d: str) -> str:
     """Deterministic stratified sampling for corpus curation: per-language
     keep-rates applied via hash-mod buckets (md5 of a salted key). Unlike
     Bernoulli sampleBy, the sample is a pure function of the row -- stable
     under repartitioning, re-runs, and engine choice -- which is what makes
-    curated training mixes reproducible (and lets DuckDB hash-match it)."""
+    curated training mixes reproducible (and lets DuckDB hash-match it).
+
+    Keep-rates: 60% en, 30% de/fr, 10% everything else. Plan: broadcast
+    rate dim, scan-speed filter, reproducible sample membership at any
+    scale."""
     key = (
         "concat('smp1|', cast(doc_id as string))"
         if d == D.SPARK
@@ -2554,14 +2378,6 @@ def _stratified_sample_sql(d: str) -> str:
         FROM keyed k LEFT JOIN rates r ON k.lang = r.rlang
         WHERE k.bucket < coalesce(r.rate, 10)
     """
-
-
-def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language quota sampling via deterministic hash buckets (60% en,
-    30% de/fr, 10% everything else): broadcast rate dim, scan-speed filter,
-    reproducible sample membership at any scale."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_stratified_sample_sql(D.SPARK))
 
 
 WS_K = 20  # weighted-sample size per stratum
@@ -2606,12 +2422,6 @@ def _weighted_sample_sql(d: str) -> str:
         SELECT source, rnk, doc_id, weight, es_key
         FROM ranked WHERE rnk <= {WS_K}
     """
-
-
-def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Efraimidis-Spirakis weighted sample (see _weighted_sample_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_weighted_sample_sql(D.SPARK))
 
 
 SHARD_N = 8  # training-export shard count
@@ -2663,12 +2473,6 @@ def _shard_manifest_sql(d: str) -> str:
     """
 
 
-def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-robin longest-first shard manifest (see _shard_manifest_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_shard_manifest_sql(D.SPARK))
-
-
 def _corpus_prep_sql(d: str) -> str:
     """End-to-end training-data prep chain composed from the text-analysis
     fragments: non-empty filter -> language ID (keep predicted-English) ->
@@ -2706,13 +2510,6 @@ def _corpus_prep_sql(d: str) -> str:
                {_dsum("q", "quality_sum")}
         FROM kept GROUP BY lang
     """
-
-
-def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-corpus preparation pipeline over documents (language filter +
-    quality gate + exact dedup + token accounting) as one Catalyst plan."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_corpus_prep_sql(D.SPARK))
 
 
 def _dedup_clusters_sql(d: str) -> str:
@@ -2882,13 +2679,6 @@ def _binary_metadata_sql(d: str) -> str:
         FROM documents
         GROUP BY source
     """
-
-
-def q_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary payload metadata per source: the queries() face of the
-    multimodal column family (payload bytes + digests + grouped stats)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_binary_metadata_sql(D.SPARK))
 
 
 def _image_dimensions_sql(d: str) -> str:
@@ -3068,7 +2858,11 @@ def _bloom_dedup_probe_sql(d: str) -> str:
 
     Corpus = doc_id < 400, probe batch = doc_id >= 300: rows 300-399 are
     true duplicates (must all be flagged), 400+ are unseen (flags there
-    are the false-positive set)."""
+    are the false-positive set).
+
+    Plan: the corpus side collapses to <= m distinct positions
+    (broadcast side of the probe join); the batch side is one explode +
+    broadcast join + per-doc min -- no corpus-sized shuffle anywhere."""
     probes = []
     for i in range(BLOOM_K):
         h = H.hex_to_bigint(d, f"md5(concat('bf{i}|', text))", 14)
@@ -3096,16 +2890,6 @@ def _bloom_dedup_probe_sql(d: str) -> str:
                cast(case when t.doc_id is null then 0 else 1 end as bigint) AS is_dup
         FROM probe p LEFT JOIN truth t ON p.doc_id = t.doc_id
     """
-
-
-def q_bloom_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom membership probe of a new batch against the seen corpus (see
-    _bloom_dedup_probe_sql). Plan: the corpus side collapses to <= m
-    distinct positions (broadcast side of the probe join); the batch side
-    is one explode + broadcast join + per-doc min -- no corpus-sized
-    shuffle anywhere."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_bloom_dedup_probe_sql(D.SPARK))
 
 
 def _approx_stats_sql(d: str) -> str:
@@ -3229,13 +3013,6 @@ def _decontaminate_sql(d: str) -> str:
     """
 
 
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training docs contaminated by eval-split n-gram overlap, with hit
-    counts (broadcast eval shingle set, zero training-side shuffle)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_decontaminate_sql(D.SPARK))
-
-
 # PII patterns live beside the other text fragments (functions/text.py);
 # re-exported here for the oracle builder below.
 PII_EMAIL, PII_PHONE, PII_IP = TX.PII_EMAIL, TX.PII_PHONE, TX.PII_IP
@@ -3264,12 +3041,6 @@ def _pii_redact_sql(d: str) -> str:
                {red} AS redacted
         FROM synth
     """
-
-
-def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document PII counts + redacted text (email/phone/IPv4)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_pii_redact_sql(D.SPARK))
 
 
 K_ANON_THRESHOLDS = (2, 5, 10)
@@ -3329,13 +3100,6 @@ def _k_anonymity_sql(d: str) -> str:
     """
 
 
-def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity equivalence-class audit over customer quasi-identifiers
-    (see _k_anonymity_sql)."""
-    _view(spark, sf_dir, "customer")
-    return spark.sql(_k_anonymity_sql(D.SPARK))
-
-
 def _repetition_sql(d: str) -> str:
     """Gopher-style repetition/quality signals per document: token count,
     distinct-token ratio, top-token frequency fraction, mean token length.
@@ -3367,12 +3131,6 @@ def _repetition_sql(d: str) -> str:
                     else cast(p.n_token_chars as double) / cast(p.n_tokens as double) end AS mean_token_len
         FROM documents d LEFT JOIN per p ON d.doc_id = p.doc
     """
-
-
-def q_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document repetition/quality metrics (Gopher-rule signals)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_repetition_sql(D.SPARK))
 
 
 # BM25 (Lucene practical scoring, k1/b defaults) in FIXED POINT: both idf
@@ -3583,12 +3341,6 @@ def _url_normalize_sql(d: str) -> str:
     """
 
 
-def q_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonicalize synthesized crawl URLs and roll up per host."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_url_normalize_sql(D.SPARK))
-
-
 KNN_QUERY_MOD = 50  # vec_id % KNN_QUERY_MOD == 0 -> query batch member
 KNN_K = 5
 # Enforced query-set budget for the exact-audit family (round-8 verdict
@@ -3638,12 +3390,6 @@ def _knn_batch_sql(d: str) -> str:
         )
         SELECT qid, vec_id, cosine, cast(rk as bigint) AS rk FROM ranked WHERE rk <= {KNN_K}
     """
-
-
-def q_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 cosine neighbors for a batch of query vectors in one pass."""
-    _view(spark, sf_dir, "embeddings")
-    return spark.sql(_knn_batch_sql(D.SPARK))
 
 
 TRUNC_DIMS = (8, 16, 32, 64)
@@ -3821,13 +3567,6 @@ def _vocab_topk_sql(d: str) -> str:
     """
 
 
-def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-100 corpus vocabulary with collection/document frequency and
-    cumulative coverage share."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_vocab_topk_sql(D.SPARK))
-
-
 def _doc_length_percentiles_sql(d: str) -> str:
     """Exact token-length percentiles per language -- the stats that size
     sequence-packing bins and length-bucketed batching. Integer lengths,
@@ -3849,12 +3588,6 @@ def _doc_length_percentiles_sql(d: str) -> str:
                cast(max(n_tokens) as bigint) AS max_tokens
         FROM lens GROUP BY lang
     """
-
-
-def q_doc_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language exact token-length percentiles (packing planning)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_doc_length_percentiles_sql(D.SPARK))
 
 
 def _value_histogram_sql(d: str) -> str:
@@ -3879,12 +3612,6 @@ def _value_histogram_sql(d: str) -> str:
         WHERE value IS NOT NULL
         GROUP BY event_type, bin
     """
-
-
-def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bin equi-width value histogram per event type."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_value_histogram_sql(D.SPARK))
 
 
 def _value_correlations_sql(d: str) -> str:
@@ -3929,12 +3656,6 @@ def _value_correlations_sql(d: str) -> str:
     """
 
 
-def q_value_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-moment covariance/correlation of (value, hour-of-day)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_value_correlations_sql(D.SPARK))
-
-
 def _event_deltas_sql(d: str) -> str:
     """lag()-window deltas: per-user consecutive value changes ordered by
     event time (tie-broken by event_id for cross-engine determinism). One
@@ -3952,12 +3673,6 @@ def _event_deltas_sql(d: str) -> str:
                (value - prev_value) AS delta
         FROM w WHERE prev_value IS NOT NULL
     """
-
-
-def q_event_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user consecutive event-value deltas (lag window)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_event_deltas_sql(D.SPARK))
 
 
 def _scd_upsert_sql(d: str) -> str:
@@ -3986,12 +3701,6 @@ def _scd_upsert_sql(d: str) -> str:
         )
         SELECT c_custkey, c_name, status FROM merged
     """
-
-
-def q_scd_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch MERGE: base table + changeset -> upserted table."""
-    _view(spark, sf_dir, "customer")
-    return spark.sql(_scd_upsert_sql(D.SPARK))
 
 
 # Curation gate thresholds (Gopher-style rules over the repetition metrics
@@ -4145,12 +3854,6 @@ def _funnel_sql(d: str) -> str:
     """
 
 
-def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """view -> click -> purchase ordered funnel with conversion rates."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_funnel_sql(D.SPARK))
-
-
 def _retention_sql(d: str) -> str:
     """Cohort retention triangle: users grouped by first-seen day, counted on
     each later active day offset. Day indices are integer epoch-microsecond
@@ -4169,12 +3872,6 @@ def _retention_sql(d: str) -> str:
         SELECT cohort_day, day_offset, cast(count(*) as bigint) AS n_users
         FROM act GROUP BY cohort_day, day_offset
     """
-
-
-def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-seen-day cohorts x active-day offsets -> retained user counts."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_retention_sql(D.SPARK))
 
 
 # Unigram-LM surprisal quantum (same 2^-20 fixed point as BM25): the
@@ -4284,13 +3981,6 @@ def _sliding_window_sql(d: str) -> str:
     """
 
 
-def q_sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hour windows hopping every 15 minutes: event/user counts + exact
-    value sums per window."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_sliding_window_sql(D.SPARK))
-
-
 def _hourly_anomaly_sql(d: str) -> str:
     """Hourly event-count anomalies by population z-score, cross-engine
     exact: hourly counts are integers, the three moments (n, sum, sum of
@@ -4328,12 +4018,6 @@ def _hourly_anomaly_sql(d: str) -> str:
                 > 4 * (m.n * m.scc - m.sc * m.sc)) AS is_anomaly
         FROM hc CROSS JOIN m
     """
-
-
-def q_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly event-count z-scores with an exact-arithmetic anomaly flag."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_hourly_anomaly_sql(D.SPARK))
 
 
 TFIDF_K = 3
@@ -4823,12 +4507,6 @@ def _column_profile_sql(d: str) -> str:
     """
 
 
-def q_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-column null/distinct census of `documents` in one scan."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_column_profile_sql(D.SPARK))
-
-
 SKEW_TOP_K = 20
 
 
@@ -4864,13 +4542,6 @@ def _key_skew_sql(d: str) -> str:
         )
         SELECT * FROM etop UNION ALL SELECT * FROM ltop
     """
-
-
-def q_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top heavy-hitter keys + frequency share for the hot join columns."""
-    _events_view(spark, sf_dir)
-    _view(spark, sf_dir, "lineitem")
-    return spark.sql(_key_skew_sql(D.SPARK))
 
 
 # Winnowing parameters -- canonical values live with the persisted-index
@@ -4997,12 +4668,6 @@ def _dedup_recall_sql(d: str) -> str:
     """
 
 
-def q_dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall/precision of the MinHash+LSH dedup vs exact-Jaccard truth."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_dedup_recall_sql(D.SPARK))
-
-
 def _source_mix_sql(d: str) -> str:
     """Training-data mixture report: per (source, lang), document and token
     counts, token share of the corpus, and mean quality -- the table a
@@ -5033,12 +4698,6 @@ def _source_mix_sql(d: str) -> str:
                q_sum / cast(n_docs as double) AS mean_quality
         FROM agg CROSS JOIN s
     """
-
-
-def q_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(source, lang) mixture report: docs, tokens, share, quality."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_source_mix_sql(D.SPARK))
 
 
 def _length_buckets_sql(d: str) -> str:
@@ -5080,12 +4739,6 @@ def _length_buckets_sql(d: str) -> str:
     """
 
 
-def q_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Power-of-two length buckets with exact padding-waste accounting."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_length_buckets_sql(D.SPARK))
-
-
 def _dup_rate_by_source_sql(d: str) -> str:
     """Per-source duplication report from the exact content fingerprint:
     how much of each source is redundant (the crawl-health metric that
@@ -5113,12 +4766,6 @@ def _dup_rate_by_source_sql(d: str) -> str:
     """
 
 
-def q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-fingerprint duplication rate per source."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_dup_rate_by_source_sql(D.SPARK))
-
-
 def _readability_sql(d: str) -> str:
     """Flesch reading-ease per document from three regexp counts: sentence
     terminator runs, whitespace words, vowel-group syllable approximation
@@ -5144,13 +4791,6 @@ def _readability_sql(d: str) -> str:
                     as double) AS flesch
         FROM counts
     """
-
-
-def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flesch reading-ease scores (dictionary-free syllable heuristic) --
-    the classic text-quality signal alongside `quality_score`."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_readability_sql(D.SPARK))
 
 
 FUZZY_BLOCK_CAP = 1000  # drop blocking keys with more members than this
@@ -5214,15 +4854,6 @@ def _fuzzy_join_sql(d: str) -> str:
     """
 
 
-def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity-resolution fuzzy join over DISTINCT part names: collapse to
-    (name, count) first, then last-word blocking + length band +
-    levenshtein refine (bounded-block, never all-pairs, multiplicity-
-    invariant -- see _fuzzy_join_sql)."""
-    _view(spark, sf_dir, "part")
-    return spark.sql(_fuzzy_join_sql(D.SPARK))
-
-
 RANGE_BIN_US = 3_600_000_000  # 1 h coarse bins for the interval join
 
 
@@ -5279,13 +4910,6 @@ def _range_join_sql(d: str) -> str:
         FROM joined
         GROUP BY window_id, event_type, lo
     """
-
-
-def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binned point-in-interval join: incident windows x same-type events via
-    coarse-bin equi-join + exact refine (no cartesian fallback)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_range_join_sql(D.SPARK))
 
 
 def _interval_overlap_sql(d: str) -> str:
@@ -5358,13 +4982,6 @@ def _interval_overlap_sql(d: str) -> str:
     """
 
 
-def q_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binned interval-overlap join with emit-once canonical-bin rule (see
-    _interval_overlap_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_interval_overlap_sql(D.SPARK))
-
-
 LATE_DELAYS_US = (60_000_000, 600_000_000, 3_600_000_000)  # 1m / 10m / 1h
 
 
@@ -5430,13 +5047,6 @@ def _late_data_audit_sql(d: str) -> str:
         GROUP BY event_type
         ORDER BY event_type
     """
-
-
-def q_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Out-of-orderness / watermark-drop audit per event stream (see
-    _late_data_audit_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_late_data_audit_sql(D.SPARK))
 
 
 def _chi2_keywords_sql(d: str, ts_src: str | None = None) -> str:
@@ -5555,6 +5165,12 @@ def _fmt_day(d: str, expr: str) -> str:
 
 
 def _ship_priority_sql(d: str) -> str:
+    """TPC-H Q3 shape: unshipped-orders shipping priority. Plan: customer
+    (filtered on segment) broadcasts into orders, the result broadcasts or
+    shuffle-joins into lineitem on l_orderkey, one agg keyed on the order,
+    and the top-10 is TakeOrderedAndProject (per-partition heap + 10-row
+    merge, never a global sort). At 100 TB the only full shuffle is the
+    orderkey agg; both date filters reach the parquet scans."""
     return f"""
         SELECT l.l_orderkey,
                {_fmt_day(d, "o.o_orderdate")} AS orderdate,
@@ -5571,18 +5187,13 @@ def _ship_priority_sql(d: str) -> str:
     """
 
 
-def q_ship_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: unshipped-orders shipping priority. Plan: customer
-    (filtered on segment) broadcasts into orders, the result broadcasts or
-    shuffle-joins into lineitem on l_orderkey, one agg keyed on the order,
-    and the top-10 is TakeOrderedAndProject (per-partition heap + 10-row
-    merge, never a global sort). At 100 TB the only full shuffle is the
-    orderkey agg; both date filters reach the parquet scans."""
-    _view(spark, sf_dir, "customer", "orders", "lineitem")
-    return spark.sql(_ship_priority_sql(D.SPARK))
-
-
 def _revenue_forecast_sql(d: str) -> str:
+    """TPC-H Q6 shape: map-only filtered global sum (the what-if revenue
+    delta from dropping small discounts). No join, no group key: partial
+    sums per partition then a 1-row merge -- at 100 TB this is scan speed,
+    and all three predicates push into the parquet reader. The discount
+    bounds compare against exactly-representable doubles read from the
+    file, so the filter is bit-deterministic cross-engine."""
     return f"""
         SELECT cast(count(*) as bigint) AS n_lines,
                {_dsum("l_extendedprice * l_discount", "discount_revenue")}
@@ -5594,18 +5205,12 @@ def _revenue_forecast_sql(d: str) -> str:
     """
 
 
-def q_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: map-only filtered global sum (the what-if revenue
-    delta from dropping small discounts). No join, no group key: partial
-    sums per partition then a 1-row merge -- at 100 TB this is scan speed,
-    and all three predicates push into the parquet reader. The discount
-    bounds compare against exactly-representable doubles read from the
-    file, so the filter is bit-deterministic cross-engine."""
-    _view(spark, sf_dir, "lineitem")
-    return spark.sql(_revenue_forecast_sql(D.SPARK))
-
-
 def _volume_shipping_sql(d: str) -> str:
+    """TPC-H Q7 shape: bilateral trade volume between two nations by ship
+    year. supplier/nation/customer are broadcast dims; the nation-name
+    disjunction prunes to two nation keys BEFORE the fact join (Catalyst
+    pushes it through the dim joins), so at scale the lineitem rows that
+    survive are only those touching the two nations."""
     return f"""
         SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
                cast(year(l.l_shipdate) as bigint) AS ship_year,
@@ -5623,17 +5228,12 @@ def _volume_shipping_sql(d: str) -> str:
     """
 
 
-def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: bilateral trade volume between two nations by ship
-    year. supplier/nation/customer are broadcast dims; the nation-name
-    disjunction prunes to two nation keys BEFORE the fact join (Catalyst
-    pushes it through the dim joins), so at scale the lineitem rows that
-    survive are only those touching the two nations."""
-    _view(spark, sf_dir, "lineitem", "orders", "customer", "supplier", "nation")
-    return spark.sql(_volume_shipping_sql(D.SPARK))
-
-
 def _market_share_sql(d: str) -> str:
+    """TPC-H Q8 shape: one nation's share of a region's revenue in one part
+    type, by order year. Six broadcastable dims around one fact scan -- the
+    region and part-type filters prune through the dim joins before any
+    shuffle; the share is a conditional-sum / sum ratio computed in exact
+    decimals and divided once as doubles (deterministic cross-engine)."""
     return f"""
         WITH base AS (
             SELECT cast(year(o.o_orderdate) as bigint) AS order_year,
@@ -5663,20 +5263,13 @@ def _market_share_sql(d: str) -> str:
     """
 
 
-def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape: one nation's share of a region's revenue in one part
-    type, by order year. Six broadcastable dims around one fact scan -- the
-    region and part-type filters prune through the dim joins before any
-    shuffle; the share is a conditional-sum / sum ratio computed in exact
-    decimals and divided once as doubles (deterministic cross-engine)."""
-    _view(
-        spark, sf_dir,
-        "lineitem", "orders", "customer", "supplier", "nation", "region", "part",
-    )
-    return spark.sql(_market_share_sql(D.SPARK))
-
-
 def _nation_profit_sql(d: str) -> str:
+    """TPC-H Q9 shape (no partsupp in this schema, so profit = discounted
+    revenue rather than revenue minus supply cost): per supplier-nation,
+    per ship-year profit on parts matching a name substring. part filters
+    by LIKE before broadcasting into the fact scan; one grouped shuffle on
+    (nation, year) whose cardinality is nations x years regardless of
+    corpus size."""
     return f"""
         SELECT ns.n_name AS nation,
                cast(year(l.l_shipdate) as bigint) AS ship_year,
@@ -5691,18 +5284,11 @@ def _nation_profit_sql(d: str) -> str:
     """
 
 
-def q_nation_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape (no partsupp in this schema, so profit = discounted
-    revenue rather than revenue minus supply cost): per supplier-nation,
-    per ship-year profit on parts matching a name substring. part filters
-    by LIKE before broadcasting into the fact scan; one grouped shuffle on
-    (nation, year) whose cardinality is nations x years regardless of
-    corpus size."""
-    _view(spark, sf_dir, "lineitem", "part", "supplier", "nation")
-    return spark.sql(_nation_profit_sql(D.SPARK))
-
-
 def _returned_items_sql(d: str) -> str:
+    """TPC-H Q10 shape: customers who returned the most revenue in a
+    quarter. The quarter filter lands on the orders scan and the returnflag
+    filter on the lineitem scan (both pushed); the only large shuffle is
+    the customer-keyed agg, finished by a 20-row TakeOrderedAndProject."""
     return f"""
         SELECT c.c_custkey, c.c_name, n.n_name AS nation,
                cast(c.c_acctbal as double) AS c_acctbal,
@@ -5720,16 +5306,11 @@ def _returned_items_sql(d: str) -> str:
     """
 
 
-def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: customers who returned the most revenue in a
-    quarter. The quarter filter lands on the orders scan and the returnflag
-    filter on the lineitem scan (both pushed); the only large shuffle is
-    the customer-keyed agg, finished by a 20-row TakeOrderedAndProject."""
-    _view(spark, sf_dir, "customer", "orders", "lineitem", "nation")
-    return spark.sql(_returned_items_sql(D.SPARK))
-
-
 def _priority_lateness_sql(d: str) -> str:
+    """TPC-H Q12 shape (no ship modes or receipt dates in this schema, so
+    lateness = shipped >90 days after order): late vs total line counts by
+    order priority. One fact-fact equi-join on l_orderkey, then a 5-group
+    agg -- the conditional count rides the join, no second pass."""
     return f"""
         SELECT o.o_orderpriority,
                cast(sum(case when l.l_shipdate > o.o_orderdate + {_itv(d, 90)}
@@ -5741,16 +5322,11 @@ def _priority_lateness_sql(d: str) -> str:
     """
 
 
-def q_priority_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape (no ship modes or receipt dates in this schema, so
-    lateness = shipped >90 days after order): late vs total line counts by
-    order priority. One fact-fact equi-join on l_orderkey, then a 5-group
-    agg -- the conditional count rides the join, no second pass."""
-    _view(spark, sf_dir, "orders", "lineitem")
-    return spark.sql(_priority_lateness_sql(D.SPARK))
-
-
 def _order_distribution_sql(d: str) -> str:
+    """TPC-H Q13 shape: the customer-order-count distribution, INCLUDING
+    zero-order customers (the LEFT JOIN + count(o_orderkey) null-skip is
+    the whole point). Two shuffles: custkey agg, then the tiny n_orders
+    histogram agg whose output is bounded by max orders-per-customer."""
     return """
         WITH counts AS (
             SELECT c.c_custkey,
@@ -5764,16 +5340,10 @@ def _order_distribution_sql(d: str) -> str:
     """
 
 
-def q_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: the customer-order-count distribution, INCLUDING
-    zero-order customers (the LEFT JOIN + count(o_orderkey) null-skip is
-    the whole point). Two shuffles: custkey agg, then the tiny n_orders
-    histogram agg whose output is bounded by max orders-per-customer."""
-    _view(spark, sf_dir, "customer", "orders")
-    return spark.sql(_order_distribution_sql(D.SPARK))
-
-
 def _promo_share_sql(d: str) -> str:
+    """TPC-H Q14 shape: monthly share of revenue from promo-type parts.
+    part broadcasts into the date-pruned lineitem scan; conditional decimal
+    sums make the ratio exact until the single final division."""
     return f"""
         SELECT {_fmt_month(d, "l.l_shipdate")} AS ship_month,
                cast(sum(case when p.p_type = 'PROMO'
@@ -5797,15 +5367,13 @@ def _promo_share_sql(d: str) -> str:
     """
 
 
-def q_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: monthly share of revenue from promo-type parts.
-    part broadcasts into the date-pruned lineitem scan; conditional decimal
-    sums make the ratio exact until the single final division."""
-    _view(spark, sf_dir, "lineitem", "part")
-    return spark.sql(_promo_share_sql(D.SPARK))
-
-
 def _top_supplier_sql(d: str) -> str:
+    """TPC-H Q15 shape: the supplier(s) with maximum quarter revenue. The
+    max is taken over EXACT decimal sums, so the equality predicate (and
+    any ties) is deterministic cross-engine -- the reason TPC-H's view
+    formulation is notoriously flaky on floats. Catalyst computes srev
+    once per reference (two date-pruned scans), the scalar max broadcasts
+    back as a 1-row filter."""
     return """
         WITH srev AS (
             SELECT l_suppkey,
@@ -5823,18 +5391,12 @@ def _top_supplier_sql(d: str) -> str:
     """
 
 
-def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape: the supplier(s) with maximum quarter revenue. The
-    max is taken over EXACT decimal sums, so the equality predicate (and
-    any ties) is deterministic cross-engine -- the reason TPC-H's view
-    formulation is notoriously flaky on floats. Catalyst computes srev
-    once per reference (two date-pruned scans), the scalar max broadcasts
-    back as a 1-row filter."""
-    _view(spark, sf_dir, "lineitem", "supplier")
-    return spark.sql(_top_supplier_sql(D.SPARK))
-
-
 def _large_volume_sql(d: str) -> str:
+    """TPC-H Q18 shape: customers holding orders over 300 total units. The
+    IN-subquery compiles to a left-semi join against a pre-aggregated
+    orderkey relation (the HAVING filter shrinks it drastically before the
+    semi-join); quantities are integer-valued so the 300 threshold is an
+    exact integer comparison in both engines."""
     return f"""
         SELECT c.c_name, c.c_custkey, o.o_orderkey,
                {_fmt_day(d, "o.o_orderdate")} AS orderdate,
@@ -5852,17 +5414,11 @@ def _large_volume_sql(d: str) -> str:
     """
 
 
-def q_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: customers holding orders over 300 total units. The
-    IN-subquery compiles to a left-semi join against a pre-aggregated
-    orderkey relation (the HAVING filter shrinks it drastically before the
-    semi-join); quantities are integer-valued so the 300 threshold is an
-    exact integer comparison in both engines."""
-    _view(spark, sf_dir, "customer", "orders", "lineitem")
-    return spark.sql(_large_volume_sql(D.SPARK))
-
-
 def _brand_size_revenue_sql(d: str) -> str:
+    """TPC-H Q19 shape: disjunctive brand/size/quantity predicate across a
+    part join, single global sum. Catalyst extracts the common p_partkey
+    equi-condition so this stays a hash join (not a nested-loop over the
+    OR); per-side conjuncts still push to their scans."""
     return f"""
         SELECT cast(count(*) as bigint) AS n_lines,
                {_dsum("l.l_extendedprice * (1 - l.l_discount)", "revenue")}
@@ -5877,16 +5433,13 @@ def _brand_size_revenue_sql(d: str) -> str:
     """
 
 
-def q_brand_size_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: disjunctive brand/size/quantity predicate across a
-    part join, single global sum. Catalyst extracts the common p_partkey
-    equi-condition so this stays a hash join (not a nested-loop over the
-    OR); per-side conjuncts still push to their scans."""
-    _view(spark, sf_dir, "lineitem", "part")
-    return spark.sql(_brand_size_revenue_sql(D.SPARK))
-
-
 def _sole_late_supplier_sql(d: str) -> str:
+    """TPC-H Q21 shape (no receipt/commit dates, so late = shipped >60
+    days after order): suppliers who were the ONLY late shipper on
+    multi-supplier orders. Q21's double NOT-EXISTS is re-expressed as one
+    (orderkey, suppkey) agg plus one orderkey rollup joined back -- two
+    shuffles on the same key (AQE reuses the partitioning) instead of two
+    correlated subquery probes; identical semantics, set-based."""
     return f"""
         WITH per AS (
             SELECT l.l_orderkey, l.l_suppkey,
@@ -5914,18 +5467,13 @@ def _sole_late_supplier_sql(d: str) -> str:
     """
 
 
-def q_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape (no receipt/commit dates, so late = shipped >60
-    days after order): suppliers who were the ONLY late shipper on
-    multi-supplier orders. Q21's double NOT-EXISTS is re-expressed as one
-    (orderkey, suppkey) agg plus one orderkey rollup joined back -- two
-    shuffles on the same key (AQE reuses the partitioning) instead of two
-    correlated subquery probes; identical semantics, set-based."""
-    _view(spark, sf_dir, "lineitem", "orders", "supplier")
-    return spark.sql(_sole_late_supplier_sql(D.SPARK))
-
-
 def _dormant_high_value_sql(d: str) -> str:
+    """TPC-H Q22 shape: above-average-balance customers with no recent
+    orders, by nation. The average-balance comparison is algebraically
+    rearranged to `bal * n > sum` so both sides are exact (count times a
+    2-decimal double, vs a decimal-exact sum) -- no float-average threshold
+    to flip borderline rows cross-engine. The NOT EXISTS decorrelates to a
+    left-anti join against date-pruned orders; stats is a 1-row broadcast."""
     return f"""
         WITH stats AS (
             SELECT cast(count(*) as bigint) AS n_pos,
@@ -5946,17 +5494,6 @@ def _dormant_high_value_sql(d: str) -> str:
           )
         GROUP BY n.n_name
     """
-
-
-def q_dormant_high_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape: above-average-balance customers with no recent
-    orders, by nation. The average-balance comparison is algebraically
-    rearranged to `bal * n > sum` so both sides are exact (count times a
-    2-decimal double, vs a decimal-exact sum) -- no float-average threshold
-    to flip borderline rows cross-engine. The NOT EXISTS decorrelates to a
-    left-anti join against date-pruned orders; stats is a 1-row broadcast."""
-    _view(spark, sf_dir, "customer", "nation", "orders")
-    return spark.sql(_dormant_high_value_sql(D.SPARK))
 
 
 # =========================================================================
@@ -6012,13 +5549,6 @@ def _phrase_search_sql(d: str) -> str:
         ORDER BY n_hits DESC, doc_id ASC
         LIMIT 50
     """
-
-
-def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Positional phrase search ("{PHRASE[0]} {PHRASE[1]}"): docs ranked by
-    exact-adjacency occurrence count with the first match position."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_phrase_search_sql(D.SPARK))
 
 
 MLT_SEED_DOC = 7
@@ -6136,13 +5666,6 @@ def _mixture_weights_sql(d: str) -> str:
     """
 
 
-def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source temperature-sampling weights (alpha=0.5) from token
-    shares: the source-mixing step of LM training-data assembly."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_mixture_weights_sql(D.SPARK))
-
-
 CHUNK_TOKENS = 64
 CHUNK_STRIDE = 48  # 16-token overlap
 
@@ -6191,13 +5714,6 @@ def _chunk_documents_sql(d: str) -> str:
                md5(coalesce({joined}, '')) AS chunk_md5
         FROM spans
     """
-
-
-def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping {CHUNK_TOKENS}-token chunks (stride {CHUNK_STRIDE}) per
-    document with span bounds and chunk-text md5 ids."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_chunk_documents_sql(D.SPARK))
 
 
 def _snapshot_diff_sql(d: str) -> str:
@@ -6250,13 +5766,6 @@ def _snapshot_diff_sql(d: str) -> str:
     """
 
 
-def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Insert/delete/update rows between two deterministic versions of
-    `orders` (CDC diff / change-feed algebra)."""
-    _view(spark, sf_dir, "orders")
-    return spark.sql(_snapshot_diff_sql(D.SPARK))
-
-
 IVM_SPLIT_HOUR = 473712  # 2024-01-16T00:00Z as epoch-hours: mid-corpus split
 
 
@@ -6302,13 +5811,6 @@ def _incremental_hourly_sql(d: str) -> str:
         SELECT hour_idx * {HOUR_US} AS hour_start_us, n_events, sum_value
         FROM merged
     """
-
-
-def q_incremental_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly rollup refreshed by merging a stored-history aggregate with a
-    delta-batch aggregate (incremental view maintenance algebra)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_incremental_hourly_sql(D.SPARK))
 
 
 # =========================================================================
@@ -6451,14 +5953,6 @@ def _boilerplate_blocks_sql(d: str) -> str:
     """
 
 
-def q_boilerplate_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document block-level exact-duplication fractions (see the SQL
-    builder docstring): the block-dedup audit a curation pipeline runs to
-    find templated content before deciding drop-vs-clean."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_boilerplate_blocks_sql(D.SPARK))
-
-
 QUANT_ERR_SCALE = 1_000_000_000  # 1e-9 fixed point for error sums
 
 
@@ -6514,14 +6008,6 @@ def _embedding_quantization_sql(d: str) -> str:
                cast(sum(case when q = 0 then 1 else 0 end) as bigint) AS dead_components
         FROM qerr GROUP BY vec_id
     """
-
-
-def q_embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """int8 embedding-quantization QA report (see the SQL builder
-    docstring): per-vector max/total reconstruction error in 1e-9 fixed
-    point + dead-component counts."""
-    _view(spark, sf_dir, "embeddings")
-    return spark.sql(_embedding_quantization_sql(D.SPARK))
 
 
 def _media_byte_stats_sql(d: str) -> str:
@@ -6968,17 +6454,14 @@ def _containment_body(inv_def: str) -> str:
     """
 
 
-def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sub-document duplication pairs by shingle containment (overlap
-    coefficient >= 0.8 on df-capped 3-gram shingles)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_containment_pairs_sql(D.SPARK))
-
-
 def _domain_quota_sql(d: str) -> str:
     """Per-source corpus quota: keep at most 5 docs per source, preferring
     the longest (the crawl-curation cap that stops one domain from
-    dominating a training mix; deterministic doc_id tie-break)."""
+    dominating a training mix; deterministic doc_id tie-break).
+
+    Plan: one window shuffle on source; at 100 TB the per-key state is
+    the quota constant, never the group size, because row_number stops
+    mattering past the cap and the filter prunes in the same stage."""
     return """
         SELECT source, doc_id, n_chars, cast(rn as bigint) AS pick_rank
         FROM (
@@ -6988,15 +6471,6 @@ def _domain_quota_sql(d: str) -> str:
             FROM documents
         ) w WHERE rn <= 5
     """
-
-
-def q_domain_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source document quota (cap 5, longest-first): one window shuffle
-    on source; at 100 TB the per-key state is the quota constant, never the
-    group size, because row_number stops mattering past the cap and the
-    filter prunes in the same stage."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_domain_quota_sql(D.SPARK))
 
 
 _ZIPF_Q = 1 << 20
@@ -7012,7 +6486,10 @@ def _zipf_slope_sql(d: str) -> str:
     both engines), each ln is quantized to 2^-20 fixed point via floor(),
     the four OLS moment sums run on exact BIGINTs (order-free), and the
     final slope/intercept are the same single IEEE ops on identical
-    operands."""
+    operands.
+
+    Plan: the vocabulary agg is map-side partial; the top-100 select is
+    a TakeOrderedAndProject; the OLS runs over 100 rows."""
     toks = TX.tokenize(d, TEXT)
     ex = "explode(toks)" if d == D.SPARK else "unnest(toks)"
     q = f"{float(_ZIPF_Q)!r}"
@@ -7048,14 +6525,6 @@ def _zipf_slope_sql(d: str) -> str:
                (cast(sy as double) - (cast(n * sxy - sx * sy as double) / cast(n * sxx - sx * sx as double)) * cast(sx as double)) / (cast(n as double) * {q}) AS intercept
         FROM moments
     """
-
-
-def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf slope/intercept of the top-100 vocabulary (corpus-health
-    diagnostic). Vocabulary agg is map-side partial; the top-100 select is
-    a TakeOrderedAndProject; the OLS runs over 100 rows."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_zipf_slope_sql(D.SPARK))
 
 
 def _kmeans_step_sql(d: str) -> str:
@@ -7127,14 +6596,6 @@ def _kmeans_step_sql(d: str) -> str:
     """
 
 
-def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One distributed k-means (Lloyd) iteration over the embeddings:
-    per-cell assignment count, migrations vs the seed partition, and the
-    updated first centroid component (decimal-exact mean)."""
-    _view(spark, sf_dir, "embeddings")
-    return spark.sql(_kmeans_step_sql(D.SPARK))
-
-
 def _event_transitions_sql(d: str) -> str:
     """Per-user behavioral transition matrix: top-20 (from_type -> to_type)
     bigram counts over each user's time-ordered event stream (Markov-chain
@@ -7158,17 +6619,14 @@ def _event_transitions_sql(d: str) -> str:
     """
 
 
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 event-type transition counts over per-user ordered streams."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_event_transitions_sql(D.SPARK))
-
-
 def _top_percent_customers_sql(d: str) -> str:
     """Top-5% customers by lifetime revenue WITHIN each region: revenue is
     an exact decimal sum; the percentile cut is cume_dist over a total
     order (custkey tie-break => every row its own peer group, so cume_dist
-    = row_number/n -- one exact integer division, identical doubles)."""
+    = row_number/n -- one exact integer division, identical doubles).
+
+    Plan: broadcast nation/region dims, one revenue agg shuffle, one
+    per-region window."""
     return f"""
         WITH rev AS (
             SELECT n.n_regionkey AS regionkey, c.c_custkey,
@@ -7188,13 +6646,6 @@ def _top_percent_customers_sql(d: str) -> str:
         FROM ranked k JOIN region r ON r.r_regionkey = k.regionkey
         WHERE k.cd <= 0.05
     """
-
-
-def q_top_percent_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Regional top-5% customers by revenue (broadcast nation/region dims,
-    one revenue agg shuffle, one per-region window)."""
-    _view(spark, sf_dir, "customer", "nation", "orders", "region")
-    return spark.sql(_top_percent_customers_sql(D.SPARK))
 
 
 def _filter_reasons_sql(d: str) -> str:
@@ -7240,18 +6691,15 @@ def _filter_reasons_sql(d: str) -> str:
     """
 
 
-def q_filter_reasons(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc curation audit flags (gate-by-gate drop reasons + kept)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_filter_reasons_sql(D.SPARK))
-
-
 def _holdout_split_sql(d: str) -> str:
     """Deterministic train/val/test split (90/5/5) by content-independent
     doc_id hash -- the split step every training pipeline runs. Hash-mod
     assignment is reproducible at any parallelism and stable across corpus
     growth (a doc keeps its split forever); per-split token totals and a
-    doc_id checksum make the assignment itself verifiable downstream."""
+    doc_id checksum make the assignment itself verifiable downstream.
+
+    Plan: map-side partial agg on a 3-value key; the per-doc assignment
+    is a pure projection."""
     s = "string" if d == D.SPARK else "varchar"
     h = H.hex_to_bigint(d, f"md5(cast(doc_id as {s}))", 14)
     wc = TX.word_count(d, "coalesce(text, '')")
@@ -7271,13 +6719,6 @@ def _holdout_split_sql(d: str) -> str:
     """
 
 
-def q_holdout_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 90/5/5 corpus split summary (map-side partial agg on a
-    3-value key; the per-doc assignment is a pure projection)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_holdout_split_sql(D.SPARK))
-
-
 def _embedding_outliers_sql(d: str) -> str:
     """Embedding QA: vectors whose L2 norm is a >2-sigma outlier --
     zero/corrupt/mis-scaled embeddings surface here before they poison ANN
@@ -7290,7 +6731,13 @@ def _embedding_outliers_sql(d: str) -> str:
     ARITHMETIC_OVERFLOW error, not a wrong answer. The variance term
     therefore multiplies in decimal(38,0) (exact to ~1e38: headroom past
     1e14 vectors at nq <= 2048); per-row nq*cnt - s1 stays BIGINT, safe to
-    ~4e15 vectors."""
+    ~4e15 vectors.
+
+    Reported as the top-5 norm extremes by |z| rather than a fixed
+    threshold, so the QA report is informative even on a healthy corpus
+    (a |z|>2 filter on clean uniform-norm embeddings is legitimately
+    empty). Plan: one corpus pass for moments (1-row broadcast back),
+    one projection pass for scores, TakeOrdered top-k."""
     v = V.to_double_array(d, "embedding")
     nv = V.norm(d, "v", EMB_DIM)
     return f"""
@@ -7325,16 +6772,6 @@ def _embedding_outliers_sql(d: str) -> str:
                     as bigint) AS extremity_rank
         FROM top5
     """
-
-
-def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 norm-extreme embeddings by |z|: one corpus pass for moments
-    (1-row broadcast back), one projection pass for scores, TakeOrdered
-    top-k. Reported as extremes rather than a fixed threshold so the QA
-    report is informative even on a healthy corpus (a |z|>2 filter on
-    clean uniform-norm embeddings is legitimately empty)."""
-    _view(spark, sf_dir, "embeddings")
-    return spark.sql(_embedding_outliers_sql(D.SPARK))
 
 
 def _dedup_degrees_sql(d: str) -> str:
@@ -7406,11 +6843,6 @@ def _part_supplier_counts_sql(d: str) -> str:
         ORDER BY supplier_cnt DESC, p.p_brand ASC, p.p_type ASC, p.p_size ASC
         LIMIT 100
     """
-
-
-def q_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "lineitem", "part", "supplier")
-    return spark.sql(_part_supplier_counts_sql(D.SPARK))
 
 
 def _sentence_split_sql(d: str) -> str:
@@ -7500,11 +6932,6 @@ def _json_profile_sql(d: str) -> str:
     """
 
 
-def q_json_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _events_view(spark, sf_dir)
-    return spark.sql(_json_profile_sql(D.SPARK))
-
-
 _LR_Q = 1 << 20
 # dyadic start weights (bias, len, toks, upper-ratio proxy)
 _LR_W0 = [0.125, -0.25, 0.5, -0.0625]
@@ -7573,11 +7000,6 @@ def _logreg_step_sql(d: str) -> str:
                cast(cast(g as double) / (n * {q * q!r}) as double) AS grad
         FROM ({unpivot}) u ORDER BY feature ASC
     """
-
-
-def q_logreg_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_logreg_step_sql(D.SPARK))
 
 
 _LR_RATE = 0.5  # dyadic learning rate for the applied step (exact in IEEE)
@@ -7721,7 +7143,11 @@ def _char_entropy_sql(d: str) -> str:
     Scale shape: the char explode is one row per character (the
     duplicate_spans posting relation without the md5), collapsed map-side
     by the (doc, char) partial agg to ~alphabet-size rows per doc before
-    any shuffle; everything after is doc- then source-sized."""
+    any shuffle; everything after is doc- then source-sized.
+
+    Single linear statement -- no relation is consumed twice, so no
+    checkpoint is needed; the (doc, char) partial agg collapses the char
+    explode map-side before the only wide shuffle."""
     q = float(_ENT_Q)
     qi = int(_ENT_Q)
     if d == D.SPARK:
@@ -7768,15 +7194,6 @@ def _char_entropy_sql(d: str) -> str:
         GROUP BY source
         ORDER BY source ASC
     """
-
-
-def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source char-entropy quality report (see _char_entropy_sql).
-    Single linear statement -- no relation is consumed twice, so no
-    checkpoint is needed; the (doc, char) partial agg collapses the char
-    explode map-side before the only wide shuffle."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_char_entropy_sql(D.SPARK))
 
 
 # Every FK edge of the driver star schema: (edge label, child table, fk
@@ -7829,15 +7246,6 @@ def _fk_integrity_sql(d: str) -> str:
     return " UNION ALL ".join(blocks) + " ORDER BY edge ASC"
 
 
-def q_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FK-edge integrity audit (see _fk_integrity_sql)."""
-    _view(
-        spark, sf_dir,
-        "orders", "lineitem", "customer", "supplier", "nation", "region", "part",
-    )
-    return spark.sql(_fk_integrity_sql(D.SPARK))
-
-
 _Z_FILES = 64  # simulated file count for the layout advisor
 _Z_N = 1 << 10  # buckets per dimension (operators/zorder.py ZBITS)
 
@@ -7858,7 +7266,12 @@ def _zorder_stats_sql(d: str) -> str:
     extents (no window, no global sort); the Morton key is 20 div/mod
     terms; envelopes and skip counts are exact BIGINT min/max/sums; the
     only division is the final rate. Identical logic in both dialects via
-    int_div."""
+    int_div.
+
+    Plan: all map-side until the (layout, file_id) envelope agg; the two
+    layout branches re-derive the bucket arithmetic rather than
+    checkpointing a per-row relation -- a second map pass is cheaper
+    than materializing row-count state."""
     idiv = lambda a, b: D.int_div(d, a, b)  # noqa: E731
     n = _Z_N
     xb = (
@@ -7916,15 +7329,6 @@ def _zorder_stats_sql(d: str) -> str:
         GROUP BY v.layout, p.pred
         ORDER BY v.layout ASC, p.pred ASC
     """
-
-
-def q_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order layout advisor (see _zorder_stats_sql). All map-side until
-    the (layout, file_id) envelope agg; the two layout branches re-derive
-    the bucket arithmetic rather than checkpointing a per-row relation --
-    a second map pass is cheaper than materializing row-count state."""
-    _view(spark, sf_dir, "lineitem")
-    return spark.sql(_zorder_stats_sql(D.SPARK))
 
 
 def _copurchase_pairs_sql(d: str) -> str:
@@ -8029,11 +7433,6 @@ def _table_checksum_sql(d: str) -> str:
         GROUP BY source
         ORDER BY source ASC
     """
-
-
-def q_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_table_checksum_sql(D.SPARK))
 
 
 def _canon_double(d: str, expr: str) -> str:
@@ -8249,11 +7648,6 @@ def _source_drift_sql(d: str) -> str:
     """
 
 
-def q_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_source_drift_sql(D.SPARK))
-
-
 # Deterministic dyadic start vector for the power step (exactly
 # representable doubles, identical literals in both dialects).
 _PCA_V0 = [(((i * 37) % 64) - 32) / 64.0 for i in range(1, EMB_DIM + 1)]
@@ -8303,11 +7697,6 @@ def _pca_power_step_sql(d: str) -> str:
         FROM w CROSS JOIN nrm n
         ORDER BY w.dim ASC
     """
-
-
-def q_pca_power_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "embeddings")
-    return spark.sql(_pca_power_step_sql(D.SPARK))
 
 
 # =========================================================================
@@ -8450,11 +7839,6 @@ def _temperature_resample_sql(d: str) -> str:
     """
 
 
-def q_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_temperature_resample_sql(D.SPARK))
-
-
 _DECON_EVAL_MOD = 97
 _DECON_TAU = 0.95
 
@@ -8489,11 +7873,6 @@ def _semantic_decontaminate_sql(d: str) -> str:
                cast(case when max_cos >= {_DECON_TAU!r} then 1 else 0 end as bigint) AS contaminated
         FROM sims ORDER BY max_cos DESC, vec_id ASC LIMIT 20
     """
-
-
-def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "embeddings")
-    return spark.sql(_semantic_decontaminate_sql(D.SPARK))
 
 
 _STD_Q = 1 << 20
@@ -8539,11 +7918,6 @@ def _embedding_standardize_sql(d: str) -> str:
                    0.0)) / {q!r} AS std
         FROM mom ORDER BY dim ASC
     """
-
-
-def q_embedding_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "embeddings")
-    return spark.sql(_embedding_standardize_sql(D.SPARK))
 
 
 _PPL_Q = 1 << 20
@@ -8986,13 +8360,6 @@ def _kmv_intersection_sql(d: str) -> str:
     """
 
 
-def q_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV/theta-sketch distinct-user overlap between event segments (see
-    _kmv_intersection_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_kmv_intersection_sql(D.SPARK))
-
-
 def _gt_discounts_sql(d: str) -> str:
     """Good-Turing count-of-counts calibration table over corpus bigrams
     (Good 1953; the smoothing-parameter source for Katz/Kneser-Ney-class
@@ -9037,13 +8404,6 @@ def _gt_discounts_sql(d: str) -> str:
         WHERE a.c <= 10
         ORDER BY a.c
     """
-
-
-def q_gt_discounts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Good-Turing count-of-counts + missing-mass table (see
-    _gt_discounts_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_gt_discounts_sql(D.SPARK))
 
 
 def q_heldout_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9431,13 +8791,6 @@ def _join_size_sketch_sql(d: str) -> str:
         FROM ip CROSS JOIN served s CROSS JOIN exact x
         ORDER BY ip.j
     """
-
-
-def q_join_size_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fast-AGMS sign-sketch join-size estimate vs the exact audit (see
-    _join_size_sketch_sql)."""
-    _view(spark, sf_dir, "lineitem", "orders")
-    return spark.sql(_join_size_sketch_sql(D.SPARK))
 
 
 def q_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11196,13 +10549,6 @@ def psi_tail_sql(binned_cte: str) -> str:
     """
 
 
-def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-bin PSI contributions of the length distribution, old vs new
-    corpus half (see _psi_drift_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_psi_drift_sql(D.SPARK))
-
-
 # Funnel windows (epoch-us): a click counts within 24 h of the user's first
 # view; a purchase within 72 h of that click. Time-bounded steps on purpose:
 # the dense synthetic event stream converts ~100% on unbounded "ever after"
@@ -11266,13 +10612,6 @@ def _funnel_windowed_sql(d: str) -> str:
     """
 
 
-def q_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """view -> click(24h) -> purchase(72h) funnel with per-step conversion
-    (see _funnel_windowed_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_funnel_windowed_sql(D.SPARK))
-
-
 DAY_US = 86400000000  # epoch-us per day (bigint-safe literal)
 
 
@@ -11313,12 +10652,6 @@ def _cohort_retention_sql(d: str) -> str:
         FROM active a JOIN sizes s ON a.cohort_d = s.cohort_d
         ORDER BY a.cohort_d, a.offset_d
     """
-
-
-def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Purchase-day retention cohorts (see _cohort_retention_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_cohort_retention_sql(D.SPARK))
 
 
 KAPPA_CHARS_MIN = 200  # annotator A: keep iff n_chars >= this
@@ -11362,13 +10695,6 @@ def _cohens_kappa_sql(d: str) -> str:
                case when pe = 1.0 then 0.0 else (po - pe) / (1.0 - pe) end AS kappa
         FROM agg
     """
-
-
-def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inter-rule agreement (Cohen's kappa) between the length and
-    token-count keep rules (see _cohens_kappa_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_cohens_kappa_sql(D.SPARK))
 
 
 def _benford_digits_sql(d: str) -> str:
@@ -11420,13 +10746,6 @@ def _benford_digits_sql(d: str) -> str:
     """
 
 
-def q_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leading-digit distribution vs Benford expectation on lineitem
-    prices (see _benford_digits_sql)."""
-    _view(spark, sf_dir, "lineitem")
-    return spark.sql(_benford_digits_sql(D.SPARK))
-
-
 HARDNEG_K = 3  # negatives mined per panel query
 
 
@@ -11465,13 +10784,6 @@ def _hard_negatives_sql(d: str) -> str:
         SELECT qid, q_label, vec_id, neg_label, cosine, cast(rk as bigint) AS rk
         FROM ranked WHERE rk <= {HARDNEG_K}
     """
-
-
-def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 different-label near-misses per panel query -- contrastive
-    hard-negative mining (see _hard_negatives_sql)."""
-    _view(spark, sf_dir, "embeddings")
-    return spark.sql(_hard_negatives_sql(D.SPARK))
 
 
 ZSCORE_EVENT = "error"  # the monitored event class (rate spikes = incidents)
@@ -11517,13 +10829,6 @@ def _zscore_days_sql(d: str) -> str:
         FROM daily dy CROSS JOIN s
         ORDER BY dy.d
     """
-
-
-def q_zscore_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-day error-rate z-scores with a |z|>2 anomaly flag (see
-    _zscore_days_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_zscore_days_sql(D.SPARK))
 
 
 # chi2 contributions quantized to 2^-20 fixed point BEFORE the cross-row
@@ -11583,12 +10888,6 @@ def _cramers_v_sql(d: str) -> str:
     """
 
 
-def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lang x source association strength (see _cramers_v_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_cramers_v_sql(D.SPARK))
-
-
 def _cusum_shift_sql(d: str) -> str:
     """CUSUM level-shift detector over daily purchase revenue: the
     cumulative sum of (day_value - period_mean), in exact integer
@@ -11619,13 +10918,6 @@ def _cusum_shift_sql(d: str) -> str:
         FROM daily dy CROSS JOIN m
         ORDER BY dy.d
     """
-
-
-def q_cusum_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact CUSUM of daily purchase revenue vs the period mean
-    (see _cusum_shift_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_cusum_shift_sql(D.SPARK))
 
 
 KCENTER_K = 4  # greedy farthest-point iterations (seed + 3)
@@ -11825,7 +11117,13 @@ def _key_gini_sql(d: str) -> str:
     ADVICE; the synthetic keys are non-null today, but l_suppkey/user_id/
     source at a real deployment need not be). Scale shape: per key ONE
     hash-agg to key-cardinality size, one keys-sized rank window, then
-    1-row joins; the final report is len(_SKEW_KEYS) rows."""
+    1-row joins; the final report is len(_SKEW_KEYS) rows.
+
+    (r11 note: materializing the ranked per-key count relation once per
+    key was tried and measured 3x SLOWER -- 1.5 -> 4.6 s: the union's
+    re-inlined branches are independent subtrees the scheduler runs
+    CONCURRENTLY, while per-key checkpoints serialize into three barrier
+    jobs. The single statement stays.)"""
     blocks = [_gini_block(d, label, table, key) for label, table, key in _SKEW_KEYS]
     return " UNION ALL ".join(blocks) + " ORDER BY key_name"
 
@@ -11878,18 +11176,6 @@ def _gini_block(d: str, label: str, table: str, key: str) -> str:
         )
         # rank windows above order by (c, k); the string key column casts
         # implicitly -- keep k typed per table, ties broken identically
-
-
-def q_key_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini + exact percentile row counts per recurring join key (see
-    _key_gini_sql). (r11 note: materializing the ranked per-key count
-    relation once per key was tried and measured 3x SLOWER -- 1.5 ->
-    4.6 s: the union's re-inlined branches are independent subtrees the
-    scheduler runs CONCURRENTLY, while per-key checkpoints serialize into
-    three barrier jobs. The single statement stays.)"""
-    _view(spark, sf_dir, "lineitem", "documents")
-    _events_view(spark, sf_dir)
-    return spark.sql(_key_gini_sql(D.SPARK))
 
 
 KS_SOURCE_A = "src0"
@@ -11947,13 +11233,6 @@ def _ks_sources_sql(d: str) -> str:
     """
 
 
-def q_ks_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact two-sample KS statistic between src0 and src1 length
-    distributions (see _ks_sources_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_ks_sources_sql(D.SPARK))
-
-
 def _revenue_rollup_sql(d: str) -> str:
     """Region -> nation revenue ROLLUP with subtotal and grand-total rows
     -- the grouping-sets surface the reference's ES terms agg can't
@@ -11977,13 +11256,6 @@ def _revenue_rollup_sql(d: str) -> str:
         GROUP BY ROLLUP (r.r_name, n.n_name)
         ORDER BY gid, region, nation
     """
-
-
-def q_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Region/nation revenue with ROLLUP subtotals (see
-    _revenue_rollup_sql)."""
-    _view(spark, sf_dir, "orders", "customer", "nation", "region")
-    return spark.sql(_revenue_rollup_sql(D.SPARK))
 
 
 PIVOT_LANGS = ("de", "en", "es", "fr", "zh")
@@ -12011,12 +11283,6 @@ def _lang_pivot_sql(d: str) -> str:
         GROUP BY source
         ORDER BY source
     """
-
-
-def q_lang_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Source x language count pivot (see _lang_pivot_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_lang_pivot_sql(D.SPARK))
 
 
 # UNIMAX budget = 9/10 of corpus tokens at epoch cap 1 -- chosen so BOTH
@@ -12091,12 +11357,6 @@ def _unimax_sql(d: str) -> str:
         FROM pref p CROSS JOIN k
         ORDER BY p.i
     """
-
-
-def q_unimax_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNIMAX waterfall budget allocation per source (see _unimax_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_unimax_sql(D.SPARK))
 
 
 def _dedup_savings_sql(d: str) -> str:
@@ -12413,12 +11673,6 @@ def _attribution_sql(d: str) -> str:
     """
 
 
-def q_attribution_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First/last-touch attribution report (see _attribution_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_attribution_sql(D.SPARK))
-
-
 # Panel spans the corpus's token-length distribution (p50 ~54 tokens): 32
 # and 64 EXERCISE the truncation branch, 128/256 the padding-waste end. A
 # (128..1024) panel measured truncated_tokens == 0 at every point on this
@@ -12475,13 +11729,6 @@ def _packing_curve_sql(d: str) -> str:
                end AS padded_efficiency
         FROM agg
     """
-
-
-def q_packing_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-length planning curve for sequence packing (see
-    _packing_curve_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_packing_curve_sql(D.SPARK))
 
 
 RANGE_PARTS = 8
@@ -12649,12 +11896,6 @@ def _dataset_card_sql(d: str) -> str:
     """
 
 
-def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row corpus dataset card (see _dataset_card_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_dataset_card_sql(D.SPARK))
-
-
 def _ngram_novelty_sql(d: str) -> str:
     """Per-document n-gram NOVELTY of the incoming batch vs the standing
     corpus (the INCR_MOD/INCR_SLOT split shared with incremental_dedup):
@@ -12703,13 +11944,6 @@ def _ngram_novelty_sql(d: str) -> str:
               WHERE doc_id % {INCR_MOD} = {INCR_SLOT}) d
         LEFT JOIN scored s ON s.doc_id = d.doc_id
     """
-
-
-def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch-vs-corpus shingle novelty per incoming document (see
-    _ngram_novelty_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_ngram_novelty_sql(D.SPARK))
 
 
 # Sweep range sits around the tuned 0.42 production threshold: the
@@ -12936,12 +12170,6 @@ def _classifier_auc_sql(d: str) -> str:
     """
 
 
-def q_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tie-exact distributed ROC AUC per source (see _classifier_auc_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_classifier_auc_sql(D.SPARK))
-
-
 def _classifier_calibration_sql(d: str) -> str:
     """Reliability diagram + Brier decomposition inputs for the quality
     classifier: per 0.02-wide predicted-score band, document count, exact
@@ -13067,13 +12295,6 @@ def _pareto_frontier_sql(d: str) -> str:
     """
 
 
-def q_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skyline of (min price, max size) per part type (see
-    _pareto_frontier_sql)."""
-    _view(spark, sf_dir, "part")
-    return spark.sql(_pareto_frontier_sql(D.SPARK))
-
-
 # Sorted-neighborhood window width (offsets 1..SN_WINDOW-1 ahead in the
 # sorted block) and the balance-proximity cut for the candidate flag.
 SN_WINDOW = 3
@@ -13125,13 +12346,6 @@ def _sorted_neighborhood_sql(d: str) -> str:
         WHERE cust_b IS NOT NULL
         ORDER BY nation, cust_a, cust_b
     """
-
-
-def q_sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sorted-neighborhood blocking pairs over customers (see
-    _sorted_neighborhood_sql)."""
-    _view(spark, sf_dir, "customer")
-    return spark.sql(_sorted_neighborhood_sql(D.SPARK))
 
 
 # Zonemap audit: bucket widths for the two simulated layouts and the
@@ -13218,13 +12432,6 @@ def _zonemap_audit_sql(d: str) -> str:
     """
 
 
-def q_zonemap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zonemap (min/max data-skipping) effectiveness audit across two
-    simulated clusterings (see _zonemap_audit_sql)."""
-    _view(spark, sf_dir, "lineitem")
-    return spark.sql(_zonemap_audit_sql(D.SPARK))
-
-
 # EWMA half-life window: weights 2^(L-1-g) for lags g = 0..L-1 (alpha=1/2
 # truncated at L terms); dyadic weights keep every product integer-exact.
 EWMA_LAGS = 8
@@ -13280,13 +12487,6 @@ def _ewma_revenue_sql(d: str) -> str:
         FROM acc a JOIN mrev m ON m.mi = a.mi
         ORDER BY month_index
     """
-
-
-def q_ewma_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact truncated-EWMA of monthly revenue (see
-    _ewma_revenue_sql)."""
-    _view(spark, sf_dir, "orders")
-    return spark.sql(_ewma_revenue_sql(D.SPARK))
 
 
 def _kcore_step_sql(d: str) -> str:
@@ -14087,12 +13287,6 @@ def _ols_trend_sql(d: str) -> str:
     """
 
 
-def q_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped exact-moments OLS revenue trend (see _ols_trend_sql)."""
-    _view(spark, sf_dir, "orders", "customer", "nation")
-    return spark.sql(_ols_trend_sql(D.SPARK))
-
-
 PATH_TOP = 20
 
 
@@ -14128,12 +13322,6 @@ def _event_path_topk_sql(d: str) -> str:
         ORDER BY n_occurrences DESC, e1 ASC, e2 ASC, e3 ASC
         LIMIT {PATH_TOP}
     """
-
-
-def q_event_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k event-type trigram paths (see _event_path_topk_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_event_path_topk_sql(D.SPARK))
 
 
 def _theil_sen_trend_sql(d: str) -> str:
@@ -14178,13 +13366,6 @@ def _theil_sen_trend_sql(d: str) -> str:
         FROM pairs GROUP BY nation
         ORDER BY nation
     """
-
-
-def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-nation Theil-Sen median-of-slopes trend (see
-    _theil_sen_trend_sql)."""
-    _view(spark, sf_dir, "orders", "customer", "nation")
-    return spark.sql(_theil_sen_trend_sql(D.SPARK))
 
 
 def _welch_ttest_sql(d: str) -> str:
@@ -14252,12 +13433,6 @@ def _welch_ttest_sql(d: str) -> str:
     """
 
 
-def q_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch's t-test on n_chars, en vs non-en (see _welch_ttest_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_welch_ttest_sql(D.SPARK))
-
-
 ACF_MAX_LAG = 7
 
 
@@ -14315,12 +13490,6 @@ def _acf_daily_sql(d: str) -> str:
         FROM num n CROSS JOIN den
         ORDER BY n.lag
     """
-
-
-def q_acf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily-revenue autocorrelation at lags 1..7 (see _acf_daily_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_acf_daily_sql(D.SPARK))
 
 
 def _decision_stump_sql(d: str) -> str:
@@ -14392,12 +13561,6 @@ def _decision_stump_sql(d: str) -> str:
         ORDER BY errors ASC, threshold ASC
         LIMIT 1
     """
-
-
-def q_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Best 1-feature threshold classifier (see _decision_stump_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_decision_stump_sql(D.SPARK))
 
 
 PERM_B = 64  # randomization replicates
@@ -14516,13 +13679,6 @@ def _md5_char(d: str, key: str, rep: str) -> str:
     )
 
 
-def q_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Studentized randomization test for the en-vs-other length gap
-    (see _permutation_test_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_permutation_test_sql(D.SPARK))
-
-
 def _runs_test_sql(d: str) -> str:
     """WALD-WOLFOWITZ RUNS TEST for randomness of daily purchase revenue
     around its mean: too FEW runs of above/below-mean days means the
@@ -14582,12 +13738,6 @@ def _runs_test_sql(d: str) -> str:
                end AS z
         FROM agg
     """
-
-
-def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald-Wolfowitz runs test on daily revenue (see _runs_test_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_runs_test_sql(D.SPARK))
 
 
 LOGODDS_TOP = 20
@@ -14753,13 +13903,6 @@ def _jackknife_ratio_sql(d: str) -> str:
                end AS jackknife_se
         FROM tot t CROSS JOIN mom m
     """
-
-
-def q_jackknife_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delete-one-source jackknife SE of the English rate (see
-    _jackknife_ratio_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_jackknife_ratio_sql(D.SPARK))
 
 
 KT_BANDS = 50
@@ -14938,13 +14081,6 @@ def _binseg_changepoint_sql(d: str) -> str:
     """
 
 
-def q_binseg_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Best single changepoint of daily revenue by SSE (see
-    _binseg_changepoint_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_binseg_changepoint_sql(D.SPARK))
-
-
 def _mcnemar_test_sql(d: str) -> str:
     """McNEMAR's TEST on PAIRED classifier predictions: does the logistic
     base classifier disagree with the single-feature decision stump in a
@@ -15024,13 +14160,6 @@ def _mcnemar_test_sql(d: str) -> str:
     """
 
 
-def q_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """McNemar paired test: logreg vs decision stump (see
-    _mcnemar_test_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_mcnemar_test_sql(D.SPARK))
-
-
 _DOW_Q = 1 << 20  # per-group between-SS contributions quantized (psi rule)
 
 
@@ -15094,12 +14223,6 @@ def _dow_seasonality_sql(d: str) -> str:
     """
 
 
-def q_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-of-week volume profile + eta^2 (see _dow_seasonality_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_dow_seasonality_sql(D.SPARK))
-
-
 _HHI_Q = 1 << 30  # per-supplier share^2 contributions quantized (psi rule)
 
 
@@ -15146,12 +14269,6 @@ def _hhi_concentration_sql(d: str) -> str:
         GROUP BY t.nation, t.n_suppliers, t.rev_tot
         ORDER BY t.nation
     """
-
-
-def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-nation supplier-revenue HHI (see _hhi_concentration_sql)."""
-    _view(spark, sf_dir, "lineitem", "supplier", "nation")
-    return spark.sql(_hhi_concentration_sql(D.SPARK))
 
 
 # SPRT designs: H0 conversion p0 vs H1 p1, error targets alpha = beta =
@@ -15254,13 +14371,6 @@ def sprt_tail_sql(daily_src: str) -> str:
     """
 
 
-def q_sprt_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mirrored-pair Wald SPRT over daily conversion (see
-    _sprt_ab_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_sprt_ab_sql(D.SPARK))
-
-
 def _seasonal_backtest_sql(d: str) -> str:
     """FORECAST BACKTEST of two naive baselines over daily event volume:
     naive-1 (tomorrow = today) vs seasonal-7 (tomorrow = same weekday
@@ -15302,12 +14412,6 @@ def _seasonal_backtest_sql(d: str) -> str:
         GROUP BY model
         ORDER BY model
     """
-
-
-def q_seasonal_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Naive-1 vs seasonal-7 backtest (see _seasonal_backtest_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_seasonal_backtest_sql(D.SPARK))
 
 
 def _winsorized_mean_sql(d: str) -> str:
@@ -15360,13 +14464,6 @@ def _winsorized_mean_sql(d: str) -> str:
                max(b2.lo) AS p01_cents, max(b2.hi) AS p99_cents
         FROM clamped CROSS JOIN b b2
     """
-
-
-def q_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winsorized mean order value at [p01, p99] (see
-    _winsorized_mean_sql)."""
-    _view(spark, sf_dir, "orders")
-    return spark.sql(_winsorized_mean_sql(D.SPARK))
 
 
 def _cuped_adjustment_sql(d: str) -> str:
@@ -15461,12 +14558,6 @@ def _cuped_adjustment_sql(d: str) -> str:
     """
 
 
-def q_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED-adjusted variant means (see _cuped_adjustment_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_cuped_adjustment_sql(D.SPARK))
-
-
 SRM_CHI2_CRIT = 6.635  # chi-square(1) at p = 0.01, the SRM-alarm canon
 
 
@@ -15506,12 +14597,6 @@ def srm_tail_sql(users_src: str) -> str:
                     then true else false end AS srm_alarm
         FROM v
     """
-
-
-def q_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample-ratio-mismatch chi-square guardrail (see _srm_check_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_srm_check_sql(D.SPARK))
 
 
 # two-sided alpha = 0.05, power = 0.80: the standard design point. The z
@@ -15578,12 +14663,6 @@ def _mde_power_sql(d: str) -> str:
         FROM h CROSS JOIN m
         ORDER BY h.horizon
     """
-
-
-def q_mde_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MDE / power calculator at observed traffic (see _mde_power_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_mde_power_sql(D.SPARK))
 
 
 SHAPLEY_CHANNELS = ("click", "view", "signup")
@@ -15659,12 +14738,6 @@ def _shapley_attribution_sql(d: str) -> str:
         FROM rows0 r CROSS JOIN conv c
         ORDER BY r.channel
     """
-
-
-def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shapley touch-set attribution (see _shapley_attribution_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_shapley_attribution_sql(D.SPARK))
 
 
 MAD_Z_CRIT = 3.5  # Iglewicz-Hoaglin modified-z outlier cut
@@ -15805,13 +14878,6 @@ def _retention_decay_fit_sql(d: str) -> str:
                     else {_LN2!r} / {lam} end AS half_life_days
         FROM mom
     """
-
-
-def q_retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponential decay fit of pooled retention (see
-    _retention_decay_fit_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_retention_decay_fit_sql(D.SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -16183,13 +15249,6 @@ def _mann_whitney_sql(d: str) -> str:
     """
 
 
-def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tie-exact Mann-Whitney U rank-sum test, purchase vs view values
-    (see _mann_whitney_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_mann_whitney_sql(D.SPARK))
-
-
 _HOUR_US = 3_600_000_000
 _HAZ_Q = float(1 << 30)
 
@@ -16267,13 +15326,6 @@ def _survival_hazard_sql(d: str) -> str:
         WHERE d_events > 0
         ORDER BY h
     """
-
-
-def q_survival_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Censoring-aware Nelson-Aalen hazard of user return gaps (see
-    _survival_hazard_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_survival_hazard_sql(D.SPARK))
 
 
 _REC_K = 10
@@ -16405,13 +15457,6 @@ def _rec_eval_sql(d: str) -> str:
     """
 
 
-def q_rec_eval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Popularity-baseline top-k ranking eval on a temporal split:
-    nDCG@10 / MRR / hit rate (see _rec_eval_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_rec_eval_sql(D.SPARK))
-
-
 _SOFT_U_BITS = 48  # md5-derived uniform resolution for the keep draw
 _SOFT_WQ = 1 << 30  # expected-keep quantum (exact integer division)
 
@@ -16479,13 +15524,6 @@ def _dedup_weighted_sample_sql(d: str) -> str:
                    AS expected_kept
         FROM drawn GROUP BY source ORDER BY source
     """
-
-
-def q_dedup_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverse-duplicate-count soft dedup sampling report (see
-    _dedup_weighted_sample_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_dedup_weighted_sample_sql(D.SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -16562,13 +15600,6 @@ def _seasonal_decompose_sql(d: str) -> str:
         FROM det t JOIN seas s ON s.dow = t.dow CROSS JOIN ctr c
         ORDER BY t.dd
     """
-
-
-def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classical trend/weekly/residual decomposition of daily revenue
-    (see _seasonal_decompose_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_seasonal_decompose_sql(D.SPARK))
 
 
 _TREND_TOP = 20
@@ -16667,13 +15698,6 @@ def _trending_terms_sql(d: str) -> str:
         ORDER BY z DESC, term ASC
         LIMIT {_TREND_TOP}
     """
-
-
-def q_trending_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Latest-month trending catalog terms by per-word z-score (see
-    _trending_terms_sql)."""
-    _view(spark, sf_dir, "lineitem", "part")
-    return spark.sql(_trending_terms_sql(D.SPARK))
 
 
 _RAKE_TOP = 20
@@ -16853,13 +15877,6 @@ def _krippendorff_alpha_sql(d: str) -> str:
     """
 
 
-def q_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three-rater Krippendorff alpha over the silver keep/drop rules
-    (see _krippendorff_alpha_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_krippendorff_alpha_sql(D.SPARK))
-
-
 MI_Q_BANDS = 5  # quality bands for the source/quality MI grid
 _MI_LNQ = float(1 << 30)
 
@@ -16908,13 +15925,6 @@ def _source_quality_mi_sql(d: str) -> str:
         FROM marg
         ORDER BY source, q_band
     """
-
-
-def q_source_quality_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-cell mutual-information decomposition of source vs quality band
-    (see _source_quality_mi_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_source_quality_mi_sql(D.SPARK))
 
 
 def _keep_policy_quality_sql(d: str) -> str:
@@ -17671,13 +16681,6 @@ def _negative_sampling_sql(d: str) -> str:
     """
 
 
-def q_negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact integer negative-sampling table over the corpus vocabulary
-    (see _negative_sampling_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_negative_sampling_sql(D.SPARK))
-
-
 QINI_DECILES = 10
 
 
@@ -17750,13 +16753,6 @@ def _qini_uplift_sql(d: str) -> str:
         FROM cum
         ORDER BY decile
     """
-
-
-def q_qini_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative Qini uplift by activity decile under the parity A/A
-    split (see _qini_uplift_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_qini_uplift_sql(D.SPARK))
 
 
 def _effective_rank_sql(d: str) -> str:
@@ -17880,13 +16876,6 @@ def _k_anonymity_events_sql(d: str) -> str:
     """
 
 
-def q_k_anonymity_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity audit of events under the (event_type, hour-of-week,
-    value-band) quasi-identifier (see _k_anonymity_events_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_k_anonymity_events_sql(D.SPARK))
-
-
 # =========================================================================
 # Round-11 wave 13: corpus-growth law, release privacy (l-diversity),
 # curation fairness, event-stream predictability, Kneser-Ney LM eval,
@@ -17982,13 +16971,6 @@ def _heaps_law_sql(d: str) -> str:
     """
 
 
-def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps'-law vocabulary-growth exponent over doc-order prefixes (see
-    _heaps_law_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_heaps_law_sql(D.SPARK))
-
-
 L_DIV_LEVELS = (2, 3, 5, 10)
 
 
@@ -18039,13 +17021,6 @@ def _l_diversity_events_sql(d: str) -> str:
         GROUP BY lv.l, t.n_rows, t.l_diversity
         ORDER BY lv.l
     """
-
-
-def q_l_diversity_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """l-diversity audit of events under the k-anonymity QI, sensitive
-    attribute = user_id (see _l_diversity_events_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_l_diversity_events_sql(D.SPARK))
 
 
 _DI_MIN_GROUP = 20  # groups below this size don't set the reference rate
@@ -18116,13 +17091,6 @@ def _disparate_impact_sql(d: str) -> str:
     """
 
 
-def q_disparate_impact_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Four-fifths-rule disparate-impact audit of the curation keep gate,
-    by source (see _disparate_impact_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_disparate_impact_sql(D.SPARK))
-
-
 _MKV_Q = 1 << 20
 
 
@@ -18188,13 +17156,6 @@ def _markov_entropy_sql(d: str) -> str:
         FROM hs h CROSS JOIN tot t
         ORDER BY h.s
     """
-
-
-def q_markov_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-state conditional entropy + overall Markov entropy rate of the
-    event stream (see _markov_entropy_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_markov_entropy_sql(D.SPARK))
 
 
 _KN_D_NUM, _KN_D_DEN = 3, 4  # absolute discount D = 0.75, exact in binary
@@ -18405,13 +17366,6 @@ def _source_vocab_jsd_sql(d: str) -> str:
         CROSS JOIN g
         ORDER BY s.source
     """
-
-
-def q_source_vocab_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jensen-Shannon divergence of each source's unigram distribution
-    against the corpus mixture (see _source_vocab_jsd_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_source_vocab_jsd_sql(D.SPARK))
 
 
 # =========================================================================
@@ -18647,13 +17601,6 @@ def _kfold_assignment_sql(d: str) -> str:
     """
 
 
-def q_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-deterministic K-fold assignment with per-fold language-balance
-    chi-square audit (see _kfold_assignment_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_kfold_assignment_sql(D.SPARK))
-
-
 HILL_K = 200  # top-order statistics used by the Hill estimator
 _HILL_Q = 1 << 20
 
@@ -18696,13 +17643,6 @@ def _hill_tail_index_sql(d: str) -> str:
                end AS hill_alpha
         FROM xmin x CROSS JOIN s
     """
-
-
-def q_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hill heavy-tail index of the event value distribution (see
-    _hill_tail_index_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_hill_tail_index_sql(D.SPARK))
 
 
 _IPW_Q = 1 << 20
@@ -18778,13 +17718,6 @@ def _ipw_ate_sql(d: str) -> str:
     """
 
 
-def q_ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stratified IPW average treatment effect of the parity split on
-    event value (see _ipw_ate_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_ipw_ate_sql(D.SPARK))
-
-
 def _vocab_composition_sql(d: str) -> str:
     """PER-SOURCE VOCABULARY COMPOSITION: token count, vocabulary size,
     hapax/dis legomena counts and the hapax share, and the type-token
@@ -18819,13 +17752,6 @@ def _vocab_composition_sql(d: str) -> str:
         GROUP BY source
         ORDER BY source
     """
-
-
-def q_vocab_composition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source hapax/TTR vocabulary-composition panel (see
-    _vocab_composition_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_vocab_composition_sql(D.SPARK))
 
 
 def _rare_mass_aug(d: str) -> str:
@@ -18914,13 +17840,6 @@ def _chao1_richness_sql(d: str) -> str:
     """
 
 
-def q_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chao1 unseen-vocabulary estimate + Good-Turing coverage per source
-    and corpus (see _chao1_richness_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_chao1_richness_sql(D.SPARK))
-
-
 _STTR_SEG = 25  # tokens per STTR segment (docs run 10-99 tokens at every SF)
 
 
@@ -18994,13 +17913,6 @@ def _sttr_segments_sql(d: str) -> str:
     """
 
 
-def q_sttr_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Length-standardized type-token ratio over fixed token segments per
-    source (see _sttr_segments_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_sttr_segments_sql(D.SPARK))
-
-
 _W1_LEN_CAP = 512  # doc-length support cap (shared tail bucket)
 
 
@@ -19071,13 +17983,6 @@ def _wasserstein_sources_sql(d: str) -> str:
     """
 
 
-def q_wasserstein_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 1-D earth-mover distance of each source's doc-length
-    distribution vs the corpus (see _wasserstein_sources_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_wasserstein_sources_sql(D.SPARK))
-
-
 def _loo_source_influence_sql(d: str) -> str:
     """LEAVE-ONE-SOURCE-OUT INFLUENCE on corpus mean quality: for each
     source s, how much does dropping it move the corpus-wide mean quality
@@ -19129,13 +18034,6 @@ def _loo_source_influence_sql(d: str) -> str:
         FROM g CROSS JOIN tot
         ORDER BY g.source
     """
-
-
-def q_loo_source_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Closed-form leave-one-source-out delta on corpus mean quality (see
-    _loo_source_influence_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_loo_source_influence_sql(D.SPARK))
 
 
 _CEM_BIN = 2  # activity-coarsening width (Iacus et al.'s h)
@@ -19218,13 +18116,6 @@ def _cem_att_sql(d: str) -> str:
         FROM terms t CROSS JOIN att a
         ORDER BY t.s
     """
-
-
-def q_cem_att(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Coarsened-exact-matching ATT under the parity A/A split (see
-    _cem_att_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_cem_att_sql(D.SPARK))
 
 
 _RBO_P = 0.9  # top-weightedness (Webber's p; ~65% of weight in top 10)
@@ -19315,13 +18206,6 @@ def _rbo_rank_stability_sql(d: str) -> str:
         FROM terms
         ORDER BY depth
     """
-
-
-def q_rbo_rank_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-weighted rank-biased overlap of adjacent years' top-k revenue
-    nations (see _rbo_rank_stability_sql)."""
-    _view(spark, sf_dir, "orders", "customer", "nation")
-    return spark.sql(_rbo_rank_stability_sql(D.SPARK))
 
 
 def _assortativity_core(d: str, edges_def: str) -> str:
@@ -19461,13 +18345,6 @@ def _term_dispersion_sql(d: str) -> str:
         FROM agg a CROSS JOIN ntot nt
         ORDER BY a.t
     """
-
-
-def q_term_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gries' DP dispersion across sources for the top corpus terms (see
-    _term_dispersion_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_term_dispersion_sql(D.SPARK))
 
 
 _BURROWS_Q = 1_000_000  # function-word frequency quantum (per-token 1e-6)
@@ -19719,13 +18596,6 @@ def _fano_burstiness_sql(d: str) -> str:
     """
 
 
-def q_fano_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Variance-to-mean dispersion of hourly event counts per type (see
-    _fano_burstiness_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_fano_burstiness_sql(D.SPARK))
-
-
 _COVERAGE_THRESHOLDS = (1, 2, 4, 8, 16, 32, 64, 128, 256, 512, 1024)
 
 
@@ -19776,13 +18646,6 @@ def _vocab_coverage_sql(d: str) -> str:
         GROUP BY g.thr, nt.n
         ORDER BY g.thr
     """
-
-
-def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-occurrence coverage vs min-count vocabulary threshold (see
-    _vocab_coverage_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_vocab_coverage_sql(D.SPARK))
 
 
 _GS_LOOKS = 5
@@ -19896,13 +18759,6 @@ def _group_sequential_sql(d: str) -> str:
     """
 
 
-def q_group_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-look O'Brien-Fleming monitor over the parity A/A split (see
-    _group_sequential_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_group_sequential_sql(D.SPARK))
-
-
 _POS_LO = 0.1  # positivity caliper (Crump et al. 2009's rule-of-thumb)
 _POS_HI = 0.9
 
@@ -19969,13 +18825,6 @@ def _positivity_check_sql(d: str) -> str:
     """
 
 
-def q_positivity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Propensity-overlap / effective-sample-size audit of the CEM strata
-    (see _positivity_check_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_positivity_check_sql(D.SPARK))
-
-
 BLOCKLIST = ["casino", "lottery", "jackpot", "prize", "winner", "crypto"]
 
 
@@ -20019,13 +18868,6 @@ def _blocklist_rate_sql(d: str) -> str:
         GROUP BY source
         ORDER BY source
     """
-
-
-def q_blocklist_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocklist-hit audit per source with synthesized deterministic
-    contamination (see _blocklist_rate_sql)."""
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_blocklist_rate_sql(D.SPARK))
 
 
 _QSC_Q = 1_000_000  # signal quantum
@@ -20201,22 +19043,33 @@ def _tail_trend_sql(d: str) -> str:
     """
 
 
-def q_tail_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact daily p90 band series + OLS tail slope (see _tail_trend_sql)."""
-    _events_view(spark, sf_dir)
-    return spark.sql(_tail_trend_sql(D.SPARK))
-
-
-# =========================================================================
-# Registry
-# =========================================================================
-
-
 # =========================================================================
 # Registry
 # =========================================================================
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
+
+
+def _sql_query(
+    builder: Callable[[str], str], *tables: str
+) -> tuple[SparkQuery, Callable[[str], str]]:
+    """Registry row for a query that is one SQL statement over source
+    tables: the Spark callable registers `tables` in the given order
+    (`events` through _events_view, the rest through _view) and runs
+    spark.sql(builder(D.SPARK)); the oracle is the same builder. Both
+    sides come from one builder, so the row cannot pair a Spark query
+    with another query's oracle."""
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        for t in tables:
+            if t == "events":
+                _events_view(spark, sf_dir)
+            else:
+                _view(spark, sf_dir, t)
+        return spark.sql(builder(D.SPARK))
+
+    return run, builder
+
 
 # name -> (spark callable, oracle SQL builder or None)
 #
@@ -20229,47 +19082,43 @@ SparkQuery = Callable[[SparkSession, str], DataFrame]
 # verdict item 3). tools/selfcheck.py still runs ALL entries every round.
 _REGISTRY_BASE: dict[str, tuple[SparkQuery, Callable[[str], str] | None]] = {
     # --- round-11 wave 17 ---
-    "group_sequential": (q_group_sequential, _group_sequential_sql),
-    "positivity_check": (q_positivity_check, _positivity_check_sql),
-    "blocklist_rate": (q_blocklist_rate, _blocklist_rate_sql),
+    "group_sequential": _sql_query(_group_sequential_sql, "events"),
+    "positivity_check": _sql_query(_positivity_check_sql, "events"),
+    "blocklist_rate": _sql_query(_blocklist_rate_sql, "documents"),
     "quality_signal_corr": (q_quality_signal_corr, _quality_signal_corr_sql),
-    "tail_trend": (q_tail_trend, _tail_trend_sql),
+    "tail_trend": _sql_query(_tail_trend_sql, "events"),
     # --- round-11 wave 16 ---
     "graph_assortativity": (q_graph_assortativity, _graph_assortativity_sql),
-    "term_dispersion": (q_term_dispersion, _term_dispersion_sql),
+    "term_dispersion": _sql_query(_term_dispersion_sql, "documents"),
     "burrows_delta": (q_burrows_delta, _burrows_delta_sql),
     "embedding_isotropy": (q_embedding_isotropy, _embedding_isotropy_sql),
-    "fano_burstiness": (q_fano_burstiness, _fano_burstiness_sql),
-    "vocab_coverage": (q_vocab_coverage, _vocab_coverage_sql),
+    "fano_burstiness": _sql_query(_fano_burstiness_sql, "events"),
+    "vocab_coverage": _sql_query(_vocab_coverage_sql, "documents"),
     # --- round-11 wave 15 ---
-    "chao1_richness": (q_chao1_richness, _chao1_richness_sql),
-    "sttr_segments": (q_sttr_segments, _sttr_segments_sql),
-    "wasserstein_sources": (q_wasserstein_sources, _wasserstein_sources_sql),
-    "loo_source_influence": (
-        q_loo_source_influence,
-        _loo_source_influence_sql,
+    "chao1_richness": _sql_query(_chao1_richness_sql, "documents"),
+    "sttr_segments": _sql_query(_sttr_segments_sql, "documents"),
+    "wasserstein_sources": _sql_query(_wasserstein_sources_sql, "documents"),
+    "loo_source_influence": _sql_query(_loo_source_influence_sql, "documents"),
+    "cem_att": _sql_query(_cem_att_sql, "events"),
+    "rbo_rank_stability": _sql_query(
+        _rbo_rank_stability_sql, "orders", "customer", "nation"
     ),
-    "cem_att": (q_cem_att, _cem_att_sql),
-    "rbo_rank_stability": (q_rbo_rank_stability, _rbo_rank_stability_sql),
     # --- round-11 wave 14 ---
     "dbscan_labels": (q_dbscan_labels, _dbscan_labels_sql),
-    "kfold_assignment": (q_kfold_assignment, _kfold_assignment_sql),
-    "hill_tail_index": (q_hill_tail_index, _hill_tail_index_sql),
-    "ipw_ate": (q_ipw_ate, _ipw_ate_sql),
-    "vocab_composition": (q_vocab_composition, _vocab_composition_sql),
+    "kfold_assignment": _sql_query(_kfold_assignment_sql, "documents"),
+    "hill_tail_index": _sql_query(_hill_tail_index_sql, "events"),
+    "ipw_ate": _sql_query(_ipw_ate_sql, "events"),
+    "vocab_composition": _sql_query(_vocab_composition_sql, "documents"),
     # --- round-11 wave 13 ---
-    "heaps_law": (q_heaps_law, _heaps_law_sql),
-    "l_diversity_events": (q_l_diversity_events, _l_diversity_events_sql),
-    "disparate_impact_filter": (
-        q_disparate_impact_filter,
-        _disparate_impact_sql,
-    ),
-    "markov_entropy": (q_markov_entropy, _markov_entropy_sql),
+    "heaps_law": _sql_query(_heaps_law_sql, "documents"),
+    "l_diversity_events": _sql_query(_l_diversity_events_sql, "events"),
+    "disparate_impact_filter": _sql_query(_disparate_impact_sql, "documents"),
+    "markov_entropy": _sql_query(_markov_entropy_sql, "events"),
     "kn_bigram_nll": (q_kn_bigram_nll, _kn_bigram_nll_oracle),
-    "source_vocab_jsd": (q_source_vocab_jsd, _source_vocab_jsd_sql),
+    "source_vocab_jsd": _sql_query(_source_vocab_jsd_sql, "documents"),
     # --- round-10 wave 11 ---
-    "krippendorff_alpha": (q_krippendorff_alpha, _krippendorff_alpha_sql),
-    "source_quality_mi": (q_source_quality_mi, _source_quality_mi_sql),
+    "krippendorff_alpha": _sql_query(_krippendorff_alpha_sql, "documents"),
+    "source_quality_mi": _sql_query(_source_quality_mi_sql, "documents"),
     "keep_policy_quality": (q_keep_policy_quality, _keep_policy_quality_sql),
     "dedup_evidence_clusters": (
         q_dedup_evidence_clusters,
@@ -20277,45 +19126,42 @@ _REGISTRY_BASE: dict[str, tuple[SparkQuery, Callable[[str], str] | None]] = {
     ),
     "cluster_label_purity": (q_cluster_label_purity, _cluster_label_purity_sql),
     "pc1_power_iterated": (q_pc1_power_iterated, _pc1_power_iterated_sql),
-    "negative_sampling_table": (
-        q_negative_sampling_table,
-        _negative_sampling_sql,
-    ),
-    "qini_uplift": (q_qini_uplift, _qini_uplift_sql),
+    "negative_sampling_table": _sql_query(_negative_sampling_sql, "documents"),
+    "qini_uplift": _sql_query(_qini_uplift_sql, "events"),
     "pc_top2": (q_pc_top2, _pc_top2_sql),
     "embedding_effective_rank": (
         q_embedding_effective_rank,
         _effective_rank_sql,
     ),
-    "k_anonymity_events": (q_k_anonymity_events, _k_anonymity_events_sql),
+    "k_anonymity_events": _sql_query(_k_anonymity_events_sql, "events"),
     # --- round-9 wave 10 ---
-    "seasonal_decompose": (q_seasonal_decompose, _seasonal_decompose_sql),
-    "trending_terms": (q_trending_terms, _trending_terms_sql),
+    "seasonal_decompose": _sql_query(_seasonal_decompose_sql, "events"),
+    "trending_terms": _sql_query(_trending_terms_sql, "lineitem", "part"),
     "rake_keyphrases": (q_rake_keyphrases, _rake_keyphrases_sql),
     # --- round-9 wave 9 ---
     "average_precision": (q_average_precision, _average_precision_sql),
     "cumulative_gains": (q_cumulative_gains, _cumulative_gains_sql),
     "isotonic_calibration": (q_isotonic_calibration, _isotonic_calibration_sql),
-    "mann_whitney": (q_mann_whitney, _mann_whitney_sql),
-    "survival_hazard": (q_survival_hazard, _survival_hazard_sql),
-    "rec_eval_topk": (q_rec_eval_topk, _rec_eval_sql),
-    "dedup_weighted_sample": (q_dedup_weighted_sample, _dedup_weighted_sample_sql),
+    "mann_whitney": _sql_query(_mann_whitney_sql, "events"),
+    "survival_hazard": _sql_query(_survival_hazard_sql, "events"),
+    "rec_eval_topk": _sql_query(_rec_eval_sql, "events"),
+    "dedup_weighted_sample": _sql_query(_dedup_weighted_sample_sql, "documents"),
     # --- round-9 additions (never driver-proven) ---
     "label_propagation_step": (q_label_propagation_step, _label_propagation_sql),
-    "attribution_touch": (q_attribution_touch, _attribution_sql),
-    "packing_efficiency_curve": (q_packing_efficiency_curve, _packing_curve_sql),
+    "attribution_touch": _sql_query(_attribution_sql, "events"),
+    "packing_efficiency_curve": _sql_query(_packing_curve_sql, "documents"),
     "range_partition_bounds": (q_range_partition_bounds, _range_bounds_sql),
-    "dataset_card": (q_dataset_card, _dataset_card_sql),
-    "ngram_novelty": (q_ngram_novelty, _ngram_novelty_sql),
+    "dataset_card": _sql_query(_dataset_card_sql, "documents"),
+    "ngram_novelty": _sql_query(_ngram_novelty_sql, "documents"),
     "cosine_threshold_sweep": (q_cosine_threshold_sweep, _cosine_sweep_sql),
     "graph_modularity": (q_graph_modularity, _graph_modularity_sql),
     # --- round-9 wave 3 ---
-    "classifier_auc": (q_classifier_auc, _classifier_auc_sql),
+    "classifier_auc": _sql_query(_classifier_auc_sql, "documents"),
     "classifier_calibration": (q_classifier_calibration, _classifier_calibration_sql),
-    "pareto_frontier": (q_pareto_frontier, _pareto_frontier_sql),
-    "sorted_neighborhood_pairs": (q_sorted_neighborhood_pairs, _sorted_neighborhood_sql),
-    "zonemap_audit": (q_zonemap_audit, _zonemap_audit_sql),
-    "ewma_revenue": (q_ewma_revenue, _ewma_revenue_sql),
+    "pareto_frontier": _sql_query(_pareto_frontier_sql, "part"),
+    "sorted_neighborhood_pairs": _sql_query(_sorted_neighborhood_sql, "customer"),
+    "zonemap_audit": _sql_query(_zonemap_audit_sql, "lineitem"),
+    "ewma_revenue": _sql_query(_ewma_revenue_sql, "orders"),
     "kcore_step": (q_kcore_step, _kcore_step_sql),
     "association_rules": (q_association_rules, _association_rules_sql),
     "audio_loudness": (q_audio_loudness, _audio_loudness_sql),
@@ -20323,72 +19169,85 @@ _REGISTRY_BASE: dict[str, tuple[SparkQuery, Callable[[str], str] | None]] = {
     "poisson_bootstrap_ci": (q_poisson_bootstrap_ci, _poisson_bootstrap_sql),
     "conformal_threshold": (q_conformal_threshold, _conformal_threshold_sql),
     "woe_iv": (q_woe_iv, _woe_iv_sql),
-    "ols_trend": (q_ols_trend, _ols_trend_sql),
-    "event_path_topk": (q_event_path_topk, _event_path_topk_sql),
+    "ols_trend": _sql_query(_ols_trend_sql, "orders", "customer", "nation"),
+    "event_path_topk": _sql_query(_event_path_topk_sql, "events"),
     # --- round-9 wave 5 ---
-    "theil_sen_trend": (q_theil_sen_trend, _theil_sen_trend_sql),
-    "welch_ttest": (q_welch_ttest, _welch_ttest_sql),
-    "acf_daily": (q_acf_daily, _acf_daily_sql),
-    "decision_stump": (q_decision_stump, _decision_stump_sql),
-    "permutation_test": (q_permutation_test, _permutation_test_sql),
-    "runs_test": (q_runs_test, _runs_test_sql),
+    "theil_sen_trend": _sql_query(_theil_sen_trend_sql, "orders", "customer", "nation"),
+    "welch_ttest": _sql_query(_welch_ttest_sql, "documents"),
+    "acf_daily": _sql_query(_acf_daily_sql, "events"),
+    "decision_stump": _sql_query(_decision_stump_sql, "documents"),
+    "permutation_test": _sql_query(_permutation_test_sql, "documents"),
+    "runs_test": _sql_query(_runs_test_sql, "events"),
     # --- round-9 wave 6 ---
     "log_odds_terms": (q_log_odds_terms, _log_odds_terms_sql),
-    "jackknife_ratio": (q_jackknife_ratio, _jackknife_ratio_sql),
+    "jackknife_ratio": _sql_query(_jackknife_ratio_sql, "documents"),
     "kendall_tau": (q_kendall_tau, _kendall_tau_sql),
-    "binseg_changepoint": (q_binseg_changepoint, _binseg_changepoint_sql),
-    "mcnemar_test": (q_mcnemar_test, _mcnemar_test_sql),
-    "dow_seasonality": (q_dow_seasonality, _dow_seasonality_sql),
+    "binseg_changepoint": _sql_query(_binseg_changepoint_sql, "events"),
+    "mcnemar_test": _sql_query(_mcnemar_test_sql, "documents"),
+    "dow_seasonality": _sql_query(_dow_seasonality_sql, "events"),
     # --- round-9 wave 7 ---
-    "hhi_concentration": (q_hhi_concentration, _hhi_concentration_sql),
-    "sprt_ab": (q_sprt_ab, _sprt_ab_sql),
-    "seasonal_backtest": (q_seasonal_backtest, _seasonal_backtest_sql),
-    "winsorized_mean": (q_winsorized_mean, _winsorized_mean_sql),
-    "cuped_adjustment": (q_cuped_adjustment, _cuped_adjustment_sql),
+    "hhi_concentration": _sql_query(
+        _hhi_concentration_sql, "lineitem", "supplier", "nation"
+    ),
+    "sprt_ab": _sql_query(_sprt_ab_sql, "events"),
+    "seasonal_backtest": _sql_query(_seasonal_backtest_sql, "events"),
+    "winsorized_mean": _sql_query(_winsorized_mean_sql, "orders"),
+    "cuped_adjustment": _sql_query(_cuped_adjustment_sql, "events"),
     # --- round-9 wave 8 ---
-    "srm_check": (q_srm_check, _srm_check_sql),
-    "mde_power": (q_mde_power, _mde_power_sql),
-    "shapley_attribution": (q_shapley_attribution, _shapley_attribution_sql),
+    "srm_check": _sql_query(_srm_check_sql, "events"),
+    "mde_power": _sql_query(_mde_power_sql, "events"),
+    "shapley_attribution": _sql_query(_shapley_attribution_sql, "events"),
     "mad_anomalies": (q_mad_anomalies, _mad_anomalies_sql),
-    "retention_decay_fit": (q_retention_decay_fit, _retention_decay_fit_sql),
+    "retention_decay_fit": _sql_query(_retention_decay_fit_sql, "events"),
     # --- round-8 additions (never driver-proven) ---
-    "psi_drift": (q_psi_drift, _psi_drift_sql),
-    "funnel_windowed": (q_funnel_windowed, _funnel_windowed_sql),
-    "cohort_retention": (q_cohort_retention, _cohort_retention_sql),
-    "cohens_kappa": (q_cohens_kappa, _cohens_kappa_sql),
-    "benford_digits": (q_benford_digits, _benford_digits_sql),
-    "hard_negatives": (q_hard_negatives, _hard_negatives_sql),
-    "zscore_days": (q_zscore_days, _zscore_days_sql),
-    "cramers_v": (q_cramers_v, _cramers_v_sql),
-    "cusum_shift": (q_cusum_shift, _cusum_shift_sql),
+    "psi_drift": _sql_query(_psi_drift_sql, "documents"),
+    "funnel_windowed": _sql_query(_funnel_windowed_sql, "events"),
+    "cohort_retention": _sql_query(_cohort_retention_sql, "events"),
+    "cohens_kappa": _sql_query(_cohens_kappa_sql, "documents"),
+    "benford_digits": _sql_query(_benford_digits_sql, "lineitem"),
+    "hard_negatives": _sql_query(_hard_negatives_sql, "embeddings"),
+    "zscore_days": _sql_query(_zscore_days_sql, "events"),
+    "cramers_v": _sql_query(_cramers_v_sql, "documents"),
+    "cusum_shift": _sql_query(_cusum_shift_sql, "events"),
     "kcenter_coreset": (q_kcenter_coreset, _kcenter_coreset_sql),
-    "key_gini": (q_key_gini, _key_gini_sql),
-    "ks_sources": (q_ks_sources, _ks_sources_sql),
-    "revenue_rollup": (q_revenue_rollup, _revenue_rollup_sql),
-    "lang_pivot": (q_lang_pivot, _lang_pivot_sql),
-    "unimax_allocation": (q_unimax_allocation, _unimax_sql),
+    "key_gini": _sql_query(_key_gini_sql, "lineitem", "documents", "events"),
+    "ks_sources": _sql_query(_ks_sources_sql, "documents"),
+    "revenue_rollup": _sql_query(
+        _revenue_rollup_sql, "orders", "customer", "nation", "region"
+    ),
+    "lang_pivot": _sql_query(_lang_pivot_sql, "documents"),
+    "unimax_allocation": _sql_query(_unimax_sql, "documents"),
     "ann_lsh_multiprobe": (q_ann_lsh_multiprobe, _ann_lsh_mp_sql),
     "jpeg_quality": (q_jpeg_quality, _jpeg_quality_sql),
     "dedup_savings": (q_dedup_savings, _dedup_savings_sql),
     # --- round-7 batch-6 additions (never driver-proven) ---
     "lsh_band_sweep": (q_lsh_band_sweep, _lsh_band_sweep_sql),
     "classifier_score": (q_classifier_score, _classifier_score_sql),
-    "char_entropy": (q_char_entropy, _char_entropy_sql),
+    "char_entropy": _sql_query(_char_entropy_sql, "documents"),
     "minhash_error": (q_minhash_error, _minhash_error_sql),
-    "fk_integrity": (q_fk_integrity, _fk_integrity_sql),
-    "zorder_stats": (q_zorder_stats, _zorder_stats_sql),
+    "fk_integrity": _sql_query(
+        _fk_integrity_sql,
+        "orders",
+        "lineitem",
+        "customer",
+        "supplier",
+        "nation",
+        "region",
+        "part",
+    ),
+    "zorder_stats": _sql_query(_zorder_stats_sql, "lineitem"),
     "wminhash_pairs": (q_wminhash_pairs, _wminhash_sql),
     "audio_metadata": (q_audio_metadata, _audio_metadata_sql),
     "hdr_quantiles": (q_hdr_quantiles, _hdr_quantiles_sql),
-    "interval_overlap": (q_interval_overlap, _interval_overlap_sql),
-    "k_anonymity": (q_k_anonymity, _k_anonymity_sql),
-    "join_size_sketch": (q_join_size_sketch, _join_size_sketch_sql),
-    "weighted_sample": (q_weighted_sample, _weighted_sample_sql),
-    "shard_manifest": (q_shard_manifest, _shard_manifest_sql),
-    "late_data_audit": (q_late_data_audit, _late_data_audit_sql),
-    "gt_discounts": (q_gt_discounts, _gt_discounts_sql),
-    "kmv_intersection": (q_kmv_intersection, _kmv_intersection_sql),
-    "lang_mix": (q_lang_mix, _lang_mix_sql),
+    "interval_overlap": _sql_query(_interval_overlap_sql, "events"),
+    "k_anonymity": _sql_query(_k_anonymity_sql, "customer"),
+    "join_size_sketch": _sql_query(_join_size_sketch_sql, "lineitem", "orders"),
+    "weighted_sample": _sql_query(_weighted_sample_sql, "documents"),
+    "shard_manifest": _sql_query(_shard_manifest_sql, "documents"),
+    "late_data_audit": _sql_query(_late_data_audit_sql, "events"),
+    "gt_discounts": _sql_query(_gt_discounts_sql, "documents"),
+    "kmv_intersection": _sql_query(_kmv_intersection_sql, "events"),
+    "lang_mix": _sql_query(_lang_mix_sql, "documents"),
     "dim_truncation_recall": (q_dim_truncation_recall, _dim_truncation_sql),
     # --- round-7 batch-5 additions (never driver-proven) ---
     "pq_ann": (q_pq_ann, _pq_ann_sql),
@@ -20405,160 +19264,185 @@ _REGISTRY_BASE: dict[str, tuple[SparkQuery, Callable[[str], str] | None]] = {
     "heldout_bigram_nll": (q_heldout_bigram_nll, _heldout_bigram_nll_sql),
     "pagerank_step": (q_pagerank_step, _pagerank_step_sql),
     # --- round-5 batch-3 additions (never driver-proven) ---
-    "part_supplier_counts": (q_part_supplier_counts, _part_supplier_counts_sql),
-    "source_drift": (q_source_drift, _source_drift_sql),
-    "pca_power_step": (q_pca_power_step, _pca_power_step_sql),
+    "part_supplier_counts": _sql_query(
+        _part_supplier_counts_sql, "lineitem", "part", "supplier"
+    ),
+    "source_drift": _sql_query(_source_drift_sql, "documents"),
+    "pca_power_step": _sql_query(_pca_power_step_sql, "embeddings"),
     "ivf_cell_balance": (q_ivf_cell_balance, _ivf_cell_balance_sql),
     "winnow_pairs_indexed": (q_winnow_pairs_indexed, _winnow_pairs_sql),
     "hll_partition_merge": (q_hll_partition_merge, _hll_partition_merge_sql),
     "copurchase_pairs": (q_copurchase_pairs, _copurchase_pairs_sql),
-    "table_checksum": (q_table_checksum, _table_checksum_sql),
+    "table_checksum": _sql_query(_table_checksum_sql, "documents"),
     "fleet_checksum": (q_fleet_checksum, _fleet_checksum_sql),
     "bm25_search_indexed": (q_bm25_search_indexed, _bm25_sql),
     "sentence_split": (q_sentence_split, _sentence_split_sql),
-    "logreg_step": (q_logreg_step, _logreg_step_sql),
-    "json_profile": (q_json_profile, _json_profile_sql),
+    "logreg_step": _sql_query(_logreg_step_sql, "documents"),
+    "json_profile": _sql_query(_json_profile_sql, "events"),
     # --- round-5 batch-2 additions (never driver-proven) ---
     "hybrid_search_rrf": (q_hybrid_search_rrf, _hybrid_search_sql),
-    "temperature_resample": (q_temperature_resample, _temperature_resample_sql),
-    "semantic_decontaminate": (q_semantic_decontaminate, _semantic_decontaminate_sql),
-    "embedding_standardize": (q_embedding_standardize, _embedding_standardize_sql),
+    "temperature_resample": _sql_query(_temperature_resample_sql, "documents"),
+    "semantic_decontaminate": _sql_query(_semantic_decontaminate_sql, "embeddings"),
+    "embedding_standardize": _sql_query(_embedding_standardize_sql, "embeddings"),
     "perplexity_bands": (q_perplexity_bands, _perplexity_bands_sql),
     "frame_sample": (q_frame_sample, _frame_sample_sql),
     # --- round-5 additions (never driver-proven) ---
     "incremental_dedup": (q_incremental_dedup, _incremental_dedup_sql),
     "media_byte_stats": (q_media_byte_stats, _media_byte_stats_sql),
     "minhash_pairs_indexed": (q_minhash_pairs_indexed, _minhash_sql),
-    "boilerplate_blocks": (q_boilerplate_blocks, _boilerplate_blocks_sql),
-    "embedding_quantization": (q_embedding_quantization, _embedding_quantization_sql),
+    "boilerplate_blocks": _sql_query(_boilerplate_blocks_sql, "documents"),
+    "embedding_quantization": _sql_query(_embedding_quantization_sql, "embeddings"),
     "semantic_clusters_indexed": (q_semantic_clusters_indexed, _semantic_clusters_sql),
     # --- round-4 additions (never driver-proven) ---
     "semantic_clusters": (q_semantic_clusters, _semantic_clusters_sql),
-    "containment_pairs": (q_containment_pairs, _containment_pairs_sql),
-    "domain_quota_sample": (q_domain_quota_sample, _domain_quota_sql),
-    "zipf_slope": (q_zipf_slope, _zipf_slope_sql),
-    "kmeans_step": (q_kmeans_step, _kmeans_step_sql),
-    "event_transitions": (q_event_transitions, _event_transitions_sql),
-    "top_percent_customers": (q_top_percent_customers, _top_percent_customers_sql),
+    "containment_pairs": _sql_query(_containment_pairs_sql, "documents"),
+    "domain_quota_sample": _sql_query(_domain_quota_sql, "documents"),
+    "zipf_slope": _sql_query(_zipf_slope_sql, "documents"),
+    "kmeans_step": _sql_query(_kmeans_step_sql, "embeddings"),
+    "event_transitions": _sql_query(_event_transitions_sql, "events"),
+    "top_percent_customers": _sql_query(
+        _top_percent_customers_sql, "customer", "nation", "orders", "region"
+    ),
     "dedup_graph_degrees": (q_dedup_graph_degrees, _dedup_degrees_sql),
-    "filter_reasons": (q_filter_reasons, _filter_reasons_sql),
-    "holdout_split": (q_holdout_split, _holdout_split_sql),
-    "embedding_outliers": (q_embedding_outliers, _embedding_outliers_sql),
+    "filter_reasons": _sql_query(_filter_reasons_sql, "documents"),
+    "holdout_split": _sql_query(_holdout_split_sql, "documents"),
+    "embedding_outliers": _sql_query(_embedding_outliers_sql, "embeddings"),
     # --- proven in CORRECTNESS_r03: search/curation batch ---
-    "phrase_search": (q_phrase_search, _phrase_search_sql),
+    "phrase_search": _sql_query(_phrase_search_sql, "documents"),
     "more_like_this": (q_more_like_this, _more_like_this_sql),
-    "mixture_weights": (q_mixture_weights, _mixture_weights_sql),
-    "chunk_documents": (q_chunk_documents, _chunk_documents_sql),
-    "snapshot_diff": (q_snapshot_diff, _snapshot_diff_sql),
-    "incremental_hourly": (q_incremental_hourly, _incremental_hourly_sql),
+    "mixture_weights": _sql_query(_mixture_weights_sql, "documents"),
+    "chunk_documents": _sql_query(_chunk_documents_sql, "documents"),
+    "snapshot_diff": _sql_query(_snapshot_diff_sql, "orders"),
+    "incremental_hourly": _sql_query(_incremental_hourly_sql, "events"),
     # --- proven in CORRECTNESS_r03: classic OLAP pack ---
-    "ship_priority": (q_ship_priority, _ship_priority_sql),
-    "revenue_forecast": (q_revenue_forecast, _revenue_forecast_sql),
-    "volume_shipping": (q_volume_shipping, _volume_shipping_sql),
-    "market_share": (q_market_share, _market_share_sql),
-    "nation_profit": (q_nation_profit, _nation_profit_sql),
-    "returned_items": (q_returned_items, _returned_items_sql),
-    "priority_lateness": (q_priority_lateness, _priority_lateness_sql),
-    "order_distribution": (q_order_distribution, _order_distribution_sql),
-    "promo_share": (q_promo_share, _promo_share_sql),
-    "top_supplier": (q_top_supplier, _top_supplier_sql),
-    "large_volume": (q_large_volume, _large_volume_sql),
-    "brand_size_revenue": (q_brand_size_revenue, _brand_size_revenue_sql),
-    "sole_late_supplier": (q_sole_late_supplier, _sole_late_supplier_sql),
-    "dormant_high_value": (q_dormant_high_value, _dormant_high_value_sql),
+    "ship_priority": _sql_query(_ship_priority_sql, "customer", "orders", "lineitem"),
+    "revenue_forecast": _sql_query(_revenue_forecast_sql, "lineitem"),
+    "volume_shipping": _sql_query(
+        _volume_shipping_sql, "lineitem", "orders", "customer", "supplier", "nation"
+    ),
+    "market_share": _sql_query(
+        _market_share_sql,
+        "lineitem",
+        "orders",
+        "customer",
+        "supplier",
+        "nation",
+        "region",
+        "part",
+    ),
+    "nation_profit": _sql_query(
+        _nation_profit_sql, "lineitem", "part", "supplier", "nation"
+    ),
+    "returned_items": _sql_query(
+        _returned_items_sql, "customer", "orders", "lineitem", "nation"
+    ),
+    "priority_lateness": _sql_query(_priority_lateness_sql, "orders", "lineitem"),
+    "order_distribution": _sql_query(_order_distribution_sql, "customer", "orders"),
+    "promo_share": _sql_query(_promo_share_sql, "lineitem", "part"),
+    "top_supplier": _sql_query(_top_supplier_sql, "lineitem", "supplier"),
+    "large_volume": _sql_query(_large_volume_sql, "customer", "orders", "lineitem"),
+    "brand_size_revenue": _sql_query(_brand_size_revenue_sql, "lineitem", "part"),
+    "sole_late_supplier": _sql_query(
+        _sole_late_supplier_sql, "lineitem", "orders", "supplier"
+    ),
+    "dormant_high_value": _sql_query(
+        _dormant_high_value_sql, "customer", "nation", "orders"
+    ),
     # --- proven in CORRECTNESS_r03 ---
-    "stratified_sample": (q_stratified_sample, _stratified_sample_sql),
-    "sequence_packing": (q_sequence_packing, _sequence_packing_sql),
-    "decontaminate": (q_decontaminate, _decontaminate_sql),
-    "pii_redact": (q_pii_redact, _pii_redact_sql),
-    "repetition_metrics": (q_repetition_metrics, _repetition_sql),
-    "knn_batch": (q_knn_batch, _knn_batch_sql),
-    "url_normalize": (q_url_normalize, _url_normalize_sql),
+    "stratified_sample": _sql_query(_stratified_sample_sql, "documents"),
+    "sequence_packing": _sql_query(_sequence_packing_sql, "documents"),
+    "decontaminate": _sql_query(_decontaminate_sql, "documents"),
+    "pii_redact": _sql_query(_pii_redact_sql, "documents"),
+    "repetition_metrics": _sql_query(_repetition_sql, "documents"),
+    "knn_batch": _sql_query(_knn_batch_sql, "embeddings"),
+    "url_normalize": _sql_query(_url_normalize_sql, "documents"),
     "bm25_search": (q_bm25_search, _bm25_sql),
-    "value_histogram": (q_value_histogram, _value_histogram_sql),
-    "value_correlations": (q_value_correlations, _value_correlations_sql),
-    "event_deltas": (q_event_deltas, _event_deltas_sql),
-    "scd_upsert": (q_scd_upsert, _scd_upsert_sql),
-    "vocab_topk": (q_vocab_topk, _vocab_topk_sql),
-    "doc_length_percentiles": (q_doc_length_percentiles, _doc_length_percentiles_sql),
+    "value_histogram": _sql_query(_value_histogram_sql, "events"),
+    "value_correlations": _sql_query(_value_correlations_sql, "events"),
+    "event_deltas": _sql_query(_event_deltas_sql, "events"),
+    "scd_upsert": _sql_query(_scd_upsert_sql, "customer"),
+    "vocab_topk": _sql_query(_vocab_topk_sql, "documents"),
+    "doc_length_percentiles": _sql_query(_doc_length_percentiles_sql, "documents"),
     "curation_pipeline": (q_curation_pipeline, _curation_pipeline_sql),
-    "funnel_conversion": (q_funnel_conversion, _funnel_sql),
-    "retention_cohorts": (q_retention_cohorts, _retention_sql),
+    "funnel_conversion": _sql_query(_funnel_sql, "events"),
+    "retention_cohorts": _sql_query(_retention_sql, "events"),
     "unigram_surprisal": (q_unigram_surprisal, _unigram_surprisal_sql),
-    "sliding_window_agg": (q_sliding_window_agg, _sliding_window_sql),
-    "hourly_anomaly": (q_hourly_anomaly, _hourly_anomaly_sql),
+    "sliding_window_agg": _sql_query(_sliding_window_sql, "events"),
+    "hourly_anomaly": _sql_query(_hourly_anomaly_sql, "events"),
     "tfidf_topk": (q_tfidf_topk, _tfidf_topk_sql),
     "pmi_collocations": (q_pmi_collocations, _pmi_collocations_sql),
     "bpe_merges": (q_bpe_merges, _bpe_merges_sql),
     "bpe_encode": (q_bpe_encode, _bpe_encode_sql),
     "bpe_fertility": (q_bpe_fertility, _bpe_fertility_sql),
-    "column_profile": (q_column_profile, _column_profile_sql),
-    "key_skew_report": (q_key_skew_report, _key_skew_sql),
+    "column_profile": _sql_query(_column_profile_sql, "documents"),
+    "key_skew_report": _sql_query(_key_skew_sql, "events", "lineitem"),
     "winnow_pairs": (q_winnow_pairs, _winnow_pairs_sql),
-    "dedup_recall_report": (q_dedup_recall_report, _dedup_recall_sql),
-    "source_mix": (q_source_mix, _source_mix_sql),
-    "length_buckets": (q_length_buckets, _length_buckets_sql),
-    "dup_rate_by_source": (q_dup_rate_by_source, _dup_rate_by_source_sql),
-    "readability": (q_readability, _readability_sql),
-    "fuzzy_join": (q_fuzzy_join, _fuzzy_join_sql),
-    "range_join": (q_range_join, _range_join_sql),
+    "dedup_recall_report": _sql_query(_dedup_recall_sql, "documents"),
+    "source_mix": _sql_query(_source_mix_sql, "documents"),
+    "length_buckets": _sql_query(_length_buckets_sql, "documents"),
+    "dup_rate_by_source": _sql_query(_dup_rate_by_source_sql, "documents"),
+    "readability": _sql_query(_readability_sql, "documents"),
+    "fuzzy_join": _sql_query(_fuzzy_join_sql, "part"),
+    "range_join": _sql_query(_range_join_sql, "events"),
     "chi2_keywords": (q_chi2_keywords, _chi2_keywords_sql),
     # --- proven in CORRECTNESS_r01/r02 ---
-    "sentiment_terms_agg": (q_sentiment_terms_agg, _flagship_sql),
-    "sentiment_scores": (q_sentiment_scores, _sentiment_scores_sql),
-    "validate_articles": (q_validate_articles, _validate_sql),
-    "corpus_prep": (q_corpus_prep, _corpus_prep_sql),
+    "sentiment_terms_agg": _sql_query(_flagship_sql, "documents"),
+    "sentiment_scores": _sql_query(_sentiment_scores_sql, "documents"),
+    "validate_articles": _sql_query(_validate_sql, "documents"),
+    "corpus_prep": _sql_query(_corpus_prep_sql, "documents"),
     "dedup_keep": (q_dedup_keep, _dedup_keep_sql),
     "dedup_clusters": (q_dedup_clusters, _dedup_clusters_sql),
     "embedding_dedup_pairs": (q_embedding_dedup_pairs, _embedding_dedup_sql),
     "minhash_pairs": (q_minhash_pairs, _minhash_sql),
-    "quality_rate": (q_quality_rate, _quality_rate_sql),
+    "quality_rate": _sql_query(_quality_rate_sql, "documents"),
     "keyword_search": (q_keyword_search, _keyword_search_sql),
     # --- proven in CORRECTNESS_r01/r02 (selfcheck-guarded) ---
-    "sanitize": (q_sanitize, _sanitize_sql),
+    "sanitize": _sql_query(_sanitize_sql, "documents"),
     "anti_join_new_docs": (q_anti_join_new_docs, _anti_join_sql),
     "top_customer_revenue": (q_top_customer_revenue, _top_revenue_sql),
-    "pricing_summary": (q_pricing_summary, _pricing_summary_sql),
-    "freshness": (q_freshness, _freshness_sql),
-    "term_query_positive": (q_term_query_positive, _term_query_sql),
-    "scalar_suite": (q_scalar_suite, _scalar_suite_sql),
-    "hourly_events": (q_hourly_events, _hourly_window_sql),
-    "json_extract": (q_json_extract, _json_extract_sql),
-    "sessionize": (q_sessionize, _sessions_sql),
-    "topk_per_type": (q_topk_per_type, _topk_per_type_sql),
+    "pricing_summary": _sql_query(_pricing_summary_sql, "lineitem"),
+    "freshness": _sql_query(_freshness_sql, "events"),
+    "term_query_positive": _sql_query(_term_query_sql, "documents"),
+    "scalar_suite": _sql_query(_scalar_suite_sql, "documents"),
+    "hourly_events": _sql_query(_hourly_window_sql, "events"),
+    "json_extract": _sql_query(_json_extract_sql, "events"),
+    "sessionize": _sql_query(_sessions_sql, "events"),
+    "topk_per_type": _sql_query(_topk_per_type_sql, "events"),
     "union_sources": (q_union_sources, _union_sources_sql),
     "exact_dedup": (q_exact_dedup, _exact_dedup_sql),
     "ngram_jaccard_pairs": (q_ngram_jaccard_pairs, _ngram_jaccard_sql),
     "simhash_fingerprints": (q_simhash_fingerprints, _simhash_sql),
-    "fingerprint_groups": (q_fingerprint_groups, _fingerprint_sql),
-    "lang_id": (q_lang_id, _langid_sql),
-    "quality_score": (q_quality_score, _quality_score_sql),
+    "fingerprint_groups": _sql_query(_fingerprint_sql, "documents"),
+    "lang_id": _sql_query(_langid_sql, "documents"),
+    "quality_score": _sql_query(_quality_score_sql, "documents"),
     "cosine_topk": (q_cosine_topk, _cosine_topk_sql),
-    "distinct_sources": (q_distinct_sources, _distinct_sources_sql),
-    "rollup_summary": (q_rollup_summary, _rollup_sql),
+    "distinct_sources": _sql_query(_distinct_sources_sql, "documents"),
+    "rollup_summary": _sql_query(_rollup_sql, "lineitem"),
     "pivot_status_priority": (q_pivot_status_priority, _pivot_sql),
-    "running_revenue": (q_running_revenue, _running_revenue_sql),
-    "asof_last_signup": (q_asof_last_signup, _asof_outer_sql),
+    "running_revenue": _sql_query(_running_revenue_sql, "orders"),
+    "asof_last_signup": _sql_query(_asof_outer_sql, "events"),
     "ann_lsh": (q_ann_lsh, _ann_lsh_sql),
-    "token_counts": (q_token_counts, _token_counts_sql),
-    "label_centroids": (q_label_centroids, _label_centroids_sql),
-    "ivf_ann": (q_ivf_ann, _ivf_ann_sql),
+    "token_counts": _sql_query(_token_counts_sql, "documents"),
+    "label_centroids": _sql_query(_label_centroids_sql, "embeddings"),
+    "ivf_ann": _sql_query(_ivf_ann_sql, "embeddings"),
     "ann_recall_report": (q_ann_recall_report, _ann_recall_sql),
     "simhash_pairs": (q_simhash_pairs, _simhash_pairs_sql),
-    "regional_revenue": (q_regional_revenue, _regional_revenue_sql),
-    "value_stats": (q_value_stats, _value_stats_sql),
-    "grouping_sets_summary": (q_grouping_sets_summary, _grouping_sets_sql),
-    "late_ship_exists": (q_late_ship_exists, _late_ship_exists_sql),
-    "small_qty_revenue": (q_small_qty_revenue, _small_qty_revenue_sql),
-    "session_window": (q_session_window, _session_window_sql),
-    "doc_set_ops": (q_doc_set_ops, _doc_set_ops_sql),
-    "value_ranks": (q_value_ranks, _value_ranks_sql),
-    "value_band_totals": (q_value_band_totals, _value_band_totals_sql),
-    "events_calendar": (q_events_calendar, _events_calendar_sql),
+    "regional_revenue": _sql_query(
+        _regional_revenue_sql, "lineitem", "orders", "customer", "nation", "region"
+    ),
+    "value_stats": _sql_query(_value_stats_sql, "events"),
+    "grouping_sets_summary": _sql_query(_grouping_sets_sql, "orders"),
+    "late_ship_exists": _sql_query(_late_ship_exists_sql, "orders", "lineitem"),
+    "small_qty_revenue": _sql_query(_small_qty_revenue_sql, "lineitem", "part"),
+    "session_window": _sql_query(_session_window_sql, "events"),
+    "doc_set_ops": _sql_query(_doc_set_ops_sql, "documents"),
+    "value_ranks": _sql_query(_value_ranks_sql, "events"),
+    "value_band_totals": _sql_query(_value_band_totals_sql, "events"),
+    "events_calendar": _sql_query(_events_calendar_sql, "events"),
     "approx_stats": (q_approx_stats, _approx_stats_sql),
-    "binary_metadata": (q_binary_metadata, _binary_metadata_sql),
+    "binary_metadata": _sql_query(_binary_metadata_sql, "documents"),
     "image_dimensions": (q_image_dimensions, _image_dimensions_sql),
-    "bloom_dedup_probe": (q_bloom_dedup_probe, _bloom_dedup_probe_sql),
+    "bloom_dedup_probe": _sql_query(_bloom_dedup_probe_sql, "documents"),
 }
 
 
@@ -20628,6 +19512,10 @@ _REPROOF_PRIORITY = [
     "range_partition_bounds",
     "quality_signal_corr",
     "embedding_isotropy",
+    # r12-touched (round-12 verdict: restructured, no driver row yet)
+    "chi2_keywords",
+    "burrows_delta",
+    "dbscan_labels",
 ]
 
 

@@ -13,6 +13,14 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "sentiment-engine", shuffle_partitions: int | None = None) -> SparkSession:
+    """The live session if there is one, else a new one with the settings
+    below. A live session is returned as it is: the builder's getOrCreate
+    would re-apply this function's SQL confs to it (shuffle partitions from
+    SPARK_GRAFT_CPUS among them), silently changing plans under whoever
+    created it."""
+    live = SparkSession.getActiveSession()
+    if live is not None:
+        return live
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sp = shuffle_partitions if shuffle_partitions is not None else int(cpus)
     builder = (

@@ -27,10 +27,13 @@ from ..schemas import TESTDATA_TABLES
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # A build lock older than this is a crash leftover (index builds complete in
-# seconds to low minutes), broken instead of honored.
+# seconds to low minutes), broken instead of honored. A lock whose holder pid
+# is dead is broken at once, whatever its age.
 BUILD_LOCK_STALE_SEC = 900.0
 # How long a second builder waits for a live lock before giving up loudly.
-BUILD_LOCK_WAIT_SEC = 600.0
+# Longer than the stale window, so a waiter always outlasts a holder that
+# crashed without leaving a checkable pid.
+BUILD_LOCK_WAIT_SEC = 1200.0
 
 
 def _warehouse_dir() -> str:
@@ -38,6 +41,22 @@ def _warehouse_dir() -> str:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
     return os.path.join(repo_root, "spark-warehouse")
+
+
+def _lock_holder_dead(lock: str) -> bool:
+    """True when the lock file names a pid that no longer runs on this host.
+    An empty or unreadable file (the holder is between O_CREAT and its pid
+    write) and a pid owned by another user both count as alive."""
+    try:
+        with open(lock) as fh:
+            pid = int(fh.read().strip() or 0)
+        if pid > 0:
+            os.kill(pid, 0)
+    except ProcessLookupError:
+        return True
+    except (OSError, ValueError):
+        pass
+    return False
 
 
 @contextlib.contextmanager
@@ -50,7 +69,8 @@ def build_lock(final_loc: str):
     directory (recursive leaf-file listing would then silently serve
     duplicated rows). An O_EXCL lock file beside final_loc makes the whole
     build-and-swap critical section single-writer; a waiter polls until the
-    holder releases (or the lock goes stale -- crashed holder)."""
+    holder releases, the holder's pid is dead, or the lock goes stale --
+    both of the latter mean a crashed holder."""
     lock = final_loc.rstrip("/") + "__lock"
     deadline = time.time() + BUILD_LOCK_WAIT_SEC
     os.makedirs(os.path.dirname(lock), exist_ok=True)
@@ -64,12 +84,16 @@ def build_lock(final_loc: str):
             if e.errno != errno.EEXIST:
                 raise
             try:
-                age = time.time() - os.stat(lock).st_mtime
+                st = os.stat(lock)
             except FileNotFoundError:
                 continue  # holder just released; retry immediately
-            if age > BUILD_LOCK_STALE_SEC:
+            age = time.time() - st.st_mtime
+            if age > BUILD_LOCK_STALE_SEC or _lock_holder_dead(lock):
+                # crashed holder; reclaim -- unless another waiter already
+                # did and a new holder's lock sits at the path
                 with contextlib.suppress(FileNotFoundError):
-                    os.unlink(lock)  # crashed holder; reclaim
+                    if os.stat(lock).st_ino == st.st_ino:
+                        os.unlink(lock)
                 continue
             if time.time() > deadline:
                 raise TimeoutError(

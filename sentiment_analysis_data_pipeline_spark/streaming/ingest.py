@@ -248,7 +248,7 @@ def hopping_activity(
     window exactly once, when the watermark passes its end; state is the
     set of OPEN windows (bounded by watermark + window length, independent
     of history). The batch twin with identical integer-hop semantics is
-    queries.q_sliding_window_agg."""
+    the `sliding_window_agg` registry query."""
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window, hop).alias("w"))
@@ -269,8 +269,8 @@ def sessionized_activity(
     the watermark passes its end -- late events inside the horizon extend or
     merge sessions, later ones are dropped by policy. State per key is the
     set of OPEN sessions only, so it scales with active keys, not history.
-    The batch twin (same operator, same semantics) is queries.q_session_window.
-    """
+    The batch twin (same operator, same semantics) is the `session_window`
+    registry query."""
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(key, F.session_window(F.col(ts_col), gap))

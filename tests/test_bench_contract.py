@@ -132,9 +132,18 @@ def test_final_line_carries_regime_split_under_budget():
 def test_indexed_queries_list_is_mechanical():
     """INDEXED_QUERIES must equal the set of registry queries whose Spark
     callable transitively reaches ensure_stamped_table -- re-derived here
-    from the source so the hand-maintained set can never drift."""
+    from the source so the hand-maintained set can never drift.
+
+    A registry row is either `(q_fn, builder)` or `_sql_query(builder,
+    *tables)`; the latter's Spark side is the constructor's body plus the
+    builder, so reachability is searched from both. Every REGISTRY name
+    must parse into one of the two forms: a row in a third form would
+    otherwise drop out of the derived set unnoticed."""
+    import ast
     import os
     import re
+
+    from sentiment_analysis_data_pipeline_spark import queries as Q
 
     src_path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -143,9 +152,11 @@ def test_indexed_queries_list_is_mechanical():
     )
     with open(src_path) as f:
         src = f.read()
+    tree = ast.parse(src)
     defs = {
-        m.group(1): m.group(0)
-        for m in re.finditer(r"^def (\w+)\(.*?(?=^def |\Z)", src, re.M | re.S)
+        node.name: ast.get_source_segment(src, node)
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef)
     }
 
     def reaches(fn: str, seen: set[str]) -> bool:
@@ -160,8 +171,23 @@ def test_indexed_queries_list_is_mechanical():
             c in defs and c != fn and reaches(c, seen) for c in callees
         )
 
-    registry = re.findall(r'"(\w+)": \((q_\w+),', src)
-    derived = {name for name, qfn in registry if reaches(qfn, set())}
+    base = next(
+        node.value
+        for node in tree.body
+        if isinstance(node, ast.AnnAssign)
+        and getattr(node.target, "id", None) == "_REGISTRY_BASE"
+    )
+    roots: dict[str, list[str]] = {}
+    for key, row in zip(base.keys, base.values):
+        if isinstance(row, ast.Tuple):
+            roots[key.value] = [row.elts[0].id]
+        elif isinstance(row, ast.Call) and row.func.id == "_sql_query":
+            roots[key.value] = ["_sql_query", row.args[0].id]
+    assert set(roots) == set(Q.REGISTRY)
+    assert all(fn in defs for fns in roots.values() for fn in fns)
+    derived = {
+        name for name, fns in roots.items() if any(reaches(fn, set()) for fn in fns)
+    }
     assert derived == bench.INDEXED_QUERIES
 
 

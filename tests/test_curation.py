@@ -18,7 +18,7 @@ def _pytok(text: str) -> list[str]:
 
 
 def test_phrase_search_hits_are_adjacent(spark):
-    out = Q.q_phrase_search(spark, SF).collect()
+    out = Q.REGISTRY["phrase_search"][0](spark, SF).collect()
     assert out, "expected at least one phrase hit at sf0.001"
     docs = {
         r["doc_id"]: r["text"]
@@ -46,7 +46,7 @@ def test_more_like_this_excludes_seed_and_bounds_matches(spark):
 
 
 def test_mixture_weights_normalize_and_flatten(spark):
-    out = Q.q_mixture_weights(spark, SF).collect()
+    out = Q.REGISTRY["mixture_weights"][0](spark, SF).collect()
     assert len(out) >= 2
     assert abs(sum(r["weight"] for r in out) - 1.0) < 1e-9
     assert abs(sum(r["p"] for r in out) - 1.0) < 1e-9
@@ -58,7 +58,7 @@ def test_mixture_weights_normalize_and_flatten(spark):
 
 
 def test_chunk_documents_cover_and_overlap(spark):
-    rows = Q.q_chunk_documents(spark, SF).collect()
+    rows = Q.REGISTRY["chunk_documents"][0](spark, SF).collect()
     docs = {
         r["doc_id"]: _pytok(r["text"])
         for r in spark.read.parquet(f"{SF}/documents.parquet").collect()
@@ -101,9 +101,9 @@ def test_boilerplate_blocks_fixture(spark, tmp_path):
     out = str(tmp_path)
     df.write.parquet(f"{out}/documents.parquet")
 
-    from sentiment_analysis_data_pipeline_spark.queries import q_boilerplate_blocks
+    from sentiment_analysis_data_pipeline_spark.queries import REGISTRY
 
-    got = {r["doc_id"]: r for r in q_boilerplate_blocks(spark, out).collect()}
+    got = {r["doc_id"]: r for r in REGISTRY["boilerplate_blocks"][0](spark, out).collect()}
     assert set(got) == {1, 2, 3}  # doc 4 excluded (< 8 tokens)
     for d in (1, 2):
         assert got[d]["n_blocks"] == 2
@@ -124,9 +124,9 @@ def test_embedding_quantization_fixture(spark, tmp_path):
     out = str(tmp_path)
     df.write.parquet(f"{out}/embeddings.parquet")
 
-    from sentiment_analysis_data_pipeline_spark.queries import q_embedding_quantization
+    from sentiment_analysis_data_pipeline_spark.queries import REGISTRY
 
-    [row] = q_embedding_quantization(spark, out).collect()
+    [row] = REGISTRY["embedding_quantization"][0](spark, out).collect()
     # reproduce with the same float32->float64 values Spark reads
     import numpy as np
 

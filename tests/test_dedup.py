@@ -233,10 +233,10 @@ def test_winnow_pairs_position_sensitive(spark):
     assert all(3 not in p and 4 not in p for p in pairs)
 
 
-def test_dedup_recall_report_bounds(spark):
+def test_dedup_recall_report_bounds(spark, sf_dir):
     from sentiment_analysis_data_pipeline_spark import queries as Q
 
-    r = Q.q_dedup_recall_report(spark, "/root/testdata/sf0.001").collect()[0]
+    r = Q.REGISTRY["dedup_recall_report"][0](spark, sf_dir).collect()[0]
     assert r["n_hit"] <= r["n_truth"] and r["n_hit"] <= r["n_found"]
     assert r["precision"] == 1.0  # LSH candidates are exact-verified
     assert 0.5 <= r["recall"] <= 1.0  # banding S-curve keeps recall high

@@ -23,7 +23,7 @@ def _write_drop(path: str, rows) -> None:
 def test_streamed_psi_equals_batch_gate_bit_for_bit(spark, tmp_path):
     """Reference = the corpus old half (doc_id even), live stream = the new
     half arriving in two epochs. The accumulator's read_psi must equal
-    q_psi_drift on the full corpus row-for-row -- same bands, same counts,
+    psi_drift on the full corpus row-for-row -- same bands, same counts,
     same doubles (shared SQL tail; identical IEEE chains)."""
     from sentiment_analysis_data_pipeline_spark import queries as Q
 
@@ -38,7 +38,7 @@ def test_streamed_psi_equals_batch_gate_bit_for_bit(spark, tmp_path):
         drift_stream.append_batch_bands(spark, part, log, i)
 
     streamed = [tuple(r) for r in drift_stream.read_psi(spark, log, reference).collect()]
-    batch = [tuple(r) for r in Q.q_psi_drift(spark, SF).collect()]
+    batch = [tuple(r) for r in Q.REGISTRY["psi_drift"][0](spark, SF).collect()]
     assert streamed == batch  # EXACT equality incl. the psi doubles
 
 

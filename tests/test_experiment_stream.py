@@ -34,11 +34,11 @@ def test_streamed_sprt_and_srm_equal_batch_bit_for_bit(spark, tmp_path):
         X.append_batch(spark, ev.filter(F.col("event_id") % 3 == i), daily, users, i)
 
     streamed = [tuple(r) for r in X.read_sprt(spark, daily).collect()]
-    batch = [tuple(r) for r in Q.q_sprt_ab(spark, SF).collect()]
+    batch = [tuple(r) for r in Q.REGISTRY["sprt_ab"][0](spark, SF).collect()]
     assert streamed == batch  # EXACT equality incl. llr doubles
 
     s_srm = X.read_srm(spark, users).collect()[0]
-    b_srm = Q.q_srm_check(spark, SF).collect()[0]
+    b_srm = Q.REGISTRY["srm_check"][0](spark, SF).collect()[0]
     assert tuple(s_srm) == tuple(b_srm)
 
 

@@ -54,7 +54,7 @@ def test_repetition_metrics_values(spark):
 
 
 def test_knn_batch_ranks_and_self_exclusion(spark, sf_dir):
-    out = Q.q_knn_batch(spark, sf_dir).collect()
+    out = Q.REGISTRY["knn_batch"][0](spark, sf_dir).collect()
     by_q: dict[int, list] = {}
     for r in out:
         assert r["vec_id"] != r["qid"]
@@ -73,7 +73,7 @@ def test_knn_batch_matches_single_query_topk(spark, sf_dir):
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     single = similarity.brute_force_topk(emb, query_vec_id=0, k=5).collect()
-    batch = [r for r in Q.q_knn_batch(spark, sf_dir).collect() if r["qid"] == 0]
+    batch = [r for r in Q.REGISTRY["knn_batch"][0](spark, sf_dir).collect() if r["qid"] == 0]
     batch = sorted(batch, key=lambda r: r["rk"])
     assert [r["vec_id"] for r in batch] == [r["vec_id"] for r in single]
 

@@ -156,7 +156,7 @@ def test_temperature_targets_invariants(spark, srcs):
 
     from sentiment_analysis_data_pipeline_spark.queries import (
         _TEMP_Q,
-        q_temperature_resample,
+        REGISTRY,
     )
 
     out = tempfile.mkdtemp(prefix="temp-prop-")
@@ -165,7 +165,7 @@ def test_temperature_targets_invariants(spark, srcs):
         spark.createDataFrame(
             rows, "doc_id long, text string, lang string, source string, n_chars long"
         ).write.parquet(f"{out}/documents.parquet")
-        got = q_temperature_resample(spark, out).collect()
+        got = REGISTRY["temperature_resample"][0](spark, out).collect()
         total = len(srcs)
         assert sum(r["target"] for r in got) <= total / 2 + len(got)
         by_src: dict[str, list[int]] = {}

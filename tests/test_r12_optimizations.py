@@ -19,13 +19,6 @@ from sentiment_analysis_data_pipeline_spark.sources.tables import scattered
 SF_DIR = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from sentiment_analysis_data_pipeline_spark.session import get_spark
-
-    return get_spark("r12-tests")
-
-
 def test_source_bytes_directory_layout(spark, tmp_path):
     """round-11 ADVICE: the scatter gate must size a DIRECTORY-layout
     parquet table by its data files, not the directory inode (~4 KB),

@@ -7,7 +7,7 @@ from sentiment_analysis_data_pipeline_spark import queries as Q
 
 
 def test_value_histogram_partitions_all_events(spark, sf_dir):
-    rows = Q.q_value_histogram(spark, sf_dir).collect()
+    rows = Q.REGISTRY["value_histogram"][0](spark, sf_dir).collect()
     assert all(0 <= r["bin"] <= 15 for r in rows)
     total = sum(r["n_events"] for r in rows)
     Q._events_view(spark, sf_dir)
@@ -16,7 +16,7 @@ def test_value_histogram_partitions_all_events(spark, sf_dir):
 
 
 def test_value_correlations_bounded(spark, sf_dir):
-    rows = Q.q_value_correlations(spark, sf_dir).collect()
+    rows = Q.REGISTRY["value_correlations"][0](spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert -1.0 <= r["pearson_r"] <= 1.0
@@ -24,14 +24,14 @@ def test_value_correlations_bounded(spark, sf_dir):
 
 
 def test_event_deltas_consistent(spark, sf_dir):
-    rows = Q.q_event_deltas(spark, sf_dir).collect()
+    rows = Q.REGISTRY["event_deltas"][0](spark, sf_dir).collect()
     assert rows
     for r in rows[:200]:
         assert r["delta"] == r["value"] - r["prev_value"]
 
 
 def test_scd_upsert_merge_semantics(spark, sf_dir):
-    out = {r["c_custkey"]: r for r in Q.q_scd_upsert(spark, sf_dir).collect()}
+    out = {r["c_custkey"]: r for r in Q.REGISTRY["scd_upsert"][0](spark, sf_dir).collect()}
     base = {
         r["c_custkey"]: r["c_name"]
         for r in spark.read.parquet(f"{sf_dir}/customer.parquet").collect()
@@ -53,7 +53,7 @@ def test_scd_upsert_merge_semantics(spark, sf_dir):
 
 
 def test_sliding_window_covers_each_event_four_times(spark, sf_dir):
-    rows = Q.q_sliding_window_agg(spark, sf_dir).collect()
+    rows = Q.REGISTRY["sliding_window_agg"][0](spark, sf_dir).collect()
     Q._events_view(spark, sf_dir)
     n = spark.sql("SELECT count(*) AS n FROM events WHERE value IS NOT NULL").collect()[0]["n"]
     assert sum(r["n_events"] for r in rows) == Q.SLIDE_HOPS * n
@@ -63,7 +63,7 @@ def test_sliding_window_covers_each_event_four_times(spark, sf_dir):
 
 
 def test_hourly_anomaly_flag_matches_zscore(spark, sf_dir):
-    rows = Q.q_hourly_anomaly(spark, sf_dir).collect()
+    rows = Q.REGISTRY["hourly_anomaly"][0](spark, sf_dir).collect()
     assert rows
     # z numerators sum to zero => mean z is ~0
     assert abs(sum(r["zscore"] for r in rows)) < 1e-6 * len(rows)
@@ -73,7 +73,7 @@ def test_hourly_anomaly_flag_matches_zscore(spark, sf_dir):
 
 
 def test_column_profile_census(spark, sf_dir):
-    rows = {r["column_name"]: r for r in Q.q_column_profile(spark, sf_dir).collect()}
+    rows = {r["column_name"]: r for r in Q.REGISTRY["column_profile"][0](spark, sf_dir).collect()}
     assert set(rows) == set(Q._PROFILE_COLS)
     n = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     assert all(r["n_rows"] == n for r in rows.values())
@@ -82,7 +82,7 @@ def test_column_profile_census(spark, sf_dir):
 
 
 def test_key_skew_report_shares(spark, sf_dir):
-    rows = Q.q_key_skew_report(spark, sf_dir).collect()
+    rows = Q.REGISTRY["key_skew_report"][0](spark, sf_dir).collect()
     by_col = {}
     for r in rows:
         by_col.setdefault(r["key_col"], []).append(r)

@@ -102,7 +102,7 @@ def test_stream_matches_registry_batch_query(spark, tmp_path):
     sf = "/root/testdata/sf0.001"
     want = {
         (r["source"], r["doc_id"])
-        for r in Q.q_weighted_sample(spark, sf).collect()
+        for r in Q.REGISTRY["weighted_sample"][0](spark, sf).collect()
     }
     docs = spark.read.parquet(f"{sf}/documents.parquet").select(
         "doc_id", "source", "n_chars"

@@ -35,7 +35,7 @@ def test_rec_eval_empty_set_emits_single_zeros_row(spark):
 def test_rec_eval_nonempty_unchanged(spark):
     """The inlined-scalar-subquery rewrite must not move any value on a real
     corpus (same integers, same IEEE chains)."""
-    r = Q.q_rec_eval_topk(spark, SF).collect()[0]
+    r = Q.REGISTRY["rec_eval_topk"][0](spark, SF).collect()[0]
     assert r["n_eval_users"] > 0
     assert 0.0 <= r["mean_ndcg"] <= 1.0
     assert 0.0 <= r["mean_mrr"] <= 1.0
@@ -46,7 +46,7 @@ def test_trending_terms_z_never_nan(spark):
     """The variance guard must hold for every emitted term: z is finite on
     both the zero-variance identity arm and the float-rounds-negative arm
     (the old exact-equality-only guard let sqrt(<0) produce NaN)."""
-    rows = Q.q_trending_terms(spark, SF).collect()
+    rows = Q.REGISTRY["trending_terms"][0](spark, SF).collect()
     assert rows, "trending_terms returned no rows at sf0.001"
     for r in rows:
         assert not math.isnan(r["z"]), f"NaN z for term {r['term']}"
@@ -107,7 +107,7 @@ def test_mann_whitney_decimal_cube_widened(spark):
 
 def test_mann_whitney_values_unchanged(spark):
     """The widened decimals must not move the statistic on a real corpus."""
-    r = Q.q_mann_whitney(spark, SF).collect()[0]
+    r = Q.REGISTRY["mann_whitney"][0](spark, SF).collect()[0]
     assert r["n1"] > 0 and r["n2"] > 0
     assert not math.isnan(r["z"])
     assert -1.0 <= r["rank_biserial"] <= 1.0

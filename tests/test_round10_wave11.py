@@ -15,7 +15,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_krippendorff_alpha_matches_reference(spark):
-    out = Q.q_krippendorff_alpha(spark, SF).collect()[0]
+    out = Q.REGISTRY["krippendorff_alpha"][0](spark, SF).collect()[0]
     Q._view(spark, SF, "documents")
     wc = Q.TX.word_count(D.SPARK, Q.TEXT)
     q = Q.TX.quality_score(D.SPARK, Q.TEXT)
@@ -60,7 +60,7 @@ def test_krippendorff_alpha_perfect_agreement_is_one(spark):
 
 
 def test_source_quality_mi_information_inequality(spark):
-    rows = Q.q_source_quality_mi(spark, SF).collect()
+    rows = Q.REGISTRY["source_quality_mi"][0](spark, SF).collect()
     assert rows
     total_mi = sum(r["mi_contrib"] for r in rows)
     # MI >= 0 up to quantization (each ln is floor-quantized at 2^-30 and

@@ -9,7 +9,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_negative_sampling_table_allocates_exactly(spark):
-    rows = Q.q_negative_sampling_table(spark, SF).collect()
+    rows = Q.REGISTRY["negative_sampling_table"][0](spark, SF).collect()
     assert rows, "empty vocabulary at sf0.001 -- fixture regression"
     # largest-remainder apportionment: the table is EXACTLY full
     assert sum(r["n_slots"] for r in rows) == Q.NS_TABLE
@@ -30,7 +30,7 @@ def test_negative_sampling_matches_reference_apportionment(spark):
     """Exact driver-side replay of the quantized apportionment."""
     import math
 
-    rows = Q.q_negative_sampling_table(spark, SF).collect()
+    rows = Q.REGISTRY["negative_sampling_table"][0](spark, SF).collect()
     w = {r["tok"]: math.sqrt(math.sqrt(float(r["f"]) ** 3)) for r in rows}
     wmax = max(w.values())
     wq = {t: math.floor((v / wmax) * float(1 << 30)) for t, v in w.items()}
@@ -47,7 +47,7 @@ def test_negative_sampling_matches_reference_apportionment(spark):
 
 
 def test_qini_uplift_accounting(spark):
-    rows = Q.q_qini_uplift(spark, SF).collect()
+    rows = Q.REGISTRY["qini_uplift"][0](spark, SF).collect()
     assert len(rows) == Q.QINI_DECILES
     Q._events_view(spark, SF)
     stats = spark.sql(
@@ -114,7 +114,7 @@ def test_effective_rank_against_numpy_spectrum(spark):
 
 
 def test_k_anonymity_events_accounting(spark):
-    rows = Q.q_k_anonymity_events(spark, SF).collect()
+    rows = Q.REGISTRY["k_anonymity_events"][0](spark, SF).collect()
     assert [r["k"] for r in rows] == list(Q.K_ANON_LEVELS)
     Q._events_view(spark, SF)
     n = spark.table("events").count()

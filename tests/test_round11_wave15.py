@@ -190,10 +190,10 @@ def test_cem_att_closed_form(spark):
     assert s1["n_matched_t"] == 1
 
 
-def test_cem_att_aa_split_on_real_data(spark):
+def test_cem_att_aa_split_on_real_data(spark, sf_dir):
     """On the driver events table the parity split is an A/A: the pooled
     ATT must sit well inside the naive treated-control outcome spread."""
-    out = Q.q_cem_att(spark, "/root/testdata/sf0.001").collect()
+    out = Q.REGISTRY["cem_att"][0](spark, sf_dir).collect()
     assert len(out) >= 1
     att = out[0]["att"]
     scale = max(abs(r["mean_t"]) + abs(r["mean_c"]) for r in out) + 1e-9

@@ -189,12 +189,12 @@ def test_vocab_coverage_closed_form(spark):
     assert out[8]["coverage"] == 0.0
 
 
-def test_vocab_coverage_rare_mass_live_on_driver_data(spark):
+def test_vocab_coverage_rare_mass_live_on_driver_data(spark, sf_dir):
     """On the real testdata the injected tail must make the curve move:
     coverage at min_count 2 strictly below 1."""
     out = {
         r["min_count"]: r
-        for r in Q.q_vocab_coverage(spark, "/root/testdata/sf0.001").collect()
+        for r in Q.REGISTRY["vocab_coverage"][0](spark, sf_dir).collect()
     }
     assert out[1]["coverage"] == 1.0
     assert out[2]["coverage"] < 1.0

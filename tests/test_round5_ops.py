@@ -55,7 +55,7 @@ def test_temperature_resample_flattens_and_checksums(spark, tmp_path):
     out = str(tmp_path)
     df.write.parquet(f"{out}/documents.parquet")
 
-    got = {r["source"]: r for r in Q.q_temperature_resample(spark, out).collect()}
+    got = {r["source"]: r for r in Q.REGISTRY["temperature_resample"][0](spark, out).collect()}
     assert set(got) == {"big", "small"}
     q = float(Q._TEMP_Q)
     w = {s: math.floor(math.sqrt(n) * q) for s, n in (("big", 90), ("small", 10))}
@@ -88,7 +88,7 @@ def test_semantic_decontaminate_flags_planted_dup(spark, tmp_path):
     out = str(tmp_path)
     df.write.parquet(f"{out}/embeddings.parquet")
 
-    got = {r["vec_id"]: r for r in Q.q_semantic_decontaminate(spark, out).collect()}
+    got = {r["vec_id"]: r for r in Q.REGISTRY["semantic_decontaminate"][0](spark, out).collect()}
     assert set(got) == {1, 2}  # vec 0 is eval-side, never scored
     assert got[1]["contaminated"] == 1 and got[1]["max_cos"] == 1.0
     assert got[2]["contaminated"] == 0 and got[2]["max_cos"] == 0.0
@@ -104,7 +104,7 @@ def test_embedding_standardize_matches_replica(spark, sf_dir):
     for r in rows:
         for i, x in enumerate(r["embedding"]):
             dims.setdefault(i, []).append(math.floor(float(x) * q))
-    got = {r["dim"]: r for r in Q.q_embedding_standardize(spark, sf_dir).collect()}
+    got = {r["dim"]: r for r in Q.REGISTRY["embedding_standardize"][0](spark, sf_dir).collect()}
     assert set(got) == set(dims)
     for i, xs in dims.items():
         n, sx = len(xs), sum(xs)
@@ -187,7 +187,7 @@ def test_source_drift_matches_replica(spark, sf_dir):
     t_old = sum(v[0] for v in cells.values())
     t_new = sum(v[1] for v in cells.values())
     n = t_old + t_new
-    got = {r["source"]: r for r in Q.q_source_drift(spark, sf_dir).collect()}
+    got = {r["source"]: r for r in Q.REGISTRY["source_drift"][0](spark, sf_dir).collect()}
     assert set(got) == set(cells)
     for s, (o, w) in cells.items():
         assert got[s]["n_old"] == o and got[s]["n_new"] == w
@@ -209,7 +209,7 @@ def test_pca_power_step_unit_norm_and_replica(spark, sf_dir):
     v0 = np.array(Q._PCA_V0)
     w = X.T @ (X @ v0)
     expect = w / np.linalg.norm(w)
-    got = Q.q_pca_power_step(spark, sf_dir).collect()
+    got = Q.REGISTRY["pca_power_step"][0](spark, sf_dir).collect()
     comp = np.array([r["component"] for r in sorted(got, key=lambda r: r["dim"])])
     assert abs(np.linalg.norm(comp) - 1.0) < 1e-9
     # fp64 replica direction (engine w is the floor-quantized exact MEAN of
@@ -301,7 +301,7 @@ def test_logreg_step_matches_replica(spark, sf_dir):
             gsum[j] += rq * math.floor(fx * q)
     n = len(X)
     expect = [float(g) / (n * q * q) for g in gsum]
-    got = [r["grad"] for r in Q.q_logreg_step(spark, sf_dir).collect()]
+    got = [r["grad"] for r in Q.REGISTRY["logreg_step"][0](spark, sf_dir).collect()]
     assert got == expect
     # direction sanity vs unquantized gradient (quantization error ~1e-6)
     Xb = np.array([(1.0, *x) for x in X])

@@ -98,11 +98,11 @@ def test_round8_operator_invariants(spark):
 
     sf = SF
 
-    steps = Q.q_funnel_windowed(spark, sf).collect()
+    steps = Q.REGISTRY["funnel_windowed"][0](spark, sf).collect()
     users = [r["users"] for r in sorted(steps, key=lambda r: r["step_idx"])]
     assert users == sorted(users, reverse=True)  # funnel never widens
 
-    coh = Q.q_cohort_retention(spark, sf).collect()
+    coh = Q.REGISTRY["cohort_retention"][0](spark, sf).collect()
     assert coh, "cohorts empty"
     for r in coh:
         if r["offset_d"] == 0:
@@ -110,29 +110,29 @@ def test_round8_operator_invariants(spark):
         assert 0.0 < r["retention"] <= 1.0
         assert r["active_users"] <= r["cohort_size"]
 
-    psi = Q.q_psi_drift(spark, sf).collect()
+    psi = Q.REGISTRY["psi_drift"][0](spark, sf).collect()
     # (p-q) ln(p/q) >= 0 for every band -- PSI contributions are pointwise
     # non-negative (up to the 2^-30 quantization of ln)
     assert all(r["psi_contrib"] >= -2.0 ** -29 for r in psi)
 
-    ben = Q.q_benford_digits(spark, sf).collect()
+    ben = Q.REGISTRY["benford_digits"][0](spark, sf).collect()
     assert len(ben) == 9
     assert abs(sum(r["share"] for r in ben) - 1.0) < 1e-9
     assert abs(sum(r["benford_p"] for r in ben) - 1.0) < 1e-9
 
-    kap = Q.q_cohens_kappa(spark, sf).collect()[0]
+    kap = Q.REGISTRY["cohens_kappa"][0](spark, sf).collect()[0]
     assert kap["both_keep"] + kap["only_a"] + kap["only_b"] + kap["both_drop"] == kap["n"]
     assert -1.0 <= kap["kappa"] <= 1.0
 
-    for r in Q.q_key_gini(spark, sf).collect():
+    for r in Q.REGISTRY["key_gini"][0](spark, sf).collect():
         assert 0.0 <= r["gini"] < 1.0
         assert r["p50_rows"] <= r["p99_rows"] <= r["max_rows"]
 
-    ks = Q.q_ks_sources(spark, sf).collect()[0]
+    ks = Q.REGISTRY["ks_sources"][0](spark, sf).collect()[0]
     assert 0.0 <= ks["ks"] <= 1.0
     assert ks["cdf_a_count"] <= ks["n_a"] and ks["cdf_b_count"] <= ks["n_b"]
 
-    hn = Q.q_hard_negatives(spark, sf).collect()
+    hn = Q.REGISTRY["hard_negatives"][0](spark, sf).collect()
     assert hn, "no hard negatives mined"
     assert all(r["neg_label"] != r["q_label"] for r in hn)
     from collections import Counter
@@ -145,13 +145,13 @@ def test_round8_operator_invariants(spark):
     assert sum(r["n_assigned"] for r in kc) == n_emb  # full coverage
     assert len({r["center_id"] for r in kc}) == len(kc)  # distinct centers
 
-    roll = Q.q_revenue_rollup(spark, sf).collect()
+    roll = Q.REGISTRY["revenue_rollup"][0](spark, sf).collect()
     leaf = sum(r["revenue"] for r in roll if r["gid"] == 0)
     grand = [r for r in roll if r["gid"] == 3]
     assert len(grand) == 1
     assert abs(grand[0]["revenue"] - leaf) < 1e-6  # exact decimal sums agree
 
-    piv = Q.q_lang_pivot(spark, sf).collect()
+    piv = Q.REGISTRY["lang_pivot"][0](spark, sf).collect()
     for r in piv:
         known = sum(r[f"n_{lg}"] for lg in Q.PIVOT_LANGS)
         assert known + r["n_other"] == r["n_total"]
@@ -165,7 +165,7 @@ def test_unimax_allocation_invariants(spark):
     die -- the degenerate-fixture rule)."""
     from sentiment_analysis_data_pipeline_spark import queries as Q
 
-    rows = Q.q_unimax_allocation(spark, SF).collect()
+    rows = Q.REGISTRY["unimax_allocation"][0](spark, SF).collect()
     total = sum(r["tokens"] for r in rows)
     budget = Q.UNIMAX_BUDGET_NUM * total // Q.UNIMAX_BUDGET_DEN
     assert any(r["capped"] == 0 for r in rows)

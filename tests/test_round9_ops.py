@@ -25,7 +25,7 @@ def test_label_propagation_moves_labels(spark):
 
 
 def test_attribution_models_reconcile(spark):
-    out = {(r["model"], r["channel"]): r for r in Q.q_attribution_touch(spark, SF).collect()}
+    out = {(r["model"], r["channel"]): r for r in Q.REGISTRY["attribution_touch"][0](spark, SF).collect()}
     Q._events_view(spark, SF)
     purchases = spark.sql(
         "SELECT cast(count(*) as bigint) AS n,"
@@ -41,7 +41,7 @@ def test_attribution_models_reconcile(spark):
 
 
 def test_packing_curve_accounting(spark):
-    rows = {r["ctx"]: r for r in Q.q_packing_efficiency_curve(spark, SF).collect()}
+    rows = {r["ctx"]: r for r in Q.REGISTRY["packing_efficiency_curve"][0](spark, SF).collect()}
     assert set(rows) == set(Q.PACK_CONTEXTS)
     total = next(iter(rows.values()))["total_tokens"]
     prev_kept = -1
@@ -78,7 +78,7 @@ def test_range_bounds_balance_and_order(spark):
 
 
 def test_dataset_card_cross_checks(spark):
-    card = Q.q_dataset_card(spark, SF).collect()[0].asDict()
+    card = Q.REGISTRY["dataset_card"][0](spark, SF).collect()[0].asDict()
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     assert card["n_docs"] == docs.count()
     assert card["n_sources"] == docs.select("source").distinct().count()
@@ -92,7 +92,7 @@ def test_dataset_card_cross_checks(spark):
 
 
 def test_ngram_novelty_positive_and_bounded(spark):
-    rows = Q.q_ngram_novelty(spark, SF).collect()
+    rows = Q.REGISTRY["ngram_novelty"][0](spark, SF).collect()
     assert len(rows) == 50  # one row per new-batch doc, absent docs included
     assert all(0.0 <= r["novelty"] <= 1.0 for r in rows)
     assert all(r["n_unseen"] <= r["n_shingles"] for r in rows)
@@ -184,7 +184,7 @@ def test_classifier_calibration_accounting(spark):
 
 def test_pareto_frontier_is_exact_skyline(spark):
     pts = spark.read.parquet(f"{SF01}/part.parquet").collect()
-    frontier = Q.q_pareto_frontier(spark, SF01).collect()
+    frontier = Q.REGISTRY["pareto_frontier"][0](spark, SF01).collect()
     got = {(r["ptype"], r["partkey"]) for r in frontier}
     # brute-force dominance oracle per type
     import math
@@ -206,7 +206,7 @@ def test_pareto_frontier_is_exact_skyline(spark):
 
 
 def test_sorted_neighborhood_shape(spark):
-    rows = Q.q_sorted_neighborhood_pairs(spark, SF01).collect()
+    rows = Q.REGISTRY["sorted_neighborhood_pairs"][0](spark, SF01).collect()
     n_cust = spark.read.parquet(f"{SF01}/customer.parquet").count()
     # each row pairs with <= SN_WINDOW-1 successors; blocks lose tail rows
     assert 0 < len(rows) <= n_cust * (Q.SN_WINDOW - 1)
@@ -217,7 +217,7 @@ def test_sorted_neighborhood_shape(spark):
 
 
 def test_zonemap_audit_contrast(spark):
-    rows = Q.q_zonemap_audit(spark, SF01).collect()
+    rows = Q.REGISTRY["zonemap_audit"][0](spark, SF01).collect()
     by = {(r["pred"], r["layout"]): r for r in rows}
     # aligned layout prunes the mid-price probe, misaligned one does not
     assert by[("pc_mid", "price")]["skip_fraction"] > 0.5
@@ -228,7 +228,7 @@ def test_zonemap_audit_contrast(spark):
 
 
 def test_ewma_revenue_exactness(spark):
-    rows = sorted(Q.q_ewma_revenue(spark, SF01).collect(), key=lambda r: r["month_index"])
+    rows = sorted(Q.REGISTRY["ewma_revenue"][0](spark, SF01).collect(), key=lambda r: r["month_index"])
     rev = {r["month_index"]: r["rev_cents"] for r in rows}
     L = Q.EWMA_LAGS
     for r in rows:
@@ -350,7 +350,7 @@ def test_woe_iv_reconstruction(spark):
 def test_ols_trend_exact_fit(spark):
     import math
 
-    rows = Q.q_ols_trend(spark, SF01).collect()
+    rows = Q.REGISTRY["ols_trend"][0](spark, SF01).collect()
     assert len(rows) == 25
     # recompute one nation's fit from raw data
     orders = spark.read.parquet(f"{SF01}/orders.parquet").collect()
@@ -381,7 +381,7 @@ def test_ols_trend_exact_fit(spark):
 
 
 def test_event_path_topk_shape(spark):
-    rows = Q.q_event_path_topk(spark, SF01).collect()
+    rows = Q.REGISTRY["event_path_topk"][0](spark, SF01).collect()
     assert len(rows) == Q.PATH_TOP
     counts = [r["n_occurrences"] for r in rows]
     assert counts == sorted(counts, reverse=True)
@@ -395,7 +395,7 @@ def test_event_path_topk_shape(spark):
 def test_theil_sen_matches_hand_median(spark):
     import statistics
 
-    rows = Q.q_theil_sen_trend(spark, SF01).collect()
+    rows = Q.REGISTRY["theil_sen_trend"][0](spark, SF01).collect()
     assert len(rows) == 25
     # recompute one nation's median-of-slopes from the monthly relation
     target = rows[0]["nation"]
@@ -423,7 +423,7 @@ def test_theil_sen_matches_hand_median(spark):
 
 
 def test_welch_ttest_against_closed_form(spark):
-    r = Q.q_welch_ttest(spark, SF01).collect()[0]
+    r = Q.REGISTRY["welch_ttest"][0](spark, SF01).collect()[0]
     docs = spark.read.parquet(f"{SF01}/documents.parquet").collect()
     en = [d["n_chars"] for d in docs if d["lang"] == "en"]
     ot = [d["n_chars"] for d in docs if d["lang"] != "en"]
@@ -445,7 +445,7 @@ def test_welch_ttest_against_closed_form(spark):
 
 
 def test_acf_daily_bounds_and_lag0_identity(spark):
-    rows = Q.q_acf_daily(spark, SF01).collect()
+    rows = Q.REGISTRY["acf_daily"][0](spark, SF01).collect()
     assert [r["lag"] for r in rows] == list(range(1, Q.ACF_MAX_LAG + 1))
     # |r_k| <= 1 up to the missing-pair truncation; pairs strictly decrease
     # in lag only if calendar gaps exist -- assert the weak monotone bound
@@ -458,7 +458,7 @@ def test_acf_daily_bounds_and_lag0_identity(spark):
 
 
 def test_decision_stump_is_argmin(spark):
-    r = Q.q_decision_stump(spark, SF01).collect()[0]
+    r = Q.REGISTRY["decision_stump"][0](spark, SF01).collect()[0]
     docs = spark.read.parquet(f"{SF01}/documents.parquet").collect()
     pts = [(d["n_chars"], 1 if d["lang"] == "en" else 0) for d in docs]
     p = sum(y for _, y in pts)
@@ -478,7 +478,7 @@ def test_decision_stump_is_argmin(spark):
 
 
 def test_permutation_test_pvalue_definition(spark):
-    r = Q.q_permutation_test(spark, SF01).collect()[0]
+    r = Q.REGISTRY["permutation_test"][0](spark, SF01).collect()[0]
     assert r["n_replicates"] == Q.PERM_B
     assert 0 <= r["n_ge"] <= Q.PERM_B
     assert r["p_value"] == (r["n_ge"] + 1) / (Q.PERM_B + 1)
@@ -489,7 +489,7 @@ def test_permutation_test_pvalue_definition(spark):
 
 
 def test_runs_test_counts_runs_exactly(spark):
-    r = Q.q_runs_test(spark, SF01).collect()[0]
+    r = Q.REGISTRY["runs_test"][0](spark, SF01).collect()[0]
     daily = spark.sql(
         "SELECT (ts div 1000) div 86400000000 AS d,"
         " sum(cast(floor(value * 100) as bigint)) AS v"
@@ -528,7 +528,7 @@ def test_log_odds_terms_prior_and_direction(spark):
 
 
 def test_jackknife_ratio_hand_check(spark):
-    r = Q.q_jackknife_ratio(spark, SF01).collect()[0]
+    r = Q.REGISTRY["jackknife_ratio"][0](spark, SF01).collect()[0]
     docs = spark.read.parquet(f"{SF01}/documents.parquet").collect()
     groups: dict[str, list[int]] = {}
     for d0 in docs:
@@ -585,7 +585,7 @@ def test_kendall_tau_matches_scipy_free_recompute(spark):
 
 
 def test_binseg_changepoint_is_argmin(spark):
-    r = Q.q_binseg_changepoint(spark, SF01).collect()[0]
+    r = Q.REGISTRY["binseg_changepoint"][0](spark, SF01).collect()[0]
     daily = spark.sql(
         "SELECT (ts div 1000) div 86400000000 AS d,"
         " sum(cast(floor(value * 100) as bigint)) AS v"
@@ -610,7 +610,7 @@ def test_binseg_changepoint_is_argmin(spark):
 
 
 def test_mcnemar_cells_reconcile(spark):
-    r = Q.q_mcnemar_test(spark, SF01).collect()[0]
+    r = Q.REGISTRY["mcnemar_test"][0](spark, SF01).collect()[0]
     assert r["n_docs"] == 500
     b, c = r["logreg_only_right"], r["stump_only_right"]
     assert b >= 0 and c >= 0 and b + c <= r["n_docs"]
@@ -622,7 +622,7 @@ def test_mcnemar_cells_reconcile(spark):
 
 
 def test_dow_seasonality_reconciles(spark):
-    rows = Q.q_dow_seasonality(spark, SF01).collect()
+    rows = Q.REGISTRY["dow_seasonality"][0](spark, SF01).collect()
     assert len(rows) == 7
     total_days = sum(r["n_days"] for r in rows)
     grand = sum(r["mean_events"] * r["n_days"] for r in rows) / total_days
@@ -637,7 +637,7 @@ def test_dow_seasonality_reconciles(spark):
 
 
 def test_hhi_bounds_and_hand_check(spark):
-    rows = Q.q_hhi_concentration(spark, SF01).collect()
+    rows = Q.REGISTRY["hhi_concentration"][0](spark, SF01).collect()
     assert len(rows) == 25
     for r in rows:
         assert 1.0 / r["n_suppliers"] - 1e-6 <= r["hhi"] <= 1.0 + 1e-9
@@ -662,7 +662,7 @@ def test_hhi_bounds_and_hand_check(spark):
 
 
 def test_sprt_llr_recomputes_and_branches_live(spark):
-    rows = Q.q_sprt_ab(spark, SF01).collect()
+    rows = Q.REGISTRY["sprt_ab"][0](spark, SF01).collect()
     by_test = {}
     for r in rows:
         by_test.setdefault(r["test_name"], []).append(r)
@@ -696,7 +696,7 @@ def test_sprt_llr_recomputes_and_branches_live(spark):
 
 
 def test_seasonal_backtest_hand_wape(spark):
-    out = {r["model"]: r for r in Q.q_seasonal_backtest(spark, SF01).collect()}
+    out = {r["model"]: r for r in Q.REGISTRY["seasonal_backtest"][0](spark, SF01).collect()}
     assert set(out) == {"naive_1", "seasonal_7"}
     daily = {
         r["d"]: r["v"]
@@ -715,7 +715,7 @@ def test_seasonal_backtest_hand_wape(spark):
 
 
 def test_winsorized_mean_hand_check(spark):
-    r = Q.q_winsorized_mean(spark, SF01).collect()[0]
+    r = Q.REGISTRY["winsorized_mean"][0](spark, SF01).collect()[0]
     cents = sorted(
         int(o["o_totalprice"] * 100 + 0.5)
         for o in spark.read.parquet(f"{SF01}/orders.parquet").collect()
@@ -737,7 +737,7 @@ def test_winsorized_mean_hand_check(spark):
 
 
 def test_cuped_invariants(spark):
-    rows = {r["variant"]: r for r in Q.q_cuped_adjustment(spark, SF01).collect()}
+    rows = {r["variant"]: r for r in Q.REGISTRY["cuped_adjustment"][0](spark, SF01).collect()}
     assert set(rows) == {0, 1}
     r0, r1 = rows[0], rows[1]
     assert r0["theta"] == r1["theta"]
@@ -756,7 +756,7 @@ def test_cuped_invariants(spark):
 
 
 def test_srm_chi2_hand_check(spark):
-    r = Q.q_srm_check(spark, SF01).collect()[0]
+    r = Q.REGISTRY["srm_check"][0](spark, SF01).collect()[0]
     users = {
         u["user_id"]
         for u in spark.read.parquet(f"{SF01}/events.parquet")
@@ -774,7 +774,7 @@ def test_srm_chi2_hand_check(spark):
 
 
 def test_mde_power_shrinks_with_horizon(spark):
-    rows = sorted(Q.q_mde_power(spark, SF01).collect(), key=lambda r: r["horizon_days"])
+    rows = sorted(Q.REGISTRY["mde_power"][0](spark, SF01).collect(), key=lambda r: r["horizon_days"])
     assert [r["horizon_days"] for r in rows] == list(Q.MDE_HORIZONS)
     assert all(0.0 < r["baseline_rate"] < 1.0 for r in rows)
     # more runway -> smaller detectable effect, exactly like 1/sqrt(n)
@@ -787,7 +787,7 @@ def test_mde_power_shrinks_with_horizon(spark):
 
 
 def test_shapley_reconciles_to_conversions(spark):
-    rows = {r["channel"]: r for r in Q.q_shapley_attribution(spark, SF01).collect()}
+    rows = {r["channel"]: r for r in Q.REGISTRY["shapley_attribution"][0](spark, SF01).collect()}
     assert set(rows) <= set(Q.SHAPLEY_CHANNELS) | {"untouched"}
     total_credit = sum(r["shapley_conversions"] for r in rows.values())
     total_share = sum(r["credit_share"] for r in rows.values())
@@ -821,7 +821,7 @@ def test_mad_anomalies_robustness(spark):
 
 
 def test_retention_decay_fit_matches_hand_ols(spark):
-    r = Q.q_retention_decay_fit(spark, SF01).collect()[0]
+    r = Q.REGISTRY["retention_decay_fit"][0](spark, SF01).collect()[0]
     assert r["n_offsets"] > 3
     assert r["lambda_per_day"] != 0.0
     if r["lambda_per_day"] > 0:

@@ -12,7 +12,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_seasonal_decompose_identities(spark):
-    rows = Q.q_seasonal_decompose(spark, SF).collect()
+    rows = Q.REGISTRY["seasonal_decompose"][0](spark, SF).collect()
     assert rows, "decomposition empty"
     # additive identity holds exactly by construction
     for r in rows:
@@ -42,7 +42,7 @@ def test_seasonal_decompose_identities(spark):
 
 
 def test_trending_terms_reference(spark):
-    out = Q.q_trending_terms(spark, SF).collect()
+    out = Q.REGISTRY["trending_terms"][0](spark, SF).collect()
     assert 0 < len(out) <= Q._TREND_TOP
     zs = [r["z"] for r in out]
     assert zs == sorted(zs, reverse=True)

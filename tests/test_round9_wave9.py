@@ -109,7 +109,7 @@ def test_isotonic_matches_pava(spark):
 
 
 def test_mann_whitney_matches_reference(spark):
-    out = Q.q_mann_whitney(spark, SF).collect()[0]
+    out = Q.REGISTRY["mann_whitney"][0](spark, SF).collect()[0]
     Q._events_view(spark, SF)
     vals = spark.sql(
         "SELECT case when event_type = 'purchase' then 1 else 0 end AS g,"
@@ -143,7 +143,7 @@ def test_mann_whitney_matches_reference(spark):
 
 
 def test_survival_hazard_identities(spark):
-    rows = Q.q_survival_hazard(spark, SF).collect()
+    rows = Q.REGISTRY["survival_hazard"][0](spark, SF).collect()
     Q._events_view(spark, SF)
     stats = spark.sql(
         "SELECT cast(count(*) as bigint) AS n_events,"
@@ -183,7 +183,7 @@ def test_survival_hazard_identities(spark):
 
 
 def test_rec_eval_matches_reference(spark):
-    out = Q.q_rec_eval_topk(spark, SF).collect()[0]
+    out = Q.REGISTRY["rec_eval_topk"][0](spark, SF).collect()[0]
     Q._events_view(spark, SF)
     ev = spark.sql(
         "SELECT user_id, cast(get_json_object(props, '$.k') as bigint) AS item,"
@@ -235,7 +235,7 @@ def test_rec_eval_matches_reference(spark):
 
 
 def test_soft_dedup_reconciliation(spark):
-    rows = Q.q_dedup_weighted_sample(spark, SF).collect()
+    rows = Q.REGISTRY["dedup_weighted_sample"][0](spark, SF).collect()
     assert rows
     for r in rows:
         assert 0 <= r["n_kept"] <= r["n_docs"]
@@ -256,5 +256,5 @@ def test_soft_dedup_reconciliation(spark):
     # the keep decision FIRES at this sf (positive branch)
     assert sum(r["n_kept"] for r in rows) < sum(r["n_docs"] for r in rows)
     # determinism: the draw is md5-based, not RNG
-    again = {r["source"]: r["n_kept"] for r in Q.q_dedup_weighted_sample(spark, SF).collect()}
+    again = {r["source"]: r["n_kept"] for r in Q.REGISTRY["dedup_weighted_sample"][0](spark, SF).collect()}
     assert all(again[r["source"]] == r["n_kept"] for r in rows)

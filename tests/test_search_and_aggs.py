@@ -132,13 +132,13 @@ def test_approx_stats_bounds(spark):
     threshold for the test row counts)."""
     from sentiment_analysis_data_pipeline_spark.queries import (
         approx_stats_sketches,
+        REGISTRY,
         q_approx_stats,
-        q_value_stats,
     )
 
     sf = "/root/testdata/sf0.001"
     approx = {r["event_type"]: r for r in approx_stats_sketches(spark, sf).collect()}
-    exact = {r["event_type"]: r for r in q_value_stats(spark, sf).collect()}
+    exact = {r["event_type"]: r for r in REGISTRY["value_stats"][0](spark, sf).collect()}
     assert set(approx) == set(exact)
     for et, a in approx.items():
         e = exact[et]

@@ -270,9 +270,10 @@ def test_r4_lexicon_sentences(spark):
 
 def test_full_table_distribution(spark, sf_dir):
     """Flagship distribution on sf0.001 is a stable golden."""
-    from sentiment_analysis_data_pipeline_spark.queries import q_sentiment_terms_agg
+    from sentiment_analysis_data_pipeline_spark.queries import REGISTRY
 
-    rows = {r["key"]: r["doc_count"] for r in q_sentiment_terms_agg(spark, sf_dir).collect()}
+    flagship = REGISTRY["sentiment_terms_agg"][0]
+    rows = {r["key"]: r["doc_count"] for r in flagship(spark, sf_dir).collect()}
     assert rows == {"negative": 218, "positive": 213, "neutral": 69}
 
 

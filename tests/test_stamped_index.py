@@ -11,7 +11,7 @@ fixes under test:
   the re-registered external table keeps its bucket spec (co-located joins
   stay Exchange-free);
 - build_lock serializes concurrent builders (O_EXCL beside final_loc) and
-  reclaims stale locks from crashed holders;
+  reclaims locks from crashed holders (dead pid, or stale);
 - swap_directory fails LOUDLY if the final slot is occupied mid-swap
   instead of letting the rename nest directories.
 """
@@ -110,6 +110,42 @@ def test_build_lock_excludes_and_reclaims_stale(tmp_path, monkeypatch):
     with T.build_lock(loc):
         pass
     assert not os.path.exists(loc + "__lock")
+
+
+def test_build_lock_reclaims_dead_pid_at_once(tmp_path, monkeypatch):
+    """A fresh lock whose holder pid is dead is a crash leftover: the next
+    builder takes it in well under a second instead of waiting out
+    BUILD_LOCK_STALE_SEC. A fresh lock held by a live foreign pid is still
+    honored."""
+    import subprocess
+    import sys
+
+    # a lock whose holder left no checkable pid is broken by age alone, so a
+    # waiter must outlast the stale window
+    assert T.BUILD_LOCK_WAIT_SEC > T.BUILD_LOCK_STALE_SEC
+    loc = str(tmp_path / "tbl")
+    gone = subprocess.Popen([sys.executable, "-c", "pass"])
+    gone.wait()
+    with open(loc + "__lock", "w") as f:
+        f.write(str(gone.pid))
+    t0 = time.monotonic()
+    with T.build_lock(loc):
+        assert open(loc + "__lock").read() == str(os.getpid())
+    assert time.monotonic() - t0 < 1.0
+    assert not os.path.exists(loc + "__lock")
+
+    live = subprocess.Popen([sys.executable, "-c", "import time; time.sleep(30)"])
+    try:
+        with open(loc + "__lock", "w") as f:
+            f.write(str(live.pid))
+        monkeypatch.setattr(T, "BUILD_LOCK_WAIT_SEC", 0.5)
+        with pytest.raises(TimeoutError):
+            with T.build_lock(loc):
+                pass
+    finally:
+        live.kill()
+        live.wait()
+    os.unlink(loc + "__lock")
 
 
 def test_swap_detects_concurrent_install(spark, tmp_path, monkeypatch):

@@ -73,14 +73,14 @@ def test_ann_recall_vs_brute_force(spark):
     the brute-force ranking for query 0. (Before the banded-OR/multi-probe
     fix both measured 0/3 -- deterministic but useless.)"""
     from sentiment_analysis_data_pipeline_spark.queries import (
+        REGISTRY,
         q_ann_lsh,
         q_cosine_topk,
-        q_ivf_ann,
     )
 
     sf = "/root/testdata/sf0.001"
     truth = {r["vec_id"] for r in q_cosine_topk(spark, sf).collect()[:3]}
     lsh = {r["vec_id"] for r in q_ann_lsh(spark, sf).collect() if r["q_id"] == 0}
-    ivf = {r["vec_id"] for r in q_ivf_ann(spark, sf).collect() if r["q_id"] == 0}
+    ivf = {r["vec_id"] for r in REGISTRY["ivf_ann"][0](spark, sf).collect() if r["q_id"] == 0}
     assert len(truth & lsh) >= 1, f"LSH recall collapsed: {truth} vs {lsh}"
     assert len(truth & ivf) >= 1, f"IVF recall collapsed: {truth} vs {ivf}"

@@ -1,4 +1,4 @@
-"""Round-11 optimization profiler: isolate one query at a time per guide §1.
+"""Optimization profiler: isolate one query at a time per guide §1.
 
 For each named query (default: the current bench board's heaviest), run
 
@@ -6,12 +6,15 @@ For each named query (default: the current bench board's heaviest), run
     shuffle-file creation land here, never in a sample),
   - N timed noop-sink writes (`df.write.format("noop")` -- computes every
     column of every row, §1.4) so we time the computation, not collect(),
-  - capture `.explain("formatted")` to plans/r12/<name>_<tag>.txt,
+  - capture `.explain("formatted")` to <plan-dir>/<name>_<tag>.txt,
   - count plan features (Exchange, SortMergeJoin/BroadcastHashJoin,
     BatchEvalPython/ArrowEvalPython, WholeStageCodegen spans) so plan-shape
-    claims in OPTIMIZATION_r12.md are mechanical, not eyeballed.
+    claims in an optimization ledger (OPTIMIZATION_rNN.md) are mechanical,
+    not eyeballed.
 
-Usage: python tools/r12_profile.py [--tag before|after] [--runs 3] name ...
+Usage: python tools/query_profile.py --plan-dir plans/r12 [--tag before|after] [--runs 3] name ...
+The plan dir names the round whose ledger the plans back (plans/r11,
+plans/r12, ...); a relative path is taken from the repo root.
 Writes a JSON summary line per query to stdout and the plan file per query.
 Jobs are labelled (setJobDescription) per guide §1.5.
 """
@@ -25,10 +28,8 @@ import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-PLAN_DIR = os.path.join("/root/repo", "plans", "r12")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 PLAN_FEATURES = {
     "exchanges": r"\bExchange\b",
@@ -49,16 +50,21 @@ def plan_counts(plan: str) -> dict[str, int]:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
+    ap.add_argument("--plan-dir", required=True)
     ap.add_argument("--tag", default="before")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--sf-dir", default=SF_DIR)
+    ap.add_argument("--sf-dir", default=None)
     args = ap.parse_args()
 
     from sentiment_analysis_data_pipeline_spark.queries import spark_queries
     from sentiment_analysis_data_pipeline_spark.session import get_spark
+    from sentiment_analysis_data_pipeline_spark.sources.tables import DEFAULT_SF_DIR
 
-    os.makedirs(PLAN_DIR, exist_ok=True)
-    spark = get_spark("r12-profile")
+    sf_dir = args.sf_dir or DEFAULT_SF_DIR
+    plan_dir = os.path.join(REPO, args.plan_dir)
+    label = os.path.basename(os.path.normpath(plan_dir))
+    os.makedirs(plan_dir, exist_ok=True)
+    spark = get_spark(f"{label}-profile")
     qs = spark_queries()
     spark.range(1000).selectExpr("sum(id)").collect()  # JVM warmup
 
@@ -68,24 +74,24 @@ def main() -> None:
             continue
         fn = qs[name]
         sc = spark.sparkContext
-        sc.setJobDescription(f"r12:{name}:warm")
+        sc.setJobDescription(f"{label}:{name}:warm")
         t_build0 = time.perf_counter()
-        df = fn(spark, args.sf_dir)
+        df = fn(spark, sf_dir)
         build_s = time.perf_counter() - t_build0
         df.write.format("noop").mode("overwrite").save()
         plan = df._sc is not None and df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
-        path = os.path.join(PLAN_DIR, f"{name}_{args.tag}.txt")
+        path = os.path.join(plan_dir, f"{name}_{args.tag}.txt")
         with open(path, "w") as f:
             f.write(plan)
         samples = []
         for i in range(args.runs):
-            sc.setJobDescription(f"r12:{name}:sample{i}")
+            sc.setJobDescription(f"{label}:{name}:sample{i}")
             t0 = time.perf_counter()
             # re-build per sample: index-ensure / checkpoint work inside the
             # query fn is part of what the bench times, so it belongs here too
-            fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(round(time.perf_counter() - t0, 4))
         spark.catalog.clearCache()
         jmap = sc._jsc.getPersistentRDDs()
