@@ -32,8 +32,14 @@ def salted_join(
     spreading each key across `n_salts` shuffle partitions.
 
     Result is row-identical to ``left.join(right, key, how)`` for inner and
-    left joins (each left row matches exactly its salt's replica).
+    left joins (each left row matches exactly its salt's replica), for any
+    salt count. `n_salts` is clamped to spark.sql.shuffle.partitions: past
+    that, salts share partitions, so the extra right-side replicas spread
+    nothing and only multiply the replicated side.
     """
+    n_salts = min(
+        n_salts, int(left.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    )
     left_cols = [c for c in left.columns if c != key]
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in left_cols]) if left_cols else F.xxhash64(F.col(key)), F.lit(n_salts))
     salted_left = left.withColumn("_salt", salt.cast("int"))

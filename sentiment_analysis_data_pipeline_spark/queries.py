@@ -161,6 +161,19 @@ def _view_hot(spark: SparkSession, sf_dir: str, *names: str) -> None:
         ).createOrReplaceTempView(n)
 
 
+def _materialize(df: DataFrame, view: str | None = None) -> DataFrame:
+    """The one checkpoint point of this module: run `df` now (eager
+    localCheckpoint, so the engine work happens inside the query
+    constructor) and register the result as temp view `view` when one is
+    named. Used where Catalyst's CTE re-inlining would otherwise re-derive
+    a multi-referenced relation per reference; DuckDB materializes such
+    CTEs itself, so oracles never need it."""
+    ckpt = df.localCheckpoint(eager=True)
+    if view is not None:
+        ckpt.createOrReplaceTempView(view)
+    return ckpt
+
+
 def _ts_us(d: str) -> str:
     """events.ts as epoch MICROseconds in either engine. Microseconds, not
     nanos: DuckDB's TIMESTAMP is us-precision internally, so epoch_ns() on a
@@ -1177,8 +1190,8 @@ def _build_annlsh_bands(spark: SparkSession, sf_dir: str) -> None:
         )
         SELECT vec_id, band, concat({signs}) AS bkey FROM g
         """
-    ).repartition(32).localCheckpoint()
-    bands.createOrReplaceTempView("annlsh_bands")
+    )
+    _materialize(bands.repartition(32), "annlsh_bands")
 
 
 def _annlsh_topk(spark: SparkSession, multiprobe: bool) -> DataFrame:
@@ -1493,7 +1506,7 @@ def q_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT cell, n_vectors FROM sizes"""
     )
-    sizes.localCheckpoint(eager=True).createOrReplaceTempView("ivf_sizes")
+    _materialize(sizes, "ivf_sizes")
     return spark.sql(
         """
         WITH sizes AS (SELECT cell, n_vectors FROM ivf_sizes),
@@ -1755,7 +1768,7 @@ def _simhash_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of 2*64 substring compares. Value-identical to the oracle's
     bit-string arithmetic.)"""
     fp = _simhash_fp_df(spark, sf_dir, out_col="fi", packed=True)
-    fp.localCheckpoint(eager=True).createOrReplaceTempView("simhash_fp")
+    _materialize(fp, "simhash_fp")
     width = SIMHASH_BITS // 4
     mask = (1 << width) - 1
     # shiftright() function form: the `>>` operator inside array(...) trips
@@ -2019,12 +2032,10 @@ def _embedding_dedup_pairs_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (operators/dedup_index.py -- the durable written-table variant of this
     # in-session checkpoint; build_embedding_band_index/embedding_candidate
     # _pairs is what a cluster deployment runs per corpus snapshot).
-    bands = (
-        spark.sql(dedup_index.embedding_band_sql("embeddings"))
-        .repartition(32)
-        .localCheckpoint()
+    _materialize(
+        spark.sql(dedup_index.embedding_band_sql("embeddings")).repartition(32),
+        "emb_bands",
     )
-    bands.createOrReplaceTempView("emb_bands")
     # Candidates first, THEN components: only pair members ever reach the
     # verify join, so the component explode is semi-join-filtered to
     # candidate vec_ids before paying the n*dim row blowup + decimal casts.
@@ -2049,8 +2060,8 @@ def _embedding_dedup_pairs_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM bandc a JOIN bandc b
           ON a.band = b.band AND a.bkey = b.bkey AND a.vec_id < b.vec_id
         """
-    ).localCheckpoint()
-    return _verify_embedding_cand(spark, cand)
+    )
+    return _verify_embedding_cand(spark, _materialize(cand))
 
 
 def _verify_embedding_cand(spark: SparkSession, cand: DataFrame) -> DataFrame:
@@ -2081,8 +2092,8 @@ def _verify_embedding_cand(spark: SparkSession, cand: DataFrame) -> DataFrame:
                cast(floor((x / nv) * 10000000.0) as bigint) AS u
         FROM (SELECT vec_id, nv, posexplode(v) AS (idx, x) FROM emb) e
         """
-    ).localCheckpoint()
-    comp.createOrReplaceTempView("emb_comp")
+    )
+    _materialize(comp, "emb_comp")
     return spark.sql(
         """
         WITH dots AS (
@@ -3282,7 +3293,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     _view(spark, sf_dir, "documents")
     toks = TX.analyzed_tokens(D.SPARK, TEXT)
     ex = spark.sql(f"SELECT doc_id, explode({toks}) AS t FROM documents")
-    ex.localCheckpoint(eager=True).createOrReplaceTempView("bm25_ex")
+    _materialize(ex, "bm25_ex")
     return spark.sql(_bm25_body(D.SPARK, "ex AS (SELECT * FROM bm25_ex),"))
 
 
@@ -3711,12 +3722,13 @@ CURATION_MIN_DISTINCT_RATIO = 0.25
 CURATION_MAX_TOP_TOKEN_FRAC = 0.5
 
 
-def _curation_body(d: str, tokd_def: str) -> str:
-    """The full training-data curation chain over a `tokd(doc_id, lang,
-    text, toks)` relation (inline CTE for the single-statement oracle; a
-    materialized temp view Spark-side -- `tokd` is referenced by three
-    branches and Spark's CTE re-inlining would re-run the regex tokenizer
-    per branch):
+def _curation_body(d: str, tokd: str) -> str:
+    """End-to-end curation -- the kept training corpus with its
+    per-document signals -- as the full training-data curation chain over
+    the `tokd` relation of _curation_tokd_sql (inline CTE for the
+    single-statement oracle; a materialized temp view Spark-side -- `tokd`
+    is referenced by three branches and Spark's CTE re-inlining would
+    re-run the regex tokenizer per branch):
 
       language ID -> quality gate -> repetition (Gopher) gates ->
       eval-split n-gram decontamination -> fingerprint dedup -> kept corpus.
@@ -3736,7 +3748,7 @@ def _curation_body(d: str, tokd_def: str) -> str:
     ex_s = "explode(sh)" if d == D.SPARK else "unnest(sh)"
     hint = "/*+ BROADCAST(ev) */ " if d == D.SPARK else ""
     return f"""
-        WITH {tokd_def}
+        WITH tokd AS ({tokd}),
         feat AS (
             SELECT doc_id, lang, {pred} AS pred, {q} AS q, {fp} AS fp
             FROM tokd
@@ -3785,28 +3797,15 @@ def _curation_body(d: str, tokd_def: str) -> str:
     """
 
 
-def _curation_pipeline_sql(d: str) -> str:
+def _curation_tokd_sql(d: str) -> str:
+    """(doc_id, lang, text, toks) over the non-blank documents. Staged
+    (materialized once) on the Spark side: three plan branches of
+    _curation_body consume it."""
     toks = TX.tokenize(d, TEXT)
-    tokd_def = f"""tokd AS (
+    return f"""
             SELECT doc_id, lang, {TEXT} AS text, {toks} AS toks
             FROM documents WHERE trim({TEXT}) <> ''
-        ),"""
-    return _curation_body(d, tokd_def)
-
-
-def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end curation: language + quality + repetition gates, eval
-    decontamination, fingerprint dedup -- the kept training corpus with its
-    per-document signals. The token relation is materialized once
-    (localCheckpoint) because three plan branches consume it."""
-    _view(spark, sf_dir, "documents")
-    toks = TX.tokenize(D.SPARK, TEXT)
-    tokd = spark.sql(
-        f"SELECT doc_id, lang, {TEXT} AS text, {toks} AS toks "
-        f"FROM documents WHERE trim({TEXT}) <> ''"
-    )
-    tokd.localCheckpoint(eager=True).createOrReplaceTempView("curation_tokd")
-    return spark.sql(_curation_body(D.SPARK, "tokd AS (SELECT * FROM curation_tokd),"))
+        """
 
 
 US_PER_DAY = 86_400_000_000
@@ -3938,7 +3937,7 @@ def q_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     _view(spark, sf_dir, "documents")
     toks = TX.tokenize(D.SPARK, TEXT)
     ex = spark.sql(f"SELECT doc_id, explode({toks}) AS t FROM documents")
-    ex.localCheckpoint(eager=True).createOrReplaceTempView("surprisal_ex")
+    _materialize(ex, "surprisal_ex")
     return spark.sql(_surprisal_body(D.SPARK, "ex AS (SELECT * FROM surprisal_ex),"))
 
 
@@ -4084,14 +4083,14 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     _view(spark, sf_dir, "documents")
     toks = TX.tokenize(D.SPARK, TEXT)
     ex = spark.sql(f"SELECT doc_id, explode({toks}) AS t FROM documents")
-    ex.localCheckpoint(eager=True).createOrReplaceTempView("tfidf_ex")
+    _materialize(ex, "tfidf_ex")
     return spark.sql(_tfidf_body(D.SPARK, "ex AS (SELECT * FROM tfidf_ex),"))
 
 
 PMI_TOP_K = 50
 
 
-def _pmi_body(d: str, tokd_def: str) -> str:
+def _pmi_body(d: str, tokd: str) -> str:
     """Top-{PMI_TOP_K} bigram collocations by frequency, scored with PMI
     over a `tokd(doc_id, toks)` token relation: PMI = ln(N * c_ab /
     (c_a * c_b)) with unigram counts c_a/c_b, bigram count c_ab, and N
@@ -4118,7 +4117,7 @@ def _pmi_body(d: str, tokd_def: str) -> str:
     )
     pmi_q = f"cast(floor(ln({pmi_arg}) * {float(_SURPRISAL_Q)!r}) as bigint)"
     return f"""
-        WITH {tokd_def}
+        WITH tokd AS ({tokd}),
         uni AS (
             SELECT t, cast(count(*) as bigint) AS c
             FROM (SELECT {ex_t} AS t FROM tokd) u GROUP BY t
@@ -4143,20 +4142,15 @@ def _pmi_body(d: str, tokd_def: str) -> str:
     """
 
 
-def _pmi_collocations_sql(d: str) -> str:
+def _tokd_sql(d: str) -> str:
+    """(doc_id, toks): every document's analyzer tokens. Staged
+    (materialized once) on the Spark side wherever several branches read
+    it -- CTE re-inlining would re-run the tokenizer per branch (pmi's
+    unigram and bigram counts; heldout_bigram_nll's train-unigram,
+    train-bigram and eval-bigram branches; kn_bigram_nll's train
+    aggregates and eval scoring)."""
     toks = TX.tokenize(d, TEXT)
-    return _pmi_body(d, f"tokd AS (SELECT doc_id, {toks} AS toks FROM documents),")
-
-
-def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PMI-scored top bigram collocations. The token relation is
-    materialized once (localCheckpoint): unigram and bigram branches both
-    consume it and CTE re-inlining would tokenize twice."""
-    _view(spark, sf_dir, "documents")
-    toks = TX.tokenize(D.SPARK, TEXT)
-    tokd = spark.sql(f"SELECT doc_id, {toks} AS toks FROM documents")
-    tokd.localCheckpoint(eager=True).createOrReplaceTempView("pmi_tokd")
-    return spark.sql(_pmi_body(D.SPARK, "tokd AS (SELECT * FROM pmi_tokd),"))
+    return f"SELECT doc_id, {toks} AS toks FROM documents"
 
 
 BPE_N_MERGES = 30
@@ -4632,8 +4626,7 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_winnow_index/winnow_candidate_pairs is the durable written-table
     variant a cluster deployment persists per corpus snapshot."""
     _view(spark, sf_dir, "documents")
-    fp = spark.sql(dedup_index.winnow_fp_sql("documents")).localCheckpoint()
-    fp.createOrReplaceTempView("winnow_fp")
+    _materialize(spark.sql(dedup_index.winnow_fp_sql("documents")), "winnow_fp")
     return spark.sql(dedup_index.winnow_pairs_over("winnow_fp"))
 
 
@@ -5125,8 +5118,8 @@ def q_chi2_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""SELECT t, source, cast(count(*) as bigint) AS a
             FROM (SELECT source, explode({toks}) AS t FROM documents)
             GROUP BY t, source"""
-    ).localCheckpoint(eager=True)
-    ts.createOrReplaceTempView("chi2_ts_cnt")
+    )
+    _materialize(ts, "chi2_ts_cnt")
     return spark.sql(
         _chi2_keywords_sql(D.SPARK, ts_src="SELECT t, source, a FROM chi2_ts_cnt")
     )
@@ -5621,7 +5614,7 @@ def q_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
     _view(spark, sf_dir, "documents")
     toks = TX.tokenize(D.SPARK, TEXT)
     ex = spark.sql(f"SELECT doc_id, explode({toks}) AS t FROM documents")
-    ex.localCheckpoint(eager=True).createOrReplaceTempView("mlt_ex")
+    _materialize(ex, "mlt_ex")
     return spark.sql(_more_like_this_sql(D.SPARK, "exall AS (SELECT * FROM mlt_ex),"))
 
 
@@ -6191,8 +6184,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs.createOrReplaceTempView("documents")
     new_docs = docs.filter(F.col("doc_id") % INCR_MOD == INCR_SLOT)
     table = _ensure_minhash_band_index(spark, sf_dir)
-    cand = dedup_index.new_batch_candidates(spark, new_docs, table=table).localCheckpoint()
-    cand.createOrReplaceTempView("incr_cand")
+    _materialize(dedup_index.new_batch_candidates(spark, new_docs, table=table), "incr_cand")
     return _jaccard_verify_spark(spark, "incr_cand", "new_doc", "corpus_doc")
 
 
@@ -6223,8 +6215,8 @@ def _jaccard_verify_spark(spark: SparkSession, cand_view: str, a_col: str, b_col
         shingled AS (SELECT doc, {shingles} AS shingles FROM tokd)
         SELECT doc, shingles FROM shingled WHERE size(shingles) > 0
         """
-    ).localCheckpoint()
-    ne.createOrReplaceTempView("_jv_nonempty")
+    )
+    _materialize(ne, "_jv_nonempty")
     return spark.sql(
         f"""
         WITH scored AS (
@@ -6283,8 +6275,8 @@ def q_minhash_pairs_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM {table} a JOIN {table} b
           ON a.band_key = b.band_key AND a.doc < b.doc
         """
-    ).localCheckpoint()
-    cand.createOrReplaceTempView("mhx_cand")
+    )
+    _materialize(cand, "mhx_cand")
     return _jaccard_verify_spark(spark, "mhx_cand", "id_a", "id_b")
 
 
@@ -6359,12 +6351,8 @@ def _ensure_embedding_scored_table(spark: SparkSession, sf_dir: str) -> str:
     def build() -> DataFrame:
         _view(spark, sf_dir, "embeddings")
         band_table = _ensure_embedding_band_index(spark, sf_dir)
-        cand = (
-            dedup_index.embedding_candidate_pairs(spark, band_table)
-            .repartition(32)
-            .localCheckpoint()
-        )
-        return _verify_embedding_cand(spark, cand)
+        cand = dedup_index.embedding_candidate_pairs(spark, band_table).repartition(32)
+        return _verify_embedding_cand(spark, _materialize(cand))
 
     return ensure_stamped_table(spark, table, "id_a", 8, fp, build)
 
@@ -7013,7 +7001,12 @@ def _clf_feats_sql(d: str, src: str = "documents") -> str:
     kendall_tau's length band without a join-back to documents;
     downstream consumers project explicitly). `src` lets the streaming
     calibration monitor score a micro-batch view through the IDENTICAL
-    expression chain."""
+    expression chain.
+
+    Staged (materialized once) for classifier_score: the gradient agg and
+    the scoring scan of _classifier_score_core both consume it, and CTE
+    re-inlining would tokenize the corpus twice (x2/x3 need token
+    counts)."""
     toks = TX.tokenize(d, TEXT)
     nt = D.arr_size(d, toks)
     f1 = "(cast(n_chars as double) / 1000.0)"
@@ -7099,23 +7092,6 @@ def _classifier_score_core(d: str, feats_src: str) -> str:
         FROM hist h JOIN totals t ON t.source = h.source
         ORDER BY h.source ASC, h.band ASC
     """
-
-
-def _classifier_score_sql(d: str) -> str:
-    return _classifier_score_core(d, _clf_feats_sql(d))
-
-
-def q_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-classifier calibration report (see _classifier_score_core).
-    The feature relation is materialized once: the gradient agg and the
-    scoring scan both consume it, and CTE re-inlining would tokenize the
-    corpus twice (x2/x3 need token counts)."""
-    _view(spark, sf_dir, "documents")
-    feats = spark.sql(_clf_feats_sql(D.SPARK))
-    feats.localCheckpoint(eager=True).createOrReplaceTempView("clf_feats")
-    return spark.sql(
-        _classifier_score_core(D.SPARK, "SELECT source, x1, x2, x3, y FROM clf_feats")
-    )
 
 
 _ENT_Q = 1 << 20
@@ -7771,7 +7747,7 @@ def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     _view(spark, sf_dir, "documents", "embeddings")
     toks = TX.analyzed_tokens(D.SPARK, TEXT)
     ex = spark.sql(f"SELECT doc_id, explode({toks}) AS t FROM documents")
-    ex.localCheckpoint(eager=True).createOrReplaceTempView("hybrid_ex")
+    _materialize(ex, "hybrid_ex")
     bm25 = _bm25_body(D.SPARK, "ex AS (SELECT * FROM hybrid_ex),")
     return spark.sql(_hybrid_body(D.SPARK, bm25))
 
@@ -8014,7 +7990,7 @@ def q_perplexity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
                         FROM (SELECT doc_id, {toks} AS toks FROM documents) t) g) e
             GROUP BY doc_id, bg"""
     )
-    dbg.localCheckpoint(eager=True).createOrReplaceTempView("ppl_dbg")
+    _materialize(dbg, "ppl_dbg")
     return spark.sql(_perplexity_body(D.SPARK, "dbg AS (SELECT * FROM ppl_dbg),"))
 
 
@@ -8074,7 +8050,7 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 DUP_SPAN_K = 30  # minimum duplicated-substring length, chars
 
 
-def _dup_spans_body(d: str, h_def: str) -> str:
+def _dup_spans_body(d: str, h: str) -> str:
     """Exact substring-duplication coverage per document over an
     `h(doc_id, p, hh)` relation of md5-hashed {DUP_SPAN_K}-char shingles at
     EVERY character position: a position is duplicated if its shingle
@@ -8100,7 +8076,7 @@ def _dup_spans_body(d: str, h_def: str) -> str:
     dup_frac is one division of identical bigints."""
     K = DUP_SPAN_K
     return f"""
-        WITH {h_def}
+        WITH h AS ({h}),
         duph AS (SELECT hh FROM h GROUP BY hh HAVING count(*) > 1),
         dpos AS (SELECT h.doc_id, h.p FROM h JOIN duph ON h.hh = duph.hh),
         isl AS (
@@ -8141,7 +8117,14 @@ def _dup_shingle_sql(d: str) -> str:
     """The `h(doc_id, p, hh)` shingle relation: one row per character
     position of every doc long enough to hold a {DUP_SPAN_K}-char window.
     The length filter runs BEFORE sequence(): Spark's sequence(1, 0)
-    generates a DESCENDING [1, 0], not an empty array."""
+    generates a DESCENDING [1, 0], not an empty array.
+
+    Staged (materialized once) for duplicate_spans: _dup_spans_body
+    references `h` twice (dup-hash aggregate + position join) and CTE
+    re-inlining would run the position explode + md5 twice. On a cluster
+    the same barrier is a shuffle-reuse or an explicit parquet spill of
+    the (doc_id, p, hh) relation -- which IS the suffix-array analog's
+    on-disk posting table."""
     K = DUP_SPAN_K
     if d == D.SPARK:
         gen = f"explode(sequence(1, length(t) - {K} + 1))"
@@ -8155,31 +8138,13 @@ def _dup_shingle_sql(d: str) -> str:
     """
 
 
-def _duplicate_spans_sql(d: str) -> str:
-    return _dup_spans_body(d, f"h AS ({_dup_shingle_sql(d)}),")
-
-
-def q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact substring-dedup coverage report (see _dup_spans_body). The
-    shingle relation is materialized once (localCheckpoint): the statement
-    references `h` twice (dup-hash aggregate + position join) and CTE
-    re-inlining would run the position explode + md5 twice. On a cluster
-    the same barrier is a shuffle-reuse or an explicit parquet spill of
-    the (doc_id, p, hh) relation -- which IS the suffix-array analog's
-    on-disk posting table."""
-    _view(spark, sf_dir, "documents")
-    h = spark.sql(_dup_shingle_sql(D.SPARK))
-    h.localCheckpoint(eager=True).createOrReplaceTempView("dup_span_h")
-    return spark.sql(_dup_spans_body(D.SPARK, "h AS (SELECT * FROM dup_span_h),"))
-
-
 _BGLM_EVAL_MOD = 5  # doc_id % 5 == 0 -> held-out eval split; rest trains
 _BGLM_Q = 1 << 20
 
 
-def _bigram_nll_body(d: str, tokd_def: str) -> str:
-    """Held-out bigram-LM scoring with Stupid Backoff over a
-    `tokd(doc_id, toks)` token relation: train bigram/unigram counts on
+def _bigram_nll_body(d: str, tokd: str) -> str:
+    """Held-out bigram-LM scoring with Stupid Backoff over the
+    `tokd(doc_id, toks)` relation of _tokd_sql: train bigram/unigram counts on
     docs with doc_id % {_BGLM_EVAL_MOD} != 0, score the held-out split's
     bigrams as
         NLL(w1 w2) = ln(c(w1) / c(w1 w2))              if the bigram trained
@@ -8216,7 +8181,7 @@ def _bigram_nll_body(d: str, tokd_def: str) -> str:
         f" / cast(2 * (coalesce(ub.c, 0) + 1) as double)) * {q!r}) as bigint)"
     )
     return f"""
-        WITH {tokd_def}
+        WITH tokd AS ({tokd}),
         train AS (SELECT toks FROM tokd WHERE doc_id % {_BGLM_EVAL_MOD} <> 0),
         tuni AS (
             SELECT t, cast(count(*) as bigint) AS c
@@ -8257,11 +8222,6 @@ def _bigram_nll_body(d: str, tokd_def: str) -> str:
                cast(n_backoff as double) / cast(n_bigrams as double) AS backoff_rate
         FROM agg
     """
-
-
-def _heldout_bigram_nll_sql(d: str) -> str:
-    toks = TX.tokenize(d, TEXT)
-    return _bigram_nll_body(d, f"tokd AS (SELECT doc_id, {toks} AS toks FROM documents),")
 
 
 KMV_K = 256  # k-minimum-values sketch size
@@ -8406,19 +8366,6 @@ def _gt_discounts_sql(d: str) -> str:
     """
 
 
-def q_heldout_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Held-out Stupid-Backoff bigram NLL per eval-split doc (see
-    _bigram_nll_body). The token relation is materialized once
-    (localCheckpoint): train-unigram, train-bigram, and eval-bigram
-    branches all consume it and CTE re-inlining would tokenize the corpus
-    three times."""
-    _view(spark, sf_dir, "documents")
-    toks = TX.tokenize(D.SPARK, TEXT)
-    tokd = spark.sql(f"SELECT doc_id, {toks} AS toks FROM documents")
-    tokd.localCheckpoint(eager=True).createOrReplaceTempView("bglm_tokd")
-    return spark.sql(_bigram_nll_body(D.SPARK, "tokd AS (SELECT * FROM bglm_tokd),"))
-
-
 _PR_Q = 1 << 40  # PageRank fixed-point scale: every step is integer-exact
 _PR_TOP = 20
 
@@ -8484,7 +8431,7 @@ def q_pagerank_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sparse LSH output -- a few rows per doc -- so the checkpoint is
     edge-sized, the same barrier connected_components snapshots per round."""
     edges = _simhash_edges(spark, sf_dir)
-    edges.localCheckpoint(eager=True).createOrReplaceTempView("pagerank_edges")
+    _materialize(edges, "pagerank_edges")
     return spark.sql(_pagerank_body(D.SPARK, "SELECT id_a, id_b FROM pagerank_edges"))
 
 
@@ -8502,7 +8449,14 @@ def _cdc_chunk_rel_sql(d: str) -> str:
     position-explode -> trailing-window hash -> boundary flag -> running
     boundary count (chunk id g) -> per-chunk token count + content hash.
     Deterministic content assembly: Spark sorts the collected (i, t)
-    structs by position; DuckDB uses ordered string_agg."""
+    structs by position; DuckDB uses ordered string_agg.
+
+    Staged (materialized once) on the Spark side: the dup-hash aggregate
+    and the per-doc rollup of _cdc_chunks_body both consume it, and CTE
+    re-inlining re-ran tokenize -> explode -> two windows -> chunk
+    assembly per branch (observed in the executed plan). On a cluster the
+    same barrier is the natural parquet spill of the chunk table -- the
+    artifact an incremental CDC pipeline would persist anyway."""
     K, P = CDC_WINDOW, CDC_MOD
     toks = TX.tokenize(d, TEXT)
     if d == D.SPARK:
@@ -8547,7 +8501,7 @@ def _cdc_chunk_rel_sql(d: str) -> str:
     """
 
 
-def _cdc_chunks_body(d: str, chunks_def: str) -> str:
+def _cdc_chunks_body(d: str, chunks: str) -> str:
     """Content-defined chunking dedup report over a
     `chunks(doc_id, g, n_toks, ch)` relation (_cdc_chunk_rel_sql): cut
     points where the hash of the trailing
@@ -8577,7 +8531,7 @@ def _cdc_chunks_body(d: str, chunks_def: str) -> str:
     would run tokenize -> explode -> two windows -> chunk assembly twice
     (observed in the executed plan before the checkpoint)."""
     return f"""
-        WITH {chunks_def}
+        WITH chunks AS ({chunks}),
         dupc AS (SELECT ch FROM chunks GROUP BY ch HAVING count(*) > 1),
         per_doc AS (
             SELECT c.doc_id,
@@ -8603,24 +8557,6 @@ def _cdc_chunks_body(d: str, chunks_def: str) -> str:
     """
 
 
-def _cdc_chunks_sql(d: str) -> str:
-    return _cdc_chunks_body(d, f"chunks AS ({_cdc_chunk_rel_sql(d)}),")
-
-
-def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-defined chunking dedup report (see _cdc_chunks_body). The
-    chunk relation is materialized once (localCheckpoint): the dup-hash
-    aggregate and the per-doc rollup both consume it, and CTE re-inlining
-    re-ran tokenize -> explode -> two windows -> chunk assembly per branch
-    (observed in the executed plan). On a cluster the same barrier is the
-    natural parquet spill of the chunk table -- the artifact an
-    incremental CDC pipeline would persist anyway."""
-    _view(spark, sf_dir, "documents")
-    chunks = spark.sql(_cdc_chunk_rel_sql(D.SPARK))
-    chunks.localCheckpoint(eager=True).createOrReplaceTempView("cdc_chunk_rel")
-    return spark.sql(_cdc_chunks_body(D.SPARK, "chunks AS (SELECT * FROM cdc_chunk_rel),"))
-
-
 # shared with the streaming sketch accumulator (streaming/sketch_stream.py):
 # one source of truth for the sketch geometry
 CM_DEPTH = sketch.CM_DEPTH
@@ -8632,7 +8568,8 @@ def _countmin_th_rel_sql(d: str) -> str:
     """The `th(t, h1, h2)` hashed-token relation: one row per token
     OCCURRENCE with its md5-derived 56-bit hash halves. Feeds both the
     sketch build and the exact-truth branch, so the Spark path
-    materializes it once."""
+    materializes it once (CTE re-inlining would tokenize + md5 the corpus
+    twice)."""
     toks = TX.tokenize(d, TEXT)
     ex_t = "explode(toks)" if d == D.SPARK else "unnest(toks)"
     h1 = H.hex_to_bigint(d, "th", 14)
@@ -8645,7 +8582,7 @@ def _countmin_th_rel_sql(d: str) -> str:
     """
 
 
-def _countmin_body(d: str, th_def: str) -> str:
+def _countmin_body(d: str, th: str) -> str:
     """Count-Min sketch audit (Cormode & Muthukrishnan 2005) over a
     `th(t, h1, h2)` hashed-token-occurrence relation
     (_countmin_th_rel_sql): build a {CM_DEPTH}x{CM_WIDTH} sketch -- cell (j, c) holds the
@@ -8676,7 +8613,7 @@ def _countmin_body(d: str, th_def: str) -> str:
     j_seq = D.sequence(d, 0, CM_DEPTH - 1)
     ex_j = f"explode({j_seq})" if d == D.SPARK else f"unnest({j_seq})"
     return f"""
-        WITH {th_def}
+        WITH th AS ({th}),
         cells AS (
             SELECT j, (h1 + j * h2) % {CM_WIDTH} AS col,
                    cast(count(*) as bigint) AS cnt
@@ -8700,10 +8637,6 @@ def _countmin_body(d: str, th_def: str) -> str:
         FROM est
         ORDER BY exact_count DESC, token ASC
     """
-
-
-def _countmin_heavy_hitters_sql(d: str) -> str:
-    return _countmin_body(d, f"th AS ({_countmin_th_rel_sql(d)}),")
 
 
 def _join_size_sketch_sql(d: str) -> str:
@@ -8793,19 +8726,19 @@ def _join_size_sketch_sql(d: str) -> str:
     """
 
 
-def q_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min sketch build + heavy-hitter error audit (see
-    _countmin_body). The hashed-token relation is materialized once
-    (localCheckpoint): the sketch build and the exact-truth branch both
-    consume it, and CTE re-inlining would tokenize + md5 the corpus
-    twice."""
-    _view(spark, sf_dir, "documents")
-    th = spark.sql(_countmin_th_rel_sql(D.SPARK))
-    th.localCheckpoint(eager=True).createOrReplaceTempView("cm_th_rel")
-    return spark.sql(_countmin_body(D.SPARK, "th AS (SELECT * FROM cm_th_rel),"))
+def _hdr_vals_sql(d: str) -> str:
+    """(event_type, v): every event value in non-negative floor cents.
+    Staged (materialized once) on the Spark side: the bounded hist arm and
+    the exact (sort) audit arm of _hdr_quantiles_tail both consume it, and
+    Spark's CTE inlining would re-read + re-convert events per arm."""
+    return """
+            SELECT event_type,
+                   cast(floor(greatest(coalesce(value, 0), 0) * 100) as bigint) AS v
+            FROM events
+        """
 
 
-def _hdr_quantiles_sql(d: str) -> str:
+def _hdr_quantiles_tail(d: str, vals_src: str) -> str:
     """HDR-histogram quantile sketch + exact-percentile error audit -- the
     QUANTILE member of the mergeable-sketch trio (hll_partition_merge =
     distinct, countmin_heavy_hitters = frequency, this = percentiles), over
@@ -8836,11 +8769,7 @@ def _hdr_quantiles_sql(d: str) -> str:
     k90 = D.int_div(d, "(9 * n + 9)", "10")
     k99 = D.int_div(d, "(99 * n + 99)", "100")
     return f"""
-        WITH vals AS (
-            SELECT event_type,
-                   cast(floor(greatest(coalesce(value, 0), 0) * 100) as bigint) AS v
-            FROM events
-        ),
+        WITH vals AS ({vals_src}),
         hist AS (
             SELECT event_type, {idx} AS idx, cast(count(*) as bigint) AS cnt
             FROM vals GROUP BY event_type, {idx}
@@ -8889,37 +8818,11 @@ def _hdr_quantiles_sql(d: str) -> str:
     """
 
 
-def q_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HDR-histogram quantiles + exact audit (see _hdr_quantiles_sql). The
-    floor-cents value relation is materialized once: the bounded hist arm
-    and the exact (sort) audit arm both consume it, and Spark's CTE
-    inlining would re-read + re-convert events per arm."""
-    _events_view(spark, sf_dir)
-    vals = spark.sql(
-        """
-        SELECT event_type,
-               cast(floor(greatest(coalesce(value, 0), 0) * 100) as bigint) AS v
-        FROM events
-        """
-    )
-    vals.localCheckpoint(eager=True).createOrReplaceTempView("hdr_vals")
-    body = _hdr_quantiles_sql(D.SPARK)
-    body = body.replace(
-        """vals AS (
-            SELECT event_type,
-                   cast(floor(greatest(coalesce(value, 0), 0) * 100) as bigint) AS v
-            FROM events
-        )""",
-        "vals AS (SELECT event_type, v FROM hdr_vals)",
-    )
-    return spark.sql(body)
-
-
 DUP_PAIR_DF_CAP = 50  # drop shingle hashes occurring more often (boilerplate)
 DUP_PAIR_TOP = 50
 
 
-def _dup_span_pairs_body(d: str, posting_def: str) -> str:
+def _dup_span_pairs_body(d: str, posting: str) -> str:
     """Cross-doc ATTRIBUTION of exact duplicated substrings: which document
     pairs share {DUP_SPAN_K}-char shingles, scored by the count of distinct
     shared shingle hashes (~ shared character mass) -- duplicate_spans says
@@ -8939,7 +8842,7 @@ def _dup_span_pairs_body(d: str, posting_def: str) -> str:
     count-distinct partial-aggregates; top-{DUP_PAIR_TOP} via
     TakeOrderedAndProject."""
     return f"""
-        WITH {posting_def}
+        WITH posting AS ({posting}),
         df AS (
             SELECT hh FROM posting GROUP BY hh
             HAVING count(*) BETWEEN 2 AND {DUP_PAIR_DF_CAP}
@@ -8960,27 +8863,13 @@ def _dup_span_pairs_body(d: str, posting_def: str) -> str:
     """
 
 
-def _dup_span_pairs_sql(d: str) -> str:
-    posting = (
-        f"posting AS (SELECT doc_id, hh FROM ({_dup_shingle_sql(d)}) h"
-        " GROUP BY doc_id, hh),"
-    )
-    return _dup_span_pairs_body(d, posting)
-
-
-def q_dup_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-doc exact-substring attribution (see _dup_span_pairs_body).
-    The distinct-postings relation is materialized once (localCheckpoint):
-    the df-cap aggregate and BOTH self-join sides consume it, and CTE
+def _dup_posting_sql(d: str) -> str:
+    """The distinct `posting(doc_id, hh)` relation over _dup_shingle_sql.
+    Staged (materialized once) on the Spark side: the df-cap aggregate and
+    BOTH self-join sides of _dup_span_pairs_body consume it, and CTE
     re-inlining would re-run the per-character shingle explode + md5 three
     times."""
-    _view(spark, sf_dir, "documents")
-    h = spark.sql(_dup_shingle_sql(D.SPARK))
-    posting = h.select("doc_id", "hh").distinct()
-    posting.localCheckpoint(eager=True).createOrReplaceTempView("dup_pair_posting")
-    return spark.sql(
-        _dup_span_pairs_body(D.SPARK, "posting AS (SELECT * FROM dup_pair_posting),")
-    )
+    return f"SELECT doc_id, hh FROM ({_dup_shingle_sql(d)}) h GROUP BY doc_id, hh"
 
 
 # =========================================================================
@@ -9121,7 +9010,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
            FROM tri_edges_raw
            GROUP BY least(id_a, id_b), greatest(id_a, id_b)"""
     )
-    canon.localCheckpoint(eager=True).createOrReplaceTempView("tri_edges")
+    _materialize(canon, "tri_edges")
     sub = spark.sql(
         f"""WITH und AS (SELECT a AS v FROM tri_edges
                          UNION ALL SELECT b AS v FROM tri_edges),
@@ -9133,7 +9022,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             LEFT JOIN hubs h2 ON h2.v = e.b
             WHERE h1.v IS NULL AND h2.v IS NULL"""
     )
-    sub.localCheckpoint(eager=True).createOrReplaceTempView("tri_edges_sub")
+    _materialize(sub, "tri_edges_sub")
     return spark.sql(
         _triangle_count_core(
             D.SPARK,
@@ -9147,7 +9036,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 SRC_OVERLAP_NGRAM = 3
 
 
-def _source_overlap_body(d: str, sh_def: str) -> str:
+def _source_overlap_body(d: str, sh: str) -> str:
     """Corpus-mixing overlap matrix over a DISTINCT `sh(source, hh)`
     source-level shingle-set relation: pairwise n-gram Jaccard between
     sources -- the mixture-QA companion to mixture_weights/source_drift
@@ -9165,7 +9054,7 @@ def _source_overlap_body(d: str, sh_def: str) -> str:
     df-cap needed); the pair frame is sources^2/2 rows. One division of
     exact BIGINTs per pair."""
     return f"""
-        WITH {sh_def}
+        WITH sh AS ({sh}),
         sizes AS (SELECT source, cast(count(*) as bigint) AS n FROM sh GROUP BY source),
         inter AS (
             SELECT x.source AS sa, y.source AS sb, cast(count(*) as bigint) AS i
@@ -9189,6 +9078,10 @@ def _source_overlap_body(d: str, sh_def: str) -> str:
 
 
 def _source_shingle_sql(d: str) -> str:
+    """The distinct source-shingle relation `sh(source, hh)`. Staged
+    (materialized once) on the Spark side: sizes and BOTH intersection
+    join sides of _source_overlap_body consume it, and CTE re-inlining
+    would tokenize + shingle the corpus three times."""
     toks = TX.tokenize(d, TEXT)
     sh = TX.ngrams(d, "toks", SRC_OVERLAP_NGRAM)
     ex = "explode(shs)" if d == D.SPARK else "unnest(shs)"
@@ -9199,23 +9092,6 @@ def _source_shingle_sql(d: str) -> str:
                         FROM (SELECT source, {toks} AS toks FROM documents) tk) g) u
             GROUP BY source, md5(s)
     """
-
-
-def _source_ngram_overlap_sql(d: str) -> str:
-    return _source_overlap_body(d, f"sh AS ({_source_shingle_sql(d)}),")
-
-
-def q_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise source n-gram overlap matrix (see _source_overlap_body).
-    The distinct source-shingle relation is materialized once
-    (localCheckpoint): sizes and BOTH intersection join sides consume it,
-    and CTE re-inlining would tokenize + shingle the corpus three times."""
-    _view(spark, sf_dir, "documents")
-    sh = spark.sql(_source_shingle_sql(D.SPARK))
-    sh.localCheckpoint(eager=True).createOrReplaceTempView("src_overlap_sh")
-    return spark.sql(
-        _source_overlap_body(D.SPARK, "sh AS (SELECT * FROM src_overlap_sh),")
-    )
 
 
 # =========================================================================
@@ -10282,12 +10158,11 @@ def q_wminhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.sql(
             _wminhash_core(D.SPARK, tf_src, sigs_src, scatter=scatter)
         )
-    gmap = spark.sql(_wmh_gmap_sql(tf_src)).localCheckpoint()
-    gmap.createOrReplaceTempView("wmh_gmap_v")
+    _materialize(spark.sql(_wmh_gmap_sql(tf_src)), "wmh_gmap_v")
     rcands = spark.sql(
         _wmh_rcands_sql(sigs_src, "SELECT doc, rep FROM wmh_gmap_v", scatter)
-    ).localCheckpoint()
-    rcands.createOrReplaceTempView("wmh_rcands_v")
+    )
+    _materialize(rcands, "wmh_rcands_v")
     return spark.sql(
         _wminhash_collapsed_tail_sql(
             tf_src,
@@ -10392,12 +10267,12 @@ def q_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures once (band explode + two per-pair joins)."""
     _view(spark, sf_dir, "documents")
     hashed = spark.sql(_sweep_hashed_sql(D.SPARK))
-    hashed.localCheckpoint(eager=True).createOrReplaceTempView("mhe_hashed")
+    _materialize(hashed, "mhe_hashed")
     hashed_src = "SELECT doc, h FROM mhe_hashed"
     capped = spark.sql(_sweep_capped_from(D.SPARK, hashed_src))
-    capped.localCheckpoint(eager=True).createOrReplaceTempView("mhe_capped")
+    _materialize(capped, "mhe_capped")
     sigs = spark.sql(_sweep_sigs_from(D.SPARK, hashed_src))
-    sigs.localCheckpoint(eager=True).createOrReplaceTempView("mhe_sigs")
+    _materialize(sigs, "mhe_sigs")
     return spark.sql(
         _minhash_error_core(
             D.SPARK,
@@ -10438,7 +10313,7 @@ def _ensure_sweep_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     def _hashed_view(name: str) -> str:
         _view(spark, sf_dir, "documents")
         hashed = spark.sql(_sweep_hashed_sql(D.SPARK))
-        hashed.localCheckpoint(eager=True).createOrReplaceTempView(name)
+        _materialize(hashed, name)
         return f"SELECT doc, h FROM {name}"
 
     def build_sigs() -> DataFrame:
@@ -10448,9 +10323,7 @@ def _ensure_sweep_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         capped = spark.sql(
             _sweep_capped_from(D.SPARK, _hashed_view("sweepidx_h2"))
         )
-        capped.localCheckpoint(eager=True).createOrReplaceTempView(
-            "sweepidx_capped"
-        )
+        _materialize(capped, "sweepidx_capped")
         return spark.sql(
             _sweep_truth_from(D.SPARK, "SELECT doc, sh FROM sweepidx_capped")
         )
@@ -11011,7 +10884,7 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     _view(spark, sf_dir, "embeddings")
     v = V.to_double_array(D.SPARK, "embedding")
     emb = spark.sql(f"SELECT vec_id, {v} AS v FROM embeddings")
-    emb.localCheckpoint(eager=True).createOrReplaceTempView("kc_emb")
+    _materialize(emb, "kc_emb")
     seed = spark.sql(
         "SELECT vec_id, v FROM kc_emb WHERE vec_id = (SELECT min(vec_id) FROM kc_emb)"
     ).collect()[0]
@@ -11050,7 +10923,7 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"SELECT vec_id, v, {_d2(_arr(centers[0][2]))} AS dmin FROM kc_emb"
     )
     for k in range(1, KCENTER_K):
-        dmin.localCheckpoint(eager=True).createOrReplaceTempView("kc_dmin")
+        _materialize(dmin, "kc_dmin")
         not_c = " AND ".join(f"vec_id <> {c[1]}" for c in centers)
         # ORDER BY + LIMIT 1 compiles to TakeOrderedAndProject (per-partition
         # top-1, driver merge) -- an unpartitioned row_number window here
@@ -11611,7 +11484,7 @@ def q_label_propagation_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches)."""
     _view(spark, sf_dir, "documents")
     edges = _simhash_edges(spark, sf_dir)
-    edges.localCheckpoint(eager=True).createOrReplaceTempView("lp_edges")
+    _materialize(edges, "lp_edges")
     return spark.sql(
         _label_prop_body(D.SPARK, "SELECT id_a, id_b FROM lp_edges")
     )
@@ -12075,11 +11948,11 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stamped persisted table shared with the graph family."""
     _view(spark, sf_dir, "documents")
     edges = _simhash_edges(spark, sf_dir)
-    edges.localCheckpoint(eager=True).createOrReplaceTempView("mod_edges")
+    _materialize(edges, "mod_edges")
     labels = spark.sql(
         _label_prop_body(D.SPARK, "SELECT id_a, id_b FROM mod_edges")
     ).select("doc", "label1")
-    labels.localCheckpoint(eager=True).createOrReplaceTempView("mod_labels")
+    _materialize(labels, "mod_labels")
     return spark.sql(
         _modularity_tail(
             D.SPARK,
@@ -12096,7 +11969,14 @@ def _clf_scored_sql(d: str, src: str = "documents") -> str:
     (classifier_auc / classifier_calibration). Scoring with the FIXED base
     weights keeps evaluation one linear pass; the trained-step variant is
     classifier_score's job. `src` lets the streaming calibration monitor
-    score a micro-batch view through the identical chain."""
+    score a micro-batch view through the identical chain.
+
+    Staged (materialized once) for every evaluation tail that reads sq
+    from more than one place: the calibration band/Brier tail, the
+    average-precision ALL-tag UNION (reads it twice), the cumulative-gains
+    band/total windows, the isotonic grid branches and the WOE band agg
+    (sq twice). CTE re-inlining would re-run the tokenize+sigmoid scoring
+    per reference (the calibration lesson)."""
     q = float(_LR_Q)
     w = _LR_W0
     z0 = f"({w[0]!r} + {w[1]!r} * x1 + {w[2]!r} * x2 + {w[3]!r} * x3)"
@@ -12170,7 +12050,7 @@ def _classifier_auc_sql(d: str) -> str:
     """
 
 
-def _classifier_calibration_sql(d: str) -> str:
+def _classifier_calibration_tail(d: str, scored_src: str) -> str:
     """Reliability diagram + Brier decomposition inputs for the quality
     classifier: per 0.02-wide predicted-score band, document count, exact
     mean predicted probability, empirical positive rate, their gap, and
@@ -12183,12 +12063,9 @@ def _classifier_calibration_sql(d: str) -> str:
     sums. Bands are 0.02 wide (50 bins): the base scorer's spread is
     narrow, and 0.1-wide bands collapsed the whole corpus into two rows
     (the dead-branch audit). Scale shape: one scoring scan + one
-    <=50-row band agg; no joins, no windows."""
-    return _classifier_calibration_tail(d, _clf_scored_sql(d))
+    <=50-row band agg; no joins, no windows.
 
-
-def _classifier_calibration_tail(d: str, scored_src: str) -> str:
-    """Band-agg tail over a `(source, sq, y)` scored relation. Split out so
+    Band-agg tail over a `(source, sq, y)` scored relation. Split out so
     the Spark path can materialize scoring ONCE: the tail references sq
     from the band expr, the mean, and both Brier terms, and Catalyst CTE
     re-inlining re-evaluates the tokenize+sigmoid scoring per reference
@@ -12236,18 +12113,6 @@ def calibration_hist_tail_sql(d: str, hist_src: str) -> str:
         FROM agg
         ORDER BY band
     """
-
-
-def q_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-band calibration + Brier table (see _classifier_calibration_sql).
-    The scored relation is materialized once (localCheckpoint) before the
-    multi-reference band/Brier tail reads it."""
-    _view(spark, sf_dir, "documents")
-    scored = spark.sql(_clf_scored_sql(D.SPARK))
-    scored.localCheckpoint(eager=True).createOrReplaceTempView("cal_scored")
-    return spark.sql(
-        _classifier_calibration_tail(D.SPARK, "SELECT source, sq, y FROM cal_scored")
-    )
 
 
 def _pareto_frontier_sql(d: str) -> str:
@@ -12656,8 +12521,7 @@ def q_kcore_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""WITH {_BASKET_PAIRS_SPARK}
             SELECT DISTINCT part_a AS id_a, part_b AS id_b FROM pairs"""
     )
-    ckpt = edges.localCheckpoint(eager=True)
-    ckpt.createOrReplaceTempView("kcore_edges")
+    ckpt = _materialize(edges, "kcore_edges")
     if not ckpt.take(1):
         # empty graph: the tail's nested scalar subqueries over an empty
         # checkpoint overflow the JVM stack during PLAN STRINGIFICATION
@@ -12676,7 +12540,7 @@ def q_kcore_step(spark: SparkSession, sf_dir: str) -> DataFrame:
                  SELECT id_b AS node, id_a AS other FROM kcore_edges) und
            GROUP BY node"""
     )
-    deg.localCheckpoint(eager=True).createOrReplaceTempView("kcore_deg")
+    _materialize(deg, "kcore_deg")
     # r12: core is NOT checkpointed -- its subtree is one cheap filter over
     # the kcore_deg checkpoint (plus two scalar counts of the checkpoints),
     # so re-inlining it per tail reference costs less than the eager
@@ -12931,7 +12795,22 @@ def _poisson_thresholds(max_m: int = 5) -> list[int]:
     return out
 
 
-def _poisson_bootstrap_sql(d: str) -> str:
+def _poisson_base_sql(d: str) -> str:
+    """(cents, h1): order value in exact cents + ONE 48-bit hash integer
+    per row (md5 + hex parse happen here, once per ROW). Split out so the
+    Spark path can materialize it pre-explode: Catalyst pushes base
+    projections ABOVE the generator (plan-verified), re-hashing per
+    (row x replicate). The per-replicate uniforms derive from h1
+    NUMERICALLY in the tail -- v2 of this query carried a 96-hex-char md5
+    pad and sliced substrings per fanned row; the string traffic alone
+    cost 3.3 s of its 9.3 s at sf0.1."""
+    k = D.cast_str(d, "o_orderkey")
+    cents = "cast(floor(o_totalprice * 100.0 + 0.5) as bigint)"
+    h1 = H.hex_to_bigint(d, f"md5(concat('pb:', {k}))", 12)
+    return f"SELECT {cents} AS cents, {h1} AS h1 FROM orders"
+
+
+def _poisson_bootstrap_tail(d: str, base_src: str) -> str:
     """Distributed bootstrap confidence interval for the mean order value
     via the POISSON BOOTSTRAP (Chamandy et al., the resampling scheme that
     works when n is too large to index): instead of drawing n rows with
@@ -12952,28 +12831,10 @@ def _poisson_bootstrap_sql(d: str) -> str:
     Scale shape: ONE scan with a {BOOT_B}-way generator fan-out collapsing
     immediately into a {BOOT_B}-group partial agg (map-side combine
     carries 2x{BOOT_B} longs per partition); the percentile runs over
-    {BOOT_B} rows. No joins, no windows, no global sort."""
-    return _poisson_bootstrap_tail(d, _poisson_base_sql(d))
+    {BOOT_B} rows. No joins, no windows, no global sort.
 
-
-def _poisson_base_sql(d: str) -> str:
-    """(cents, h1): order value in exact cents + ONE 48-bit hash integer
-    per row (md5 + hex parse happen here, once per ROW). Split out so the
-    Spark path can materialize it pre-explode: Catalyst pushes base
-    projections ABOVE the generator (plan-verified), re-hashing per
-    (row x replicate). The per-replicate uniforms derive from h1
-    NUMERICALLY in the tail -- v2 of this query carried a 96-hex-char md5
-    pad and sliced substrings per fanned row; the string traffic alone
-    cost 3.3 s of its 9.3 s at sf0.1."""
-    k = D.cast_str(d, "o_orderkey")
-    cents = "cast(floor(o_totalprice * 100.0 + 0.5) as bigint)"
-    h1 = H.hex_to_bigint(d, f"md5(concat('pb:', {k}))", 12)
-    return f"SELECT {cents} AS cents, {h1} AS h1 FROM orders"
-
-
-def _poisson_bootstrap_tail(d: str, base_src: str) -> str:
-    """Fan-out + replicate-agg + percentile tail over a `(cents, h1)`
-    base relation (see _poisson_bootstrap_sql). Two hot-path design
+    The tail is the fan-out + replicate-agg + percentile over a
+    `(cents, h1)` base relation (_poisson_base_sql). Two hot-path design
     points, both measured at sf0.1:
 
     * Each replicate's 12-bit uniform is the classic hash32 INTEGER
@@ -13047,26 +12908,12 @@ def _poisson_bootstrap_tail(d: str, base_src: str) -> str:
     """
 
 
-def q_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Poisson-bootstrap CI for mean order value (see
-    _poisson_bootstrap_sql). The (cents, h1) base is materialized once
-    (localCheckpoint) so the md5+hex-parse runs per ROW, not per
-    (row x replicate) -- Catalyst otherwise pushes the projection above
-    the generator."""
-    _view(spark, sf_dir, "orders")
-    base = spark.sql(_poisson_base_sql(D.SPARK))
-    base.localCheckpoint(eager=True).createOrReplaceTempView("boot_base")
-    return spark.sql(
-        _poisson_bootstrap_tail(D.SPARK, "SELECT cents, h1 FROM boot_base")
-    )
-
-
 # Split-conformal settings: miscoverage target and the calib/test parity.
 CONFORMAL_ALPHA_NUM = 1  # alpha = 1/10
 CONFORMAL_ALPHA_DEN = 10
 
 
-def _conformal_threshold_sql(d: str) -> str:
+def _conformal_threshold_tail(d: str, scored_src: str) -> str:
     """Split-conformal calibration of the quality classifier (Vovk;
     Angelopoulos-Bates tutorial form): on a calibration half (even
     doc_id), take the ceil((n+1)*(1-alpha))-th smallest nonconformity
@@ -13088,7 +12935,7 @@ def _conformal_threshold_sql(d: str) -> str:
     )
     return f"""
         WITH scored AS (
-            SELECT doc_id, sq, y FROM ({_clf_scored_split_sql(d)}) s
+            SELECT doc_id, sq, y FROM ({scored_src}) s
         ),
         tagged AS (
             SELECT abs(y * {qi} - sq) AS nc, doc_id % 2 AS grp FROM scored
@@ -13141,7 +12988,12 @@ def _clf_scored_split_sql(d: str) -> str:
     calibration/test split needs doc_id; kendall_tau and mcnemar_test
     band/threshold on n_chars WITHOUT a join-back to documents (the
     join-back cost kendall 12.1x at the 40x probe). Consumers project
-    explicitly."""
+    explicitly.
+
+    Staged (materialized once) for conformal_threshold: its tail reads it
+    from four CTE branches (calib histogram, test count, coverage, sizes)
+    and Catalyst re-inlining would re-run the tokenize+sigmoid scoring per
+    branch (the calibration lesson)."""
     q = float(_LR_Q)
     w = _LR_W0
     z0 = f"({w[0]!r} + {w[1]!r} * x1 + {w[2]!r} * x2 + {w[3]!r} * x3)"
@@ -13152,26 +13004,10 @@ def _clf_scored_split_sql(d: str) -> str:
     )
 
 
-def q_conformal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split-conformal threshold + held-out coverage (see
-    _conformal_threshold_sql). The scored relation is materialized once:
-    the tail reads it from four CTE branches (calib histogram, test count,
-    coverage, sizes) and Catalyst re-inlining would re-run the
-    tokenize+sigmoid scoring per branch (the calibration lesson)."""
-    _view(spark, sf_dir, "documents")
-    scored = spark.sql(_clf_scored_split_sql(D.SPARK))
-    scored.localCheckpoint(eager=True).createOrReplaceTempView("conf_scored")
-    return spark.sql(
-        _conformal_threshold_sql(D.SPARK).replace(
-            _clf_scored_split_sql(D.SPARK), "SELECT doc_id, sq, y FROM conf_scored"
-        )
-    )
-
-
 _WOE_Q = 1 << 30
 
 
-def _woe_iv_sql(d: str) -> str:
+def _woe_iv_tail(d: str, scored_src: str) -> str:
     """Weight-of-evidence / information-value table for the quality
     classifier's score bands (the credit-scoring canon for judging a
     feature's separating power; IV < 0.02 useless, > 0.3 strong): per
@@ -13194,7 +13030,7 @@ def _woe_iv_sql(d: str) -> str:
         f" * {float(_WOE_Q)!r}) as bigint)"
     )
     return f"""
-        WITH scored AS ({_clf_scored_sql(d)}),
+        WITH scored AS ({scored_src}),
         banded AS (
             SELECT {band} AS band,
                    cast(sum(y) as bigint) AS n_pos,
@@ -13220,20 +13056,6 @@ def _woe_iv_sql(d: str) -> str:
         FROM live
         ORDER BY band
     """
-
-
-def q_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WOE / IV table over score bands (see _woe_iv_sql). Scoring
-    materialized once (the calibration lesson: the band agg references sq
-    twice)."""
-    _view(spark, sf_dir, "documents")
-    scored = spark.sql(_clf_scored_sql(D.SPARK))
-    scored.localCheckpoint(eager=True).createOrReplaceTempView("woe_scored")
-    return spark.sql(
-        _woe_iv_sql(D.SPARK).replace(
-            _clf_scored_sql(D.SPARK), "SELECT source, sq, y FROM woe_scored"
-        )
-    )
 
 
 _OLS_X0 = 23880  # months since epoch at 1990-01: recenters x to small ints
@@ -13764,8 +13586,7 @@ def _log_odds_vocab_sql(d: str) -> str:
 
 
 def _log_odds_fragments(d: str) -> tuple[str, str]:
-    """(delta, z-variance) SQL fragments of the Monroe estimator, shared
-    by the full statement (oracle) and the Spark materialized path."""
+    """(delta, z-variance) SQL fragments of the Monroe estimator."""
     qf = float(_LOGODDS_Q)
     lnq = lambda x: f"cast(floor(ln({x}) * {qf!r}) as bigint)"  # noqa: E731
     # alpha_w = a0 * cw / ct  (double, exact inputs); a0 = _LOGODDS_A0
@@ -13782,7 +13603,7 @@ def _log_odds_fragments(d: str) -> tuple[str, str]:
     return delta, var
 
 
-def _log_odds_terms_sql(d: str) -> str:
+def _log_odds_tail(d: str, vocab_src: str) -> str:
     """MONROE LOG-ODDS ("Fightin' Words", Monroe-Colaresi-Quinn 2008):
     the top-{LOGODDS_TOP} terms that most distinguish English from
     non-English documents, by z-scored log-odds-ratio with an informative
@@ -13797,19 +13618,16 @@ def _log_odds_terms_sql(d: str) -> str:
     term tie-break.
 
     Scale shape: token explode -> (term, group) hash agg (ONE corpus
-    scan; the Spark path materializes it -- see _log_odds_tail), then the
+    scan; the Spark path materializes it -- see below), then the
     prior/z arithmetic and a {LOGODDS_TOP}-row TakeOrderedAndProject over
-    the vocab-sized relation. No windows, no global sort."""
-    delta, var = _log_odds_fragments(d)
-    return _log_odds_tail(d, _log_odds_vocab_sql(d), delta, var)
+    the vocab-sized relation. No windows, no global sort.
 
-
-def _log_odds_tail(d: str, vocab_src: str, delta: str, var: str) -> str:
-    """Prior + z tail over a `(w, g1, g2, cw)` vocab relation. Split out
+    Prior + z tail over a `(w, g1, g2, cw)` vocab relation. Split out
     so the Spark path can materialize the vocab ONCE: the tail references
     it from two branches (totals + scoring) and Catalyst CTE re-inlining
     re-ran the tokenize+explode corpus scan per branch (14.7x at the 40x
     probe before the split)."""
+    delta, var = _log_odds_fragments(d)
     return f"""
         WITH vocab AS ({vocab_src}),
         t AS (
@@ -13829,19 +13647,6 @@ def _log_odds_tail(d: str, vocab_src: str, delta: str, var: str) -> str:
         ORDER BY abs(z) DESC, w ASC
         LIMIT {LOGODDS_TOP}
     """
-
-
-def q_log_odds_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Monroe log-odds top discriminating terms, en vs non-en (see
-    _log_odds_terms_sql). The vocab agg is materialized once
-    (localCheckpoint) ahead of the two-branch tail."""
-    _view(spark, sf_dir, "documents")
-    vocab = spark.sql(_log_odds_vocab_sql(D.SPARK))
-    vocab.localCheckpoint(eager=True).createOrReplaceTempView("lo_vocab")
-    delta, var = _log_odds_fragments(D.SPARK)
-    return spark.sql(
-        _log_odds_tail(D.SPARK, "SELECT w, g1, g2, cw FROM lo_vocab", delta, var)
-    )
 
 
 _JACK_Q = 1 << 30  # fixed-point grid for jackknife replicate ratios
@@ -13928,7 +13733,24 @@ def _kendall_cells_sql(d: str) -> str:
 
 
 def _kendall_tau_tail(d: str, cells_src: str) -> str:
-    """tau-b tail over a `(sb, lb, n)` cell grid: concordant/discordant
+    """KENDALL'S TAU-B between the quality classifier's score band and the
+    document-length band -- "is the score MONOTONE in length?", the rank-
+    correlation diagnostic that catches what Pearson misses (nonlinear but
+    monotone coupling) and what AUC can't say (AUC ranks against the
+    LABEL; tau ranks against another FEATURE). Computed tie-exactly on
+    the bounded {KT_BANDS}x{KT_BANDS} band grid: concordant/discordant
+    mass is an inequality self-join over <= {KT_BANDS}^2 cells (never a
+    pair join over documents), tie corrections t_a/t_b come from the two
+    margins, and every count is exact (decimal(38,0) pair arithmetic).
+    One sqrt + one division at the end (correctly-rounded, identical
+    cross-engine).
+
+    Scale shape: one scoring scan -> bounded-grid hash agg; the self-join
+    and margins run on the constant-size grid. The Spark path
+    materializes the grid once (localCheckpoint) -- four tail branches
+    would otherwise re-inline the scoring scan (calibration lesson).
+
+    The tail runs over a `(sb, lb, n)` cell grid: concordant/discordant
     pair mass from one inequality self-join on the BOUNDED grid (never
     the corpus), tie terms from the two margins, and Kendall's tau-b
     = (C - D) / sqrt((n0 - t_a)(n0 - t_b)) as one fixed IEEE chain on
@@ -13980,37 +13802,6 @@ def _kendall_tau_tail(d: str, cells_src: str) -> str:
                end AS tau_b
         FROM cd CROSS JOIN n0 CROSS JOIN ta CROSS JOIN tb
     """
-
-
-def _kendall_tau_sql(d: str) -> str:
-    """KENDALL'S TAU-B between the quality classifier's score band and the
-    document-length band -- "is the score MONOTONE in length?", the rank-
-    correlation diagnostic that catches what Pearson misses (nonlinear but
-    monotone coupling) and what AUC can't say (AUC ranks against the
-    LABEL; tau ranks against another FEATURE). Computed tie-exactly on
-    the bounded {KT_BANDS}x{KT_BANDS} band grid: concordant/discordant
-    mass is an inequality self-join over <= {KT_BANDS}^2 cells (never a
-    pair join over documents), tie corrections t_a/t_b come from the two
-    margins, and every count is exact (decimal(38,0) pair arithmetic).
-    One sqrt + one division at the end (correctly-rounded, identical
-    cross-engine).
-
-    Scale shape: one scoring scan -> bounded-grid hash agg; the self-join
-    and margins run on the constant-size grid. The Spark path
-    materializes the grid once (localCheckpoint) -- four tail branches
-    would otherwise re-inline the scoring scan (calibration lesson)."""
-    return _kendall_tau_tail(d, _kendall_cells_sql(d))
-
-
-def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tie-exact banded Kendall tau-b, score vs length (see
-    _kendall_tau_sql)."""
-    _view(spark, sf_dir, "documents")
-    cells = spark.sql(_kendall_cells_sql(D.SPARK))
-    cells.localCheckpoint(eager=True).createOrReplaceTempView("kt_cells")
-    return spark.sql(
-        _kendall_tau_tail(D.SPARK, "SELECT sb, lb, n FROM kt_cells")
-    )
 
 
 def _binseg_changepoint_sql(d: str) -> str:
@@ -14744,7 +14535,21 @@ MAD_Z_CRIT = 3.5  # Iglewicz-Hoaglin modified-z outlier cut
 _MAD_C = 0.6745  # Phi^-1(0.75): scales MAD to sigma-equivalents
 
 
-def _mad_anomalies_sql(d: str) -> str:
+def _mad_daily_sql(d: str) -> str:
+    """(dd, v): daily purchase revenue in exact cents. Staged (materialized
+    once) on the Spark side: the med/mad/final branches of
+    _mad_anomalies_tail would otherwise re-inline the event scan."""
+    us = _ts_us(d)
+    day = D.int_div(d, us, str(DAY_US))
+    return f"""
+        SELECT {day} AS dd,
+               cast(sum(cast(floor(value * 100) as bigint)) as bigint) AS v
+        FROM events WHERE event_type = 'purchase'
+        GROUP BY {day}
+    """
+
+
+def _mad_anomalies_tail(d: str, daily_src: str) -> str:
     """MODIFIED Z-SCORE (median/MAD) anomaly screen over daily purchase
     revenue -- the robust twin of zscore_days: a single whale day inflates
     the mean AND the stddev enough to hide itself from a plain z-score,
@@ -14757,24 +14562,10 @@ def _mad_anomalies_sql(d: str) -> str:
     Scale shape: stream -> days-sized agg; both percentiles and the
     z projection run on the bounded daily relation. The Spark path
     materializes the daily relation once -- the med/mad/final branches
-    would otherwise re-inline the event scan (calibration lesson)."""
-    return _mad_anomalies_tail(d, _mad_daily_sql(d))
+    would otherwise re-inline the event scan (calibration lesson).
 
-
-def _mad_daily_sql(d: str) -> str:
-    """(dd, v): daily purchase revenue in exact cents."""
-    us = _ts_us(d)
-    day = D.int_div(d, us, str(DAY_US))
-    return f"""
-        SELECT {day} AS dd,
-               cast(sum(cast(floor(value * 100) as bigint)) as bigint) AS v
-        FROM events WHERE event_type = 'purchase'
-        GROUP BY {day}
-    """
-
-
-def _mad_anomalies_tail(d: str, daily_src: str) -> str:
-    """median/MAD/z tail over a `(dd, v)` daily relation."""
+    The median/MAD/z tail runs over the `(dd, v)` daily relation of
+    _mad_daily_sql."""
     pc = "percentile" if d == D.SPARK else "quantile_cont"
     # nullif: z appears twice (value + flag) -- the zscore_days CSE-hoist
     # hazard; a zero MAD must read as null inside, 0.0 outside
@@ -14794,18 +14585,6 @@ def _mad_anomalies_tail(d: str, daily_src: str) -> str:
         FROM daily dy CROSS JOIN med CROSS JOIN mad
         ORDER BY dy.dd
     """
-
-
-def q_mad_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Median/MAD modified-z daily anomalies (see _mad_anomalies_sql).
-    The daily relation is materialized once (localCheckpoint) ahead of
-    the three-branch tail."""
-    _events_view(spark, sf_dir)
-    daily = spark.sql(_mad_daily_sql(D.SPARK))
-    daily.localCheckpoint(eager=True).createOrReplaceTempView("mad_daily")
-    return spark.sql(
-        _mad_anomalies_tail(D.SPARK, "SELECT dd, v FROM mad_daily")
-    )
 
 
 _RETFIT_Q = 1 << 30  # quantization grid for ln(retention) (psi rule)
@@ -14979,23 +14758,6 @@ def _average_precision_tail(d: str, scored_src: str) -> str:
     return ap_hist_tail_sql(d, _clf_hist_from_scored(d, scored_src))
 
 
-def _average_precision_sql(d: str) -> str:
-    return _average_precision_tail(d, _clf_scored_sql(d))
-
-
-def q_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tie-exact average precision (PR-AUC) per source (see
-    _average_precision_tail). The scored relation is materialized once:
-    the ALL-tag UNION reads it twice, and CTE re-inlining would tokenize
-    the corpus twice (the classifier_calibration lesson)."""
-    _view(spark, sf_dir, "documents")
-    scored = spark.sql(_clf_scored_sql(D.SPARK))
-    scored.localCheckpoint(eager=True).createOrReplaceTempView("ap_scored")
-    return spark.sql(
-        _average_precision_tail(D.SPARK, "SELECT source, sq, y FROM ap_scored")
-    )
-
-
 def _cumulative_gains_tail(d: str, scored_src: str) -> str:
     """CUMULATIVE GAINS / LIFT table over descending score bands -- the
     threshold-planning view the calibration table doesn't give: "if I keep
@@ -15054,22 +14816,6 @@ def gains_hist_tail_sql(d: str, hist_src: str) -> str:
         FROM cum
         ORDER BY band DESC
     """
-
-
-def _cumulative_gains_sql(d: str) -> str:
-    return _cumulative_gains_tail(d, _clf_scored_sql(d))
-
-
-def q_cumulative_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative gains / lift at the 50 score-band cut points (see
-    _cumulative_gains_tail). Scored relation materialized once -- the
-    band/total windows reference it from multiple expressions."""
-    _view(spark, sf_dir, "documents")
-    scored = spark.sql(_clf_scored_sql(D.SPARK))
-    scored.localCheckpoint(eager=True).createOrReplaceTempView("cg_scored")
-    return spark.sql(
-        _cumulative_gains_tail(D.SPARK, "SELECT source, sq, y FROM cg_scored")
-    )
 
 
 def _isotonic_tail(d: str, scored_src: str) -> str:
@@ -15137,22 +14883,6 @@ def iso_hist_tail_sql(d: str, hist_src: str) -> str:
         FROM bands b JOIN fit f ON f.band = b.band
         ORDER BY b.band
     """
-
-
-def _isotonic_calibration_sql(d: str) -> str:
-    return _isotonic_tail(d, _clf_scored_sql(d))
-
-
-def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Closed-form PAVA isotonic calibration fit on the 50-band grid (see
-    _isotonic_tail). Scored relation materialized once before the
-    multi-branch grid tail reads it."""
-    _view(spark, sf_dir, "documents")
-    scored = spark.sql(_clf_scored_sql(D.SPARK))
-    scored.localCheckpoint(eager=True).createOrReplaceTempView("iso_scored")
-    return spark.sql(
-        _isotonic_tail(D.SPARK, "SELECT source, sq, y FROM iso_scored")
-    )
 
 
 def _mann_whitney_sql(d: str) -> str:
@@ -15705,7 +15435,22 @@ _RAKE_MAX_LEN = 4  # phrases longer than this are dropped (degree bound)
 _RAKE_Q = float(1 << 30)
 
 
-def _rake_keyphrases_sql(d: str) -> str:
+def _rake_tp_sql(d: str) -> str:
+    """(doc_id, i, w): every analyzer token with its position. It feeds
+    the island window, the phrase assembly and the word stats of
+    _rake_tail, so the Spark path stages it (materialized once): CTE
+    re-inlining would re-tokenize the corpus per consuming branch (the
+    curation_pipeline lesson)."""
+    toks = TX.tokenize(d, TEXT)
+    if d == D.SPARK:
+        return f"SELECT doc_id, posexplode({toks}) AS (i, w) FROM documents"
+    return (
+        f"SELECT doc_id, generate_subscripts({toks}, 1) - 1 AS i,"
+        f" unnest({toks}) AS w FROM documents"
+    )
+
+
+def _rake_tail(d: str, tp_src: str) -> str:
     """RAKE KEYPHRASE EXTRACTION (Rose et al. 2010) over the corpus --
     the phrase-level member of the term-scoring family: tfidf/chi2/
     log_odds score WORDS, pmi_collocations scores word PAIRS, this one
@@ -15728,21 +15473,6 @@ def _rake_keyphrases_sql(d: str) -> str:
     island ids, phrase assembly as a (doc, island) agg, word stats as
     vocab-sized aggs broadcast back onto members, top-k via
     TakeOrderedAndProject."""
-    return _rake_tail(d, _rake_tp_sql(d))
-
-
-def _rake_tp_sql(d: str) -> str:
-    """(doc_id, i, w): every analyzer token with its position."""
-    toks = TX.tokenize(d, TEXT)
-    if d == D.SPARK:
-        return f"SELECT doc_id, posexplode({toks}) AS (i, w) FROM documents"
-    return (
-        f"SELECT doc_id, generate_subscripts({toks}, 1) - 1 AS i,"
-        f" unnest({toks}) AS w FROM documents"
-    )
-
-
-def _rake_tail(d: str, tp_src: str) -> str:
     phrase = (
         "array_join(transform(array_sort(collect_list(struct(i, w))),"
         " s -> s.w), ' ')"
@@ -15803,20 +15533,6 @@ def _rake_tail(d: str, tp_src: str) -> str:
         ORDER BY rake_score DESC, phrase ASC
         LIMIT {_RAKE_TOP}
     """
-
-
-def q_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAKE keyphrase top-k over the corpus (see _rake_keyphrases_sql).
-    The token-position relation feeds the island window, the phrase
-    assembly, and the word stats; Spark materializes it once
-    (localCheckpoint) because CTE re-inlining would re-tokenize the
-    corpus per consuming branch (the curation_pipeline lesson)."""
-    _view(spark, sf_dir, "documents")
-    tp = spark.sql(_rake_tp_sql(D.SPARK))
-    tp.localCheckpoint(eager=True).createOrReplaceTempView("rake_tp")
-    return spark.sql(
-        _rake_tail(D.SPARK, "SELECT doc_id, i, w FROM rake_tp")
-    )
 
 
 # =========================================================================
@@ -16048,8 +15764,8 @@ def _ensure_minhash_edge_table(spark: SparkSession, sf_dir: str) -> str:
             FROM {band_table} a JOIN {band_table} b
               ON a.band_key = b.band_key AND a.doc < b.doc
             """
-        ).localCheckpoint()
-        cand.createOrReplaceTempView("mhei_cand")
+        )
+        _materialize(cand, "mhei_cand")
         return _jaccard_verify_spark(spark, "mhei_cand", "id_a", "id_b").select(
             "id_a", "id_b"
         )
@@ -16157,8 +15873,8 @@ def q_dedup_evidence_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT id_a, id_b, 0, 0, 1 FROM dec_wn
         ) u GROUP BY id_a, id_b
         """
-    ).localCheckpoint(eager=True)
-    ev.createOrReplaceTempView("dec_ev")
+    )
+    ev = _materialize(ev, "dec_ev")
     comp = connected_components(
         ev.select("id_a", "id_b"), edge_spill_table="cc_edges_evidence"
     ).select(F.col("node").alias("doc_id"), F.col("comp").alias("component"))
@@ -17161,7 +16877,7 @@ def _markov_entropy_sql(d: str) -> str:
 _KN_D_NUM, _KN_D_DEN = 3, 4  # absolute discount D = 0.75, exact in binary
 
 
-def _kn_bigram_nll_sql(d: str) -> str:
+def _kn_bigram_nll_body(d: str, tokd: str) -> str:
     """INTERPOLATED KNESER-NEY held-out bigram NLL -- the standard against
     which heldout_bigram_nll's Stupid Backoff is the cheap baseline
     (Kneser & Ney 1995; Chen & Goodman 1999 empirics). Same doc_id % 5
@@ -17183,7 +16899,11 @@ def _kn_bigram_nll_sql(d: str) -> str:
     Scale shape: four vocabulary-sized aggregates with map-side combine
     (bigram counts, context totals+fanouts, continuation fanouts, one
     global distinct-bigram count); eval scoring is left joins on token
-    keys; per-doc aggregate partial-combines."""
+    keys; per-doc aggregate partial-combines.
+
+    `tokd` is the token relation of _tokd_sql (materialized once on the
+    Spark side). It enters as CTE `kn_tokd`, re-projected as `tokd`: the
+    oracle statement has spelled it that way since round 11."""
     q = f"{float(_BGLM_Q)!r}"
     dd = f"(cast({_KN_D_NUM} as double) / cast({_KN_D_DEN} as double))"
     if d == D.SPARK:
@@ -17210,7 +16930,8 @@ def _kn_bigram_nll_sql(d: str) -> str:
         f" + ({dd} * cast(cv.n1p_v as double) / cast(cv.c_v as double)) * {pcont})"
     )
     return f"""
-        WITH tokd AS (SELECT doc_id, toks FROM kn_tokd),
+        WITH kn_tokd AS ({tokd}),
+        tokd AS (SELECT doc_id, toks FROM kn_tokd),
         train AS (SELECT toks FROM tokd WHERE doc_id % {_BGLM_EVAL_MOD} <> 0),
         tbg AS (
             SELECT bg, cast(count(*) as bigint) AS c_ab
@@ -17269,28 +16990,6 @@ def _kn_bigram_nll_sql(d: str) -> str:
                    AS backoff_rate
         FROM agg
     """
-
-
-def q_kn_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kneser-Ney held-out bigram NLL per eval doc (see _kn_bigram_nll_sql).
-    The token relation is materialized once (localCheckpoint) -- the train
-    aggregates and eval scoring would each re-tokenize under Catalyst CTE
-    inlining (the heldout_bigram_nll precedent)."""
-    _view(spark, sf_dir, "documents")
-    toks = TX.tokenize(D.SPARK, TEXT)
-    tokd = spark.sql(f"SELECT doc_id, {toks} AS toks FROM documents")
-    tokd.localCheckpoint(eager=True).createOrReplaceTempView("kn_tokd")
-    return spark.sql(_kn_bigram_nll_sql(D.SPARK))
-
-
-def _kn_bigram_nll_oracle(d: str) -> str:
-    toks = TX.tokenize(d, TEXT)
-    inner = _kn_bigram_nll_sql(d)
-    return inner.replace(
-        "WITH tokd AS (SELECT doc_id, toks FROM kn_tokd),",
-        f"WITH kn_tokd AS (SELECT doc_id, {toks} AS toks FROM documents),\n"
-        "        tokd AS (SELECT doc_id, toks FROM kn_tokd),",
-    )
 
 
 _JSD_Q = 1 << 20
@@ -17498,15 +17197,15 @@ def q_dbscan_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         "WITH "
         + _dbscan_tail(D.SPARK, "SELECT id_a, id_b, cosine FROM dbscan_pairs")
         + " SELECT node, other FROM nbr"
-    ).localCheckpoint(eager=True)
-    nbr.createOrReplaceTempView("dbscan_nbr")
+    )
+    _materialize(nbr, "dbscan_nbr")
     core = spark.sql(
         f"""SELECT node FROM (
                SELECT node, cast(count(*) as bigint) AS degree
                FROM dbscan_nbr GROUP BY node
            ) d WHERE degree >= {DBSCAN_MINPTS}"""
-    ).localCheckpoint(eager=True)
-    core.createOrReplaceTempView("dbscan_core")
+    )
+    _materialize(core, "dbscan_core")
     base = spark.sql(
         """SELECT n.node AS a, n.other AS b
            FROM dbscan_nbr n
@@ -18455,8 +18154,8 @@ def q_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
                    cast(count(*) as bigint) AS c
             FROM (SELECT source, explode({toks}) AS t FROM documents)
             GROUP BY source, case when t IN ({stop}) then t else '' end"""
-    ).localCheckpoint(eager=True)
-    agg.createOrReplaceTempView("bd_agg")
+    )
+    _materialize(agg, "bd_agg")
     return spark.sql(
         _burrows_delta_sql(D.SPARK, agg_src="SELECT source, fw_t, c FROM bd_agg")
     )
@@ -18538,7 +18237,7 @@ def q_embedding_isotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""SELECT vec_id, v, {V.norm(D.SPARK, "v", EMB_DIM)} AS nv
             FROM (SELECT vec_id, {v} AS v FROM embeddings) emb"""
     )
-    n.localCheckpoint(eager=True).createOrReplaceTempView("iso_n")
+    _materialize(n, "iso_n")
     return spark.sql(
         "WITH n AS (SELECT vec_id, v, nv FROM iso_n),\n"
         + _isotropy_tail(D.SPARK)
@@ -18971,7 +18670,7 @@ def q_quality_signal_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-referenced CTE, so the oracle statement is unchanged."""
     _view(spark, sf_dir, "documents")
     m = spark.sql(f"WITH {_qsc_moments_cte(D.SPARK)} SELECT * FROM m")
-    m.localCheckpoint(eager=True).createOrReplaceTempView("qsc_m")
+    _materialize(m, "qsc_m")
     return spark.sql(_qsc_pairs_tail("qsc_m"))
 
 
@@ -19050,25 +18749,56 @@ def _tail_trend_sql(d: str) -> str:
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 
+def _register(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) -> None:
+    """Register source `tables` in order: `events` through _events_view,
+    the rest through _view."""
+    for t in tables:
+        if t == "events":
+            _events_view(spark, sf_dir)
+        else:
+            _view(spark, sf_dir, t)
+
+
 def _sql_query(
     builder: Callable[[str], str], *tables: str
 ) -> tuple[SparkQuery, Callable[[str], str]]:
     """Registry row for a query that is one SQL statement over source
-    tables: the Spark callable registers `tables` in the given order
-    (`events` through _events_view, the rest through _view) and runs
+    tables: the Spark callable registers `tables` (_register) and runs
     spark.sql(builder(D.SPARK)); the oracle is the same builder. Both
     sides come from one builder, so the row cannot pair a Spark query
     with another query's oracle."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        for t in tables:
-            if t == "events":
-                _events_view(spark, sf_dir)
-            else:
-                _view(spark, sf_dir, t)
+        _register(spark, sf_dir, tables)
         return spark.sql(builder(D.SPARK))
 
     return run, builder
+
+
+def _staged_query(
+    body: Callable[..., str],
+    tables: tuple[str, ...],
+    *stages: tuple[str, Callable[[str], str]],
+) -> tuple[SparkQuery, Callable[[str], str]]:
+    """Registry row for a query that materializes intermediate relations
+    ahead of its final statement. Each stage is (view, stage_builder).
+    Spark: register `tables` as _sql_query does, then _materialize each
+    stage_builder(D.SPARK) relation into its view, in order, and run
+    body(D.SPARK, ...) with each stage read back from its view. Oracle:
+    the same body with each stage_builder(d) SQL inlined -- one statement,
+    no view names. Both sides come from the same builders, so a staged
+    relation cannot drift from the one its oracle computes."""
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _register(spark, sf_dir, tables)
+        for view, stage in stages:
+            _materialize(spark.sql(stage(D.SPARK)), view)
+        return spark.sql(body(D.SPARK, *(f"SELECT * FROM {v}" for v, _ in stages)))
+
+    def oracle(d: str) -> str:
+        return body(d, *(stage(d) for _, stage in stages))
+
+    return run, oracle
 
 
 # name -> (spark callable, oracle SQL builder or None)
@@ -19114,7 +18844,9 @@ _REGISTRY_BASE: dict[str, tuple[SparkQuery, Callable[[str], str] | None]] = {
     "l_diversity_events": _sql_query(_l_diversity_events_sql, "events"),
     "disparate_impact_filter": _sql_query(_disparate_impact_sql, "documents"),
     "markov_entropy": _sql_query(_markov_entropy_sql, "events"),
-    "kn_bigram_nll": (q_kn_bigram_nll, _kn_bigram_nll_oracle),
+    "kn_bigram_nll": _staged_query(
+        _kn_bigram_nll_body, ("documents",), ("kn_tokd_rel", _tokd_sql)
+    ),
     "source_vocab_jsd": _sql_query(_source_vocab_jsd_sql, "documents"),
     # --- round-10 wave 11 ---
     "krippendorff_alpha": _sql_query(_krippendorff_alpha_sql, "documents"),
@@ -19137,11 +18869,19 @@ _REGISTRY_BASE: dict[str, tuple[SparkQuery, Callable[[str], str] | None]] = {
     # --- round-9 wave 10 ---
     "seasonal_decompose": _sql_query(_seasonal_decompose_sql, "events"),
     "trending_terms": _sql_query(_trending_terms_sql, "lineitem", "part"),
-    "rake_keyphrases": (q_rake_keyphrases, _rake_keyphrases_sql),
+    "rake_keyphrases": _staged_query(
+        _rake_tail, ("documents",), ("rake_tp", _rake_tp_sql)
+    ),
     # --- round-9 wave 9 ---
-    "average_precision": (q_average_precision, _average_precision_sql),
-    "cumulative_gains": (q_cumulative_gains, _cumulative_gains_sql),
-    "isotonic_calibration": (q_isotonic_calibration, _isotonic_calibration_sql),
+    "average_precision": _staged_query(
+        _average_precision_tail, ("documents",), ("ap_scored", _clf_scored_sql)
+    ),
+    "cumulative_gains": _staged_query(
+        _cumulative_gains_tail, ("documents",), ("cg_scored", _clf_scored_sql)
+    ),
+    "isotonic_calibration": _staged_query(
+        _isotonic_tail, ("documents",), ("iso_scored", _clf_scored_sql)
+    ),
     "mann_whitney": _sql_query(_mann_whitney_sql, "events"),
     "survival_hazard": _sql_query(_survival_hazard_sql, "events"),
     "rec_eval_topk": _sql_query(_rec_eval_sql, "events"),
@@ -19157,7 +18897,9 @@ _REGISTRY_BASE: dict[str, tuple[SparkQuery, Callable[[str], str] | None]] = {
     "graph_modularity": (q_graph_modularity, _graph_modularity_sql),
     # --- round-9 wave 3 ---
     "classifier_auc": _sql_query(_classifier_auc_sql, "documents"),
-    "classifier_calibration": (q_classifier_calibration, _classifier_calibration_sql),
+    "classifier_calibration": _staged_query(
+        _classifier_calibration_tail, ("documents",), ("cal_scored", _clf_scored_sql)
+    ),
     "pareto_frontier": _sql_query(_pareto_frontier_sql, "part"),
     "sorted_neighborhood_pairs": _sql_query(_sorted_neighborhood_sql, "customer"),
     "zonemap_audit": _sql_query(_zonemap_audit_sql, "lineitem"),
@@ -19166,9 +18908,13 @@ _REGISTRY_BASE: dict[str, tuple[SparkQuery, Callable[[str], str] | None]] = {
     "association_rules": (q_association_rules, _association_rules_sql),
     "audio_loudness": (q_audio_loudness, _audio_loudness_sql),
     # --- round-9 wave 4 ---
-    "poisson_bootstrap_ci": (q_poisson_bootstrap_ci, _poisson_bootstrap_sql),
-    "conformal_threshold": (q_conformal_threshold, _conformal_threshold_sql),
-    "woe_iv": (q_woe_iv, _woe_iv_sql),
+    "poisson_bootstrap_ci": _staged_query(
+        _poisson_bootstrap_tail, ("orders",), ("boot_base", _poisson_base_sql)
+    ),
+    "conformal_threshold": _staged_query(
+        _conformal_threshold_tail, ("documents",), ("conf_scored", _clf_scored_split_sql)
+    ),
+    "woe_iv": _staged_query(_woe_iv_tail, ("documents",), ("woe_scored", _clf_scored_sql)),
     "ols_trend": _sql_query(_ols_trend_sql, "orders", "customer", "nation"),
     "event_path_topk": _sql_query(_event_path_topk_sql, "events"),
     # --- round-9 wave 5 ---
@@ -19179,9 +18925,13 @@ _REGISTRY_BASE: dict[str, tuple[SparkQuery, Callable[[str], str] | None]] = {
     "permutation_test": _sql_query(_permutation_test_sql, "documents"),
     "runs_test": _sql_query(_runs_test_sql, "events"),
     # --- round-9 wave 6 ---
-    "log_odds_terms": (q_log_odds_terms, _log_odds_terms_sql),
+    "log_odds_terms": _staged_query(
+        _log_odds_tail, ("documents",), ("lo_vocab", _log_odds_vocab_sql)
+    ),
     "jackknife_ratio": _sql_query(_jackknife_ratio_sql, "documents"),
-    "kendall_tau": (q_kendall_tau, _kendall_tau_sql),
+    "kendall_tau": _staged_query(
+        _kendall_tau_tail, ("documents",), ("kt_cells", _kendall_cells_sql)
+    ),
     "binseg_changepoint": _sql_query(_binseg_changepoint_sql, "events"),
     "mcnemar_test": _sql_query(_mcnemar_test_sql, "documents"),
     "dow_seasonality": _sql_query(_dow_seasonality_sql, "events"),
@@ -19197,7 +18947,9 @@ _REGISTRY_BASE: dict[str, tuple[SparkQuery, Callable[[str], str] | None]] = {
     "srm_check": _sql_query(_srm_check_sql, "events"),
     "mde_power": _sql_query(_mde_power_sql, "events"),
     "shapley_attribution": _sql_query(_shapley_attribution_sql, "events"),
-    "mad_anomalies": (q_mad_anomalies, _mad_anomalies_sql),
+    "mad_anomalies": _staged_query(
+        _mad_anomalies_tail, ("events",), ("mad_daily", _mad_daily_sql)
+    ),
     "retention_decay_fit": _sql_query(_retention_decay_fit_sql, "events"),
     # --- round-8 additions (never driver-proven) ---
     "psi_drift": _sql_query(_psi_drift_sql, "documents"),
@@ -19222,7 +18974,9 @@ _REGISTRY_BASE: dict[str, tuple[SparkQuery, Callable[[str], str] | None]] = {
     "dedup_savings": (q_dedup_savings, _dedup_savings_sql),
     # --- round-7 batch-6 additions (never driver-proven) ---
     "lsh_band_sweep": (q_lsh_band_sweep, _lsh_band_sweep_sql),
-    "classifier_score": (q_classifier_score, _classifier_score_sql),
+    "classifier_score": _staged_query(
+        _classifier_score_core, ("documents",), ("clf_feats", _clf_feats_sql)
+    ),
     "char_entropy": _sql_query(_char_entropy_sql, "documents"),
     "minhash_error": (q_minhash_error, _minhash_error_sql),
     "fk_integrity": _sql_query(
@@ -19238,7 +18992,9 @@ _REGISTRY_BASE: dict[str, tuple[SparkQuery, Callable[[str], str] | None]] = {
     "zorder_stats": _sql_query(_zorder_stats_sql, "lineitem"),
     "wminhash_pairs": (q_wminhash_pairs, _wminhash_sql),
     "audio_metadata": (q_audio_metadata, _audio_metadata_sql),
-    "hdr_quantiles": (q_hdr_quantiles, _hdr_quantiles_sql),
+    "hdr_quantiles": _staged_query(
+        _hdr_quantiles_tail, ("events",), ("hdr_vals", _hdr_vals_sql)
+    ),
     "interval_overlap": _sql_query(_interval_overlap_sql, "events"),
     "k_anonymity": _sql_query(_k_anonymity_sql, "customer"),
     "join_size_sketch": _sql_query(_join_size_sketch_sql, "lineitem", "orders"),
@@ -19254,14 +19010,26 @@ _REGISTRY_BASE: dict[str, tuple[SparkQuery, Callable[[str], str] | None]] = {
     "pq_distortion": (q_pq_distortion, _pq_distortion_sql),
     # --- round-7 batch-4 additions (never driver-proven) ---
     "triangle_count": (q_triangle_count, _triangle_count_sql),
-    "source_ngram_overlap": (q_source_ngram_overlap, _source_ngram_overlap_sql),
+    "source_ngram_overlap": _staged_query(
+        _source_overlap_body, ("documents",), ("src_overlap_sh", _source_shingle_sql)
+    ),
     # --- round-7 batch-3 additions (never driver-proven) ---
-    "cdc_chunks": (q_cdc_chunks, _cdc_chunks_sql),
-    "countmin_heavy_hitters": (q_countmin_heavy_hitters, _countmin_heavy_hitters_sql),
-    "dup_span_pairs": (q_dup_span_pairs, _dup_span_pairs_sql),
+    "cdc_chunks": _staged_query(
+        _cdc_chunks_body, ("documents",), ("cdc_chunk_rel", _cdc_chunk_rel_sql)
+    ),
+    "countmin_heavy_hitters": _staged_query(
+        _countmin_body, ("documents",), ("cm_th_rel", _countmin_th_rel_sql)
+    ),
+    "dup_span_pairs": _staged_query(
+        _dup_span_pairs_body, ("documents",), ("dup_pair_posting", _dup_posting_sql)
+    ),
     # --- round-7 batch-2 additions (never driver-proven) ---
-    "duplicate_spans": (q_duplicate_spans, _duplicate_spans_sql),
-    "heldout_bigram_nll": (q_heldout_bigram_nll, _heldout_bigram_nll_sql),
+    "duplicate_spans": _staged_query(
+        _dup_spans_body, ("documents",), ("dup_span_h", _dup_shingle_sql)
+    ),
+    "heldout_bigram_nll": _staged_query(
+        _bigram_nll_body, ("documents",), ("bglm_tokd", _tokd_sql)
+    ),
     "pagerank_step": (q_pagerank_step, _pagerank_step_sql),
     # --- round-5 batch-3 additions (never driver-proven) ---
     "part_supplier_counts": _sql_query(
@@ -19363,14 +19131,18 @@ _REGISTRY_BASE: dict[str, tuple[SparkQuery, Callable[[str], str] | None]] = {
     "scd_upsert": _sql_query(_scd_upsert_sql, "customer"),
     "vocab_topk": _sql_query(_vocab_topk_sql, "documents"),
     "doc_length_percentiles": _sql_query(_doc_length_percentiles_sql, "documents"),
-    "curation_pipeline": (q_curation_pipeline, _curation_pipeline_sql),
+    "curation_pipeline": _staged_query(
+        _curation_body, ("documents",), ("curation_tokd", _curation_tokd_sql)
+    ),
     "funnel_conversion": _sql_query(_funnel_sql, "events"),
     "retention_cohorts": _sql_query(_retention_sql, "events"),
     "unigram_surprisal": (q_unigram_surprisal, _unigram_surprisal_sql),
     "sliding_window_agg": _sql_query(_sliding_window_sql, "events"),
     "hourly_anomaly": _sql_query(_hourly_anomaly_sql, "events"),
     "tfidf_topk": (q_tfidf_topk, _tfidf_topk_sql),
-    "pmi_collocations": (q_pmi_collocations, _pmi_collocations_sql),
+    "pmi_collocations": _staged_query(
+        _pmi_body, ("documents",), ("pmi_tokd", _tokd_sql)
+    ),
     "bpe_merges": (q_bpe_merges, _bpe_merges_sql),
     "bpe_encode": (q_bpe_encode, _bpe_encode_sql),
     "bpe_fertility": (q_bpe_fertility, _bpe_fertility_sql),

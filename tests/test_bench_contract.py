@@ -134,11 +134,12 @@ def test_indexed_queries_list_is_mechanical():
     callable transitively reaches ensure_stamped_table -- re-derived here
     from the source so the hand-maintained set can never drift.
 
-    A registry row is either `(q_fn, builder)` or `_sql_query(builder,
-    *tables)`; the latter's Spark side is the constructor's body plus the
-    builder, so reachability is searched from both. Every REGISTRY name
-    must parse into one of the two forms: a row in a third form would
-    otherwise drop out of the derived set unnoticed."""
+    A registry row is `(q_fn, builder)`, `_sql_query(builder, *tables)` or
+    `_staged_query(body, tables, *(view, stage_builder))`. A constructor
+    row's Spark side is the constructor's body plus every builder it is
+    given, so reachability is searched from all of them. Every REGISTRY
+    name must parse into one of the three forms: a row in a fourth form
+    would otherwise drop out of the derived set unnoticed."""
     import ast
     import os
     import re
@@ -183,6 +184,11 @@ def test_indexed_queries_list_is_mechanical():
             roots[key.value] = [row.elts[0].id]
         elif isinstance(row, ast.Call) and row.func.id == "_sql_query":
             roots[key.value] = ["_sql_query", row.args[0].id]
+        elif isinstance(row, ast.Call) and row.func.id == "_staged_query":
+            body, _tables, *stages = row.args
+            roots[key.value] = ["_staged_query", body.id] + [
+                stage.elts[1].id for stage in stages
+            ]
     assert set(roots) == set(Q.REGISTRY)
     assert all(fn in defs for fns in roots.values() for fn in fns)
     derived = {

@@ -25,10 +25,10 @@ def _docs(spark):
 
 def _batch_outputs(spark):
     return {
-        "ap": [tuple(r) for r in Q.q_average_precision(spark, SF).collect()],
-        "gains": [tuple(r) for r in Q.q_cumulative_gains(spark, SF).collect()],
-        "iso": [tuple(r) for r in Q.q_isotonic_calibration(spark, SF).collect()],
-        "cal": [tuple(r) for r in Q.q_classifier_calibration(spark, SF).collect()],
+        "ap": [tuple(r) for r in Q.REGISTRY["average_precision"][0](spark, SF).collect()],
+        "gains": [tuple(r) for r in Q.REGISTRY["cumulative_gains"][0](spark, SF).collect()],
+        "iso": [tuple(r) for r in Q.REGISTRY["isotonic_calibration"][0](spark, SF).collect()],
+        "cal": [tuple(r) for r in Q.REGISTRY["classifier_calibration"][0](spark, SF).collect()],
     }
 
 

@@ -130,7 +130,7 @@ def test_streamed_quantiles_match_batch_audit_query(spark):
     from sentiment_analysis_data_pipeline_spark import queries as Q
 
     sf = "/root/testdata/sf0.001"
-    audit = {r["event_type"]: r for r in Q.q_hdr_quantiles(spark, sf).collect()}
+    audit = {r["event_type"]: r for r in Q.REGISTRY["hdr_quantiles"][0](spark, sf).collect()}
     Q._events_view(spark, sf)
     ev = spark.sql("SELECT event_type, value FROM events")
     hist = hdr_cells(ev)

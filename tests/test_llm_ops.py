@@ -98,7 +98,7 @@ def test_curation_pipeline_gates(spark):
             (5, "le chat est dans la maison pour les amis des gens", "fr", "s", 1),
         ],
     )
-    rows = spark.sql(Q._curation_pipeline_sql(Q.D.SPARK)).collect()
+    rows = spark.sql(Q.REGISTRY["curation_pipeline"][1](Q.D.SPARK)).collect()
     assert [r["doc_id"] for r in rows] == [1]
     r = rows[0]
     assert r["n_tokens"] == 12 and r["distinct_ratio"] == 10 / 12

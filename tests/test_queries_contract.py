@@ -111,3 +111,101 @@ def test_no_duplicate_defs_or_registry_keys():
     keys = re.findall(r'^\s+"([a-z_0-9]+)":', reg, re.M)
     dup_keys = [k for k, c in Counter(keys).items() if c > 1]
     assert not dup_keys, f"duplicate registry keys: {dup_keys}"
+
+
+def _queries_ast():
+    import ast
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.path.join(root, "sentiment_analysis_data_pipeline_spark", "queries.py")
+    with open(path) as f:
+        return ast.parse(f.read())
+
+
+def test_checkpoints_go_through_materialize():
+    """Every checkpoint in queries.py is made by `_materialize`, the one
+    helper a materialize-layer timer or a checkpoint A/B has to touch."""
+    import ast
+
+    tree = _queries_ast()
+    callers = set()
+    for fn in tree.body:
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"
+            ):
+                callers.add(getattr(fn, "name", f"line {node.lineno}"))
+    assert callers == {"_materialize"}
+
+
+def test_no_sql_repointed_by_str_replace():
+    """No SQL builder's output is re-pointed with str.replace: a replace
+    whose target text drifts from the builder silently stops matching and
+    the query runs the un-staged statement (or the oracle a patched one).
+    Staged relations are passed to their body as arguments instead."""
+    import ast
+    import re
+
+    builder = re.compile(r"^_\w+_(sql|body|tail|core)$")
+
+    def builder_call(node) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and bool(builder.match(node.func.id))
+        )
+
+    offenders = []
+    for fn in _queries_ast().body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        from_builder = {
+            t.id
+            for node in ast.walk(fn)
+            if isinstance(node, ast.Assign) and builder_call(node.value)
+            for t in node.targets
+            if isinstance(t, ast.Name)
+        }
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "replace"
+            ):
+                target = node.func.value
+                if builder_call(target) or (
+                    isinstance(target, ast.Name) and target.id in from_builder
+                ):
+                    offenders.append(f"{fn.name}:{node.lineno}")
+    assert not offenders, f"SQL re-pointed by str.replace: {offenders}"
+
+
+def test_staged_oracles_name_no_stage_view():
+    """A `_staged_query` row's oracle is one statement with every stage
+    inlined: it must not read any of the row's Spark-side stage views
+    (DuckDB has none of them)."""
+    import ast
+    import re
+
+    from sentiment_analysis_data_pipeline_spark import queries as Q
+
+    base = next(
+        node.value
+        for node in _queries_ast().body
+        if isinstance(node, ast.AnnAssign)
+        and getattr(node.target, "id", None) == "_REGISTRY_BASE"
+    )
+    staged = {
+        key.value: [stage.elts[0].value for stage in row.args[2:]]
+        for key, row in zip(base.keys, base.values)
+        if isinstance(row, ast.Call) and row.func.id == "_staged_query"
+    }
+    assert staged
+    for name, views in staged.items():
+        assert views, name
+        oracle = Q.REGISTRY[name][1](Q.D.DUCKDB)
+        named = [v for v in views if re.search(rf"\b{v}\b", oracle)]
+        assert not named, f"{name}: oracle names stage view(s) {named}"

@@ -164,10 +164,7 @@ def test_kn_bigram_continuation_beats_raw_frequency(spark):
     ]
     _docs_view(spark, rows)
     toks = Q.TX.tokenize(Q.D.SPARK, Q.TEXT)
-    spark.sql(f"SELECT doc_id, {toks} AS toks FROM documents").createOrReplaceTempView(
-        "kn_tokd"
-    )
-    out = spark.sql(Q._kn_bigram_nll_sql(Q.D.SPARK)).collect()
+    out = spark.sql(Q.REGISTRY["kn_bigram_nll"][1](Q.D.SPARK)).collect()
     assert len(out) == 1 and out[0]["doc_id"] == 0
     # both eval bigrams backed off (context 'zzz' unseen); the doc-level nll
     # mixes them, so pin the mechanism directly on the continuation counts:
@@ -192,11 +189,7 @@ def test_kn_bigram_empty_train_split_survives(spark):
     guard keeps P finite instead of ANSI-throwing on an Inf cast."""
     rows = [(0, "alpha beta gamma", "en", "s", 1), (1, "", "en", "s", 0)]
     _docs_view(spark, rows)
-    toks = Q.TX.tokenize(Q.D.SPARK, Q.TEXT)
-    spark.sql(f"SELECT doc_id, {toks} AS toks FROM documents").createOrReplaceTempView(
-        "kn_tokd"
-    )
-    out = spark.sql(Q._kn_bigram_nll_sql(Q.D.SPARK)).collect()
+    out = spark.sql(Q.REGISTRY["kn_bigram_nll"][1](Q.D.SPARK)).collect()
     assert len(out) == 1 and out[0]["n_bigrams"] == 2
     assert math.isfinite(out[0]["kn_nll"])
 

@@ -39,7 +39,7 @@ def test_duplicate_spans_cross_doc_span(spark):
         (3, "short doc", "en", "s", 1),  # < K chars: zeros via left join
     ]
     _docs_view(spark, rows)
-    out = {r["doc_id"]: r for r in spark.sql(Q._duplicate_spans_sql(Q.D.SPARK)).collect()}
+    out = {r["doc_id"]: r for r in spark.sql(Q.REGISTRY["duplicate_spans"][1](Q.D.SPARK)).collect()}
     assert set(out) == {0, 1, 2, 3}
     # the shared 45-char passage merges into ONE maximal span of 45 chars
     for doc, pre in ((0, pre0), (1, pre1)):
@@ -61,7 +61,7 @@ def test_duplicate_spans_intra_doc_repeat_two_islands(spark):
         (5, "an unrelated document long enough to hold a window", "en", "s", 1),
     ]
     _docs_view(spark, rows)
-    out = {r["doc_id"]: r for r in spark.sql(Q._duplicate_spans_sql(Q.D.SPARK)).collect()}
+    out = {r["doc_id"]: r for r in spark.sql(Q.REGISTRY["duplicate_spans"][1](Q.D.SPARK)).collect()}
     assert out[4]["n_spans"] == 2 and out[4]["dup_chars"] == 70
     assert out[5]["n_spans"] == 0
 
@@ -77,7 +77,7 @@ def test_duplicate_spans_overlap_merges_single_island(spark):
         (1, "copycat: " + passage + passage, "en", "s", 1),
     ]
     _docs_view(spark, rows)
-    out = {r["doc_id"]: r for r in spark.sql(Q._duplicate_spans_sql(Q.D.SPARK)).collect()}
+    out = {r["doc_id"]: r for r in spark.sql(Q.REGISTRY["duplicate_spans"][1](Q.D.SPARK)).collect()}
     assert out[1]["n_spans"] == 1 and out[1]["dup_chars"] == 120
     # the origin's single copy is one 60-char span
     assert out[0]["n_spans"] == 1 and out[0]["dup_chars"] == 60
@@ -96,7 +96,7 @@ def test_heldout_bigram_nll_main_and_backoff_paths(spark):
         (1, "a b a b c", "en", "s", 1),
     ]
     _docs_view(spark, rows)
-    out = spark.sql(Q._heldout_bigram_nll_sql(Q.D.SPARK)).collect()
+    out = spark.sql(Q.REGISTRY["heldout_bigram_nll"][1](Q.D.SPARK)).collect()
     assert len(out) == 1
     r = out[0]
     assert r["doc_id"] == 0 and r["n_bigrams"] == 2
@@ -117,7 +117,7 @@ def test_heldout_bigram_nll_seen_left_unseen_bigram(spark):
     # train "x q y q x q": unigrams x:2? -> recount: tokens x q y q x q
     # x:2 q:3 y:1 -> N=6, V=3; bigrams x_q, q_y, y_q, q_x, x_q
     _docs_view(spark, rows)
-    r = spark.sql(Q._heldout_bigram_nll_sql(Q.D.SPARK)).collect()[0]
+    r = spark.sql(Q.REGISTRY["heldout_bigram_nll"][1](Q.D.SPARK)).collect()[0]
     q = float(Q._BGLM_Q)
     # backoff for x_y: ln(5*(6+3) / (2*(c(y)+1))) = ln(45/4)
     expect = math.floor(math.log(45.0 / 4.0) * q) / q
@@ -170,7 +170,7 @@ def test_pagerank_step_mass_conservation_bound(spark):
 
 
 def _cdc(spark):
-    return {r["doc_id"]: r for r in spark.sql(Q._cdc_chunks_sql(Q.D.SPARK)).collect()}
+    return {r["doc_id"]: r for r in spark.sql(Q.REGISTRY["cdc_chunks"][1](Q.D.SPARK)).collect()}
 
 
 def test_cdc_chunks_identical_docs_fully_dup(spark):
@@ -234,7 +234,7 @@ def test_countmin_exact_counts_and_no_underestimate(spark):
         (1, "apple apple banana date", "en", "s", 1),
     ]
     _docs_view(spark, rows)
-    out = spark.sql(Q._countmin_heavy_hitters_sql(Q.D.SPARK)).collect()
+    out = spark.sql(Q.REGISTRY["countmin_heavy_hitters"][1](Q.D.SPARK)).collect()
     got = {r["token"]: r for r in out}
     assert got["apple"]["exact_count"] == 5
     assert got["banana"]["exact_count"] == 3
@@ -265,7 +265,7 @@ def test_dup_span_pairs_basic_attribution(spark):
         (2, "completely unique content with nothing shared anywhere at all", "en", "s", 1),
     ]
     _docs_view(spark, rows)
-    out = spark.sql(Q._dup_span_pairs_sql(Q.D.SPARK)).collect()
+    out = spark.sql(Q.REGISTRY["dup_span_pairs"][1](Q.D.SPARK)).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["doc_a"], r["doc_b"]) == (0, 1)
@@ -282,7 +282,7 @@ def test_dup_span_pairs_repeat_within_doc_counts_once(spark):
         (1, "copycat: " + SHARED + " gap gap gap " + SHARED, "en", "s", 1),
     ]
     _docs_view(spark, rows)
-    out = spark.sql(Q._dup_span_pairs_sql(Q.D.SPARK)).collect()
+    out = spark.sql(Q.REGISTRY["dup_span_pairs"][1](Q.D.SPARK)).collect()
     pair = {(r["doc_a"], r["doc_b"]): r for r in out}
     # intra-doc adjacency in doc 1 creates a few extra shared windows at the
     # junctions only if they also appear in doc 0 -- they don't, so exactly 16
@@ -306,7 +306,7 @@ def test_dup_span_pairs_df_cap_drops_boilerplate(spark):
         (101, "second quoting doc;" + other, "en", "s", 1),
     ]
     _docs_view(spark, rows)
-    out = spark.sql(Q._dup_span_pairs_sql(Q.D.SPARK)).collect()
+    out = spark.sql(Q.REGISTRY["dup_span_pairs"][1](Q.D.SPARK)).collect()
     assert [(r["doc_a"], r["doc_b"]) for r in out] == [(100, 101)]
     assert out[0]["shared_shingles"] == len(other) - K + 1
 
@@ -376,7 +376,7 @@ def test_source_ngram_overlap_matrix(spark):
         (2, "zebra quux xylophone corge", "en", "gamma", 1),
     ]
     _docs_view(spark, rows)
-    out = spark.sql(Q._source_ngram_overlap_sql(Q.D.SPARK)).collect()
+    out = spark.sql(Q.REGISTRY["source_ngram_overlap"][1](Q.D.SPARK)).collect()
     # every pair present even when fully disjoint
     assert len(out) == 3
     by_pair = {(r["source_a"], r["source_b"]): r for r in out}
@@ -401,7 +401,7 @@ def test_source_ngram_overlap_dedups_within_source(spark):
     ]
     _docs_view(spark, rows)
     out = {(r["source_a"], r["source_b"]): r for r in
-           spark.sql(Q._source_ngram_overlap_sql(Q.D.SPARK)).collect()}
+           spark.sql(Q.REGISTRY["source_ngram_overlap"][1](Q.D.SPARK)).collect()}
     r = out[("s1", "s2")]
     # s1 docs: {alpha_repeated_ngram, repeated_ngram_here} and
     # {alpha_repeated_ngram, repeated_ngram_there} -> 3 distinct
@@ -528,7 +528,7 @@ def test_classifier_score_replica_exact(spark):
         (r["source"], r["band"]): (
             r["n_docs"], r["band_lo"], r["share"], r["band_mean_score"],
         )
-        for r in spark.sql(Q._classifier_score_sql(Q.D.SPARK)).collect()
+        for r in spark.sql(Q.REGISTRY["classifier_score"][1](Q.D.SPARK)).collect()
     }
     assert got == _clf_replica(rows)
 
@@ -537,7 +537,7 @@ def test_classifier_score_bands_partition_sources(spark):
     # shares within one source sum to 1.0 (exact: each is c/total with the
     # same total) and every band is in [0, 9]
     sf = "/root/testdata/sf0.001"
-    out = Q.q_classifier_score(spark, sf).collect()
+    out = Q.REGISTRY["classifier_score"][0](spark, sf).collect()
     per_src: dict = {}
     for r in out:
         assert 0 <= r["band"] <= 9

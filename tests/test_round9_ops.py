@@ -171,7 +171,7 @@ def test_classifier_auc_hand_computed_with_ties(spark):
 
 
 def test_classifier_calibration_accounting(spark):
-    rows = Q.q_classifier_calibration(spark, SF01).collect()
+    rows = Q.REGISTRY["classifier_calibration"][0](spark, SF01).collect()
     assert len(rows) >= 3  # 0.02 bands keep the diagram multi-row
     assert sum(r["n_docs"] for r in rows) == 500
     for r in rows:
@@ -299,7 +299,7 @@ def test_audio_loudness_real_decode(spark):
 
 
 def test_poisson_bootstrap_ci_brackets_mean(spark):
-    r = Q.q_poisson_bootstrap_ci(spark, SF01).collect()[0]
+    r = Q.REGISTRY["poisson_bootstrap_ci"][0](spark, SF01).collect()[0]
     assert r["n_replicates"] == Q.BOOT_B
     assert r["ci_lo_cents"] < r["mean_cents"] < r["ci_hi_cents"]
     # CI width shrinks like 1/sqrt(n): at sf0.01 it must stay a narrow
@@ -318,7 +318,7 @@ def test_poisson_bootstrap_ci_brackets_mean(spark):
 
 
 def test_conformal_threshold_guarantee(spark):
-    r = Q.q_conformal_threshold(spark, SF01).collect()[0]
+    r = Q.REGISTRY["conformal_threshold"][0](spark, SF01).collect()[0]
     assert r["n_calib"] + r["n_test"] == 500
     # exact rank definition: ceil((n+1) * (1 - alpha))
     import math
@@ -333,7 +333,7 @@ def test_conformal_threshold_guarantee(spark):
 def test_woe_iv_reconstruction(spark):
     import math
 
-    rows = Q.q_woe_iv(spark, SF01).collect()
+    rows = Q.REGISTRY["woe_iv"][0](spark, SF01).collect()
     assert len(rows) >= 3
     pos_tot = sum(r["n_pos"] for r in rows)
     neg_tot = sum(r["n_neg"] for r in rows)
@@ -512,7 +512,7 @@ def test_runs_test_counts_runs_exactly(spark):
 
 
 def test_log_odds_terms_prior_and_direction(spark):
-    rows = Q.q_log_odds_terms(spark, SF01).collect()
+    rows = Q.REGISTRY["log_odds_terms"][0](spark, SF01).collect()
     assert len(rows) == Q.LOGODDS_TOP
     zs = [abs(r["z"]) for r in rows]
     assert zs == sorted(zs, reverse=True)
@@ -552,7 +552,7 @@ def test_jackknife_ratio_hand_check(spark):
 
 
 def test_kendall_tau_matches_scipy_free_recompute(spark):
-    r = Q.q_kendall_tau(spark, SF01).collect()[0]
+    r = Q.REGISTRY["kendall_tau"][0](spark, SF01).collect()[0]
     assert r["n_docs"] == 500
     # recompute tau-b by brute force over the banded pairs
     Q._view(spark, SF01, "documents")
@@ -804,7 +804,7 @@ def test_shapley_reconciles_to_conversions(spark):
 
 
 def test_mad_anomalies_robustness(spark):
-    rows = Q.q_mad_anomalies(spark, SF01).collect()
+    rows = Q.REGISTRY["mad_anomalies"][0](spark, SF01).collect()
     import statistics
 
     vs = [r["v_cents"] for r in rows]

@@ -86,7 +86,7 @@ def test_trending_terms_reference(spark):
 
 
 def test_rake_keyphrases_reference(spark):
-    out = Q.q_rake_keyphrases(spark, SF).collect()
+    out = Q.REGISTRY["rake_keyphrases"][0](spark, SF).collect()
     assert 0 < len(out) <= Q._RAKE_TOP
     scores = [r["rake_score"] for r in out]
     assert scores == sorted(scores, reverse=True)

@@ -18,7 +18,7 @@ def _scored_rows(spark):
 
 
 def test_average_precision_matches_reference(spark):
-    out = {r["source"]: r for r in Q.q_average_precision(spark, SF).collect()}
+    out = {r["source"]: r for r in Q.REGISTRY["average_precision"][0](spark, SF).collect()}
     rows = _scored_rows(spark)
     # driver-side reference with the identical tie convention: descending
     # distinct-score blocks, precision at block end, quantized at 2^-40
@@ -52,7 +52,7 @@ def test_average_precision_matches_reference(spark):
 
 
 def test_cumulative_gains_accounting(spark):
-    rows = Q.q_cumulative_gains(spark, SF).collect()  # band DESC order
+    rows = Q.REGISTRY["cumulative_gains"][0](spark, SF).collect()  # band DESC order
     assert rows, "gains table empty"
     last = rows[-1]
     assert last["pop_share"] == 1.0 and last["recall"] == 1.0
@@ -83,7 +83,7 @@ def _pava(weights: list[int], sums: list[int]) -> list[list[int]]:
 
 
 def test_isotonic_matches_pava(spark):
-    out = Q.q_isotonic_calibration(spark, SF).collect()  # band ASC
+    out = Q.REGISTRY["isotonic_calibration"][0](spark, SF).collect()  # band ASC
     weights = [r["n_docs"] for r in out]
     raw = [r["pos_rate_raw"] for r in out]
     sums = [round(r * w) for r, w in zip(raw, weights)]

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from sentiment_analysis_data_pipeline_spark.operators.skew import salted_join, skewed_group_count
@@ -92,3 +94,22 @@ def test_key_gini_drives_salting_decision(spark):
         spark.conf.set(
             "spark.sql.adaptive.coalescePartitions.enabled", prev_coalesce
         )
+
+
+def test_salted_join_clamps_salts_to_shuffle_partitions(spark):
+    """More salts than shuffle partitions only replicate the right side
+    further (salts past the partition count share partitions): the salt
+    count is clamped, and the result stays the plain join's rows."""
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert parts < 64
+    left = _skewed(spark)
+    right = spark.createDataFrame(
+        [("h", 1.0), ("c1", 2.0), ("c3", 3.0)], "k string, w double"
+    )
+    plain = left.join(right, "k", "inner").orderBy("k", "v")
+    salted = salted_join(left, right, "k", n_salts=64)
+    got = salted.orderBy("k", "v").collect()
+    assert [r.asDict() for r in got] == [r.asDict() for r in plain.collect()]
+    plan = salted._jdf.queryExecution().analyzed().toString()
+    replicas = re.findall(r"explode\(array\(([^)]*)\)\)", plan)
+    assert replicas == [", ".join(str(i) for i in range(parts))]
