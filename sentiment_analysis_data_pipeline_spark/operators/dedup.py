@@ -68,6 +68,16 @@ def _band_keys_from_shingled(shingled: DataFrame, k: int, bands: int, rows: int)
     )
 
 
+def minhash_shingles(df: DataFrame, content_col: str, id_col: str, ngram: int = 3) -> DataFrame:
+    """(doc, shingles): each document's distinct word-n-gram set, empty sets
+    dropped -- the relation both the band signature and the exact Jaccard
+    verify read."""
+    return _with_tokens(df, content_col).select(
+        F.col(id_col).alias("doc"),
+        F.expr(D.arr_distinct(D.SPARK, text.ngrams(D.SPARK, "_tokens", ngram))).alias("shingles"),
+    ).filter(F.size("shingles") > 0)
+
+
 def minhash_band_keys(
     df: DataFrame,
     content_col: str,
@@ -82,11 +92,59 @@ def minhash_band_keys(
     reuses across dedup runs: candidate generation against a bucketed
     signature table is a zero-Exchange sort-merge self-join
     (tests/test_bucketed.py asserts the shuffle-free plan)."""
-    shingled = _with_tokens(df, content_col).select(
-        F.col(id_col).alias("doc"),
-        F.expr(D.arr_distinct(D.SPARK, text.ngrams(D.SPARK, "_tokens", ngram))).alias("shingles"),
-    ).filter(F.size("shingles") > 0)
-    return _band_keys_from_shingled(shingled, k, bands, rows)
+    return _band_keys_from_shingled(minhash_shingles(df, content_col, id_col, ngram), k, bands, rows)
+
+
+def minhash_signatures(
+    df: DataFrame,
+    content_col: str,
+    id_col: str,
+    k: int = 16,
+    bands: int = 4,
+    rows: int = 4,
+    ngram: int = 3,
+) -> tuple[DataFrame, DataFrame]:
+    """The (doc, shingles) and (doc, band_key) relations of `df`, each
+    materialized once with an eager localCheckpoint: the band self-join, an
+    index probe, the exact verify and an index append then all read them
+    instead of re-tokenizing. Checkpoint blocks are freed by the
+    ContextCleaner once the frames are unreachable; they never enter the
+    CacheManager, so nothing stays cached after the caller is done."""
+    shingled = minhash_shingles(df, content_col, id_col, ngram).localCheckpoint(eager=True)
+    banded = _band_keys_from_shingled(shingled, k, bands, rows).localCheckpoint(eager=True)
+    return shingled, banded
+
+
+def band_self_pairs(banded: DataFrame) -> DataFrame:
+    """Distinct (id_a, id_b) candidate pairs, id_a < id_b, of docs sharing a
+    band key; the self-join carries only (band_key, id)."""
+    a = banded.select("band_key", F.col("doc").alias("id_a"))
+    b = banded.select("band_key", F.col("doc").alias("id_b"))
+    return (
+        a.join(b, on="band_key")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
+def jaccard_verify(cands: DataFrame, shingled: DataFrame, threshold: float) -> DataFrame:
+    """Exact-Jaccard filter of candidate pairs: `cands` holds (id_a, id_b)
+    plus any tag columns, `shingled` a (doc, shingles) row for every id it
+    references. Both join sides read `shingled` (two hash joins against the
+    slim per-doc shingle table), so callers pass a materialized relation.
+    Returns cands' columns plus `jaccard`, pairs at or above `threshold`."""
+    sh_a = shingled.select(F.col("doc").alias("id_a"), F.col("shingles").alias("sh_a"))
+    sh_b = shingled.select(F.col("doc").alias("id_b"), F.col("shingles").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
+    return (
+        cands.join(sh_a, "id_a")
+        .join(sh_b, "id_b")
+        .withColumn("jaccard", inter / union)
+        .filter(F.col("jaccard") >= threshold)
+        .select(*cands.columns, "jaccard")
+    )
 
 
 def minhash_pairs(
@@ -114,43 +172,17 @@ def minhash_pairs(
       4. join shingle sets back by id (two hash joins against the slim
          per-doc shingle table), exact Jaccard, filter.
 
+    The shingle and band relations are each read more than once (signature
+    build + both verify joins; both self-join sides), so minhash_signatures
+    materializes them: tokenization runs once. At production scale this is
+    "write the shingle/signature table once".
+
     At 100 TB: both shuffles (doc-id agg, band-key join) are equi-shuffles on
     uniformly distributed keys (no skew); k/bands/rows tune the S-curve, not
     the plan shape.
     """
-    shingled = (
-        _with_tokens(df, content_col)
-        .select(
-            F.col(id_col).alias("doc"),
-            F.expr(D.arr_distinct(D.SPARK, text.ngrams(D.SPARK, "_tokens", ngram))).alias("shingles"),
-        )
-        .filter(F.size("shingles") > 0)
-        # consumed by three branches (signature build + both jaccard
-        # re-joins): persist instead of recomputing tokenization 3x. At
-        # production scale this is "write the shingle/signature table once".
-        .persist()
-    )
-    banded = _band_keys_from_shingled(shingled, k, bands, rows).persist()
-    # both sides of the self-join read `banded`
-    a = banded.select("band_key", F.col("doc").alias("id_a"))
-    b = banded.select("band_key", F.col("doc").alias("id_b"))
-    pairs = (
-        a.join(b, on="band_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sh_a = shingled.select(F.col("doc").alias("id_a"), F.col("shingles").alias("sh_a"))
-    sh_b = shingled.select(F.col("doc").alias("id_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-    return (
-        pairs.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    shingled, banded = minhash_signatures(df, content_col, id_col, k, bands, rows, ngram)
+    return jaccard_verify(band_self_pairs(banded), shingled, jaccard_threshold)
 
 
 def ngram_jaccard_pairs(

@@ -268,8 +268,16 @@ def new_batch_candidates(
     duplicate of itself (round-4 ADVICE)."""
     from .dedup import minhash_band_keys
 
-    nb = minhash_band_keys(new_docs, content_col, id_col)
-    nb.createOrReplaceTempView("_nbc_bands")
+    return probe_band_index(spark, minhash_band_keys(new_docs, content_col, id_col), table)
+
+
+def probe_band_index(spark: SparkSession, bands: DataFrame, table: str) -> DataFrame:
+    """(new_doc, corpus_doc) distinct candidate pairs between a (doc,
+    band_key) signature relation and the persisted band index -- the probe
+    half of new_batch_candidates, for callers that already hold the batch's
+    band keys (the streaming epoch signatures its batch once and reuses the
+    relation for the probe, the in-batch self-join and the index append)."""
+    bands.createOrReplaceTempView("_nbc_bands")
     return spark.sql(
         f"""
         SELECT DISTINCT n.doc AS new_doc, c.doc AS corpus_doc

@@ -3,17 +3,20 @@ continuous-crawl twin of the batch `incremental_dedup` workflow
 (operators/dedup_index.new_batch_candidates).
 
 100 TB design: the historical corpus exists ONLY as (a) its bucketed
-band-key index table and (b) a doc-store parquet. Each micro-batch
+band-key index table and (b) a doc-store parquet. Each micro-batch is
+signatured ONCE -- its (doc, shingles) and (doc, band_key) relations are
+materialized (dedup.minhash_signatures) and every step below reads them:
 
   1. PROBES the index for candidate pairs -- the corpus side reads its
      bucket files in place (no Exchange above the scan) and is never
      re-signatured; only the batch, smaller by the corpus/interval ratio,
      moves across the wire;
-  2. exact-Jaccard-VERIFIES candidates, computing shingles for candidate
-     MEMBERS only (semi-join-filtered doc-store read -- at corpus scale the
-     tokenize cost covers the ~0.x% of docs LSH surfaced, not the corpus);
-  3. finds IN-BATCH near-dup pairs with the same banded-LSH self-join
+  2. finds IN-BATCH near-dup pairs with the same banded-LSH self-join
      (a batch is never large enough to need its own persisted index);
+  3. exact-Jaccard-VERIFIES both candidate kinds in one join, computing
+     shingles for corpus candidate MEMBERS only (semi-join-filtered
+     doc-store read -- at corpus scale the tokenize cost covers the ~0.x%
+     of docs LSH surfaced, not the corpus);
   4. APPENDS the batch's signatures to the index table (same bucketBy spec,
      so the co-located-join property survives the append) and the batch's
      docs to the doc store -- batch N+1 dedups against everything before it.
@@ -36,25 +39,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import dialect as D
-from ..functions import text as TX
-from ..operators.dedup import minhash_band_keys, minhash_pairs
-from ..operators.dedup_index import new_batch_candidates
+from ..operators.dedup import (
+    band_self_pairs,
+    jaccard_verify,
+    minhash_shingles,
+    minhash_signatures,
+)
+from ..operators.dedup_index import probe_band_index
 
 DOC_STREAM_SCHEMA = "doc_id long, text string"
 INDEX_BUCKETS = 8
-
-
-def shingle_sets(docs: DataFrame, ngram: int = 3) -> DataFrame:
-    """(doc, shingles) distinct word-n-gram sets, empty-set rows dropped --
-    the exact-verification input relation."""
-    toks = TX.tokenize(D.SPARK, "coalesce(text, '')")
-    sh = D.arr_distinct(D.SPARK, TX.ngrams(D.SPARK, "_toks", ngram))
-    return (
-        docs.selectExpr("doc_id AS doc", f"{toks} AS _toks")
-        .selectExpr("doc", f"{sh} AS shingles")
-        .filter("size(shingles) > 0")
-    )
 
 
 def verify_candidates(
@@ -68,70 +62,62 @@ def verify_candidates(
     is materialized once (both join sides read it; CTE re-inlining would
     tokenize the member set twice -- same measurement as the batch
     incremental_dedup query: -33% at sf0.1)."""
-    sh = shingle_sets(members).localCheckpoint(eager=True)
-    a = sh.selectExpr("doc AS id_a", "shingles AS sh_a")
-    b = sh.selectExpr("doc AS id_b", "shingles AS sh_b")
-    inter = F.expr("cast(size(array_intersect(sh_a, sh_b)) as double)")
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "jaccard",
-            inter / (F.expr("cast(size(sh_a) + size(sh_b) as double)") - inter),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    sh = minhash_shingles(members, "text", "doc_id").localCheckpoint(eager=True)
+    return jaccard_verify(cands, sh, threshold)
 
 
 def dedup_micro_batch(
     spark: SparkSession,
-    batch: DataFrame,
+    shingled: DataFrame,
+    banded: DataFrame,
     index_table: str,
     corpus_path: str,
     threshold: float = 0.5,
 ) -> DataFrame:
     """One micro-batch's near-dup pairs: batch-vs-corpus (via the persisted
-    index) plus batch-internal, as (id_a, id_b, jaccard, kind)."""
-    cands = new_batch_candidates(spark, batch, table=index_table).selectExpr(
-        "new_doc AS id_a", "corpus_doc AS id_b"
+    index) plus batch-internal, as (id_a, id_b, jaccard, kind).
+
+    `shingled` and `banded` are the batch's materialized (doc, shingles) and
+    (doc, band_key) relations (dedup.minhash_signatures): the index probe
+    and the in-batch band self-join read `banded`; both candidate kinds,
+    tagged before the join, are verified in ONE join against one shingle
+    relation -- the batch's shingles plus those of the corpus members the
+    probe surfaced (semi-join-filtered doc-store read). That relation is
+    materialized because both join sides read it."""
+    vs_corpus = probe_band_index(spark, banded, index_table).selectExpr(
+        "new_doc AS id_a", "corpus_doc AS id_b", "'corpus' AS kind"
     )
+    in_batch = band_self_pairs(banded).withColumn("kind", F.lit("batch"))
     corpus_members = (
         spark.read.parquet(corpus_path)
-        .join(cands.select(F.col("id_b").alias("doc_id")).distinct(), "doc_id", "left_semi")
-        .select("doc_id", "text")
+        .join(vs_corpus.select(F.col("id_b").alias("doc_id")).distinct(), "doc_id", "left_semi")
     )
-    members = batch.select("doc_id", "text").unionByName(corpus_members)
-    vs_corpus = verify_candidates(spark, cands, members, threshold).withColumn(
-        "kind", F.lit("corpus")
+    members = shingled.unionByName(
+        minhash_shingles(corpus_members, "text", "doc_id")
+    ).localCheckpoint(eager=True)
+    return jaccard_verify(vs_corpus.unionByName(in_batch), members, threshold).select(
+        "id_a", "id_b", "jaccard", "kind"
     )
-    in_batch = (
-        minhash_pairs(batch, "text", "doc_id", jaccard_threshold=threshold)
-        .select("id_a", "id_b", "jaccard")
-        .withColumn("kind", F.lit("batch"))
-    )
-    return vs_corpus.unionByName(in_batch)
 
 
-def append_to_band_index(spark: SparkSession, batch: DataFrame, index_table: str) -> None:
+def append_to_band_index(spark: SparkSession, banded: DataFrame, index_table: str) -> None:
     """Append the batch's (doc, band_key) signatures with the SAME bucketBy
     spec the index was created with (sources/tables.write_bucketed) -- the
     new files land in the correct buckets and the zero-Exchange probe join
     keeps holding for every later batch.
 
     Replay-idempotent: ids already present in the index are dropped before
-    signaturing, so a foreachBatch retry that re-runs the append cannot
+    the append, so a foreachBatch retry that re-runs the append cannot
     leave two signature sets for one id (which would inflate every later
     probe's candidate fan-out). The guard reads ONLY the index's doc column
     (column-pruned bucketed scan) and the anti-join broadcasts the batch
     side; at corpus scale this is one narrow column sweep per micro-batch
     -- acceptable for a correctness invariant, and replaceable by a
     batch_id-stamped index if even that sweep matters."""
-    indexed = spark.table(index_table).select(F.col("doc").alias("doc_id")).distinct()
-    fresh = batch.join(indexed, "doc_id", "left_anti")
+    indexed = spark.table(index_table).select("doc").distinct()
+    fresh = banded.join(indexed, "doc", "left_anti")
     (
-        minhash_band_keys(fresh, "text", "doc_id")
-        .write.mode("append")
+        fresh.write.mode("append")
         .bucketBy(INDEX_BUCKETS, "band_key")
         .sortBy("band_key")
         .format("parquet")
@@ -166,13 +152,14 @@ def run_streaming_dedup(
         batch = batch.join(seen, "doc_id", "left_anti").localCheckpoint(eager=True)
         if not batch.take(1):
             return
-        pairs = dedup_micro_batch(bs, batch, index_table, corpus_path, threshold)
+        shingled, banded = minhash_signatures(batch, "text", "doc_id")
+        pairs = dedup_micro_batch(bs, shingled, banded, index_table, corpus_path, threshold)
         (
             pairs.withColumn("batch_id", F.lit(batch_id))
             .write.mode("append")
             .parquet(pairs_path)
         )
-        append_to_band_index(bs, batch, index_table)
+        append_to_band_index(bs, banded, index_table)
         batch.select("doc_id", "text").write.mode("append").parquet(corpus_path)
 
     return (

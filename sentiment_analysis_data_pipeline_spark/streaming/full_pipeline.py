@@ -28,11 +28,22 @@ Epoch shape per micro-batch:
      idempotent under replay (the dedup_stream delivery contract,
      extended to the curated sink).
 
-100 TB shape: everything per-epoch is projection + broadcast/bucketed
-joins sized by the BATCH (the corpus side of the probe reads bucket files
-in place); no streaming aggregation state, no watermark -- the only
-cross-batch state is the persisted index + stores, exactly the artifacts
-a deployment already maintains.
+Per-epoch cost: the kept batch is tokenized, shingled and MinHash-signatured
+once (dedup.minhash_signatures); the probe, the in-batch self-join, the
+verify and the index append read those two materialized relations. There
+is no streaming aggregation state and no watermark -- the only cross-batch
+state is the persisted index + stores, exactly the artifacts a deployment
+already maintains. Not every read is sized by the batch, though: five are
+sized by the HISTORY and grow with it --
+  - the re-crawl guard anti-joins every corpus file's doc_id;
+  - the curated landing guard does the same over the curated store;
+  - append_to_band_index's replay guard sweeps the index's doc column
+    (a distinct, so one more shuffle);
+  - the candidate-text fetch semi-joins every corpus file;
+  - the probe joins the batch's band keys against every index file (a
+    batch touches all buckets, so bucket pruning cannot help).
+Each epoch also appends files to the index, corpus, curated and pairs
+stores, and nothing compacts them.
 """
 
 from __future__ import annotations
@@ -40,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import minhash_signatures
 from .curation_stream import curation_gate
 from .dedup_stream import DOC_STREAM_SCHEMA, append_to_band_index, dedup_micro_batch
 
@@ -71,7 +83,8 @@ def curated_epoch(
     gated = curation_gate(batch).localCheckpoint(eager=True)
     kept = gated.filter("kept").select("doc_id", "text")
 
-    pairs = dedup_micro_batch(bs, kept, index_table, corpus_path, threshold)
+    shingled, banded = minhash_signatures(kept, "text", "doc_id")
+    pairs = dedup_micro_batch(bs, shingled, banded, index_table, corpus_path, threshold)
     (
         pairs.withColumn("batch_id", F.lit(batch_id))
         .write.mode("append")
@@ -105,7 +118,7 @@ def curated_epoch(
         scored = scored.join(landed, "doc_id", "left_anti")
     scored.write.mode("append").parquet(curated_path)
 
-    append_to_band_index(bs, kept, index_table)
+    append_to_band_index(bs, banded, index_table)
     kept.write.mode("append").parquet(corpus_path)
 
 

@@ -43,6 +43,17 @@ def test_minhash_finds_identical_and_near(spark):
     assert not any(3 in p for p in pairs)  # FAR never pairs
 
 
+def test_minhash_pairs_leaves_nothing_cached(spark, sf_dir):
+    """The registry query materializes its shingle and band relations as
+    checkpoints, which the ContextCleaner frees; a persisted relation would
+    stay in the CacheManager (holding executor memory) after the query."""
+    from sentiment_analysis_data_pipeline_spark.queries import REGISTRY
+
+    spark.catalog.clearCache()
+    REGISTRY["minhash_pairs"][0](spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_ngram_jaccard_exact_pairs(spark):
     pairs = {(r["id_a"], r["id_b"]): r["jaccard"] for r in dedup.ngram_jaccard_pairs(_docs(spark), "text", "doc_id").collect()}
     assert pairs[(0, 1)] == 1.0

@@ -10,7 +10,7 @@ import uuid
 
 import pyspark.sql.functions as F
 
-from sentiment_analysis_data_pipeline_spark.operators.dedup import minhash_band_keys
+from sentiment_analysis_data_pipeline_spark.operators.dedup import minhash_band_keys, minhash_signatures
 from sentiment_analysis_data_pipeline_spark.plans.pipeline import sentiment_enrich
 from sentiment_analysis_data_pipeline_spark.sources.tables import write_bucketed
 from sentiment_analysis_data_pipeline_spark.streaming import dedup_stream, full_pipeline
@@ -111,7 +111,10 @@ def test_composed_stream_matches_batch_components(spark, tmp_path):
         exp_pairs = {
             (r["id_a"], r["id_b"], r["kind"], round(r["jaccard"], 12))
             for r in dedup_stream.dedup_micro_batch(
-                spark, kept_df, batch_table, batch_corpus_path
+                spark,
+                *minhash_signatures(kept_df, "text", "doc_id"),
+                batch_table,
+                batch_corpus_path,
             ).collect()
         }
         got_pairs = {
@@ -183,5 +186,105 @@ def test_composed_epoch_replay_is_idempotent(spark, tmp_path):
         # downstream exactly-once consumer dedupes on (batch_id, id_a, id_b)
         pairs = spark.read.parquet(pairs_path)
         assert pairs.select("batch_id").distinct().count() == 1
+    finally:
+        _drop_with_files(spark, table)
+
+
+def _janino_compiles(spark) -> int:
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_second_epoch_reuses_generated_code(spark, tmp_path):
+    """A steady epoch finds its generated classes in the codegen cache:
+    only per-epoch literals (the batch_id stamp) compile anew. With a cache
+    smaller than one epoch's working set, every epoch recompiled ~90."""
+    table = f"full_pipe_idx_{uuid.uuid4().hex[:8]}"
+    corpus_path = str(tmp_path / "corpus")
+    pairs_path = str(tmp_path / "pairs")
+    curated_path = str(tmp_path / "curated")
+    _bootstrap(spark, table, corpus_path)
+
+    def drop(base):
+        return spark.createDataFrame(
+            [
+                (base + 1, BASE + f" v{base}"),  # near-dup of corpus doc 1
+                (base + 2, ALT + f" x{base}"),   # near-dup of corpus doc 2
+                (base + 3, "short text"),        # gate reject
+                (base + 4, "spam " * 40),        # gate reject
+            ],
+            "doc_id long, text string",
+        )
+
+    try:
+        for batch_id, base in enumerate((1000, 2000)):
+            before = _janino_compiles(spark)
+            full_pipeline.curated_epoch(
+                spark, drop(base), batch_id, table, corpus_path, pairs_path, curated_path
+            )
+        assert _janino_compiles(spark) - before < 10
+    finally:
+        _drop_with_files(spark, table)
+
+
+def test_signature_once_epoch_matches_separate_pieces(spark, tmp_path):
+    """dedup_micro_batch over one set of batch signatures must give exactly
+    the pairs the separately-signaturing public pieces give --
+    new_batch_candidates + verify_candidates for batch-vs-corpus,
+    minhash_pairs for in-batch -- and the index append must land exactly
+    minhash_band_keys(batch), once, also when replayed."""
+    from sentiment_analysis_data_pipeline_spark.operators.dedup import minhash_pairs
+    from sentiment_analysis_data_pipeline_spark.operators.dedup_index import new_batch_candidates
+
+    table = f"full_pipe_idx_{uuid.uuid4().hex[:8]}"
+    corpus_path = str(tmp_path / "corpus")
+    _bootstrap(spark, table, corpus_path)
+    batch = spark.createDataFrame(
+        [
+            (101, BASE + " v2"),   # vs-corpus near-dup of doc 1
+            (102, ALT + " x"),     # near-dup of corpus doc 2 and of 103
+            (103, ALT + " y"),
+            (104, "great excellent best work by the fine team with a happy win today"),
+        ],
+        "doc_id long, text string",
+    )
+
+    def key(r):
+        return (r["id_a"], r["id_b"], r["kind"], round(r["jaccard"], 12))
+
+    try:
+        shingled, banded = minhash_signatures(batch, "text", "doc_id")
+        got = {key(r) for r in dedup_stream.dedup_micro_batch(
+            spark, shingled, banded, table, corpus_path
+        ).collect()}
+
+        cands = new_batch_candidates(spark, batch, table=table).selectExpr(
+            "new_doc AS id_a", "corpus_doc AS id_b"
+        )
+        members = batch.unionByName(
+            spark.read.parquet(corpus_path).join(
+                cands.select(F.col("id_b").alias("doc_id")), "doc_id", "left_semi"
+            )
+        )
+        vs_corpus = dedup_stream.verify_candidates(spark, cands, members).withColumn(
+            "kind", F.lit("corpus")
+        )
+        in_batch = minhash_pairs(batch, "text", "doc_id").withColumn("kind", F.lit("batch"))
+        want = {key(r) for r in vs_corpus.unionByName(in_batch).collect()}
+        assert got == want
+        kinds = {(a, b, k) for a, b, k, _ in got}
+        assert {(101, 1, "corpus"), (102, 2, "corpus"), (102, 103, "batch")} <= kinds
+
+        batch_ids = [101, 102, 103, 104]
+        want_index = sorted(tuple(r) for r in minhash_band_keys(batch, "text", "doc_id").collect())
+        for _ in range(2):  # original + replay
+            dedup_stream.append_to_band_index(spark, banded, table)
+            landed = sorted(
+                tuple(r)
+                for r in spark.table(table)
+                .filter(F.col("doc").isin(batch_ids))
+                .select("doc", "band_key")
+                .collect()
+            )
+            assert landed == want_index
     finally:
         _drop_with_files(spark, table)

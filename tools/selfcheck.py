@@ -113,17 +113,17 @@ def main() -> int:
             sdf = fn(spark, sf_dir)
             srows = [r.asDict(recursive=True) for r in sdf.collect()]
         except Exception as e:
-            print(f"FAIL {name}: spark error: {str(e)[:400]}")
+            print(f"FAIL {name}: spark error: {str(e)[:400]}", flush=True)
             failures.append(name)
             continue
         if name not in oracles:
-            print(f"ok?  {name}: rows-only check, {len(srows)} rows ({time.time()-t0:.1f}s)")
+            print(f"ok?  {name}: rows-only check, {len(srows)} rows ({time.time()-t0:.1f}s)", flush=True)
             continue
         try:
             ddf = con.sql(oracles[name]).df()
             drows = ddf.to_dict("records")
         except Exception as e:
-            print(f"FAIL {name}: oracle error: {str(e)[:400]}")
+            print(f"FAIL {name}: oracle error: {str(e)[:400]}", flush=True)
             failures.append(name)
             continue
         ok_rows = len(srows) == len(drows)
@@ -145,7 +145,8 @@ def main() -> int:
         ok_types = not type_mismatches
         status = "PASS" if (ok_rows and ok_schema and ok_hash and ok_types) else "FAIL"
         print(
-            f"{status} {name}: rows {len(srows)}/{len(drows)} schema={ok_schema} hash={ok_hash} types={ok_types} ({time.time()-t0:.1f}s)"
+            f"{status} {name}: rows {len(srows)}/{len(drows)} schema={ok_schema} hash={ok_hash} types={ok_types} ({time.time()-t0:.1f}s)",
+            flush=True,
         )
         if status == "FAIL":
             failures.append(name)

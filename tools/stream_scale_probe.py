@@ -13,6 +13,13 @@ and records the two claims the module makes:
     is no streaming aggregation state to grow with epoch count, and a
     second epoch of the SAME drop adds zero state (replay idempotence).
 
+Each epoch also records its code-generation cost: Janino compilations and
+their seconds (Spark's CodegenMetrics) and JIT compile seconds (the JVM's
+CompilationMXBean). A steady epoch should find its generated classes in the
+codegen cache and compile only per-epoch literals (the batch_id stamp);
+a count near the epoch's whole working set (~100 classes) means the cache
+stopped holding it.
+
 Docs are synthesized gate-clean (>= 25 distinct English words each) with
 word sequences drawn by per-doc stride over a fixed bank, so texts pass
 the curation gate without being near-duplicates of each other.
@@ -69,6 +76,20 @@ def write_drop(path: str, start_id: int, n: int) -> None:
             f.write(json.dumps({"doc_id": doc_id, "text": make_text(doc_id)}) + "\n")
 
 
+def jvm_compile_counters(spark) -> tuple[int, int | None, int]:
+    """(Janino compilations, their total ms, JIT compile ms) since JVM start.
+    The Janino ms come from CodegenMetrics' histogram reservoir, which keeps
+    every sample only until it fills (1,028 samples); past that the total
+    is not exact and is None."""
+    jvm = spark._jvm
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    count = hist.getCount()
+    snap = hist.getSnapshot()
+    compile_ms = jvm.java.util.Arrays.stream(snap.getValues()).sum() if snap.size() == count else None
+    jit_ms = jvm.java.lang.management.ManagementFactory.getCompilationMXBean().getTotalCompilationTime()
+    return count, compile_ms, jit_ms
+
+
 def run_arm(spark, n_docs: int, label: str) -> dict:
     root = tempfile.mkdtemp(prefix=f"stream_scale_{label}_")
     table = f"stream_scale_idx_{uuid.uuid4().hex[:8]}"
@@ -91,7 +112,7 @@ def run_arm(spark, n_docs: int, label: str) -> dict:
         dedup_stream.INDEX_BUCKETS,
     )
 
-    out = {"n_docs": n_docs, "epochs": []}
+    out = {"n_docs": n_docs, "epochs": [], "codegen": []}
     try:
         for epoch_i in range(2):
             write_drop(
@@ -100,12 +121,21 @@ def run_arm(spark, n_docs: int, label: str) -> dict:
                 n_docs,
             )
             ckpt = os.path.join(root, f"ckpt{epoch_i}")
+            n0, ms0, jit0 = jvm_compile_counters(spark)
             t0 = time.perf_counter()
             q = full_pipeline.run_curated_ingest(
                 spark, source, table, corpus_path, pairs_path, curated_path, ckpt
             )
             q.awaitTermination(600)
             out["epochs"].append(round(time.perf_counter() - t0, 2))
+            n1, ms1, jit1 = jvm_compile_counters(spark)
+            out["codegen"].append(
+                {
+                    "janino_compiles": n1 - n0,
+                    "janino_s": round((ms1 - ms0) / 1000, 3) if ms1 is not None else None,
+                    "jit_s": round((jit1 - jit0) / 1000, 3),
+                }
+            )
             # fresh checkpoint each round means round 2 REPLAYS drop0 too:
             # the idempotent landing must add zero state for it
 
