@@ -12,6 +12,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half of physical memory in whole GiB, at least 1g and at most 24g.
+    A fixed 24g heap outgrows a small box: there a driver JVM's RSS grows
+    past what the box can give two drivers side by side, and one of them
+    is OOM-killed. SPARK_DRIVER_MEMORY overrides this (a deployment
+    setting)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, phys // 2**31))}g"
+
+
 def get_spark(app_name: str = "sentiment-engine", shuffle_partitions: int | None = None) -> SparkSession:
     """The live session if there is one, else a new one with the settings
     below. A live session is returned as it is: the builder's getOrCreate
@@ -41,7 +51,7 @@ def get_spark(app_name: str = "sentiment-engine", shuffle_partitions: int | None
         # classes per epoch (~1.2 s of driver time, plus JIT work on the
         # new bytecode).
         .config("spark.sql.codegen.cache.maxEntries", "1000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

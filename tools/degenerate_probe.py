@@ -71,16 +71,12 @@ def main() -> None:
             bad.append(name)
             print(json.dumps({name: {"ERROR": msg}}), flush=True)
     # drop the snapshot-stamped index tables the probe's queries built for
-    # the throwaway corpus -- keyed to the tmp dir's basename, they would
-    # otherwise accumulate one warehouse directory set per probe run
-    from sentiment_analysis_data_pipeline_spark.sources.tables import (
-        drop_table_with_files,
-    )
+    # the throwaway corpus (keyed to the tmp dir's basename, they would
+    # otherwise accumulate one warehouse directory set per probe run) and
+    # the corpus itself
+    from tools.scale_probe import cleanup
 
-    tag = "".join(c if c.isalnum() else "_" for c in out.rstrip("/").rsplit("/", 1)[-1])
-    for t in spark.catalog.listTables():
-        if t.name.endswith(tag.lower()):
-            drop_table_with_files(spark, t.name)
+    cleanup(spark, out)
     print(json.dumps({"mode": mode, "errors": bad}), flush=True)
     if bad:
         sys.exit(1)

@@ -15,8 +15,8 @@ Prints one JSON line; results recorded in SCALE.md.
 from __future__ import annotations
 
 import json
-import shutil
 import sys
+import tempfile
 import time
 import urllib.request
 
@@ -56,12 +56,13 @@ def main() -> None:
     ui_port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[1])
 
     from sentiment_analysis_data_pipeline_spark import queries as Q
-    from tools.indexed_crossover_bench import inflate_documents
+    from tools.scale_probe import SRC, cleanup, inflate
 
-    out = inflate_documents(spark, mult)
+    out = tempfile.mkdtemp(prefix="spill-smoke-")
     qs = Q.spark_queries()
     results = {}
     try:
+        inflate(spark, SRC, out, mult, disjoint=True)
         for name in HEAVY:
             m0, d0 = _spill_totals(ui_port, app_id)
             t0 = time.perf_counter()
@@ -76,7 +77,7 @@ def main() -> None:
             }
             print(json.dumps({name: results[name]}), flush=True)
     finally:
-        shutil.rmtree(out, ignore_errors=True)
+        cleanup(spark, out)
 
     print(
         json.dumps(
