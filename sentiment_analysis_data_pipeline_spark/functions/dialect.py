@@ -88,10 +88,6 @@ def arr_contains(d: str, arr: str, elem: str) -> str:
     return f"list_contains({arr}, {elem})"
 
 
-def arr_min(d: str, arr: str) -> str:
-    return f"array_min({arr})" if d == SPARK else f"list_min({arr})"
-
-
 def arr_distinct(d: str, arr: str) -> str:
     return f"array_distinct({arr})" if d == SPARK else f"list_distinct({arr})"
 

@@ -54,9 +54,12 @@ dyadic rationals (k/16) so sums are EXACT doubles regardless of evaluation
 order, and the final ops (sqrt, one division, mean) are single IEEE ops --
 bit-identical between Spark and DuckDB.
 
-A pandas-UDF variant of the same kernel lives in `pandas_kernel` to
-demonstrate the Arrow-vectorized plumbing used when a real model (or the
-actual VADER lib) is available; the native path is the default.
+The engine's one Spark implementation is `kernel_join_sql`: the registry
+queries, their DuckDB oracles and plans/pipeline.sentiment_enrich (the
+streaming epochs and the processed table) all run its SQL. `_py_kernel`
+is an independent Python reference of the same arithmetic, and
+`pandas_kernel` applies it to a pandas Series; tests compare the SQL with
+them. No engine path calls either.
 """
 
 from __future__ import annotations
@@ -66,6 +69,7 @@ import math
 import pandas as pd
 
 from . import dialect as D
+from . import text as TX
 
 # Polarity lexicon. All weights are multiples of 1/16 => every partial sum is
 # an exact double; cross-engine aggregation order cannot change the result.
@@ -728,64 +732,194 @@ def punct_emphasis_sql(d: str, text_expr: str) -> str:
     )
 
 
-def token_factor_sql(
-    prev: str = "prev", prev2: str = "prev2", prev3: str = "prev3",
-    capsf: str = "capsf", cap_diff: str = "cap_diff",
-    i: str = "i", bi: str = "bi",
-    d1: str = "_m1.delta", n1: str = "_m1.neg",
-    d2: str = "_m2.delta", n2: str = "_m2.neg",
-    d3: str = "_m3.delta", n3: str = "_m3.neg",
-    capsp1: str = "capsp1", capsp2: str = "capsp2", capsp3: str = "capsp3",
-) -> str:
+def token_factor_sql() -> str:
     """Per-matched-token scale factor combining every contextual mechanic
     over the published 3-token window (round 6b): per-position booster
     factors (bigram dampeners override position 1; distance damping at
     2/3), per-position negation with the published "never so|this" /
     "without doubt" overrides, ALL-CAPS emphasis, and the but-clause
     re-weighting. A product of dyadic factors -- exact in both engines.
-    Column references are parameters so the SQL template and the DataFrame
-    pipeline share one formula; d*/n* are the delta/neg columns of the
-    three modifier joins (NULL when the position has no modifier)."""
+    Column names are kernel_join_sql's: _m1/_m2/_m3 are the three
+    modifier joins (NULL delta/neg when the position has no modifier)."""
     never = ", ".join(f"'{w}'" for w in NEVER_FOLLOWERS)
     wo, doubt = WITHOUT_DOUBT
     bigram = " OR ".join(
-        f"({prev2} = '{a}' AND {prev} = '{b}')" for a, b in BOOST_BIGRAMS
+        f"(prev2 = '{a}' AND prev = '{b}')" for a, b in BOOST_BIGRAMS
     )
     # a booster spelled ALL-CAPS under a caps differential doubles its
     # delta (published: C_INCR added to the booster scalar; dyadic mirror:
     # 0.25 -> 0.5) -- round 6c, the caps-boosted-booster mechanic
-    cm1 = f"(case when {capsp1} AND {cap_diff} then 2.0 else 1.0 end)"
-    cm2 = f"(case when {capsp2} AND {cap_diff} then 2.0 else 1.0 end)"
-    cm3 = f"(case when {capsp3} AND {cap_diff} then 2.0 else 1.0 end)"
+    cm1 = "(case when capsp1 AND cap_diff then 2.0 else 1.0 end)"
+    cm2 = "(case when capsp2 AND cap_diff then 2.0 else 1.0 end)"
+    cm3 = "(case when capsp3 AND cap_diff then 2.0 else 1.0 end)"
     b1 = (
         f"case when {bigram} then {BIGRAM_FACTOR!r} "
-        f"else 1.0 + coalesce({d1}, 0.0) * {cm1} end"
+        f"else 1.0 + coalesce(_m1.delta, 0.0) * {cm1} end"
     )
-    b2 = f"(1.0 + coalesce({d2}, 0.0) * {B2_DAMP!r} * {cm2})"
-    b3 = f"(1.0 + coalesce({d3}, 0.0) * {B3_DAMP!r} * {cm3})"
-    g1 = f"case when coalesce({n1}, 0) = 1 then {NEG_FACTOR!r} else 1.0 end"
+    b2 = f"(1.0 + coalesce(_m2.delta, 0.0) * {B2_DAMP!r} * {cm2})"
+    b3 = f"(1.0 + coalesce(_m3.delta, 0.0) * {B3_DAMP!r} * {cm3})"
+    g1 = f"case when coalesce(_m1.neg, 0) = 1 then {NEG_FACTOR!r} else 1.0 end"
     g2 = (
-        f"case when {prev2} = 'never' and {prev} in ({never}) then {NEVER_INTENSIFY!r} "
-        f"when {prev2} = '{wo}' and {prev} = '{doubt}' then 1.0 "
-        f"when coalesce({n2}, 0) = 1 then {NEG_FACTOR!r} else 1.0 end"
+        f"case when prev2 = 'never' and prev in ({never}) then {NEVER_INTENSIFY!r} "
+        f"when prev2 = '{wo}' and prev = '{doubt}' then 1.0 "
+        f"when coalesce(_m2.neg, 0) = 1 then {NEG_FACTOR!r} else 1.0 end"
     )
     g3 = (
-        f"case when {prev3} = 'never' and ({prev2} in ({never}) or {prev} in ({never})) "
+        f"case when prev3 = 'never' and (prev2 in ({never}) or prev in ({never})) "
         f"then {NEVER_INTENSIFY!r} "
-        f"when {prev3} = '{wo}' and ({prev2} = '{doubt}' or {prev} = '{doubt}') then 1.0 "
-        f"when coalesce({n3}, 0) = 1 then {NEG_FACTOR!r} else 1.0 end"
+        f"when prev3 = '{wo}' and (prev2 = '{doubt}' or prev = '{doubt}') then 1.0 "
+        f"when coalesce(_m3.neg, 0) = 1 then {NEG_FACTOR!r} else 1.0 end"
     )
-    caps = f"case when {capsf} AND {cap_diff} then {CAPS_FACTOR!r} else 1.0 end"
+    caps = f"case when capsf AND cap_diff then {CAPS_FACTOR!r} else 1.0 end"
     but = (
-        f"case when {bi} > 0 and {i} < {bi} then {BUT_BEFORE!r} "
-        f"when {bi} > 0 and {i} > {bi} then {BUT_AFTER!r} else 1.0 end"
+        f"case when bi > 0 and i < bi then {BUT_BEFORE!r} "
+        f"when bi > 0 and i > bi then {BUT_AFTER!r} else 1.0 end"
     )
     return f"(({b1}) * {b2} * {b3} * ({g1}) * ({g2}) * ({g3}) * ({caps}) * ({but}))"
 
 
+def _layered_sql(base: str, layers: list[dict[str, str]], final: str, suffix: str = "") -> str:
+    """Nested-SELECT application of projection layers: each layer sees the
+    previous layers' aliases exactly once (no lateral-alias reliance, works
+    in both dialects). `final` is the outer SELECT list; `suffix` holds
+    WHERE/ORDER BY/LIMIT over the layer aliases."""
+    inner = base
+    for i, layer in enumerate(layers):
+        cols = ", ".join(f"{expr} AS {name}" for name, expr in layer.items())
+        inner = f"SELECT *, {cols} FROM ({inner}) AS _l{i}"
+    return f"{final} FROM ({inner}) AS _fin {suffix}"
+
+
+def kernel_join_sql(
+    d: str, base: str, id_col: str, final: str, suffix: str = "", text: str = "text"
+) -> str:
+    """The sentiment kernel in its scale shape, in either dialect:
+    explode tokens (zipped with their one-token left context) -> join the
+    (broadcastable) lexicon VALUES relation -> left-join the modifier
+    VALUES relation on the PRECEDING token (negators/boosters scale the
+    contribution; round-5) -> per-doc partial-aggregated sums -> left-join
+    back -> score layers.
+
+    The prev-token pairing is built INSIDE the per-row projection
+    (prev_tokens_sql: a shifted copy of the token array, exploded in
+    lockstep) -- no window function, so the plan keeps its single
+    doc-id partial-agg shuffle; both modifier and lexicon relations are
+    broadcast-sized. Sums stay exact dyadic doubles (modifier factors are
+    quarters, weights sixteenths), so aggregation order is free and the
+    DuckDB oracle matches bit-for-bit.
+
+    Round 6 adds the remaining published-VADER mechanics, all per-row
+    context carried through the same lockstep explode (prev2/prev3 arrays
+    for the published 3-token modifier window -- distance-damped boosters,
+    per-position negation with the never-so/without-doubt overrides, and
+    the "kind of"/"sort of" bigram dampeners -- an ALL-CAPS flag array
+    from a case-preserving token twin, the 1-based position + first-'but'
+    index for the clause re-weighting) plus a per-doc punctuation-emphasis
+    amplifier applied to the VADER sum in score_layers' _s2 stage. The
+    modifier relation is LEFT-joined at all three positions (same ~70-row
+    broadcast each time). Every factor is dyadic, so the kernel stays
+    bit-identical cross-engine.
+
+    This is the engine's only Spark implementation of the kernel: the
+    registry's sentiment queries, their DuckDB oracles and
+    plans/pipeline.sentiment_enrich (the streaming epochs and the
+    processed table) all run this SQL. `base` is any relation with a
+    unique `id_col` (it keys the join-back); `text` is the expression over
+    `base`'s columns that is scored.
+    """
+    toks = TX.tokenize(d, text)
+    prev = prev_tokens_sql(d, "_toks")
+    prev2 = prev2_tokens_sql(d, "_toks")
+    prev3 = prev3_tokens_sql(d, "_toks")
+    nx1 = shifted_fwd_tokens_sql(d, "_toks", 1)
+    nx2 = shifted_fwd_tokens_sql(d, "_toks", 2)
+    caps = caps_flags_sql(d, text)
+    bi = but_index_sql(d, "_toks")
+    cd = cap_differential_sql("_caps", "_toks", d)
+    pe = punct_emphasis_sql(d, text)
+    pc1 = shifted_flags_sql(d, "_caps", 1)
+    pc2 = shifted_flags_sql(d, "_caps", 2)
+    pc3 = shifted_flags_sql(d, "_caps", 3)
+    if d == D.SPARK:
+        ex = f"""SELECT {id_col}, bi, cap_diff,
+                   cast(pos + 1 as bigint) AS i, col._toks AS t,
+                   col._prev AS prev, col._prev2 AS prev2, col._prev3 AS prev3,
+                   col._nx1 AS nx1, col._nx2 AS nx2,
+                   coalesce(col._caps, false) AS capsf,
+                   coalesce(col._pc1, false) AS capsp1,
+                   coalesce(col._pc2, false) AS capsp2,
+                   coalesce(col._pc3, false) AS capsp3
+            FROM (SELECT {id_col}, _bi AS bi, _cd AS cap_diff,
+                         posexplode(arrays_zip(_toks, _prev, _prev2, _prev3,
+                                               _nx1, _nx2,
+                                               _caps, _pc1, _pc2, _pc3))
+                  FROM tokd)"""
+    else:
+        ex = f"""SELECT {id_col}, _bi AS bi, _cd AS cap_diff,
+                   cast(generate_subscripts(_toks, 1) as bigint) AS i,
+                   unnest(_toks) AS t, unnest(_prev) AS prev,
+                   unnest(_prev2) AS prev2, unnest(_prev3) AS prev3,
+                   unnest(_nx1) AS nx1, unnest(_nx2) AS nx2,
+                   coalesce(unnest(_caps), false) AS capsf,
+                   coalesce(unnest(_pc1), false) AS capsp1,
+                   coalesce(unnest(_pc2), false) AS capsp2,
+                   coalesce(unnest(_pc3), false) AS capsp3
+            FROM tokd"""
+    factor = token_factor_sql()
+    # round-7 idiom mechanics: iw = idiom weight where an occurrence ENDS at
+    # this token (computed once per token, end-token-first fail-fast CASE);
+    # consumed = this position lies inside ANY occurrence. A consumed lexicon
+    # match contributes nothing; the idiom contributes sgn/weight once at its
+    # end position, but-clause re-weighted. The lexicon join turns LEFT so
+    # idiom-end rows whose token is not a lexicon word survive into the SAME
+    # single per-doc aggregation -- no second pass over the exploded stream.
+    consumed = idiom_consumed_sql("e.t", "e.prev", "e.prev2", "e.nx1", "e.nx2")
+    butf = but_factor_sql("e.i", "e.bi")
+    lex_hit = f"(_lex.word is not null and not {consumed})"
+    scored_base = f"""
+        WITH base0 AS ({base}),
+        tokd AS (
+            SELECT {id_col}, _toks, {prev} AS _prev, {prev2} AS _prev2,
+                   {prev3} AS _prev3, {nx1} AS _nx1, {nx2} AS _nx2,
+                   _caps, {pc1} AS _pc1, {pc2} AS _pc2, {pc3} AS _pc3,
+                   {bi} AS _bi, {cd} AS _cd
+            FROM (SELECT {id_col}, {toks} AS _toks, {caps} AS _caps FROM base0) t0
+        ),
+        ex0 AS ({ex}),
+        ex AS (SELECT *, {idiom_weight_sql("t", "prev", "prev2")} AS iw FROM ex0),
+        sums AS (
+            SELECT e.{id_col},
+                   sum(case when {lex_hit} then {factor} * _lex.sgn else 0.0 end
+                       + case when e.iw is not null
+                              then (case when e.iw > 0 then 1.0 else -1.0 end) * {butf}
+                              else 0.0 end) AS s_ssum,
+                   sum(case when {lex_hit} then {factor} * _lex.w else 0.0 end
+                       + coalesce(e.iw * {butf}, 0.0)) AS s_wsum,
+                   cast(sum(case when {lex_hit} then 1 else 0 end
+                            + case when e.iw is not null then 1 else 0 end) as bigint) AS s_nm
+            FROM ex e
+            LEFT JOIN {lexicon_values_sql(d)} ON e.t = _lex.word
+            LEFT JOIN {modifier_values_sql(d, "_m1")} ON e.prev = _m1.mword
+            LEFT JOIN {modifier_values_sql(d, "_m2")} ON e.prev2 = _m2.mword
+            LEFT JOIN {modifier_values_sql(d, "_m3")} ON e.prev3 = _m3.mword
+            WHERE _lex.word IS NOT NULL OR e.iw IS NOT NULL
+            GROUP BY e.{id_col}
+        ),
+        joined AS (
+            SELECT b.*, coalesce(s.s_ssum, 0.0) AS _ssum,
+                   coalesce(s.s_wsum, 0.0) AS _wsum,
+                   cast(coalesce(s.s_nm, 0) as bigint) AS _nm,
+                   {pe} AS _pe
+            FROM base0 b LEFT JOIN sums s ON b.{id_col} = s.{id_col}
+        )
+        SELECT * FROM joined
+    """
+    return _layered_sql(scored_base, score_layers(), final, suffix)
+
+
 # ---------------------------------------------------------------------------
-# Arrow-vectorized variant (U1/U2 plumbing for a real model / library).
-# Same math as the SQL kernel; used by tests to prove native == pandas paths.
+# Python reference (U1/U2), and its pandas batch form. Same math as the SQL
+# kernel; tests use it to check the SQL. No engine path calls it.
 # ---------------------------------------------------------------------------
 
 _TOKEN_RE = None
@@ -960,8 +1094,8 @@ def pandas_kernel_library(series: pd.Series) -> pd.DataFrame:
     kernel, because the DuckDB correctness oracle is built from the same
     lexicon fragments and library scores would hash-mismatch it by design.
     This function + the `real_libraries_available()` probe exist so a
-    deployment WITH the packages can swap it into sentiment_enrich's sum
-    stage deliberately (accepting rows-only checks for those queries);
+    deployment WITH the packages can wrap it in a pandas_udf of its own
+    (accepting rows-only checks for those queries);
     tests/test_sentiment.py::test_library_kernel_wiring pins the contract
     either way."""
     from textblob import TextBlob
@@ -986,12 +1120,12 @@ def pandas_kernel_library(series: pd.Series) -> pd.DataFrame:
 
 
 def pandas_kernel(series: pd.Series) -> pd.DataFrame:
-    """Batch (Arrow) kernel: text series -> DataFrame[vader_compound, textblob_polarity].
-
-    Wrapped by a pandas_udf at the call site (operators/sentiment-enrich
-    pandas path). Analyzer state (the lexicon) is module-level -- constructed
-    once per executor, not per row, mirroring how a real VADER
-    SentimentIntensityAnalyzer should be held (SURVEY.md §2.9 U1 note).
+    """Batch kernel: text series -> DataFrame[vader_compound, textblob_polarity],
+    `_py_kernel` per row. The batch contract a pandas_udf would wrap; no
+    engine path does. Tests use it as the reference for the SQL kernel and
+    compare it with `pandas_kernel_library` where the libraries exist. The
+    lexicon is module-level state, built once per process, not per row
+    (SURVEY.md §2.9 U1 note).
     """
     out = series.map(_py_kernel)
     return pd.DataFrame(

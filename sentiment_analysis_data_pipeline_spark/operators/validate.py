@@ -2,7 +2,7 @@
 
   P1  required fields      utilities/data_validator.py:8-19 (newsapi) / :22-33 (gnews)
   P2  URL regex            utilities/data_validator.py:15-16,29-30
-  P3  envelope shape       consumers/mongodb_consumer.py:42-47
+  P3  envelope shape       consumers/mongodb_consumer.py:42-47 (streaming/ingest._parse_envelopes)
   P7  non-empty text       dags/sentiment_analysis_dag.py:69-70
   P11 sanitize map         utilities/data_validator.py:36-44
 
@@ -37,11 +37,6 @@ def valid_url(url: Column) -> Column:
     return url.rlike(URL_PATTERN)
 
 
-def envelope_shape(parsed: Column) -> Column:
-    """P3: from_json yields null on corrupt input; require the envelope keys."""
-    return parsed.isNotNull() & parsed["source_api"].isNotNull() & parsed["article"].isNotNull()
-
-
 def non_empty_text(text: Column) -> Column:
     """P7: concatenated text non-blank after trim."""
     return F.trim(text) != ""
@@ -50,13 +45,6 @@ def non_empty_text(text: Column) -> Column:
 def sanitize_str(c: Column) -> Column:
     """P11/F4: drop NUL bytes, trim surrounding whitespace."""
     return F.trim(F.regexp_replace(c, "\x00", ""))
-
-
-def sanitize_columns(df: DataFrame, cols: list[str]) -> DataFrame:
-    out = df
-    for c in cols:
-        out = out.withColumn(c, sanitize_str(F.col(c)))
-    return out
 
 
 def scrub_pii(df: DataFrame, cols: list[str]) -> DataFrame:

@@ -1,3 +1,3 @@
-from .pipeline import flagship_terms_agg, sentiment_enrich, documents_as_articles
+from .pipeline import sentiment_enrich, documents_as_articles
 
-__all__ = ["flagship_terms_agg", "sentiment_enrich", "documents_as_articles"]
+__all__ = ["sentiment_enrich", "documents_as_articles"]

@@ -4,9 +4,11 @@ SURVEY.md §3) as ONE Spark logical plan.
 Reference shape (dags/sentiment_analysis_dag.py): three Airflow tasks --
 extract (Mongo scan + Python-set anti-join, :31-49) -> analyze (per-row
 VADER/TextBlob loop, :54-99) -> save (per-row insert + ES index, :101-130) --
-with full-list XCom serialization between each. Here the same semantics are a
-single DataFrame lineage: scan -> validate -> anti-join -> kernel ->
-classify -> aggregate/write; Catalyst fuses the projections and pushes the
+with full-list XCom serialization between each. Here the same semantics are
+one Spark plan: scan -> validate -> kernel + classify -> write. The kernel
+is not restated here: `sentiment_enrich` runs the registry's SQL
+(functions/sentiment.kernel_join_sql) over any DataFrame, and the streaming
+epochs score through it too. Catalyst fuses the projections and pushes the
 filters into the parquet scan, and there is no serialization boundary at all.
 
 The driver's `documents` table stands in for the article corpus (FIXTURES.md
@@ -21,9 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions import dialect as D
 from ..functions import sentiment as S
-from ..functions import text as TX
 from ..operators import validate
-from ..operators.aggregates import terms_agg
 
 # Deterministic synthetic URL so P1/P2/F3 run on the documents corpus.
 DOC_URL_SQL = {
@@ -50,135 +50,21 @@ def documents_as_articles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sentiment_enrich(df: DataFrame, text_expr: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """U1+U2+F8-F11: append the sentiment columns, all native operations, in
-    the kernel's scale shape: explode tokens zipped with their one-token
-    left context -> broadcast-join the lexicon -> left-broadcast-join the
-    contextual-modifier relation at EACH of the three preceding-token
-    positions (round 6b: the published VADER window -- distance-damped
-    boosters, per-position negation with the never-so/without-doubt
-    overrides, plus caps/but/punctuation mechanics) -> per-doc sums
-    (map-side combine: the shuffle carries one row per doc) -> left-join
-    back -> score formulas.
+    """U1+U2+F8-F11: `df`'s columns (`id_col` first) followed by
+    vader_compound, textblob_polarity, avg_score, overall and confidence,
+    scoring `text_expr`. Runs the registry's kernel SQL
+    (functions/sentiment.kernel_join_sql) over `df`, so the streaming epochs
+    and the processed table score with the same code the DuckDB oracle
+    checks. `id_col` must be unique per row (it keys the join-back).
 
-    Equivalent to a per-row lexicon loop but fully whole-stage-codegen
-    (Spark's array-lambda HOFs evaluate interpreted, ~10x slower here), and
-    exact: dyadic lexicon weights and dyadic modifier/context factors make
-    the sums order-independent doubles. The prev/prev2/prev3 pairings are
-    shifted array copies built in the same projection -- no window shuffle;
-    all three modifier joins broadcast the same ~70-row relation.
-    `id_col` must be unique per row (it keys the join-back).
-    """
-    spark = df.sparkSession
-    # lexicon/modifiers as SQL VALUES relations: stays entirely JVM-side
-    # (createDataFrame would route the rows through a Python RDD and spin
-    # Python workers into an otherwise pure-JVM plan)
-    lex = spark.sql(f"SELECT * FROM {S.lexicon_values_sql(D.SPARK)}")
-    mods = spark.sql(f"SELECT * FROM {S.modifier_values_sql(D.SPARK)}")
-
-    def _mods_at(p: int):
-        return mods.select(
-            F.col("mword").alias(f"mw{p}"),
-            F.col("delta").alias(f"d{p}"),
-            F.col("neg").alias(f"n{p}"),
-        )
-
-    ex = (
-        df.select(
-            F.col(id_col),
-            F.expr(TX.tokenize(D.SPARK, text_expr)).alias("_toks"),
-            F.expr(S.caps_flags_sql(D.SPARK, text_expr)).alias("_caps"),
-        )
-        .withColumn("_prev", F.expr(S.prev_tokens_sql(D.SPARK, "_toks")))
-        .withColumn("_prev2", F.expr(S.prev2_tokens_sql(D.SPARK, "_toks")))
-        .withColumn("_prev3", F.expr(S.prev3_tokens_sql(D.SPARK, "_toks")))
-        .withColumn("_nx1", F.expr(S.shifted_fwd_tokens_sql(D.SPARK, "_toks", 1)))
-        .withColumn("_nx2", F.expr(S.shifted_fwd_tokens_sql(D.SPARK, "_toks", 2)))
-        .withColumn("_pc1", F.expr(S.shifted_flags_sql(D.SPARK, "_caps", 1)))
-        .withColumn("_pc2", F.expr(S.shifted_flags_sql(D.SPARK, "_caps", 2)))
-        .withColumn("_pc3", F.expr(S.shifted_flags_sql(D.SPARK, "_caps", 3)))
-        .withColumn("bi", F.expr(S.but_index_sql(D.SPARK, "_toks")))
-        .withColumn("cap_diff", F.expr(S.cap_differential_sql("_caps", "_toks", D.SPARK)))
-        .select(
-            F.col(id_col),
-            "bi",
-            "cap_diff",
-            F.posexplode(
-                F.arrays_zip(
-                    "_toks", "_prev", "_prev2", "_prev3", "_nx1", "_nx2",
-                    "_caps", "_pc1", "_pc2", "_pc3"
-                )
-            ).alias("pos", "z"),
-        )
-        .select(
-            F.col(id_col),
-            "bi",
-            "cap_diff",
-            (F.col("pos") + 1).cast("long").alias("i"),
-            F.col("z._toks").alias("t"),
-            F.col("z._prev").alias("prev"),
-            F.col("z._prev2").alias("prev2"),
-            F.col("z._prev3").alias("prev3"),
-            F.col("z._nx1").alias("nx1"),
-            F.col("z._nx2").alias("nx2"),
-            F.coalesce(F.col("z._caps"), F.lit(False)).alias("capsf"),
-            F.coalesce(F.col("z._pc1"), F.lit(False)).alias("capsp1"),
-            F.coalesce(F.col("z._pc2"), F.lit(False)).alias("capsp2"),
-            F.coalesce(F.col("z._pc3"), F.lit(False)).alias("capsp3"),
-        )
-        # round-7 idiom mechanics: idiom-end weight + consumed flag (see
-        # functions/sentiment.py idiom_* docstrings)
-        .withColumn("iw", F.expr(S.idiom_weight_sql("t", "prev", "prev2")))
-    )
-    factor = F.expr(
-        S.token_factor_sql(
-            d1="d1", n1="n1", d2="d2", n2="n2", d3="d3", n3="n3"
-        )
-    )
-    consumed = F.expr(S.idiom_consumed_sql("t", "prev", "prev2", "nx1", "nx2"))
-    butf = F.expr(S.but_factor_sql("i", "bi"))
-    sums = (
-        ex.join(F.broadcast(lex), ex.t == lex.word, "left")
-        .join(F.broadcast(_mods_at(1)), F.col("prev") == F.col("mw1"), "left")
-        .join(F.broadcast(_mods_at(2)), F.col("prev2") == F.col("mw2"), "left")
-        .join(F.broadcast(_mods_at(3)), F.col("prev3") == F.col("mw3"), "left")
-        .where(F.col("word").isNotNull() | F.col("iw").isNotNull())
-        .withColumn("_lexhit", F.col("word").isNotNull() & ~consumed)
-        .withColumn("_f", factor)
-        .withColumn(
-            "_isgn",
-            F.when(
-                F.col("iw").isNotNull(),
-                F.when(F.col("iw") > 0, F.lit(1.0)).otherwise(F.lit(-1.0)) * butf,
-            ).otherwise(F.lit(0.0)),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.sum(
-                F.when(F.col("_lexhit"), F.col("_f") * F.col("sgn")).otherwise(0.0)
-                + F.col("_isgn")
-            ).alias("s_ssum"),
-            F.sum(
-                F.when(F.col("_lexhit"), F.col("_f") * F.col("w")).otherwise(0.0)
-                + F.coalesce(F.col("iw") * butf, F.lit(0.0))
-            ).alias("s_wsum"),
-            F.sum(
-                F.when(F.col("_lexhit"), 1).otherwise(0)
-                + F.when(F.col("iw").isNotNull(), 1).otherwise(0)
-            ).alias("s_nm"),
-        )
-    )
-    out = (
-        df.join(sums, on=id_col, how="left")
-        .withColumn("_ssum", F.coalesce("s_ssum", F.lit(0.0)))
-        .withColumn("_wsum", F.coalesce("s_wsum", F.lit(0.0)))
-        .withColumn("_nm", F.coalesce("s_nm", F.lit(0)).cast("long"))
-        .withColumn("_pe", F.expr(S.punct_emphasis_sql(D.SPARK, text_expr)))
-        .drop("s_ssum", "s_wsum", "s_nm")
-    )
-    for layer in S.score_layers():
-        for name, expr in layer.items():
-            out = out.withColumn(name, F.expr(expr))
-    return out.drop("_ssum", "_wsum", "_nm", "_pe", "_s2")
+    `df` reaches the SQL through spark.sql's DataFrame argument: a temp
+    view under a fresh name, dropped once the query is analyzed, so two
+    callers on one session never see each other's input."""
+    cols = [id_col, *(c for c in df.columns if c != id_col)]
+    cols += ["vader_compound", "textblob_polarity", "avg_score", "overall", "confidence"]
+    final = "SELECT " + ", ".join(f"`{c}`" for c in cols)
+    sql = S.kernel_join_sql(D.SPARK, "SELECT * FROM {df}", id_col, final, text=text_expr)
+    return df.sparkSession.sql(sql, df=df)
 
 
 def processed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -202,11 +88,6 @@ def processed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("textblob_polarity"),
         ).alias("sentiment"),
     )
-
-
-def flagship_terms_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EP3 end-to-end, returning the sentiment-distribution terms agg (A4)."""
-    return terms_agg(processed_docs(spark, sf_dir), "sentiment.overall")
 
 
 def write_processed(spark: SparkSession, sf_dir: str, target_path: str) -> None:

@@ -31,7 +31,7 @@ from .functions import sentiment as S
 from .functions import text as TX
 from .functions import vectors as V
 from .operators import dedup, dedup_index, search, similarity, sketch, window_ops
-from .plans.pipeline import DOC_URL_SQL, flagship_terms_agg, processed_docs
+from .plans.pipeline import DOC_URL_SQL
 
 TEXT = "coalesce(text, '')"
 EMB_DIM = 64
@@ -182,147 +182,15 @@ def _ts_us(d: str) -> str:
     return "(ts div 1000)" if d == D.SPARK else "epoch_us(ts)"
 
 
-def _layered_sql(base: str, layers: list[dict[str, str]], final: str, suffix: str = "") -> str:
-    """Nested-SELECT application of projection layers: each layer sees the
-    previous layers' aliases exactly once (no lateral-alias reliance, works
-    in both dialects). `final` is the outer SELECT list; `suffix` holds
-    WHERE/ORDER BY/LIMIT over the layer aliases."""
-    inner = base
-    for i, layer in enumerate(layers):
-        cols = ", ".join(f"{expr} AS {name}" for name, expr in layer.items())
-        inner = f"SELECT *, {cols} FROM ({inner}) AS _l{i}"
-    return f"{final} FROM ({inner}) AS _fin {suffix}"
-
-
 # =========================================================================
 # §2.9/§2.7 -- the sentiment kernel and flagship pipeline
 # =========================================================================
 
 
-def _kernel_join_sql(d: str, base: str, id_col: str, final: str, suffix: str = "") -> str:
-    """The sentiment kernel in its scale shape, in either dialect:
-    explode tokens (zipped with their one-token left context) -> join the
-    (broadcastable) lexicon VALUES relation -> left-join the modifier
-    VALUES relation on the PRECEDING token (negators/boosters scale the
-    contribution; round-5) -> per-doc partial-aggregated sums -> left-join
-    back -> score layers.
-
-    The prev-token pairing is built INSIDE the per-row projection
-    (S.prev_tokens_sql: a shifted copy of the token array, exploded in
-    lockstep) -- no window function, so the plan keeps its single
-    doc-id partial-agg shuffle; both modifier and lexicon relations are
-    broadcast-sized. Sums stay exact dyadic doubles (modifier factors are
-    quarters, weights sixteenths), so aggregation order is free and the
-    DuckDB oracle matches bit-for-bit.
-
-    Round 6 adds the remaining published-VADER mechanics, all per-row
-    context carried through the same lockstep explode (prev2/prev3 arrays
-    for the published 3-token modifier window -- distance-damped boosters,
-    per-position negation with the never-so/without-doubt overrides, and
-    the "kind of"/"sort of" bigram dampeners -- an ALL-CAPS flag array
-    from a case-preserving token twin, the 1-based position + first-'but'
-    index for the clause re-weighting) plus a per-doc punctuation-emphasis
-    amplifier applied to the VADER sum in score_layers' _s2 stage. The
-    modifier relation is LEFT-joined at all three positions (same ~70-row
-    broadcast each time). Every factor is dyadic, so the kernel stays
-    bit-identical cross-engine.
-    """
-    toks = TX.tokenize(d, "text")
-    prev = S.prev_tokens_sql(d, "_toks")
-    prev2 = S.prev2_tokens_sql(d, "_toks")
-    prev3 = S.prev3_tokens_sql(d, "_toks")
-    nx1 = S.shifted_fwd_tokens_sql(d, "_toks", 1)
-    nx2 = S.shifted_fwd_tokens_sql(d, "_toks", 2)
-    caps = S.caps_flags_sql(d, "text")
-    bi = S.but_index_sql(d, "_toks")
-    cd = S.cap_differential_sql("_caps", "_toks", d)
-    pe = S.punct_emphasis_sql(d, "text")
-    pc1 = S.shifted_flags_sql(d, "_caps", 1)
-    pc2 = S.shifted_flags_sql(d, "_caps", 2)
-    pc3 = S.shifted_flags_sql(d, "_caps", 3)
-    if d == D.SPARK:
-        ex = f"""SELECT {id_col}, bi, cap_diff,
-                   cast(pos + 1 as bigint) AS i, col._toks AS t,
-                   col._prev AS prev, col._prev2 AS prev2, col._prev3 AS prev3,
-                   col._nx1 AS nx1, col._nx2 AS nx2,
-                   coalesce(col._caps, false) AS capsf,
-                   coalesce(col._pc1, false) AS capsp1,
-                   coalesce(col._pc2, false) AS capsp2,
-                   coalesce(col._pc3, false) AS capsp3
-            FROM (SELECT {id_col}, _bi AS bi, _cd AS cap_diff,
-                         posexplode(arrays_zip(_toks, _prev, _prev2, _prev3,
-                                               _nx1, _nx2,
-                                               _caps, _pc1, _pc2, _pc3))
-                  FROM tokd)"""
-    else:
-        ex = f"""SELECT {id_col}, _bi AS bi, _cd AS cap_diff,
-                   cast(generate_subscripts(_toks, 1) as bigint) AS i,
-                   unnest(_toks) AS t, unnest(_prev) AS prev,
-                   unnest(_prev2) AS prev2, unnest(_prev3) AS prev3,
-                   unnest(_nx1) AS nx1, unnest(_nx2) AS nx2,
-                   coalesce(unnest(_caps), false) AS capsf,
-                   coalesce(unnest(_pc1), false) AS capsp1,
-                   coalesce(unnest(_pc2), false) AS capsp2,
-                   coalesce(unnest(_pc3), false) AS capsp3
-            FROM tokd"""
-    factor = S.token_factor_sql()
-    # round-7 idiom mechanics: iw = idiom weight where an occurrence ENDS at
-    # this token (computed once per token, end-token-first fail-fast CASE);
-    # consumed = this position lies inside ANY occurrence. A consumed lexicon
-    # match contributes nothing; the idiom contributes sgn/weight once at its
-    # end position, but-clause re-weighted. The lexicon join turns LEFT so
-    # idiom-end rows whose token is not a lexicon word survive into the SAME
-    # single per-doc aggregation -- no second pass over the exploded stream.
-    consumed = S.idiom_consumed_sql("e.t", "e.prev", "e.prev2", "e.nx1", "e.nx2")
-    butf = S.but_factor_sql("e.i", "e.bi")
-    lex_hit = f"(_lex.word is not null and not {consumed})"
-    scored_base = f"""
-        WITH base0 AS ({base}),
-        tokd AS (
-            SELECT {id_col}, _toks, {prev} AS _prev, {prev2} AS _prev2,
-                   {prev3} AS _prev3, {nx1} AS _nx1, {nx2} AS _nx2,
-                   _caps, {pc1} AS _pc1, {pc2} AS _pc2, {pc3} AS _pc3,
-                   {bi} AS _bi, {cd} AS _cd
-            FROM (SELECT {id_col}, {toks} AS _toks, {caps} AS _caps FROM base0) t0
-        ),
-        ex0 AS ({ex}),
-        ex AS (SELECT *, {S.idiom_weight_sql("t", "prev", "prev2")} AS iw FROM ex0),
-        sums AS (
-            SELECT e.{id_col},
-                   sum(case when {lex_hit} then {factor} * _lex.sgn else 0.0 end
-                       + case when e.iw is not null
-                              then (case when e.iw > 0 then 1.0 else -1.0 end) * {butf}
-                              else 0.0 end) AS s_ssum,
-                   sum(case when {lex_hit} then {factor} * _lex.w else 0.0 end
-                       + coalesce(e.iw * {butf}, 0.0)) AS s_wsum,
-                   cast(sum(case when {lex_hit} then 1 else 0 end
-                            + case when e.iw is not null then 1 else 0 end) as bigint) AS s_nm
-            FROM ex e
-            LEFT JOIN {S.lexicon_values_sql(d)} ON e.t = _lex.word
-            LEFT JOIN {S.modifier_values_sql(d, "_m1")} ON e.prev = _m1.mword
-            LEFT JOIN {S.modifier_values_sql(d, "_m2")} ON e.prev2 = _m2.mword
-            LEFT JOIN {S.modifier_values_sql(d, "_m3")} ON e.prev3 = _m3.mword
-            WHERE _lex.word IS NOT NULL OR e.iw IS NOT NULL
-            GROUP BY e.{id_col}
-        ),
-        joined AS (
-            SELECT b.*, coalesce(s.s_ssum, 0.0) AS _ssum,
-                   coalesce(s.s_wsum, 0.0) AS _wsum,
-                   cast(coalesce(s.s_nm, 0) as bigint) AS _nm,
-                   {pe} AS _pe
-            FROM base0 b LEFT JOIN sums s ON b.{id_col} = s.{id_col}
-        )
-        SELECT * FROM joined
-    """
-    return _layered_sql(scored_base, S.score_layers(), final, suffix)
-
-
 def _flagship_sql(d: str) -> str:
-    """Flagship EP3: validate -> kernel -> classify -> terms agg (A4/O3).
-    (The equivalent DataFrame-API pipeline lives in plans/pipeline.py and is
-    exercised by tests; the SQL template keeps driver parity structural.)"""
+    """Flagship EP3: validate -> kernel -> classify -> terms agg (A4/O3)."""
     base = f"SELECT doc_id, {TEXT} AS text FROM documents WHERE trim({TEXT}) <> ''"
-    scored = _kernel_join_sql(d, base, "doc_id", "SELECT overall AS key")
+    scored = S.kernel_join_sql(d, base, "doc_id", "SELECT overall AS key")
     return f"""
         SELECT key, cast(count(*) as bigint) AS doc_count
         FROM ({scored}) s GROUP BY key
@@ -332,7 +200,7 @@ def _flagship_sql(d: str) -> str:
 
 def _sentiment_scores_sql(d: str) -> str:
     """U1+U2+F8-F11 per document, full corpus."""
-    return _kernel_join_sql(
+    return S.kernel_join_sql(
         d,
         f"SELECT doc_id, {TEXT} AS text FROM documents",
         "doc_id",
@@ -475,7 +343,7 @@ def _quality_rate_sql(d: str) -> str:
 def _term_query_sql(d: str) -> str:
     """Q2/O1/O2: term filter + sort desc + limit -> TakeOrderedAndProject
     (top-k without a global sort)."""
-    return _kernel_join_sql(
+    return S.kernel_join_sql(
         d,
         f"SELECT doc_id, n_chars, {TEXT} AS text FROM documents",
         "doc_id",

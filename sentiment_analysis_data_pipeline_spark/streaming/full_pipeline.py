@@ -16,9 +16,10 @@ Epoch shape per micro-batch:
      docs only (curation upstream of dedup, as in the batch
      curation_pipeline): batch-vs-corpus pairs via the persisted band
      index (corpus never re-signatured) plus in-batch pairs.
-  4. SENTIMENT (plans/pipeline.sentiment_enrich) over ALL gated rows --
-     rejected docs keep their scores too, so the curated store stays
-     fully explainable without a re-run.
+  4. SENTIMENT (plans/pipeline.sentiment_enrich, which runs the
+     registry's kernel SQL, functions/sentiment.kernel_join_sql) over ALL
+     gated rows -- rejected docs keep their scores too, so the curated
+     store stays fully explainable without a re-run.
   5. LAND: curated rows (flags + sentiment struct) guarded by an
      anti-join on the curated store's ids; pairs batch_id-stamped
      (replay-dedupable downstream); index append (internally idempotent,
@@ -109,12 +110,14 @@ def curated_epoch(
     # Path-absent (first epoch) is an FS existence check, not a swallowed
     # exception: any real read error must propagate, or a replayed epoch
     # would silently skip the idempotence anti-join and land duplicate
-    # curated rows (round-8 ADVICE fix).
+    # curated rows (round-8 ADVICE fix). The explicit schema keeps a dir
+    # holding only a killed first append's _temporary/ files readable (as
+    # zero rows) instead of failing schema inference on every replay.
     from ..sources.tables import _fs_for
 
     fs, hpath = _fs_for(bs, curated_path)
     if fs.exists(hpath):
-        landed = bs.read.parquet(curated_path).select("doc_id")
+        landed = bs.read.schema("doc_id long").parquet(curated_path)
         scored = scored.join(landed, "doc_id", "left_anti")
     scored.write.mode("append").parquet(curated_path)
 

@@ -10,8 +10,8 @@ import uuid
 
 import pyspark.sql.functions as F
 
+from sentiment_analysis_data_pipeline_spark.functions.sentiment import CLASSIFY_THRESHOLD, _py_kernel
 from sentiment_analysis_data_pipeline_spark.operators.dedup import minhash_band_keys, minhash_signatures
-from sentiment_analysis_data_pipeline_spark.plans.pipeline import sentiment_enrich
 from sentiment_analysis_data_pipeline_spark.sources.tables import write_bucketed
 from sentiment_analysis_data_pipeline_spark.streaming import dedup_stream, full_pipeline
 from sentiment_analysis_data_pipeline_spark.streaming.curation_stream import curation_gate
@@ -30,6 +30,12 @@ ALT = (
     "when operators watch dashboards showing steady progress everywhere"
 )
 FLAGS = ["too_short", "too_repetitive", "low_quality", "non_english", "kept"]
+
+
+def _classify(avg):
+    if avg >= CLASSIFY_THRESHOLD:
+        return "positive"
+    return "negative" if avg <= -CLASSIFY_THRESHOLD else "neutral"
 
 
 def _write_batch(path, rows):
@@ -97,10 +103,12 @@ def test_composed_stream_matches_batch_components(spark, tmp_path):
         assert got_flags[104][1] is True      # too_repetitive
         assert got_flags[101][4] and got_flags[102][4]  # kept
 
-        exp_sent = {
-            r["doc_id"]: (r["vader_compound"], r["textblob_polarity"], r["overall"])
-            for r in sentiment_enrich(batch_df).collect()
-        }
+        # the epoch scores with the registry's kernel SQL; check it against
+        # the independent Python reference, not against that same SQL
+        exp_sent = {}
+        for i, t in drop:
+            vc, tb = _py_kernel(t)
+            exp_sent[i] = (vc, tb, _classify((vc + tb) / 2.0))
         for i, row in got_rows.items():
             s = row["sentiment"]
             assert (s["vader_compound"], s["textblob_polarity"], s["overall"]) == exp_sent[i], i
@@ -186,6 +194,37 @@ def test_composed_epoch_replay_is_idempotent(spark, tmp_path):
         # downstream exactly-once consumer dedupes on (batch_id, id_a, id_b)
         pairs = spark.read.parquet(pairs_path)
         assert pairs.select("batch_id").distinct().count() == 1
+    finally:
+        _drop_with_files(spark, table)
+
+
+def test_epoch_lands_over_a_killed_first_append(spark, tmp_path):
+    """A first curated append killed mid-write leaves only its _temporary/
+    files. The landing guard must read that dir as zero rows so the replay
+    lands the batch; schema inference over it fails on every replay."""
+    import shutil
+
+    table = f"full_pipe_idx_{uuid.uuid4().hex[:8]}"
+    corpus_path = str(tmp_path / "corpus")
+    pairs_path = str(tmp_path / "pairs")
+    curated_path = tmp_path / "curated"
+    _bootstrap(spark, table, corpus_path)
+    partial = tmp_path / "partial"
+    spark.createDataFrame([(101, "x")], "doc_id long, text string").coalesce(1).write.parquet(
+        str(partial)
+    )
+    orphan = curated_path / "_temporary" / "0" / "_temporary"
+    orphan.mkdir(parents=True)
+    shutil.copy(next(partial.glob("part-*.parquet")), orphan / "part-0.parquet")
+    batch = spark.createDataFrame(
+        [(101, BASE + " v2"), (103, "short text")], "doc_id long, text string"
+    )
+    try:
+        full_pipeline.curated_epoch(
+            spark, batch, 0, table, corpus_path, pairs_path, str(curated_path)
+        )
+        landed = sorted(r["doc_id"] for r in spark.read.parquet(str(curated_path)).collect())
+        assert landed == [101, 103]
     finally:
         _drop_with_files(spark, table)
 

@@ -209,3 +209,36 @@ def test_staged_oracles_name_no_stage_view():
         oracle = Q.REGISTRY[name][1](Q.D.DUCKDB)
         named = [v for v in views if re.search(rf"\b{v}\b", oracle)]
         assert not named, f"{name}: oracle names stage view(s) {named}"
+
+
+def test_one_spark_sentiment_kernel():
+    """The lexicon and modifier relations and the score layers are composed
+    in exactly one place, functions/sentiment.kernel_join_sql. The registry
+    queries, their oracles and sentiment_enrich all call that builder, so
+    no second Spark copy of the kernel can drift from what the oracle
+    checks."""
+    import ast
+    import os
+
+    fragments = {"lexicon_values_sql", "modifier_values_sql", "score_layers"}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    callers = set()
+    for sub in ("sentiment_analysis_data_pipeline_spark", "tools", "perfbench"):
+        for dirpath, _, files in os.walk(os.path.join(root, sub)):
+            for fname in files:
+                if not fname.endswith(".py"):
+                    continue
+                path = os.path.join(dirpath, fname)
+                with open(path) as f:
+                    tree = ast.parse(f.read())
+                for fn in tree.body:
+                    for node in ast.walk(fn):
+                        if not isinstance(node, ast.Call):
+                            continue
+                        name = getattr(node.func, "id", getattr(node.func, "attr", None))
+                        if name in fragments:
+                            where = getattr(fn, "name", f"line {node.lineno}")
+                            callers.add((os.path.relpath(path, root), where))
+    assert callers == {
+        ("sentiment_analysis_data_pipeline_spark/functions/sentiment.py", "kernel_join_sql")
+    }

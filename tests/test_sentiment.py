@@ -277,6 +277,21 @@ def test_full_table_distribution(spark, sf_dir):
     assert rows == {"negative": 218, "positive": 213, "neutral": 69}
 
 
+def test_enrich_equals_registry_scores(spark, sf_dir):
+    """sentiment_enrich (the streaming epochs' and processed table's
+    scorer) gives the registry's sentiment_scores rows, column for column,
+    on the whole sf0.001 documents table."""
+    from sentiment_analysis_data_pipeline_spark.queries import REGISTRY
+
+    cols = ["doc_id", "vader_compound", "textblob_polarity", "avg_score", "overall", "confidence"]
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    enriched = sentiment_enrich(docs, "coalesce(text, '')").select(*cols)
+    registry = REGISTRY["sentiment_scores"][0](spark, sf_dir).select(*cols)
+    assert enriched.count() == docs.count() > 0
+    assert enriched.exceptAll(registry).count() == 0
+    assert registry.exceptAll(enriched).count() == 0
+
+
 def test_idiom_simple_goldens(spark):
     """Round 7: every published idiom (SENTIMENT_LADEN_IDIOMS +
     SPECIAL_CASES, functions/sentiment.py IDIOM_SIXTEENTHS) in neutral

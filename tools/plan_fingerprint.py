@@ -11,6 +11,16 @@ Expression ids (`#123`, `#123L`), RDD ids and physical plan ids are
 normalized away; nothing is collected beyond what the constructors
 themselves run.
 
+Normalizing the ids is not enough on its own: Catalyst orders some rewrites
+by the hash of expression ids (the Expand of a distinct aggregate, a
+projection collapse), and those ids come from one JVM-wide counter. So
+before each query the tool drops the session's temp views and read memo
+and sets that counter to a fixed base for the query (its registry position
+times a stride no query draws through). A query then hashes the same
+whatever ran before it in the process. Plans still depend on the warehouse:
+a constructor that builds a stamped index draws more ids than one that
+reuses it, so compare runs whose warehouses hold the same indexes.
+
 Usage: python tools/plan_fingerprint.py sf_dir [query_name ...]
 """
 
@@ -21,10 +31,11 @@ import json
 import os
 import re
 import sys
+from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame  # noqa: E402
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
 from sentiment_analysis_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -42,6 +53,45 @@ def normalize(plan: str) -> str:
 
 def optimized_plan(df: DataFrame) -> str:
     return normalize(df._jdf.queryExecution().optimizedPlan().toString())
+
+
+# expression ids one query may draw; far above any registry query's count
+ID_STRIDE = 1 << 36
+
+
+def expr_id_pinner(spark: SparkSession) -> Callable[[int], None]:
+    """pin(base): isolate the session from earlier queries (temp views, the
+    engine's parquet read memo) and set Catalyst's expression-id counter
+    (NamedExpression.curId, a private AtomicLong) to `base`. The isolation
+    matters when a base is used twice (one query fingerprinted again): ids
+    then repeat, and no plan that holds the earlier ones may stay
+    reachable. The AtomicLong cannot cross py4j as an object (it arrives
+    as a number), so its getter and set() are joined into one method
+    handle on the JVM side."""
+    jvm = spark._jvm
+    gw = spark.sparkContext._gateway
+    field = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.NamedExpression$"
+    ).getDeclaredField("curId")
+    field.setAccessible(True)
+    lookup = jvm.java.lang.invoke.MethodHandles.publicLookup()
+    sig = gw.new_array(jvm.java.lang.Class, 1)
+    sig[0] = jvm.java.lang.Long.TYPE
+    setter = lookup.unreflect(
+        jvm.java.lang.Class.forName("java.util.concurrent.atomic.AtomicLong").getMethod("set", sig)
+    )
+    handle = jvm.java.lang.invoke.MethodHandles.collectArguments(
+        setter, 0, lookup.unreflectGetter(field)
+    )
+
+    def pin(base: int) -> None:
+        spark._jsparkSession.sessionState().catalog().clearTempTables()
+        spark.__dict__.pop("_graft_read_cache", None)
+        args = gw.new_array(jvm.java.lang.Object, 1)
+        args[0] = base
+        handle.invokeWithArguments(args)
+
+    return pin
 
 
 def main() -> int:
@@ -68,11 +118,13 @@ def main() -> int:
 
     from sentiment_analysis_data_pipeline_spark.queries import REGISTRY
 
+    pin = expr_id_pinner(spark)
     out: dict[str, str] = {}
-    for name, (fn, _) in REGISTRY.items():
+    for pos, (name, (fn, _)) in enumerate(REGISTRY.items(), 1):
         if only and name not in only:
             continue
         captured.clear()
+        pin(pos * ID_STRIDE)
         final = optimized_plan(fn(spark, sf_dir))
         h = hashlib.sha256()
         for plan in [*captured, final]:
