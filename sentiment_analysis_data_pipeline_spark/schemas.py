@@ -115,17 +115,3 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("duration_ms", T.LongType()),
     ]
 )
-
-# Driver testdata tables (TESTDATA.md / FIXTURES.md §B).
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)

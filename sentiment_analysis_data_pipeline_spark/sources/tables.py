@@ -22,8 +22,6 @@ from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schemas import TESTDATA_TABLES
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # A build lock older than this is a crash leftover (index builds complete in
@@ -202,16 +200,6 @@ def scattered(
     # No partition-count probe: df.rdd materializes an RDD conversion that
     # costs more than the unconditional tiny-table shuffle it would avoid.
     return df.repartition(spark.sparkContext.defaultParallelism)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql queries."""
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def write_bucketed(

@@ -2,7 +2,6 @@ from .ingest import (
     attributed_clicks,
     file_article_stream,
     kafka_article_stream,
-    kafka_envelope_sink_options,
     enrich_with_dim,
     hopping_activity,
     merge_into_parquet,
@@ -10,7 +9,6 @@ from .ingest import (
     run_sentiment_stream,
     split_valid_corrupt,
     sessionized_activity,
-    windowed_freshness,
     with_stream_dedup,
 )
 
@@ -18,7 +16,6 @@ __all__ = [
     "attributed_clicks",
     "file_article_stream",
     "kafka_article_stream",
-    "kafka_envelope_sink_options",
     "enrich_with_dim",
     "hopping_activity",
     "merge_into_parquet",
@@ -26,6 +23,5 @@ __all__ = [
     "run_sentiment_stream",
     "split_valid_corrupt",
     "sessionized_activity",
-    "windowed_freshness",
     "with_stream_dedup",
 ]

@@ -1,33 +1,40 @@
-"""Shared epoch-log plumbing for the streaming accumulators
-(sketch/hll/hdr/reservoir): the replay-idempotence check and the
-crash-safe compaction swap.
+"""The streaming contract, decided once for every foreachBatch stream in
+this package: how an epoch is triggered and checkpointed (`drain`), how a
+sink guard reads what already landed (`landed_keys`), and the epoch log
+the accumulators (sketch/hll/hdr/reservoir/drift/calibration/experiment)
+append to (`guarded_append`, `compact_log`). End-to-end exactly-once needs
+both halves: a replayable, checkpointed source (`drain`) and a sink whose
+guard turns a replayed epoch into a no-op (`landed_keys`, the batch_id
+stamp).
 
-Round-8 ADVICE fixes:
+- `drain` runs an epoch function over a stream with a checkpoint and the
+  availableNow trigger (drain what is present, then stop), or a
+  processingTime trigger when one is given.
 
-- `log_has_epoch` replaces the accumulators' `try: read / except
-  Exception: first-epoch` guard. That guard treated ANY read error as
-  "log does not exist yet": a transient read failure (object-store
-  flake) during a foreachBatch retry made the idempotence check silently
-  pass and the partial was appended TWICE, double-counting the batch.
-  The helper distinguishes path-absent (an FS existence check -- no
-  exception at all) from real read errors, which now propagate so the
-  epoch fails loudly and the retry re-checks.
+- `landed_keys` is the one sink-existence check. Path-absent (the first
+  epoch) is an FS existence check, not a swallowed exception, so a real
+  read error (a corrupt part file, a transient object-store failure)
+  propagates and the foreachBatch retry re-checks. Swallowing it would
+  silently skip the guard and land the epoch twice. The explicit schema
+  keeps a dir that holds only a killed first append's `_temporary/`
+  files readable as zero rows; schema inference fails on it.
 
-- `compact_log` replaces the read-tmp-then-overwrite-live sequence. That
-  rewrite deleted the live log before repopulating it: a crash in
-  between lost the whole accumulator log (the tmp survived but recovery
-  was manual). The helper stages the merged partial in a tmp dir and
-  swaps it into place with two atomic renames (sources.tables
-  .swap_directory -- the compact_bucketed protocol), so the live log is
-  old-complete or new-complete at every instant.
+- `guarded_append` stamps each partial with its epoch id and skips an
+  epoch the log already holds (`log_has_epoch`), so a replay cannot
+  double-count a batch.
 
-Concurrency contract (round 9 -- now ENFORCED, not just documented):
-compaction folds every stamp to COMPACTED_STAMP, which defeats an
-IN-FLIGHT epoch's replay check, and an append landing between the read
-and the swap is dropped by the swap. The "run compaction only in an
-ingest pause" precondition is made mechanical by a pair of filesystem
-flags (Dekker-style -- each side sets its own flag, then checks the
-other's):
+- `compact_log` stamps the merged partial COMPACTED_STAMP, stages it in a
+  tmp dir and swaps it into place with two renames
+  (sources.tables.swap_directory -- the compact_bucketed protocol). A
+  process killed between the renames leaves no live log: the old one
+  sits in `<log>__old_<app>` and nothing rolls it forward or back yet.
+
+Concurrency contract: compaction folds every stamp to COMPACTED_STAMP,
+which defeats an IN-FLIGHT epoch's replay check, and an append landing
+between the read and the swap is dropped by the swap. The "run compaction
+only in an ingest pause" precondition is made mechanical by a pair of
+filesystem flags (Dekker-style -- each side sets its own flag, then
+checks the other's):
 
 - an appender first checks `<log>__compacting` (raise if present), then
   creates `<log>__appending_<epoch>`, then RE-checks the compaction flag
@@ -41,9 +48,10 @@ other's):
 Either interleaving therefore ends in a LOUD error on one side (the
 foreachBatch retry re-runs the epoch later; compaction is a maintenance
 call the operator re-issues), never a dropped or double-counted partial.
-tests/test_streaming_accumulators.py interleaves the two paths and
-asserts exactly that. Markers left by a crashed process are expired
-after STALE_FLAG_SEC (appends and compactions are seconds-long).
+tests/test_log_guard.py interleaves the two paths and asserts exactly
+that; tests/test_experiment_soak.py runs a processingTime stream against
+live compactions. Markers left by a crashed process are expired after
+STALE_FLAG_SEC (appends and compactions are seconds-long).
 """
 
 from __future__ import annotations
@@ -53,6 +61,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from ..sources.tables import _fs_for, swap_directory
 
@@ -62,6 +72,43 @@ COMPACTED_STAMP = -1
 # A __compacting / __appending_* flag older than this is a crash leftover
 # (both operations complete in seconds), reclaimed instead of honored.
 STALE_FLAG_SEC = 600.0
+
+
+def drain(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    epoch: Callable[[DataFrame, int], None],
+    processing_time: str | None = None,
+) -> StreamingQuery:
+    """Run `epoch(batch, batch_id)` on every micro-batch of `stream`,
+    checkpointed in `checkpoint_dir`. The default availableNow trigger
+    drains what is present, then stops (the test/backfill mode); pass
+    `processing_time` (e.g. "5 minutes") for a timer-driven cadence.
+
+    foreachBatch hands each batch to a CLONED session: temp views an epoch
+    registers live there, so every read and sql call inside `epoch` must
+    go through `batch.sparkSession`, not the session that built `stream`."""
+    writer = stream.writeStream.foreachBatch(epoch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if processing_time is None:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
+
+
+def landed_keys(
+    spark: SparkSession, path: str, schema: str | StructType
+) -> DataFrame | None:
+    """What a parquet sink already holds, read with `schema` (name only the
+    key columns a guard joins on), or None iff the path does not exist
+    (module docstring: why this is an existence check, not a caught read
+    error)."""
+    fs, hpath = _fs_for(spark, path)
+    if not fs.exists(hpath):
+        return None
+    return spark.read.schema(schema).parquet(path)
 
 
 def _flag_path(log_path: str, suffix: str) -> str:
@@ -130,9 +177,10 @@ def guarded_append(
     batch_id: int,
     partial: DataFrame,
 ) -> bool:
-    """Append one epoch partial replay-idempotently UNDER the append/compact
-    mutual-exclusion protocol (module docstring). Returns False when the
-    epoch was already logged (idempotent replay), True when appended.
+    """Append one epoch partial, stamped `batch_id = batch_id`,
+    replay-idempotently UNDER the append/compact mutual-exclusion protocol
+    (module docstring). Returns False when the epoch was already logged
+    (idempotent replay), True when appended.
     Raises CompactionInProgress (loudly -- the foreachBatch retry re-runs
     the epoch) instead of ever racing a compaction swap."""
     compacting = _flag_path(log_path, "__compacting")
@@ -156,7 +204,9 @@ def guarded_append(
             )
         if log_has_epoch(spark, log_path, schema, batch_id):
             return False
-        partial.write.mode("append").parquet(log_path)
+        partial.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
+            "append"
+        ).parquet(log_path)
         return True
     finally:
         _remove_flag(spark, marker)
@@ -165,19 +215,11 @@ def guarded_append(
 def log_has_epoch(
     spark: SparkSession, log_path: str, schema: str, batch_id: int
 ) -> bool:
-    """True iff `batch_id`'s partial is already in the epoch log. Absent
-    log (first epoch) is an FS existence check, not a swallowed exception;
-    any actual read error propagates so a foreachBatch retry cannot
-    silently double-append."""
-    fs, hpath = _fs_for(spark, log_path)
-    if not fs.exists(hpath):
-        return False
-    return bool(
-        spark.read.schema(schema)
-        .parquet(log_path)
-        .filter(F.col("batch_id") == batch_id)
-        .take(1)
-    )
+    """True iff `batch_id`'s partial is already in the epoch log (read
+    through `landed_keys`: an absent log is the first epoch, a read error
+    propagates)."""
+    log = landed_keys(spark, log_path, schema)
+    return log is not None and bool(log.filter(F.col("batch_id") == batch_id).take(1))
 
 
 def compact_log(
@@ -186,9 +228,9 @@ def compact_log(
     merged_builder: "Callable[[], DataFrame]",
 ) -> None:
     """Fold the epoch log to the single merged partial built by
-    `merged_builder` (already stamped COMPACTED_STAMP by the caller),
-    crash-safely: stage to a tmp dir, then atomic-rename swap into the
-    live path.
+    `merged_builder`, stamped `batch_id = COMPACTED_STAMP`: stage to a tmp
+    dir, then rename-swap into the live path (module docstring: the crash
+    window between the two renames).
 
     Mutual exclusion (round 9, module docstring): takes the
     `__compacting` flag first and refuses with IngestInFlight if any
@@ -221,7 +263,9 @@ def compact_log(
         # critical section: writing to tmp fully materializes the merged
         # read of the live log BEFORE the live path changes; the swap then
         # needs no second copy
-        merged_builder().write.mode("overwrite").parquet(tmp)
+        merged_builder().withColumn(
+            "batch_id", F.lit(COMPACTED_STAMP).cast("long")
+        ).write.mode("overwrite").parquet(tmp)
         swap_directory(spark, tmp, log_path.rstrip("/"))
     finally:
         _remove_flag(spark, compacting)

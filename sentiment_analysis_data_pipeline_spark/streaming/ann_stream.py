@@ -14,9 +14,10 @@ as a separate snapshot build -- FAISS add-after-train semantics.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.ann_index import append_to_ivf_index
+from ._log import drain
+from .dedup_stream import recrawl_guard
 
 VEC_STREAM_SCHEMA = "vec_id long, embedding array<float>, label int"
 
@@ -28,20 +29,13 @@ def run_streaming_vector_ingest(
     checkpoint_dir: str,
 ):
     """json vector files land in `source_dir`; the IVF index at `index_dir`
-    grows in place. availableNow trigger (drain-then-stop)."""
+    grows in place."""
     stream = spark.readStream.schema(VEC_STREAM_SCHEMA).json(source_dir)
 
     def epoch(batch: DataFrame, batch_id: int) -> None:
         bs = batch.sparkSession
-        batch = batch.dropDuplicates(["vec_id"]).filter(F.col("embedding").isNotNull())
-        seen = bs.read.parquet(f"{index_dir}/assignments").select("vec_id")
-        fresh = batch.join(seen, "vec_id", "left_anti").localCheckpoint(eager=True)
-        if fresh.take(1):
+        fresh = recrawl_guard(bs, batch, f"{index_dir}/assignments", "vec_id", "embedding")
+        if fresh is not None:
             append_to_ivf_index(bs, fresh, index_dir)
 
-    return (
-        stream.writeStream.foreachBatch(epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stream, checkpoint_dir, epoch)

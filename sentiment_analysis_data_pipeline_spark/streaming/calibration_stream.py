@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import queries as Q
 from ..functions import dialect as D
-from ._log import COMPACTED_STAMP, compact_log, guarded_append
+from ._log import compact_log, drain, guarded_append
 
 HIST_SCHEMA = "source string, sq bigint, pos_s bigint, n_s bigint, batch_id bigint"
 # the document stream carries the envelope fields the scorer consumes
@@ -62,15 +62,7 @@ def append_batch(
     spark: SparkSession, batch: DataFrame, hist_path: str, batch_id: int
 ) -> None:
     """Land one epoch's histogram partial (replay-idempotent by stamp)."""
-    from pyspark.sql import functions as F
-
-    guarded_append(
-        spark,
-        hist_path,
-        HIST_SCHEMA,
-        batch_id,
-        batch_hist(batch).withColumn("batch_id", F.lit(batch_id).cast("long")),
-    )
+    guarded_append(spark, hist_path, HIST_SCHEMA, batch_id, batch_hist(batch))
 
 
 def read_hist(spark: SparkSession, hist_path: str) -> DataFrame:
@@ -119,15 +111,7 @@ def read_calibration(spark: SparkSession, hist_path: str) -> DataFrame:
 def compact_hist(spark: SparkSession, hist_path: str) -> None:
     """Fold the epoch log back to one merged histogram (crash-safe swap +
     ingest-pause mutual exclusion -- the shared _log contract)."""
-    from pyspark.sql import functions as F
-
-    compact_log(
-        spark,
-        hist_path,
-        lambda: read_hist(spark, hist_path).withColumn(
-            "batch_id", F.lit(COMPACTED_STAMP).cast("long")
-        ),
-    )
+    compact_log(spark, hist_path, lambda: read_hist(spark, hist_path))
 
 
 def run_calibration_monitor(
@@ -137,16 +121,10 @@ def run_calibration_monitor(
     checkpoint_dir: str,
 ):
     """File-source streaming histogram maintenance: json documents land
-    in `source_dir`; each epoch appends its scored partial cells.
-    availableNow trigger -- drains what is present, then stops."""
+    in `source_dir`; each epoch appends its scored partial cells."""
     stream = spark.readStream.schema(DOC_STREAM_SCHEMA).json(source_dir)
 
     def epoch(batch: DataFrame, batch_id: int) -> None:
         append_batch(batch.sparkSession, batch, hist_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stream, checkpoint_dir, epoch)

@@ -93,6 +93,7 @@ def run_curation_stream(
     availableNow trigger: drains what is present, then stops."""
     stream = spark.readStream.schema("doc_id long, text string").json(source_dir)
     gated = curation_gate(stream)
+    # a file sink, not _log.drain: its _spark_metadata log makes it exactly-once
     return (
         gated.writeStream.format("parquet")
         .option("path", out_path)

@@ -46,6 +46,7 @@ from ..operators.dedup import (
     minhash_signatures,
 )
 from ..operators.dedup_index import probe_band_index
+from ._log import drain
 
 DOC_STREAM_SCHEMA = "doc_id long, text string"
 INDEX_BUCKETS = 8
@@ -125,6 +126,53 @@ def append_to_band_index(spark: SparkSession, banded: DataFrame, index_table: st
     )
 
 
+def recrawl_guard(
+    bs: SparkSession,
+    batch: DataFrame,
+    store_path: str,
+    key: str = "doc_id",
+    payload: str = "text",
+) -> DataFrame | None:
+    """The epoch's fresh rows, or None when it has none: in-batch `key`
+    dedup, null-`payload` drop, then an anti-join against the keys already
+    in the store -- a re-crawled row keeps its original record and
+    signatures, so the fresh copy is neither landed nor re-signatured. The
+    result is checkpointed eagerly, so it is fixed before the epoch's
+    appends change the store it was guarded against."""
+    batch = batch.dropDuplicates([key]).filter(F.col(payload).isNotNull())
+    seen = bs.read.parquet(store_path).select(key)
+    fresh = batch.join(seen, key, "left_anti").localCheckpoint(eager=True)
+    return fresh if fresh.take(1) else None
+
+
+def land_pairs(
+    bs: SparkSession,
+    batch_id: int,
+    docs: DataFrame,
+    index_table: str,
+    corpus_path: str,
+    pairs_path: str,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """Signature `docs` (doc_id, text) once, probe and verify them against
+    the index and each other, and append the batch_id-stamped pairs. Returns
+    the batch's (doc, band_key) relation for `land_docs`."""
+    shingled, banded = minhash_signatures(docs, "text", "doc_id")
+    pairs = dedup_micro_batch(bs, shingled, banded, index_table, corpus_path, threshold)
+    pairs.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(pairs_path)
+    return banded
+
+
+def land_docs(
+    bs: SparkSession, docs: DataFrame, banded: DataFrame, index_table: str, corpus_path: str
+) -> None:
+    """The epoch's last writes: the signatures into the index, then the
+    docs into the doc store -- the store append is last, so a replay of an
+    epoch that crashed before it re-probes and re-emits its pairs."""
+    append_to_band_index(bs, banded, index_table)
+    docs.write.mode("append").parquet(corpus_path)
+
+
 def run_streaming_dedup(
     spark: SparkSession,
     source_dir: str,
@@ -136,35 +184,15 @@ def run_streaming_dedup(
 ):
     """File-source streaming dedup: json docs land in `source_dir`; verified
     near-dup pairs append to `pairs_path`; the index table and doc store
-    grow with each batch. availableNow trigger -- drains what is present,
-    then stops (the batch/stream-shared processing contract)."""
+    grow with each batch."""
     stream = spark.readStream.schema(DOC_STREAM_SCHEMA).json(source_dir)
 
     def epoch(batch: DataFrame, batch_id: int) -> None:
-        # foreachBatch hands the batch to a CLONED session -- temp views the
-        # probe registers live there, so every read/sql in this epoch must
-        # use the batch's session, not the outer one
         bs = batch.sparkSession
-        batch = batch.dropDuplicates(["doc_id"]).filter(F.col("text").isNotNull())
-        # re-crawl guard: ids already in the doc store keep their original
-        # signatures; the fresh copy is neither landed nor re-signatured
-        seen = bs.read.parquet(corpus_path).select("doc_id")
-        batch = batch.join(seen, "doc_id", "left_anti").localCheckpoint(eager=True)
-        if not batch.take(1):
+        docs = recrawl_guard(bs, batch, corpus_path)
+        if docs is None:
             return
-        shingled, banded = minhash_signatures(batch, "text", "doc_id")
-        pairs = dedup_micro_batch(bs, shingled, banded, index_table, corpus_path, threshold)
-        (
-            pairs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(pairs_path)
-        )
-        append_to_band_index(bs, banded, index_table)
-        batch.select("doc_id", "text").write.mode("append").parquet(corpus_path)
+        banded = land_pairs(bs, batch_id, docs, index_table, corpus_path, pairs_path, threshold)
+        land_docs(bs, docs, banded, index_table, corpus_path)
 
-    return (
-        stream.writeStream.foreachBatch(epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stream, checkpoint_dir, epoch)

@@ -6,7 +6,7 @@
 micro-batch collapses its documents to per-band counts (band = length
 div PSI_BAND_WIDTH -- at most a few dozen rows however large the batch),
 stamped with the epoch id and appended to a band log via the shared
-replay-idempotent protocol (_log.log_has_epoch: path-absent is an FS
+replay-idempotent protocol (_log.guarded_append: path-absent is an FS
 check, real read errors propagate). The serving read folds the log with
 one (band) sum and scores it against a FROZEN reference distribution
 (the training corpus the production model saw) through EXACTLY the same
@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries import PSI_BAND_WIDTH, psi_tail_sql
-from ._log import COMPACTED_STAMP, compact_log, guarded_append
+from ._log import COMPACTED_STAMP, compact_log, drain, guarded_append  # noqa: F401 (re-exported)
 
 BANDS_SCHEMA = "band bigint, n bigint, batch_id bigint"
 DOC_STREAM_SCHEMA = "doc_id long, text string"
@@ -50,13 +50,7 @@ def append_batch_bands(
 ) -> None:
     """Collapse one micro-batch to its band partial and append it,
     replay-idempotently (shared _log protocol)."""
-    guarded_append(
-        spark,
-        log_path,
-        BANDS_SCHEMA,
-        batch_id,
-        batch_bands(batch).withColumn("batch_id", F.lit(batch_id).cast("long")),
-    )
+    guarded_append(spark, log_path, BANDS_SCHEMA, batch_id, batch_bands(batch))
 
 
 def read_bands(spark: SparkSession, log_path: str) -> DataFrame:
@@ -91,13 +85,7 @@ def read_psi(
 def compact_bands(spark: SparkSession, log_path: str) -> None:
     """Fold the epoch log back to one merged partial (the shared crash-safe
     swap; run only in an ingest pause -- _log.py contract)."""
-    compact_log(
-        spark,
-        log_path,
-        lambda: read_bands(spark, log_path).withColumn(
-            "batch_id", F.lit(COMPACTED_STAMP).cast("long")
-        ),
-    )
+    compact_log(spark, log_path, lambda: read_bands(spark, log_path))
 
 
 def run_streaming_drift(
@@ -107,16 +95,10 @@ def run_streaming_drift(
     checkpoint_dir: str,
 ):
     """File-source streaming drift maintenance: json docs land in
-    `source_dir`; each epoch appends its band partial to `log_path`.
-    availableNow trigger -- drains what is present, then stops."""
+    `source_dir`; each epoch appends its band partial to `log_path`."""
     stream = spark.readStream.schema(DOC_STREAM_SCHEMA).json(source_dir)
 
     def epoch(batch: DataFrame, batch_id: int) -> None:
         append_batch_bands(batch.sparkSession, batch, log_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stream, checkpoint_dir, epoch)

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries import DAY_US, sprt_tail_sql, srm_tail_sql
-from ._log import COMPACTED_STAMP, compact_log, guarded_append
+from ._log import compact_log, drain, guarded_append, landed_keys
 
 DAILY_SCHEMA = "dd bigint, n bigint, c bigint, batch_id bigint"
 USERS_SCHEMA = "user_id bigint, batch_id bigint"
@@ -69,32 +69,12 @@ def append_batch(
     independently replay-idempotent by batch stamp, so a retry after a
     partial failure converges: the already-landed log skips, the missing
     one lands."""
-    guarded_append(
-        spark,
-        daily_path,
-        DAILY_SCHEMA,
-        batch_id,
-        batch_daily(batch).withColumn("batch_id", F.lit(batch_id).cast("long")),
-    )
+    guarded_append(spark, daily_path, DAILY_SCHEMA, batch_id, batch_daily(batch))
     epoch_users = batch.select(F.col("user_id").cast("long")).distinct()
-    fs_missing = not _log_exists(spark, users_path)
-    if not fs_missing:
-        seen = spark.read.schema(USERS_SCHEMA).parquet(users_path).select("user_id")
+    seen = landed_keys(spark, users_path, "user_id bigint")
+    if seen is not None:
         epoch_users = epoch_users.join(seen, "user_id", "left_anti")
-    guarded_append(
-        spark,
-        users_path,
-        USERS_SCHEMA,
-        batch_id,
-        epoch_users.withColumn("batch_id", F.lit(batch_id).cast("long")),
-    )
-
-
-def _log_exists(spark: SparkSession, path: str) -> bool:
-    from ._log import _fs_for
-
-    fs, hpath = _fs_for(spark, path)
-    return bool(fs.exists(hpath))
+    guarded_append(spark, users_path, USERS_SCHEMA, batch_id, epoch_users)
 
 
 def read_daily(spark: SparkSession, daily_path: str) -> DataFrame:
@@ -128,13 +108,7 @@ def read_srm(spark: SparkSession, users_path: str) -> DataFrame:
 def compact_daily(spark: SparkSession, daily_path: str) -> None:
     """Fold the daily epoch log back to one merged partial (crash-safe
     swap + ingest-pause mutual exclusion -- the shared _log contract)."""
-    compact_log(
-        spark,
-        daily_path,
-        lambda: read_daily(spark, daily_path).withColumn(
-            "batch_id", F.lit(COMPACTED_STAMP).cast("long")
-        ),
-    )
+    compact_log(spark, daily_path, lambda: read_daily(spark, daily_path))
 
 
 def run_experiment_monitor(
@@ -147,9 +121,7 @@ def run_experiment_monitor(
 ):
     """File-source streaming experiment maintenance: json events land in
     `source_dir`; each epoch appends its daily partial and first-seen
-    users. Default trigger is availableNow (drain what is present, then
-    stop -- the test/backfill mode); pass `processing_time` (e.g.
-    "5 minutes") for the timer-driven production cadence. Under the timer
+    users. `processing_time` as in _log.drain. Under the timer
     an epoch can overlap a maintenance compact_daily call -- the _log
     flag-file contract turns that race into a LOUD error on one side
     (CompactionInProgress fails the epoch -> the restarted query replays
@@ -161,11 +133,4 @@ def run_experiment_monitor(
     def epoch(batch: DataFrame, batch_id: int) -> None:
         append_batch(batch.sparkSession, batch, daily_path, users_path, batch_id)
 
-    writer = stream.writeStream.foreachBatch(epoch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if processing_time is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return drain(stream, checkpoint_dir, epoch, processing_time)

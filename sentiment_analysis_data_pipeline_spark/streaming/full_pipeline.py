@@ -20,14 +20,15 @@ Epoch shape per micro-batch:
      registry's kernel SQL, functions/sentiment.kernel_join_sql) over ALL
      gated rows -- rejected docs keep their scores too, so the curated
      store stays fully explainable without a re-run.
-  5. LAND: curated rows (flags + sentiment struct) guarded by an
-     anti-join on the curated store's ids; pairs batch_id-stamped
-     (replay-dedupable downstream); index append (internally idempotent,
-     append_to_band_index's anti-join); doc-store append LAST -- the
-     probe-before-append ordering means a replayed epoch re-emits the
-     same pairs rather than missing any, and every write is individually
-     idempotent under replay (the dedup_stream delivery contract,
-     extended to the curated sink).
+  5. LAND, in this order: pairs batch_id-stamped (replay-dedupable
+     downstream; dedup_stream.land_pairs, right after the probe); curated
+     rows (flags + sentiment struct) guarded by an anti-join on the
+     curated store's ids (_log.landed_keys); index append (internally
+     idempotent, append_to_band_index's anti-join); doc-store append LAST
+     (dedup_stream.land_docs) -- the probe-before-append ordering means a
+     replayed epoch re-emits the same pairs rather than missing any, and
+     every write is individually idempotent under replay (the dedup_stream
+     delivery contract, extended to the curated sink).
 
 Per-epoch cost: the kept batch is tokenized, shingled and MinHash-signatured
 once (dedup.minhash_signatures); the probe, the in-batch self-join, the
@@ -52,9 +53,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import minhash_signatures
+from ._log import drain, landed_keys
 from .curation_stream import curation_gate
-from .dedup_stream import DOC_STREAM_SCHEMA, append_to_band_index, dedup_micro_batch
+from .dedup_stream import DOC_STREAM_SCHEMA, land_docs, land_pairs, recrawl_guard
 
 
 def curated_epoch(
@@ -68,29 +69,19 @@ def curated_epoch(
     threshold: float = 0.5,
 ) -> None:
     """One composed epoch (factored out so tests can drive it directly on a
-    batch frame -- foreachBatch hands a CLONED session, so all reads here
-    use `bs`)."""
+    batch frame; `bs` is the batch's session, _log.drain)."""
     from ..plans.pipeline import sentiment_enrich
 
-    batch = batch.dropDuplicates(["doc_id"]).filter(F.col("text").isNotNull())
     # like dedup_stream, the pipeline starts from a BOOTSTRAPPED corpus
     # snapshot + band index (possibly empty relations, but existing) -- so
     # the re-crawl guard reads unconditionally
-    seen = bs.read.parquet(corpus_path).select("doc_id")
-    batch = batch.join(seen, "doc_id", "left_anti").localCheckpoint(eager=True)
-    if not batch.take(1):
+    batch = recrawl_guard(bs, batch, corpus_path)
+    if batch is None:
         return
 
     gated = curation_gate(batch).localCheckpoint(eager=True)
     kept = gated.filter("kept").select("doc_id", "text")
-
-    shingled, banded = minhash_signatures(kept, "text", "doc_id")
-    pairs = dedup_micro_batch(bs, shingled, banded, index_table, corpus_path, threshold)
-    (
-        pairs.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("append")
-        .parquet(pairs_path)
-    )
+    banded = land_pairs(bs, batch_id, kept, index_table, corpus_path, pairs_path, threshold)
 
     scored = sentiment_enrich(gated).select(
         "doc_id",
@@ -107,22 +98,11 @@ def curated_epoch(
             F.col("textblob_polarity"),
         ).alias("sentiment"),
     )
-    # Path-absent (first epoch) is an FS existence check, not a swallowed
-    # exception: any real read error must propagate, or a replayed epoch
-    # would silently skip the idempotence anti-join and land duplicate
-    # curated rows (round-8 ADVICE fix). The explicit schema keeps a dir
-    # holding only a killed first append's _temporary/ files readable (as
-    # zero rows) instead of failing schema inference on every replay.
-    from ..sources.tables import _fs_for
-
-    fs, hpath = _fs_for(bs, curated_path)
-    if fs.exists(hpath):
-        landed = bs.read.schema("doc_id long").parquet(curated_path)
+    landed = landed_keys(bs, curated_path, "doc_id long")
+    if landed is not None:
         scored = scored.join(landed, "doc_id", "left_anti")
     scored.write.mode("append").parquet(curated_path)
-
-    append_to_band_index(bs, banded, index_table)
-    kept.write.mode("append").parquet(corpus_path)
+    land_docs(bs, kept, banded, index_table, corpus_path)
 
 
 def run_curated_ingest(
@@ -136,8 +116,7 @@ def run_curated_ingest(
     threshold: float = 0.5,
 ):
     """File-source composed ingest: json docs (doc_id, text) land in
-    `source_dir`; availableNow trigger drains what is present, then
-    stops."""
+    `source_dir`; each run drains what is present, then stops."""
     stream = spark.readStream.schema(DOC_STREAM_SCHEMA).json(source_dir)
 
     def epoch(batch: DataFrame, batch_id: int) -> None:
@@ -152,9 +131,4 @@ def run_curated_ingest(
             threshold,
         )
 
-    return (
-        stream.writeStream.foreachBatch(epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stream, checkpoint_dir, epoch)

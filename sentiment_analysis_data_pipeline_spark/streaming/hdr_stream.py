@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions import dialect as D
 from ..operators.sketch import HDR_SUB_BITS, hdr_cells, hdr_lower_sql
-from ._log import COMPACTED_STAMP, compact_log, guarded_append
+from ._log import compact_log, drain, guarded_append
 
 CELLS_SCHEMA = "segment string, idx bigint, cnt bigint, batch_id bigint"
 EVENT_STREAM_SCHEMA = "event_id long, event_type string, value double"
@@ -42,13 +42,7 @@ def append_batch_cells(
     foreachBatch retry after a successful write), land nothing."""
     # replay-idempotence + append/compact mutual exclusion live in
     # _log.guarded_append (round-9: the ingest-pause contract is mechanical)
-    guarded_append(
-        spark,
-        cells_path,
-        CELLS_SCHEMA,
-        batch_id,
-        hdr_cells(batch).withColumn("batch_id", F.lit(batch_id).cast("long")),
-    )
+    guarded_append(spark, cells_path, CELLS_SCHEMA, batch_id, hdr_cells(batch))
 
 
 def read_hist(spark: SparkSession, cells_path: str) -> DataFrame:
@@ -95,13 +89,7 @@ def compact_cells(spark: SparkSession, cells_path: str) -> None:
     bounded read-side work after many epochs. Crash-safe via the shared
     stage-then-atomic-rename swap (_log.compact_log); run only in an
     ingest pause (_log.py contract)."""
-    compact_log(
-        spark,
-        cells_path,
-        lambda: read_hist(spark, cells_path).withColumn(
-            "batch_id", F.lit(COMPACTED_STAMP).cast("long")
-        ),
-    )
+    compact_log(spark, cells_path, lambda: read_hist(spark, cells_path))
 
 
 def run_streaming_hdr(
@@ -112,19 +100,13 @@ def run_streaming_hdr(
 ):
     """File-source streaming histogram maintenance: json events land in
     `source_dir`; each epoch appends its histogram partial to
-    `cells_path`. availableNow trigger -- drains what is present, stops."""
+    `cells_path`."""
     stream = spark.readStream.schema(EVENT_STREAM_SCHEMA).json(source_dir)
 
     def epoch(batch: DataFrame, batch_id: int) -> None:
-        # foreachBatch hands the batch to a CLONED session; use it for reads
         append_batch_cells(batch.sparkSession, batch, cells_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stream, checkpoint_dir, epoch)
 
 
 __all__ = [

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from ._log import COMPACTED_STAMP, compact_log, guarded_append
+from ._log import compact_log, drain, guarded_append
 
 SKETCH_SCHEMA = "event_type string, sk binary, batch_id bigint"
 EVENT_STREAM_SCHEMA = "event_type string, user_id long"
@@ -46,13 +46,7 @@ def append_batch_sketches(
     log (a foreachBatch retry after a successful write), land nothing."""
     # replay-idempotence + append/compact mutual exclusion live in
     # _log.guarded_append (round-9: the ingest-pause contract is mechanical)
-    guarded_append(
-        spark,
-        log_path,
-        SKETCH_SCHEMA,
-        batch_id,
-        batch_sketches(batch).withColumn("batch_id", F.lit(batch_id).cast("long")),
-    )
+    guarded_append(spark, log_path, SKETCH_SCHEMA, batch_id, batch_sketches(batch))
 
 
 def read_estimates(spark: SparkSession, log_path: str) -> DataFrame:
@@ -95,7 +89,6 @@ def compact_sketches(spark: SparkSession, log_path: str) -> None:
             .parquet(log_path)
             .groupBy("event_type")
             .agg(F.expr("hll_union_agg(sk)").alias("sk"))
-            .withColumn("batch_id", F.lit(COMPACTED_STAMP).cast("long"))
         ),
     )
 
@@ -108,16 +101,10 @@ def run_streaming_hll(
 ):
     """File-source streaming distinct-count maintenance: json events land
     in `source_dir`; each epoch appends its per-segment sketch partials to
-    `log_path`. availableNow trigger -- drains what is present, stops."""
+    `log_path`."""
     stream = spark.readStream.schema(EVENT_STREAM_SCHEMA).json(source_dir)
 
     def epoch(batch: DataFrame, batch_id: int) -> None:
-        # foreachBatch hands the batch to a CLONED session; use it for reads
         append_batch_sketches(batch.sparkSession, batch, log_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stream, checkpoint_dir, epoch)

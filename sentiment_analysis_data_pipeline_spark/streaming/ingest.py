@@ -14,7 +14,9 @@ Reference behavior replaced here:
          disappears: the anti-join and append are one batch transaction per
          epoch.
   T1     5-minute producer cadence (scripts/start_producers.py:42-43)
-         -> trigger(processingTime="5 minutes"); tests use availableNow.
+         -> run_file_ingest(..., processing_time="5 minutes"); the default
+         availableNow trigger drains the backlog and stops (tests, and the
+         analog of the reference's scheduled incremental batch, T3).
   T3/T4  1-hour lookback that silently drops late data
          (dags/sentiment_analysis_dag.py:40-43) -> explicit watermark policy;
          the backlog anti-join actually FIXES the reference's late-data loss
@@ -29,28 +31,14 @@ Trigger.AvailableNow -- the two sources are interchangeable behind
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..schemas import ENVELOPE_SCHEMA
+from ._log import drain, landed_keys
 
 TOPIC_NEWS_RAW = "news-raw"  # scripts/create_topics.sh:13-19
-
-
-def _existing_keys_or_none(spark: SparkSession, path: str, *cols: str) -> DataFrame | None:
-    """Distinct key column(s) of a parquet sink, or None if the sink does not
-    exist yet. ONLY AnalysisException (missing path / empty dir with no
-    inferable schema -- the first-epoch cases) maps to None; any other read
-    failure (corrupt footer, permissions, transient FS error) PROPAGATES so
-    the checkpoint retries the batch. Swallowing those would silently disable
-    the anti-join dedup for the epoch and double-land rows, breaking the
-    unique-URL guarantee the sink exists to reproduce."""
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException:
-        return None
-    return df.select(*cols).distinct()
 
 
 def kafka_article_stream(
@@ -102,13 +90,6 @@ def _parse_envelopes(json_df: DataFrame) -> DataFrame:
     )
 
 
-def kafka_envelope_sink_options(brokers: str, topic: str) -> dict[str, str]:
-    """S3: producer-side writeStream options (acks etc. are broker-side
-    defaults; the reference's 3-retries/sync-send loop is replaced by the
-    checkpointed epoch)."""
-    return {"kafka.bootstrap.servers": brokers, "topic": topic}
-
-
 def delta_available(spark: SparkSession) -> bool:
     """True when Delta Lake is actually usable in this session: the python
     `delta` package imports AND the DeltaTable class is on the JVM classpath.
@@ -149,7 +130,9 @@ def merge_into_parquet(target_path: str, key: str = "url"):
     table, and a blind ``mode('overwrite').save`` on the first post-install
     epoch would destroy every previously-landed row. Such a sink therefore
     STAYS on the parquet anti-join path -- no data is ever overwritten; a
-    fresh Delta table is only created when the target is genuinely empty.
+    fresh Delta table is only created when the target path is absent -- a
+    dir holding only a killed append's ``_temporary/`` files counts as
+    present and takes the parquet append, which never overwrites.
     Converting an existing parquet sink to Delta is an explicit offline
     operation (``CONVERT TO DELTA``), not something an ingest epoch may do
     implicitly.
@@ -158,6 +141,7 @@ def merge_into_parquet(target_path: str, key: str = "url"):
     def do_merge(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         deduped = batch.dropDuplicates([key])
+        landed = landed_keys(spark, target_path, StructType([deduped.schema[key]]))
         if delta_available(spark):
             from delta.tables import DeltaTable
 
@@ -170,14 +154,13 @@ def merge_into_parquet(target_path: str, key: str = "url"):
                     .execute()
                 )
                 return
-            if _existing_keys_or_none(spark, target_path, key) is None:
-                # Genuinely empty target: create the Delta table.
+            if landed is None:
+                # Absent target: create the Delta table.
                 deduped.write.format("delta").mode("overwrite").save(target_path)
                 return
             # Non-Delta data present: fall through to the non-destructive
             # parquet anti-join append (see docstring, Upgrade safety).
-        existing = _existing_keys_or_none(spark, target_path, key)
-        fresh = deduped if existing is None else deduped.join(existing, on=key, how="left_anti")
+        fresh = deduped if landed is None else deduped.join(landed, on=key, how="left_anti")
         fresh.write.mode("append").parquet(target_path)
 
     return do_merge
@@ -188,39 +171,13 @@ def run_file_ingest(
     source_dir: str,
     target_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    processing_time: str = "5 minutes",
+    processing_time: str | None = None,
 ):
     """EP1+EP2 end-to-end: envelope stream -> validate -> MERGE sink.
-
-    available_now=True drains the backlog and stops (test/CI mode; also the
-    faithful analog of the reference's scheduled incremental batch, T3);
-    otherwise runs continuously on the reference's 5-minute cadence (T1).
-    """
+    `processing_time` as in _log.drain: the default drains the backlog and
+    stops (T3); "5 minutes" is the reference's cadence (T1)."""
     stream = file_article_stream(spark, source_dir)
-    writer = (
-        stream.writeStream.foreachBatch(merge_into_parquet(target_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
-
-
-def windowed_freshness(stream: DataFrame, ts_col: str = "fetched_at") -> DataFrame:
-    """T5/T6 streaming form: tumbling 1-hour ingest counts with a 1-hour
-    watermark -- the explicit version of the reference's silent 1-h lookback
-    (late rows beyond the watermark are dropped BY POLICY, not by accident).
-    """
-    return (
-        stream.withWatermark(ts_col, "1 hour")
-        .groupBy(F.window(F.col(ts_col), "1 hour").alias("w"))
-        .agg(F.count("*").alias("n_articles"))
-        .select(F.col("w.start").alias("window_start"), "n_articles")
-    )
+    return drain(stream, checkpoint_dir, merge_into_parquet(target_path), processing_time)
 
 
 def enrich_with_dim(stream: DataFrame, dim: DataFrame, key: str) -> DataFrame:
@@ -382,7 +339,7 @@ def run_sentiment_stream(
     def epoch(batch: DataFrame, batch_id: int) -> None:
         sp = batch.sparkSession
         deduped = batch.dropDuplicates(["url"])
-        seen = _existing_keys_or_none(sp, raw_path, "url")
+        seen = landed_keys(sp, raw_path, "url string")
         fresh = deduped if seen is None else deduped.join(seen, on="url", how="left_anti")
         # Truncate lineage NOW (eager localCheckpoint): the anti-join must be
         # evaluated against the sink's pre-append contents. persist() is NOT
@@ -412,17 +369,10 @@ def run_sentiment_stream(
             "url",
             F.struct("overall", "confidence", "vader_compound", "textblob_polarity").alias("sentiment"),
         )
-        landed = _existing_keys_or_none(sp, processed_path, "doc_id")
+        landed = landed_keys(sp, processed_path, "doc_id string")
         if landed is not None:
             processed = processed.join(landed, on="doc_id", how="left_anti")
         processed.write.mode("append").parquet(processed_path)
         fresh.write.mode("append").parquet(raw_path)
 
-    stream = file_article_stream(spark, source_dir)
-    return (
-        stream.writeStream.foreachBatch(epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(file_article_stream(spark, source_dir), checkpoint_dir, epoch)

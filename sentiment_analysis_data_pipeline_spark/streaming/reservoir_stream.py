@@ -22,11 +22,10 @@ k-row-per-stratum partial (LSM-ish maintenance).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..functions import dialect as D
 from ..operators.sketch import es_key_sql
-from ._log import COMPACTED_STAMP, compact_log, guarded_append
+from ._log import compact_log, drain, guarded_append
 
 RESERVOIR_K = 20  # sample size per stratum (matches queries.WS_K)
 SAMPLE_SCHEMA = (
@@ -72,13 +71,7 @@ def append_batch_sample(
     foreachBatch retry after a successful write), land nothing."""
     # replay-idempotence + append/compact mutual exclusion live in
     # _log.guarded_append (round-9: the ingest-pause contract is mechanical)
-    guarded_append(
-        spark,
-        sample_path,
-        SAMPLE_SCHEMA,
-        batch_id,
-        batch_sample(batch).withColumn("batch_id", F.lit(batch_id).cast("long")),
-    )
+    guarded_append(spark, sample_path, SAMPLE_SCHEMA, batch_id, batch_sample(batch))
 
 
 def read_sample(spark: SparkSession, sample_path: str, k: int = RESERVOIR_K) -> DataFrame:
@@ -105,13 +98,7 @@ def compact_samples(spark: SparkSession, sample_path: str) -> None:
     bounded read-side work after many epochs. Crash-safe via the shared
     stage-then-atomic-rename swap (_log.compact_log); run only in an
     ingest pause (_log.py contract)."""
-    compact_log(
-        spark,
-        sample_path,
-        lambda: read_sample(spark, sample_path).withColumn(
-            "batch_id", F.lit(COMPACTED_STAMP).cast("long")
-        ),
-    )
+    compact_log(spark, sample_path, lambda: read_sample(spark, sample_path))
 
 
 def run_streaming_reservoir(
@@ -122,19 +109,13 @@ def run_streaming_reservoir(
 ):
     """File-source streaming reservoir maintenance: json docs land in
     `source_dir`; each epoch appends its k-per-stratum partial to
-    `sample_path`. availableNow trigger -- drains what is present, stops."""
+    `sample_path`."""
     stream = spark.readStream.schema(DOC_STREAM_SCHEMA).json(source_dir)
 
     def epoch(batch: DataFrame, batch_id: int) -> None:
-        # foreachBatch hands the batch to a CLONED session; use it for reads
         append_batch_sample(batch.sparkSession, batch, sample_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stream, checkpoint_dir, epoch)
 
 
 __all__ = [

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketch import countmin_cells
-from ._log import COMPACTED_STAMP, compact_log, guarded_append
+from ._log import compact_log, drain, guarded_append
 
 CELLS_SCHEMA = "j bigint, col bigint, cnt bigint, batch_id bigint"
 DOC_STREAM_SCHEMA = "doc_id long, text string"
@@ -37,13 +37,7 @@ def append_batch_cells(
     foreachBatch retry after a successful write), land nothing."""
     # replay-idempotence + append/compact mutual exclusion live in
     # _log.guarded_append (round-9: the ingest-pause contract is mechanical)
-    guarded_append(
-        spark,
-        cells_path,
-        CELLS_SCHEMA,
-        batch_id,
-        countmin_cells(batch).withColumn("batch_id", F.lit(batch_id).cast("long")),
-    )
+    guarded_append(spark, cells_path, CELLS_SCHEMA, batch_id, countmin_cells(batch))
 
 
 def read_sketch(spark: SparkSession, cells_path: str) -> DataFrame:
@@ -61,13 +55,7 @@ def compact_cells(spark: SparkSession, cells_path: str) -> None:
     bounded read-side work after many epochs. Crash-safe via the shared
     stage-then-atomic-rename swap (_log.compact_log); run only in an
     ingest pause -- the contract stated in _log.py."""
-    compact_log(
-        spark,
-        cells_path,
-        lambda: read_sketch(spark, cells_path).withColumn(
-            "batch_id", F.lit(COMPACTED_STAMP).cast("long")
-        ),
-    )
+    compact_log(spark, cells_path, lambda: read_sketch(spark, cells_path))
 
 
 def run_streaming_countmin(
@@ -77,17 +65,10 @@ def run_streaming_countmin(
     checkpoint_dir: str,
 ):
     """File-source streaming sketch maintenance: json docs land in
-    `source_dir`; each epoch appends its sketch partial to `cells_path`.
-    availableNow trigger -- drains what is present, then stops."""
+    `source_dir`; each epoch appends its sketch partial to `cells_path`."""
     stream = spark.readStream.schema(DOC_STREAM_SCHEMA).json(source_dir)
 
     def epoch(batch: DataFrame, batch_id: int) -> None:
-        # foreachBatch hands the batch to a CLONED session; use it for reads
         append_batch_cells(batch.sparkSession, batch, cells_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stream, checkpoint_dir, epoch)

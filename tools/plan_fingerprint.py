@@ -17,9 +17,15 @@ projection collapse), and those ids come from one JVM-wide counter. So
 before each query the tool drops the session's temp views and read memo
 and sets that counter to a fixed base for the query (its registry position
 times a stride no query draws through). A query then hashes the same
-whatever ran before it in the process. Plans still depend on the warehouse:
-a constructor that builds a stamped index draws more ids than one that
-reuses it, so compare runs whose warehouses hold the same indexes.
+whatever ran before it in the process.
+
+Nor does it depend on the warehouse. A constructor that builds a stamped
+index (sources.tables.ensure_stamped_table) draws more ids than one that
+finds it registered in the session, and one that registers a copy a
+previous process left in the warehouse draws a few more than that. So
+when a constructor ensures a stamped index, the tool re-pins and hashes a
+second call, which finds every index it needs registered: a fresh and a
+warm warehouse hash the same.
 
 Usage: python tools/plan_fingerprint.py sf_dir [query_name ...]
 """
@@ -61,8 +67,9 @@ ID_STRIDE = 1 << 36
 
 def expr_id_pinner(spark: SparkSession) -> Callable[[int], None]:
     """pin(base): isolate the session from earlier queries (temp views, the
-    engine's parquet read memo) and set Catalyst's expression-id counter
-    (NamedExpression.curId, a private AtomicLong) to `base`. The isolation
+    catalog's resolved-table cache, the engine's parquet read memo) and set
+    Catalyst's expression-id counter (NamedExpression.curId, a private
+    AtomicLong) to `base`. The isolation
     matters when a base is used twice (one query fingerprinted again): ids
     then repeat, and no plan that holds the earlier ones may stay
     reachable. The AtomicLong cannot cross py4j as an object (it arrives
@@ -85,13 +92,74 @@ def expr_id_pinner(spark: SparkSession) -> Callable[[int], None]:
     )
 
     def pin(base: int) -> None:
-        spark._jsparkSession.sessionState().catalog().clearTempTables()
+        catalog = spark._jsparkSession.sessionState().catalog()
+        catalog.clearTempTables()
+        catalog.invalidateAllCachedTables()
         spark.__dict__.pop("_graft_read_cache", None)
         args = gw.new_array(jvm.java.lang.Object, 1)
         args[0] = base
         handle.invokeWithArguments(args)
 
     return pin
+
+
+class Fingerprinter:
+    """fp(fn, base) -> the sha256 of query constructor `fn`'s plans over
+    `sf_dir` (module docstring), its expression ids pinned at `base`.
+
+    A context manager: inside it, DataFrame.localCheckpoint records each
+    checkpointed relation's plan in `captured` and
+    sources.tables.ensure_stamped_table records each table it ensures in
+    `ensured`; leaving it restores both."""
+
+    def __init__(self, spark: SparkSession, sf_dir: str) -> None:
+        self.spark = spark
+        self.sf_dir = sf_dir
+        self.pin = expr_id_pinner(spark)
+        self.captured: list[str] = []
+        self.ensured: list[str] = []
+
+    def __enter__(self) -> "Fingerprinter":
+        from sentiment_analysis_data_pipeline_spark.sources import tables
+
+        # the concrete class (pyspark.sql.classic.dataframe.DataFrame in
+        # Spark 4 classic mode) overrides the abstract DataFrame's method:
+        # patch that one
+        self._cls = type(self.spark.range(0))
+        self._originals = checkpoint, ensure = (
+            self._cls.localCheckpoint,
+            tables.ensure_stamped_table,
+        )
+
+        def capturing(df, *a, **kw):
+            self.captured.append(optimized_plan(df))
+            return checkpoint(df, *a, **kw)
+
+        def ensuring(spark, table, *a, **kw):
+            self.ensured.append(table)
+            return ensure(spark, table, *a, **kw)
+
+        self._cls.localCheckpoint, tables.ensure_stamped_table = capturing, ensuring
+        return self
+
+    def __exit__(self, *exc) -> None:
+        from sentiment_analysis_data_pipeline_spark.sources import tables
+
+        self._cls.localCheckpoint, tables.ensure_stamped_table = self._originals
+
+    def __call__(self, fn: Callable, base: int) -> str:
+        for _ in range(2):
+            self.captured.clear()
+            self.ensured.clear()
+            self.pin(base)
+            final = optimized_plan(fn(self.spark, self.sf_dir))
+            if not self.ensured:
+                break
+        h = hashlib.sha256()
+        for plan in [*self.captured, final]:
+            h.update(plan.encode())
+            h.update(b"\n--\n")
+        return h.hexdigest()
 
 
 def main() -> int:
@@ -104,34 +172,15 @@ def main() -> int:
     spark = get_spark("plan-fingerprint")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # the concrete class (pyspark.sql.classic.dataframe.DataFrame in Spark 4
-    # classic mode) overrides the abstract DataFrame's method: patch that one
-    captured: list[str] = []
-    cls = type(spark.range(0))
-    original = cls.localCheckpoint
-
-    def capturing(self, *a, **kw):
-        captured.append(optimized_plan(self))
-        return original(self, *a, **kw)
-
-    cls.localCheckpoint = capturing
-
     from sentiment_analysis_data_pipeline_spark.queries import REGISTRY
 
-    pin = expr_id_pinner(spark)
     out: dict[str, str] = {}
-    for pos, (name, (fn, _)) in enumerate(REGISTRY.items(), 1):
-        if only and name not in only:
-            continue
-        captured.clear()
-        pin(pos * ID_STRIDE)
-        final = optimized_plan(fn(spark, sf_dir))
-        h = hashlib.sha256()
-        for plan in [*captured, final]:
-            h.update(plan.encode())
-            h.update(b"\n--\n")
-        out[name] = h.hexdigest()
-        print(f"{name} {len(captured)} {out[name][:12]}", file=sys.stderr, flush=True)
+    with Fingerprinter(spark, sf_dir) as fp:
+        for pos, (name, (fn, _)) in enumerate(REGISTRY.items(), 1):
+            if only and name not in only:
+                continue
+            out[name] = fp(fn, pos * ID_STRIDE)
+            print(f"{name} {len(fp.captured)} {out[name][:12]}", file=sys.stderr, flush=True)
     print(json.dumps(out, sort_keys=True))
     return 0
 
