@@ -57,9 +57,8 @@ bit-identical between Spark and DuckDB.
 The engine's one Spark implementation is `kernel_join_sql`: the registry
 queries, their DuckDB oracles and plans/pipeline.sentiment_enrich (the
 streaming epochs and the processed table) all run its SQL. `_py_kernel`
-is an independent Python reference of the same arithmetic, and
-`pandas_kernel` applies it to a pandas Series; tests compare the SQL with
-them. No engine path calls either.
+is an independent Python reference of the same arithmetic; tests compare
+the SQL with it. No engine path calls it.
 """
 
 from __future__ import annotations
@@ -479,11 +478,6 @@ IDIOMS_3: tuple[tuple[str, str, str, float], ...] = tuple(
     if len(p.split()) == 3
 )
 assert len(IDIOMS_2) + len(IDIOMS_3) == len(IDIOM_SIXTEENTHS)
-
-
-def avg_score(vader_col: str = "vader_compound", tb_col: str = "textblob_polarity") -> str:
-    """F8: (vader + textblob) / 2 -- identical text in both dialects."""
-    return f"(({vader_col} + {tb_col}) / 2.0)"
 
 
 def classify(avg_col: str) -> str:
@@ -1083,8 +1077,8 @@ def real_libraries_available() -> bool:
 
 
 def pandas_kernel_library(series: pd.Series) -> pd.DataFrame:
-    """The SAME batch contract as `pandas_kernel`, backed by the REAL
-    libraries (vaderSentiment SentimentIntensityAnalyzer.polarity_scores
+    """Batch kernel: text series -> DataFrame[vader_compound,
+    textblob_polarity], backed by the REAL libraries (vaderSentiment SentimentIntensityAnalyzer.polarity_scores
     compound + TextBlob sentiment.polarity -- exactly
     dags/sentiment_analysis_dag.py:59,72-73). Raises ImportError where the
     libs are absent (this container).
@@ -1118,19 +1112,3 @@ def pandas_kernel_library(series: pd.Series) -> pd.DataFrame:
         }
     )
 
-
-def pandas_kernel(series: pd.Series) -> pd.DataFrame:
-    """Batch kernel: text series -> DataFrame[vader_compound, textblob_polarity],
-    `_py_kernel` per row. The batch contract a pandas_udf would wrap; no
-    engine path does. Tests use it as the reference for the SQL kernel and
-    compare it with `pandas_kernel_library` where the libraries exist. The
-    lexicon is module-level state, built once per process, not per row
-    (SURVEY.md §2.9 U1 note).
-    """
-    out = series.map(_py_kernel)
-    return pd.DataFrame(
-        {
-            "vader_compound": out.map(lambda t: t[0]),
-            "textblob_polarity": out.map(lambda t: t[1]),
-        }
-    )

@@ -4,15 +4,15 @@ fold for the dot product so Spark's aggregate() and DuckDB's list_reduce()
 produce bit-identical doubles.
 
 North-star similarity-search ops (SURVEY.md §4 note, §7 phase 7):
-brute-force cosine top-k is the baseline; the LSH-bucketed variant
-(random-hyperplane signs -> bucket equi-join) is the 100 TB scale path --
-candidates meet only within a bucket, turning O(N*Q) into
-O(N*Q / 2^planes) with a broadcast-able plane matrix.
+brute-force cosine top-k is the baseline (operators/similarity.py); the
+registry's banded-LSH, IVF and PQ rows are the 100 TB scale paths.
 """
 
 from __future__ import annotations
 
 from . import dialect as D
+
+EMB_DIM = 64  # width of the corpus `embedding` column
 
 
 def to_double_array(d: str, expr: str) -> str:
@@ -81,26 +81,6 @@ def cosine(d: str, a: str, b: str, dim: int) -> str:
         f"(case when {na} = 0.0 or {nb} = 0.0 then 0.0 "
         f"else {dot(d, a, b, dim)} / ({na} * {nb}) end)"
     )
-
-
-def hyperplane_signs(d: str, a: str, dim: int, planes: int) -> str:
-    """Random-hyperplane LSH bucket key (Charikar 2002 SimHash for cosine):
-    sign pattern of dot(v, h_p) for `planes` pseudo-random hyperplanes.
-
-    Hyperplanes are deterministic functions of (plane, dim index): the md5-hex
-    trick maps each (p, i) to a value in [-0.5, 0.5) via the first
-    HEX digits -- reproducible in both engines, no RNG, no driver-side state.
-    """
-    comps = []
-    for p in range(planes):
-        if d == D.SPARK:
-            h = f"transform(sequence(1, {dim}), i -> (instr('0123456789abcdef', substring(md5(concat('h{p}_', cast(i as string))), 1, 1)) - 1) / 16.0 - 0.5)"
-            s = f"aggregate(zip_with({a}, {h}, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-        else:
-            h = f"list_transform(range(1, {dim + 1}), i -> (strpos('0123456789abcdef', substring(md5(concat('h{p}_', cast(i as string))), 1, 1)) - 1) / 16.0 - 0.5)"
-            s = f"list_reduce(list_transform(range(1, {dim + 1}), i -> ({a})[i] * ({h})[i]), (acc, x) -> acc + x)"
-        comps.append(f"case when ({s}) >= 0.0 then '1' else '0' end")
-    return f"concat({', '.join(comps)})"
 
 
 def l2sq_literal(d: str, a: str, weights: list[float]) -> str:

@@ -1,4 +1,4 @@
-from . import aggregates, dedup, multimodal, search, similarity, skew, validate, window_ops
+from . import aggregates, dedup, multimodal, search, similarity, skew, validate
 
 __all__ = [
     "aggregates",
@@ -8,5 +8,4 @@ __all__ = [
     "similarity",
     "skew",
     "validate",
-    "window_ops",
 ]

@@ -12,10 +12,14 @@ This module persists the two IVF relations the way a deployment would:
   in the storage layout, so each query reads ~n_probe/nlist of the corpus
   (asserted against PartitionFilters in tests/test_ann_index.py).
 
-Centroids are the label-column means (the same deterministic floor-quantized
-exact codebook as `ivf_ann` -- a k-means stand-in whose cells are reproducible at
-any parallelism); per-vector norms are computed once at BUILD time and
-stored, so queries never touch raw-vector math beyond one dot per candidate.
+Both relations come from the registry's own SQL (`queries._ivf_assign_ctes`,
+the CTEs `ivf_ann` and `ivf_cell_balance` run and the DuckDB oracle checks):
+the codebook is its label-column means (deterministic floor-quantized exact
+centroids -- a k-means stand-in whose cells are reproducible at any
+parallelism), and the assignment is its max-cosine cell, computed against
+the persisted codebook so appends see the frozen one. Per-vector norms are
+computed once at BUILD time and stored, so queries never touch raw-vector
+math beyond one dot per candidate.
 """
 
 from __future__ import annotations
@@ -23,67 +27,37 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import queries as Q
 from ..functions import dialect as D
 from ..functions import vectors as V
+from ..functions.vectors import EMB_DIM
 
-EMB_DIM = 64
+# The registry's IVF assignment CTEs of the `{emb}` argument against the
+# persisted codebook `{centroids}` (read in as its centv0(label, cv)):
+# assign(vec_id, v, nv, cell).
+FROZEN_ASSIGN_CTES = Q._ivf_assign_ctes(
+    D.SPARK, "centv0 AS (SELECT cell AS label, cv FROM {centroids})", rel="{emb}"
+)
 
 
-def write_centroids(spark: SparkSession, emb: DataFrame, index_dir: str) -> None:
-    """Write the coarse codebook (`centroids.parquet`, nlist rows) for an
-    embeddings DataFrame (vec_id, label, embedding array<float>) -- shared
+def write_centroids(spark: SparkSession, emb: DataFrame, index_dir: str) -> DataFrame:
+    """Write the coarse codebook (`centroids.parquet`, nlist rows) of an
+    embeddings DataFrame (vec_id, label, embedding array<float>) -- the
+    registry's codebook CTEs -- and return it read back from disk. Shared
     by the IVF build and the IVF-PQ build (pq_index.py)."""
-    emb.createOrReplaceTempView("_ivf_build_emb")
-    v = V.to_double_array(D.SPARK, "embedding")
     cent = spark.sql(
-        f"""
-        WITH emb AS (SELECT vec_id, label, {v} AS v FROM _ivf_build_emb),
-        ex AS (SELECT label, posexplode(v) AS (idx, x) FROM emb),
-        cent AS (
-            SELECT label, idx,
-                   cast(cast(sum(cast(floor(x * 1000000000.0) as decimal(38,0))) as double) / (count(*) * 1000000000.0) as double) AS c
-            FROM ex GROUP BY label, idx
-        )
-        SELECT label AS cell,
-               transform(array_sort(collect_list(struct(idx, c))), s -> s.c) AS cv
-        FROM cent GROUP BY label
-        """
+        f"WITH {Q._ivf_assign_ctes(D.SPARK, rel='{emb}')}\n"
+        "SELECT label AS cell, cv FROM centv0",
+        emb=emb,
     )
     cent.coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/centroids.parquet")
+    return spark.read.parquet(f"{index_dir}/centroids.parquet")
 
 
 def build_ivf_index(spark: SparkSession, emb: DataFrame, index_dir: str) -> None:
     """Build the persisted index from an embeddings DataFrame
     (vec_id, label, embedding array<float>)."""
-    write_centroids(spark, emb, index_dir)
-    assign = _assign_to_cells(spark, index_dir, "_ivf_build_emb")
-    assign.write.mode("overwrite").partitionBy("cell").parquet(f"{index_dir}/assignments")
-
-
-def _assign_to_cells(spark: SparkSession, index_dir: str, emb_view: str) -> DataFrame:
-    """(vec_id, v, nv, cell) nearest-centroid assignment of an embeddings
-    view against the persisted codebook (broadcast cross join: nlist rows)."""
-    v = V.to_double_array(D.SPARK, "embedding")
-    nv = V.norm(D.SPARK, "v", EMB_DIM)
-    ncv = V.norm(D.SPARK, "cv", EMB_DIM)
-    dot = V.dot(D.SPARK, "e.v", "c.cv", EMB_DIM)
-    spark.read.parquet(f"{index_dir}/centroids.parquet").createOrReplaceTempView("_ivf_cent")
-    return spark.sql(
-        f"""
-        WITH emb0 AS (SELECT vec_id, {v} AS v FROM {emb_view}),
-        emb AS (SELECT vec_id, v, {nv} AS nv FROM emb0),
-        cent AS (SELECT cell, cv, {ncv} AS ncv FROM _ivf_cent),
-        assign0 AS (
-            SELECT e.vec_id, e.v, e.nv, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY (case when e.nv = 0.0 or c.ncv = 0.0 then 0.0
-                                                else {dot} / (e.nv * c.ncv) end) DESC,
-                                      c.cell ASC) AS rn
-            FROM emb e CROSS JOIN cent c
-        )
-        SELECT vec_id, v, nv, cell FROM assign0 WHERE rn = 1
-        """
-    )
+    _write_assignments(spark, emb, write_centroids(spark, emb, index_dir), index_dir, "overwrite")
 
 
 def append_to_ivf_index(spark: SparkSession, new_emb: DataFrame, index_dir: str) -> None:
@@ -98,9 +72,21 @@ def append_to_ivf_index(spark: SparkSession, new_emb: DataFrame, index_dir: str)
     `add` after `train`): drift is handled by periodic re-training as a
     separate snapshot build, not per-append. Appended vec_ids are the
     caller's responsibility to keep unique (upstream exact/near dedup)."""
-    new_emb.createOrReplaceTempView("_ivf_append_emb")
-    assign = _assign_to_cells(spark, index_dir, "_ivf_append_emb")
-    assign.write.mode("append").partitionBy("cell").parquet(f"{index_dir}/assignments")
+    cents = spark.read.parquet(f"{index_dir}/centroids.parquet")
+    _write_assignments(spark, new_emb, cents, index_dir, "append")
+
+
+def _write_assignments(
+    spark: SparkSession, emb: DataFrame, cents: DataFrame, index_dir: str, mode: str
+) -> None:
+    """(vec_id, v, nv, cell) nearest-centroid assignment of `emb` against
+    the persisted codebook `cents`, written partitionBy(cell)."""
+    assign = spark.sql(
+        f"WITH {FROZEN_ASSIGN_CTES}\nSELECT vec_id, v, nv, cell FROM assign",
+        emb=emb,
+        centroids=cents,
+    )
+    assign.write.mode(mode).partitionBy("cell").parquet(f"{index_dir}/assignments")
 
 
 def _probe_cells(spark: SparkSession, index_dir: str, query_vec: list[float], n_probe: int) -> list[str]:
@@ -132,7 +118,6 @@ def ivf_query(
     directories are read."""
     probes = _probe_cells(spark, index_dir, query_vec, n_probe)
     assign = spark.read.parquet(f"{index_dir}/assignments").where(F.col("cell").isin(probes))
-    assign.createOrReplaceTempView("_ivf_probe")
     qlit = "array(" + ", ".join(repr(float(x)) for x in query_vec) + ")"
     dot = V.dot(D.SPARK, "a.v", "q.qv", EMB_DIM)
     return spark.sql(
@@ -143,10 +128,11 @@ def ivf_query(
             SELECT a.vec_id,
                    (case when a.nv = 0.0 or q.qnv = 0.0 then 0.0
                          else {dot} / (a.nv * q.qnv) end) AS cosine
-            FROM _ivf_probe a CROSS JOIN qn q
+            FROM {{probe}} a CROSS JOIN qn q
         )
         SELECT vec_id, cosine,
                cast(row_number() OVER (ORDER BY cosine DESC, vec_id ASC) as bigint) AS rnk
         FROM cand ORDER BY rnk LIMIT {k}
-        """
+        """,
+        probe=assign,
     )

@@ -36,9 +36,8 @@ from ..functions import hashing as H
 from ..functions import text as TX
 from ..functions import vectors as V
 from ..functions import dialect as D
+from ..functions.vectors import EMB_DIM
 from ..sources.tables import write_bucketed_atomic
-
-EMB_DIM = 64
 
 # Winnowing parameters (shared with queries.py's oracle builders).
 WINNOW_K = 4  # token k-gram length
@@ -107,25 +106,12 @@ def embedding_band_keys(spark: SparkSession, emb: DataFrame) -> DataFrame:
     return spark.sql(embedding_band_sql("_edx_emb"))
 
 
-def build_embedding_band_index(
-    spark: SparkSession,
-    emb: DataFrame,
-    table: str = "emb_band_idx",
-    n_buckets: int = 8,
-) -> None:
-    """Write the embedding-LSH signature relation as a bucketed table keyed
-    by the combined band key: candidate generation against it is a
-    zero-Exchange self-join (the durable twin of q_embedding_dedup_pairs's
-    in-session localCheckpoint)."""
-    write_bucketed_atomic(
-        embedding_band_relation(spark, emb), table, "band_key", n_buckets
-    )
-
-
 def embedding_band_relation(spark: SparkSession, emb: DataFrame) -> DataFrame:
-    """The band-key signature relation build_embedding_band_index persists
-    (exposed separately so snapshot-stamped ensure paths can land it via
-    their own atomic write)."""
+    """The embedding-LSH signature relation (vec_id, band_key) that the
+    persisted index stores: `write_bucketed_atomic(rel, table, "band_key",
+    n)` lands it, and candidate generation against it
+    (embedding_candidate_pairs) is a zero-Exchange self-join -- the durable
+    twin of q_embedding_dedup_pairs's in-session localCheckpoint."""
     return embedding_band_keys(spark, emb).select(
         "vec_id", F.concat_ws(":", "band", "bkey").alias("band_key")
     )
@@ -216,31 +202,14 @@ def winnow_pairs_over(fp_relation: str) -> str:
     """
 
 
-def build_winnow_index(
-    spark: SparkSession,
-    docs: DataFrame,
-    table: str = "winnow_fp_idx",
-    n_buckets: int = 8,
-) -> None:
-    """Write the winnowing fingerprint relation as a bucketed table keyed by
-    the fingerprint hash: the df-cap aggregation and both pair-join sides
-    then read co-located bucket files with no Exchange."""
-    write_bucketed_atomic(winnow_fp_relation(spark, docs), table, "mh", n_buckets)
-
-
 def winnow_fp_relation(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """The winnowing fingerprint relation build_winnow_index persists."""
+    """The winnowing fingerprint relation (doc_id, mh) that the persisted
+    index stores: `write_bucketed_atomic(rel, table, "mh", n)` lands it, and
+    `winnow_pairs_over(table)` then runs the df-cap GROUP BY mh and both mh
+    equi-joins Exchange-free over the bucketed files; the only shuffle left
+    is the final per-pair aggregation."""
     docs.createOrReplaceTempView("_wdx_docs")
     return spark.sql(winnow_fp_sql("_wdx_docs"))
-
-
-def winnow_candidate_pairs(
-    spark: SparkSession, table: str = "winnow_fp_idx"
-) -> DataFrame:
-    """Copied-passage pairs from the persisted fingerprint table. The df-cap
-    GROUP BY mh and the mh equi-joins are Exchange-free over the bucketed
-    table; the only shuffle is the final per-pair aggregation."""
-    return spark.sql(winnow_pairs_over(table))
 
 
 def new_batch_candidates(

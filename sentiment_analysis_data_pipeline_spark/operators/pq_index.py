@@ -25,6 +25,11 @@ DRIVER-side from the collected (tiny) codebooks and broadcast-joined in.
 All dot products are floor-quantized to 2^-30 fixed point (the pq_ann
 discipline), so scores are deterministic at any parallelism.
 
+Training and encoding are the registry's `pq_ann` SQL
+(`queries._pq_train_sql` and `queries._pq_enc_sql`) run over the residual
+components instead of the raw ones; this module only adds the residual
+step and packs each vector's codes into one array.
+
 Like the IVF index, both codebooks are frozen after training (FAISS
 add-after-train); `append_to_ivfpq_index` encodes new vectors against the
 frozen codebooks and appends into their cell partitions without touching
@@ -38,71 +43,16 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import queries as Q
 from ..functions import dialect as D
-from ..functions import vectors as V
-from .ann_index import EMB_DIM, _assign_to_cells, _probe_cells, write_centroids
+from ..queries import PQ_SCALE, PQ_SUBDIM
+from .ann_index import FROZEN_ASSIGN_CTES, _probe_cells, write_centroids
 
-PQ_M = 16
-PQ_SUBDIM = 4
-PQ_K = 16
-PQ_SCALE = 1073741824  # 2^30
+# The persisted PQ codebook as the registry's `cent` relation.
+_FROZEN_PQ_CODEBOOK = "SELECT m, code, j, c FROM {pq_codebook}"
 
-
-def _residuals(spark: SparkSession, index_dir: str, emb_view: str) -> DataFrame:
-    """(vec_id, nv, cell, rv) residual vectors of an embeddings view against
-    the persisted coarse codebook."""
-    assign = _assign_to_cells(spark, index_dir, emb_view)
-    assign.createOrReplaceTempView("_pq_assign")
-    spark.read.parquet(f"{index_dir}/centroids.parquet").createOrReplaceTempView(
-        "_pq_cent_coarse"
-    )
-    return spark.sql(
-        """
-        SELECT a.vec_id, a.nv, a.cell,
-               zip_with(a.v, c.cv, (x, y) -> x - y) AS rv
-        FROM _pq_assign a JOIN _pq_cent_coarse c ON c.cell = a.cell
-        """
-    )
-
-
-def _flat_residuals_sql() -> str:
-    """(vec_id, nv, cell, m, j, x) flat residual components from the
-    _pq_res view."""
-    m = D.int_div(D.SPARK, "idx", str(PQ_SUBDIM))
-    return f"""
-        SELECT vec_id, nv, cell, cast({m} as bigint) AS m,
-               cast(idx % {PQ_SUBDIM} as bigint) AS j, x
-        FROM (SELECT vec_id, nv, cell, posexplode(rv) AS (idx, x) FROM _pq_res)
-    """
-
-
-def _encode_codes(spark: SparkSession, index_dir: str) -> DataFrame:
-    """(vec_id, nv, cell, codes array<int>) nearest-residual-centroid codes
-    of the _pq_res view against the persisted PQ codebook: quantized-L2
-    argmin per (vector, subspace), ties on code ASC -- the pq_ann encode
-    discipline (fixed-point BIGINT distances, order-free)."""
-    spark.read.parquet(f"{index_dir}/pq_codebook.parquet").createOrReplaceTempView(
-        "_pq_cb"
-    )
-    return spark.sql(
-        f"""
-        WITH vx AS ({_flat_residuals_sql()}),
-        enc0 AS (
-            SELECT vx.vec_id, vx.m, cb.code,
-                   cast(sum(cast(floor((vx.x - cb.c) * (vx.x - cb.c)
-                                       * {PQ_SCALE}.0) as bigint)) as bigint)
-                       AS qdist
-            FROM vx JOIN _pq_cb cb ON cb.m = vx.m AND cb.j = vx.j
-            GROUP BY vx.vec_id, vx.m, cb.code
-        ),
-        enc AS (
-            SELECT vec_id, m, code FROM (
-                SELECT vec_id, m, code,
-                       row_number() OVER (PARTITION BY vec_id, m
-                                          ORDER BY qdist ASC, code ASC) AS rn
-                FROM enc0
-            ) r WHERE rn = 1
-        ),
+# One row per vector: the argmin codes of its subspaces, in m order.
+_PACK_CODES = """,
         packed AS (
             SELECT vec_id,
                    transform(array_sort(collect_list(struct(m, code))),
@@ -110,59 +60,61 @@ def _encode_codes(spark: SparkSession, index_dir: str) -> DataFrame:
             FROM enc GROUP BY vec_id
         )
         SELECT r.vec_id, r.nv, r.cell, p.codes
-        FROM (SELECT DISTINCT vec_id, nv, cell FROM _pq_res) r
-        JOIN packed p ON p.vec_id = r.vec_id
-        """
+        FROM res r JOIN packed p ON p.vec_id = r.vec_id"""
+
+
+# CTE text ending in vx(vec_id, m, j, x): the residuals (v - coarse
+# centroid) of the `{emb}` argument against the persisted `{centroids}`, as
+# res(vec_id, nv, cell, v), flattened per subspace by the registry's
+# _pq_vx_ctes.
+_RESIDUAL_VX = f"""{FROZEN_ASSIGN_CTES},
+        res AS (
+            SELECT a.vec_id, a.nv, a.cell,
+                   zip_with(a.v, c.cv, (x, y) -> x - y) AS v
+            FROM assign a JOIN centv0 c ON c.label = a.cell
+        ),
+        {Q._pq_vx_ctes(D.SPARK, "res")}"""
+
+
+def _write_codes(
+    spark: SparkSession, emb: DataFrame, index_dir: str, cents: DataFrame, mode: str
+) -> None:
+    """(vec_id, nv, cell, codes array<int>) of `emb`'s residuals, encoded
+    by the registry's nearest-code encoder (`queries._pq_enc_sql`) against
+    the persisted PQ codebook, written partitionBy(cell)."""
+    codes = spark.sql(
+        Q._pq_enc_sql(_RESIDUAL_VX, _FROZEN_PQ_CODEBOOK, _PACK_CODES),
+        emb=emb,
+        centroids=cents,
+        pq_codebook=spark.read.parquet(f"{index_dir}/pq_codebook.parquet"),
     )
+    codes.write.mode(mode).partitionBy("cell").parquet(f"{index_dir}/codes")
 
 
 def build_ivfpq_index(spark: SparkSession, emb: DataFrame, index_dir: str) -> None:
     """Train coarse + residual-PQ codebooks and encode the corpus.
 
-    PQ training uses the sign-orthant init (partition each residual
-    subspace by the sign pattern of its first 4 components -- the
-    hyperplane-LSH orthant rule) refined by one decimal-exact Lloyd step,
-    so the build replays identically at any parallelism. Orthant init
-    matters doubly for RESIDUALS: they are near-zero-mean by construction,
-    so any random grouping averages every centroid to ~0 and the
-    reconstruction carries no signal (measured: self-query approx-cosine
-    0.14 under md5-random groups vs 0.70 under orthants at 16x4-dim
-    subspaces)."""
-    write_centroids(spark, emb, index_dir)
-    res = _residuals(spark, index_dir, "_ivf_build_emb")
-    res.createOrReplaceTempView("_pq_res")
-    sign_bits = (
-        "sum(case when j = 0 and x > 0 then 1 when j = 1 and x > 0 then 2"
-        " when j = 2 and x > 0 then 4 when j = 3 and x > 0 then 8 else 0 end)"
-    )
-    cb = spark.sql(
-        f"""
-        WITH vx AS ({_flat_residuals_sql()}),
-        grp AS (
-            SELECT vec_id, m, cast({sign_bits} as bigint) AS g
-            FROM vx GROUP BY vec_id, m
-        )
-        SELECT vx.m, g.g AS code, vx.j,
-               cast(cast(sum(cast(floor(vx.x * 1000000000.0) as decimal(38,0)))
-                         as double) / (count(*) * 1000000000.0) as double) AS c
-        FROM vx JOIN grp g ON g.vec_id = vx.vec_id AND g.m = vx.m
-        GROUP BY vx.m, g.g, vx.j
-        """
-    )
+    PQ training is the registry's `queries._pq_train_sql` run over the
+    residuals: sign-orthant init (partition each residual subspace by the
+    sign pattern of its 4 components -- the hyperplane-LSH orthant rule)
+    refined by one decimal-exact Lloyd step, so the build replays
+    identically at any parallelism. Orthant init matters doubly for
+    RESIDUALS: they are near-zero-mean by construction, so any random
+    grouping averages every centroid to ~0 and the reconstruction carries
+    no signal (measured: self-query approx-cosine 0.14 under md5-random
+    groups vs 0.70 under orthants at 16x4-dim subspaces)."""
+    cents = write_centroids(spark, emb, index_dir)
+    cb = spark.sql(Q._pq_train_sql(_RESIDUAL_VX), emb=emb, centroids=cents)
     cb.coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/pq_codebook.parquet")
-    codes = _encode_codes(spark, index_dir)
-    codes.write.mode("overwrite").partitionBy("cell").parquet(f"{index_dir}/codes")
+    _write_codes(spark, emb, index_dir, cents, "overwrite")
 
 
 def append_to_ivfpq_index(spark: SparkSession, new_emb: DataFrame, index_dir: str) -> None:
     """Encode NEW vectors against the FROZEN codebooks and append into
     their cell partitions -- the historical corpus is never re-read or
     re-encoded (FAISS add-after-train; the append_to_ivf_index contract)."""
-    new_emb.createOrReplaceTempView("_pq_append_emb")
-    res = _residuals(spark, index_dir, "_pq_append_emb")
-    res.createOrReplaceTempView("_pq_res")
-    codes = _encode_codes(spark, index_dir)
-    codes.write.mode("append").partitionBy("cell").parquet(f"{index_dir}/codes")
+    cents = spark.read.parquet(f"{index_dir}/centroids.parquet")
+    _write_codes(spark, new_emb, index_dir, cents, "append")
 
 
 def _query_luts(
@@ -212,23 +164,16 @@ def ivfpq_query(
     probes = _probe_cells(spark, index_dir, query_vec, n_probe)
     qn = math.sqrt(sum(x * x for x in query_vec))
     cell_rows, lut_rows = _query_luts(spark, index_dir, query_vec, probes)
-    spark.createDataFrame(cell_rows, "cell long, qcv bigint").createOrReplaceTempView(
-        "_pq_qcells"
-    )
-    spark.createDataFrame(
-        lut_rows, "m bigint, code bigint, lv bigint"
-    ).createOrReplaceTempView("_pq_qlut")
     codes = spark.read.parquet(f"{index_dir}/codes").where(F.col("cell").isin(probes))
-    codes.createOrReplaceTempView("_pq_probe")
     return spark.sql(
         f"""
         WITH cx AS (
             SELECT vec_id, nv, cell, cast(m as bigint) AS m, cast(code as bigint) AS code
-            FROM (SELECT vec_id, nv, cell, posexplode(codes) AS (m, code) FROM _pq_probe)
+            FROM (SELECT vec_id, nv, cell, posexplode(codes) AS (m, code) FROM {{probe}})
         ),
         adc AS (
             SELECT c.vec_id, c.nv, c.cell, cast(sum(l.lv) as bigint) AS s
-            FROM cx c JOIN _pq_qlut l ON l.m = c.m AND l.code = c.code
+            FROM cx c JOIN {{qlut}} l ON l.m = c.m AND l.code = c.code
             GROUP BY c.vec_id, c.nv, c.cell
         ),
         scored AS (
@@ -236,11 +181,14 @@ def ivfpq_query(
                    (case when a.nv = 0.0 or {qn!r} = 0.0 then 0.0
                          else (cast(q.qcv + a.s as double) / {PQ_SCALE}.0)
                               / (a.nv * {qn!r}) end) AS approx_cosine
-            FROM adc a JOIN _pq_qcells q ON q.cell = a.cell
+            FROM adc a JOIN {{qcells}} q ON q.cell = a.cell
         )
         SELECT vec_id, approx_cosine,
                cast(row_number() OVER (ORDER BY approx_cosine DESC, vec_id ASC)
                     as bigint) AS rnk
         FROM scored ORDER BY rnk LIMIT {k}
-        """
+        """,
+        probe=codes,
+        qlut=spark.createDataFrame(lut_rows, "m bigint, code bigint, lv bigint"),
+        qcells=spark.createDataFrame(cell_rows, "cell long, qcv bigint"),
     )

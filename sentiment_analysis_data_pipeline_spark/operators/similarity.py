@@ -1,13 +1,12 @@
-"""Embedding similarity search (north-star extension, SURVEY.md §4 note).
+"""Embedding similarity search (north-star extension, SURVEY.md §4 note):
+brute-force cosine top-k, the correctness baseline. The query vector set is
+broadcast (it is small by construction); each partition scores its rows and
+TakeOrderedAndProject keeps k -- no shuffle of the corpus, ever.
 
-Two tiers:
-  * brute-force cosine top-k -- the correctness baseline. The query vector
-    set is broadcast (it is small by construction); each partition scores its
-    rows and TakeOrderedAndProject keeps k -- no shuffle of the corpus, ever.
-  * LSH-bucketed ANN -- the 100 TB path: random-hyperplane signatures
-    (functions/vectors.hyperplane_signs) bucket both sides; candidates meet
-    via an equi-join on the signature, cutting comparisons by ~2^planes while
-    recall stays tunable via multiple plane-sets (probe tables).
+The approximate paths are registry rows: banded-LSH `ann_lsh`, multi-probe
+IVF `ivf_ann` and PQ `pq_ann` (persisted as operators/ann_index.py and
+operators/pq_index.py); `ann_recall_report` scores them against this
+baseline.
 """
 
 from __future__ import annotations
@@ -50,45 +49,3 @@ def brute_force_topk(
     )
     return scored.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(k)
 
-
-def lsh_bucketed_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    planes: int = 8,
-) -> DataFrame:
-    """Approximate top-k neighbors for MANY query vectors at once.
-
-    Both sides get a `planes`-bit hyperplane-sign bucket key; candidates are
-    generated by the bucket equi-join (uniform hash keys -> skew-free
-    shuffle), scored with exact cosine, and ranked per query with a window --
-    the canonical distributed ANN shape. Recall < 1.0 by construction; raise
-    `planes`-sets (probe tables) or lower `planes` to trade cost for recall.
-    """
-    from pyspark.sql import Window
-
-    def keyed(df: DataFrame, prefix: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.expr(vectors.to_double_array(D.SPARK, vec_col)).alias(f"{prefix}_v"),
-        ).withColumn(
-            "bucket", F.expr(vectors.hyperplane_signs(D.SPARK, f"{prefix}_v", dim, planes))
-        )
-
-    corpus = keyed(embeddings, "c")
-    qs = keyed(queries, "q")
-    cand = corpus.join(qs, on="bucket").filter(F.col("c_id") != F.col("q_id"))
-    scored = cand.select(
-        "q_id",
-        F.col("c_id").alias("vec_id"),
-        F.expr(vectors.cosine(D.SPARK, "c_v", "q_v", dim)).alias("cosine"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "cosine", "rank")
-    )

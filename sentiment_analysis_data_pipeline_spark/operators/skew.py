@@ -2,9 +2,12 @@
 
 AQE's skew-join handling (on in session.get_spark) splits oversized
 SortMergeJoin partitions automatically -- that is the first line of defense
-and needs no code. This module is the explicit fallback for the cases AQE
-cannot fix (e.g. a broadcast-ineligible dimension with one pathological hot
-key, or skewed aggregation state): the classic salt-and-replicate pattern.
+and needs no code. This module is the explicit fallback for the join AQE
+cannot fix (a broadcast-ineligible dimension with one pathological hot
+key): the classic salt-and-replicate pattern. Skewed aggregations need no
+twin here: Spark's map-side partial aggregation already spreads a hot key,
+and the registry's `key_skew_report` row reports the key shape that
+decides.
 
   left (big, skewed)  : key -> (key, salt = stable_hash(row) % n)
   right (small-ish)   : each row replicated n times, one per salt value
@@ -49,16 +52,3 @@ def salted_join(
     out = salted_left.join(salted_right, on=[key, "_salt"], how=how)
     return out.drop("_salt")
 
-
-def skewed_group_count(df: DataFrame, key: str, n_salts: int = 8) -> DataFrame:
-    """Two-phase aggregation for skewed group keys: count per (key, salt)
-    first (spreads the hot key), then combine per key.
-
-    For algebraic aggregates Spark's map-side partial aggregation already
-    does this implicitly; the explicit form matters for high-cardinality
-    state per key (e.g. count distinct) -- shown here with plain count for
-    a testable shape.
-    """
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(*df.columns), F.lit(n_salts)))
-    partial = salted.groupBy(key, "_salt").agg(F.count("*").alias("_c"))
-    return partial.groupBy(key).agg(F.sum("_c").cast("long").alias("n"))

@@ -30,11 +30,11 @@ from .functions import hashing as H
 from .functions import sentiment as S
 from .functions import text as TX
 from .functions import vectors as V
-from .operators import dedup, dedup_index, search, similarity, sketch, window_ops
+from .functions.vectors import EMB_DIM
+from .operators import dedup, dedup_index, search, similarity, sketch
 from .plans.pipeline import DOC_URL_SQL
 
 TEXT = "coalesce(text, '')"
-EMB_DIM = 64
 
 
 def _qmean(expr: str, alias: str) -> str:
@@ -1246,31 +1246,41 @@ def _label_centroids_sql(d: str) -> str:
 
 
 
-def _ivf_assign_ctes(d: str) -> str:
-    """The shared IVF coarse-quantization CTE prefix (emb0 .. assign):
-    decimal-exact label centroids stand in for the k-means codebook; every
-    vector is assigned to its max-cosine cell. Used verbatim by both the
-    ANN query (_ivf_ann_sql) and the cell-balance QA (_ivf_cell_balance_sql)
-    so the assignment semantics cannot drift between them."""
-    v = V.to_double_array(d, "embedding")
+def _ivf_codebook_ctes(d: str) -> str:
+    """The IVF coarse codebook CTEs (ex .. centv0(label, cv)) over `emb`:
+    decimal-exact label centroids stand in for the k-means codebook."""
     if d == D.SPARK:
         ex = "SELECT label, posexplode(v) AS (idx, x) FROM emb"
         agg_cv = "transform(array_sort(collect_list(struct(idx, c))), s -> s.c)"
     else:
         ex = "SELECT label, generate_subscripts(v, 1) - 1 AS idx, unnest(v) AS x FROM emb"
         agg_cv = "list(c ORDER BY idx)"
-    nv = V.norm(d, "v", EMB_DIM)
-    ncv = V.norm(d, "cv", EMB_DIM)
-    dot_assign = V.dot(d, "e.v", "c.cv", EMB_DIM)
-    return f"""emb0 AS (SELECT vec_id, label, {v} AS v FROM embeddings),
-        emb AS (SELECT vec_id, label, v, {nv} AS nv FROM emb0),
-        ex AS ({ex}),
+    return f"""ex AS ({ex}),
         cent AS (
             SELECT label, idx,
                    {_qmean('x', 'c')}
             FROM ex GROUP BY label, idx
         ),
-        centv0 AS (SELECT label, {agg_cv} AS cv FROM cent GROUP BY label),
+        centv0 AS (SELECT label, {agg_cv} AS cv FROM cent GROUP BY label)"""
+
+
+def _ivf_assign_ctes(d: str, codebook: str | None = None, rel: str = "embeddings") -> str:
+    """The shared IVF coarse-quantization CTE prefix (emb0 .. assign): every
+    vector of `rel` is assigned to its max-cosine cell of `codebook`, CTE
+    text defining centv0(label, cv) -- by default the codebook trained on
+    `rel` itself (_ivf_codebook_ctes). Used verbatim by the ANN query
+    (_ivf_ann_sql), the cell-balance QA (_ivf_cell_balance_sql) and the
+    persisted index (operators/ann_index.py, against its frozen codebook),
+    so the assignment semantics cannot drift between them."""
+    v = V.to_double_array(d, "embedding")
+    nv = V.norm(d, "v", EMB_DIM)
+    ncv = V.norm(d, "cv", EMB_DIM)
+    dot_assign = V.dot(d, "e.v", "c.cv", EMB_DIM)
+    if codebook is None:
+        codebook = _ivf_codebook_ctes(d)
+    return f"""emb0 AS (SELECT vec_id, label, {v} AS v FROM {rel}),
+        emb AS (SELECT vec_id, label, v, {nv} AS nv FROM emb0),
+        {codebook},
         centv AS (SELECT label, cv, {ncv} AS ncv FROM centv0),
         assign0 AS (
             SELECT e.vec_id, e.v, e.nv, c.label AS cell,
@@ -1280,7 +1290,7 @@ def _ivf_assign_ctes(d: str) -> str:
                                       c.label ASC) AS rn
             FROM emb e CROSS JOIN centv c
         ),
-        assign AS (SELECT vec_id, v, nv, cell FROM assign0 WHERE rn = 1),"""
+        assign AS (SELECT vec_id, v, nv, cell FROM assign0 WHERE rn = 1)"""
 
 
 def _ivf_ann_sql(d: str) -> str:
@@ -1304,7 +1314,7 @@ def _ivf_ann_sql(d: str) -> str:
     pipeline -- so the single statement stays.)"""
     dot_cand = V.dot(d, "a.v", "q.qv", EMB_DIM)
     return f"""
-        WITH {_ivf_assign_ctes(d)}
+        WITH {_ivf_assign_ctes(d)},
         -- multi-probe: the QUERY searches its top-3 cells (corpus rows stay
         -- single-cell). Single-probe recall@3 measured 0/3 here: with weakly
         -- clustered vectors the true NN routinely lands one cell over.
@@ -1339,7 +1349,7 @@ def _ivf_cell_balance_sql(d: str) -> str:
     shape: the assignment CTEs (shared verbatim with _ivf_ann_sql) end in
     one cell-keyed count agg; output is nlist-sized."""
     return f"""
-        WITH {_ivf_assign_ctes(d)}
+        WITH {_ivf_assign_ctes(d)},
         sizes AS (
             SELECT cell, cast(count(*) as bigint) AS n_vectors
             FROM assign GROUP BY cell
@@ -1367,7 +1377,7 @@ def q_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     auto-materializes the multi-referenced CTE; oracle unchanged."""
     _view(spark, sf_dir, "embeddings")
     sizes = spark.sql(
-        f"""WITH {_ivf_assign_ctes(D.SPARK)}
+        f"""WITH {_ivf_assign_ctes(D.SPARK)},
         sizes AS (
             SELECT cell, cast(count(*) as bigint) AS n_vectors
             FROM assign GROUP BY cell
@@ -1898,8 +1908,9 @@ def _embedding_dedup_pairs_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     nv = V.norm(D.SPARK, "v", EMB_DIM)
     # Signature SQL is shared with the persisted-index builder
     # (operators/dedup_index.py -- the durable written-table variant of this
-    # in-session checkpoint; build_embedding_band_index/embedding_candidate
-    # _pairs is what a cluster deployment runs per corpus snapshot).
+    # in-session checkpoint; embedding_band_relation written bucketed, then
+    # embedding_candidate_pairs, is what a cluster deployment runs per corpus
+    # snapshot).
     _materialize(
         spark.sql(dedup_index.embedding_band_sql("embeddings")).repartition(32),
         "emb_bands",
@@ -2791,20 +2802,17 @@ def _approx_stats_sql(d: str) -> str:
     """
 
 
-def approx_stats_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The raw sketch surface: approx_count_distinct (HyperLogLog++) and
-    approx_percentile (KLL-style) per event type -- the constant-memory,
-    mergeable at-scale forms of value_stats' exact aggregates."""
-    _events_view(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT event_type,
-               cast(approx_count_distinct(user_id) as bigint) AS approx_users,
-               approx_percentile(value, 0.5) AS approx_median,
-               approx_percentile(value, 0.9) AS approx_p90
-        FROM events GROUP BY event_type
-        """
-    )
+# The raw sketch surface: approx_count_distinct (HyperLogLog++) and
+# approx_percentile (KLL-style) per event type -- the constant-memory,
+# mergeable at-scale forms of value_stats' exact aggregates -- beside the
+# exact counts q_approx_stats checks them against.
+APPROX_SKETCH_SQL = """SELECT event_type,
+                   cast(approx_count_distinct(user_id) as bigint) AS approx_users,
+                   approx_percentile(value, 0.5) AS am,
+                   approx_percentile(value, 0.9) AS a90,
+                   cast(count(distinct user_id) as bigint) AS exact_users,
+                   cast(count(*) as bigint) AS n_events
+            FROM events GROUP BY event_type"""
 
 
 def q_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2819,18 +2827,12 @@ def q_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 a false failure the way a value-relative bound could.
     The DuckDB oracle emits the same exact aggregates with literal-1 flags,
     so the value hash matches iff every estimate passes. The raw estimates
-    stay available via approx_stats_sketches()."""
+    are APPROX_SKETCH_SQL, the first CTE."""
     _events_view(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         WITH approx AS (
-            SELECT event_type,
-                   cast(approx_count_distinct(user_id) as bigint) AS approx_users,
-                   approx_percentile(value, 0.5) AS am,
-                   approx_percentile(value, 0.9) AS a90,
-                   cast(count(distinct user_id) as bigint) AS exact_users,
-                   cast(count(*) as bigint) AS n_events
-            FROM events GROUP BY event_type
+            {APPROX_SKETCH_SQL}
         ),
         ranks AS (
             SELECT e.event_type,
@@ -4491,7 +4493,7 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     both join sides) and Spark's CTE re-inlining would re-run the whole
     tokenize -> k-gram -> md5 -> sliding-min pipeline for each. Both SQL
     bodies are shared with operators/dedup_index.py, whose
-    build_winnow_index/winnow_candidate_pairs is the durable written-table
+    winnow_fp_relation written bucketed on mh is the durable written-table
     variant a cluster deployment persists per corpus snapshot."""
     _view(spark, sf_dir, "documents")
     _materialize(spark.sql(dedup_index.winnow_fp_sql("documents")), "winnow_fp")
@@ -5735,7 +5737,7 @@ def _index_table_name(prefix: str, sf_dir: str) -> str:
 
 def _ensure_embedding_band_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per corpus snapshot, fingerprint-stamped) the persisted bucketed embedding
-    band-key index (operators/dedup_index.build_embedding_band_index) and
+    band-key index (operators/dedup_index.embedding_band_relation) and
     return its table name. The table is keyed to the sf_dir basename so two
     scale factors in one session never share an index; within a round the
     corpus snapshot is immutable, so an existing table is simply reused --
@@ -8980,36 +8982,40 @@ PQ_SIGN_BITS = (
 )
 
 
-def _pq_cent_sql(d: str) -> str:
-    """Per-subspace PQ codebook: K=16 deterministic 'sign-orthant init +
-    one Lloyd step' centroids per subspace. The init partitions each
-    subspace by the SIGN PATTERN of its first 4 components (the
-    hyperplane-LSH orthant partition -- a real geometric quantizer), and
-    the centroid is the decimal-exact floor-quantized mean (_qmean) of
+def _pq_vx_ctes(d: str, src: str) -> str:
+    """ex0, vx(vec_id, m, j, x): the flat per-subspace components of the
+    vectors `v` of relation `src(vec_id, v)`."""
+    if d == D.SPARK:
+        ex = f"SELECT vec_id, posexplode(v) AS (idx, x) FROM {src}"
+    else:
+        ex = (
+            "SELECT vec_id, generate_subscripts(v, 1) - 1 AS idx, unnest(v) AS x"
+            f" FROM {src}"
+        )
+    m = D.int_div(d, "idx", str(PQ_SUBDIM))
+    return f"""ex0 AS ({ex}),
+        vx AS (
+            SELECT vec_id, cast({m} as bigint) AS m,
+                   cast(idx % {PQ_SUBDIM} as bigint) AS j, x
+            FROM ex0
+        )"""
+
+
+def _pq_train_sql(vx: str) -> str:
+    """Per-subspace PQ codebook (m, code, j, c) trained on the `vx(vec_id,
+    m, j, x)` relation that the CTE text `vx` defines: K=16 deterministic
+    'sign-orthant init + one Lloyd step' centroids per subspace. The init
+    partitions each subspace by the SIGN PATTERN of its first 4 components
+    (the hyperplane-LSH orthant partition -- a real geometric quantizer),
+    and the centroid is the decimal-exact floor-quantized mean (_qmean) of
     each orthant's subvectors -- reproducible at any parallelism,
     replayable by the oracle. An md5-random init was measured useless
     here: random training groups all average to the subspace MEAN
     (exactly zero for residual spaces), every centroid collapses to the
     same point, and the reconstruction carries no signal. Output:
-    (m, code, j, c) <= 8 x 16 x 8 = 1024 rows (empty orthants are
-    absent)."""
-    v = V.to_double_array(d, "embedding")
-    if d == D.SPARK:
-        ex = "SELECT vec_id, posexplode(v) AS (idx, x) FROM emb"
-    else:
-        ex = (
-            "SELECT vec_id, generate_subscripts(v, 1) - 1 AS idx, unnest(v) AS x"
-            " FROM emb"
-        )
-    m = D.int_div(d, "idx", str(PQ_SUBDIM))
+    <= 16 x 16 x 4 = 1024 rows (empty orthants are absent)."""
     return f"""
-        WITH emb AS (SELECT vec_id, {v} AS v FROM embeddings),
-        ex0 AS ({ex}),
-        vx AS (
-            SELECT vec_id, cast({m} as bigint) AS m,
-                   cast(idx % {PQ_SUBDIM} as bigint) AS j, x
-            FROM ex0
-        ),
+        WITH {vx},
         grp AS (
             SELECT vec_id, m, cast({PQ_SIGN_BITS} as bigint) AS g
             FROM vx GROUP BY vec_id, m
@@ -9020,32 +9026,24 @@ def _pq_cent_sql(d: str) -> str:
     """
 
 
-def _pq_body(d: str, cent_def: str, tail: str) -> str:
-    """Shared PQ statement frame: embeddings -> flat (vec_id, m, j, x)
-    subvector rows -> per-(vector, subspace, code) quantized-L2 against the
-    codebook -> nearest-code encoding. Distances are floor-quantized to
-    2^-30 fixed point BEFORE the 8-term sum, so the per-code distance is
-    an exact BIGINT (order-free, both engines identical) -- the _qmean
-    trick applied to distances; ties break on code ASC."""
+def _pq_cent_sql(d: str) -> str:
+    """The PQ codebook of the raw `embeddings` vectors (_pq_train_sql)."""
     v = V.to_double_array(d, "embedding")
-    nv = V.norm(d, "v", EMB_DIM)
-    if d == D.SPARK:
-        ex = "SELECT vec_id, posexplode(v) AS (idx, x) FROM emb0"
-    else:
-        ex = (
-            "SELECT vec_id, generate_subscripts(v, 1) - 1 AS idx, unnest(v) AS x"
-            " FROM emb0"
-        )
-    m = D.int_div(d, "idx", str(PQ_SUBDIM))
+    return _pq_train_sql(
+        f"emb AS (SELECT vec_id, {v} AS v FROM embeddings),\n        {_pq_vx_ctes(d, 'emb')}"
+    )
+
+
+def _pq_enc_sql(vx: str, cent_def: str, tail: str) -> str:
+    """Nearest-code encoding of the `vx(vec_id, m, j, x)` relation that the
+    CTE text `vx` defines, against the codebook query `cent_def`, followed
+    by `tail`: per-(vector, subspace, code) quantized L2, then the argmin
+    code. Distances are floor-quantized to 2^-30 fixed point BEFORE the
+    4-term sum, so the per-code distance is an exact BIGINT (order-free,
+    both engines identical) -- the _qmean trick applied to distances; ties
+    break on code ASC."""
     return f"""
-        WITH emb0 AS (SELECT vec_id, {v} AS v FROM embeddings),
-        emb AS (SELECT vec_id, v, {nv} AS nv FROM emb0),
-        ex0 AS ({ex}),
-        vx AS (
-            SELECT vec_id, cast({m} as bigint) AS m,
-                   cast(idx % {PQ_SUBDIM} as bigint) AS j, x
-            FROM ex0
-        ),
+        WITH {vx},
         cent AS ({cent_def}),
         enc0 AS (
             SELECT vx.vec_id, vx.m, cent.code,
@@ -9064,6 +9062,20 @@ def _pq_body(d: str, cent_def: str, tail: str) -> str:
             ) r WHERE rn = 1
         ){tail}
     """
+
+
+def _pq_body(d: str, cent_def: str, tail: str) -> str:
+    """Shared PQ statement frame over `embeddings`: the raw vectors (emb,
+    with norms) encoded against `cent_def` (_pq_enc_sql), then `tail`."""
+    v = V.to_double_array(d, "embedding")
+    nv = V.norm(d, "v", EMB_DIM)
+    return _pq_enc_sql(
+        f"""emb0 AS (SELECT vec_id, {v} AS v FROM embeddings),
+        emb AS (SELECT vec_id, v, {nv} AS nv FROM emb0),
+        {_pq_vx_ctes(d, "emb0")}""",
+        cent_def,
+        tail,
+    )
 
 
 def _pq_ann_sql(d: str, cent_def: str | None = None) -> str:

@@ -62,13 +62,22 @@ def test_ngram_jaccard_exact_pairs(spark):
 
 
 def test_simhash_pairs(spark):
-    fp = {r["doc"]: r["simhash"] for r in dedup.simhash_fingerprints(_docs(spark), "text", "doc_id").collect()}
+    """The registry's simhash_fingerprints / simhash_pairs SQL over the
+    fixture registered as `documents`."""
+    from sentiment_analysis_data_pipeline_spark import queries as Q
+    from sentiment_analysis_data_pipeline_spark.functions import dialect as D
+
+    _docs(spark).createOrReplaceTempView("documents")
+    try:
+        fp = {r["doc"]: r["simhash"] for r in spark.sql(Q._simhash_sql(D.SPARK)).collect()}
+        pairs = {(r["id_a"], r["id_b"]) for r in spark.sql(Q._simhash_pairs_sql(D.SPARK)).collect()}
+    finally:
+        spark.catalog.dropTempView("documents")
     assert fp[0] == fp[1]  # identical text -> identical fingerprint
     assert len(fp[0]) == 64 and set(fp[0]) <= {"0", "1"}
     ham02 = sum(a != b for a, b in zip(fp[0], fp[2]))
     ham03 = sum(a != b for a, b in zip(fp[0], fp[3]))
     assert ham02 < ham03  # near-dup closer than unrelated
-    pairs = {(r["id_a"], r["id_b"]) for r in dedup.simhash_pairs(_docs(spark), "text", "doc_id", radius=3).collect()}
     assert (0, 1) in pairs
 
 

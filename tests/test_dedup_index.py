@@ -10,7 +10,7 @@ shuffles left are the final pair aggregations, which are inherent."""
 from __future__ import annotations
 
 from sentiment_analysis_data_pipeline_spark.operators import dedup_index as DX
-from sentiment_analysis_data_pipeline_spark.sources.tables import load_table
+from sentiment_analysis_data_pipeline_spark.sources.tables import load_table, write_bucketed_atomic
 from sentiment_analysis_data_pipeline_spark.sources.tables import drop_table_with_files as _drop_with_files
 
 SF = "/root/testdata/sf0.001"
@@ -30,7 +30,7 @@ def _shuffle_exchanges(df) -> int:
 
 def test_embedding_band_index_candidates(spark):
     emb = load_table(spark, SF, "embeddings")
-    DX.build_embedding_band_index(spark, emb, table="t_emb_idx", n_buckets=8)
+    write_bucketed_atomic(DX.embedding_band_relation(spark, emb), "t_emb_idx", "band_key", 8)
     try:
         cand = DX.embedding_candidate_pairs(spark, "t_emb_idx")
         plan = cand._jdf.queryExecution().executedPlan().toString()
@@ -58,9 +58,9 @@ def test_embedding_band_index_candidates(spark):
 
 def test_winnow_index_pairs(spark):
     docs = load_table(spark, SF, "documents")
-    DX.build_winnow_index(spark, docs, table="t_winnow_idx", n_buckets=8)
+    write_bucketed_atomic(DX.winnow_fp_relation(spark, docs), "t_winnow_idx", "mh", 8)
     try:
-        pairs = DX.winnow_candidate_pairs(spark, "t_winnow_idx")
+        pairs = spark.sql(DX.winnow_pairs_over("t_winnow_idx"))
         plan = pairs._jdf.queryExecution().executedPlan().toString()
         assert "Bucketed: true" in plan
         # df-cap GROUP BY mh and both mh join sides are co-located on the

@@ -242,3 +242,200 @@ def test_one_spark_sentiment_kernel():
     assert callers == {
         ("sentiment_analysis_data_pipeline_spark/functions/sentiment.py", "kernel_join_sql")
     }
+
+
+def _package_py_files():
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(root, "sentiment_analysis_data_pipeline_spark")
+    for dirpath, _, files in os.walk(pkg):
+        for fname in sorted(files):
+            if fname.endswith(".py"):
+                yield os.path.join(dirpath, fname), pkg
+
+
+def test_one_ivf_and_pq_implementation():
+    """The persisted IVF and IVF-PQ indexes (operators/ann_index.py,
+    operators/pq_index.py) run the registry's codebook, assignment, PQ
+    training and encoding SQL: no operator module spells out its own
+    decimal-exact mean or per-(vector, subspace) argmin, and the index
+    constants are assigned in exactly one module each."""
+    import ast
+    import os
+
+    assigned: dict[str, set[str]] = {}
+    consts = {"PQ_M", "PQ_SUBDIM", "PQ_K", "PQ_SCALE", "EMB_DIM"}
+    for path, pkg in _package_py_files():
+        with open(path) as f:
+            src = f.read()
+        rel = os.path.relpath(path, pkg)
+        if rel.startswith("operators" + os.sep):
+            for copied in ("decimal(38,0)", "PARTITION BY vec_id, m"):
+                assert copied not in src, f"{rel} spells out {copied!r}"
+        for node in ast.parse(src).body:
+            targets = (
+                node.targets
+                if isinstance(node, ast.Assign)
+                else [node.target] if isinstance(node, ast.AnnAssign) else []
+            )
+            for t in targets:
+                if isinstance(t, ast.Name) and t.id in consts:
+                    assigned.setdefault(t.id, set()).add(rel)
+    assert {n: len(m) for n, m in assigned.items()} == dict.fromkeys(consts, 1), assigned
+
+
+# Top-level package defs that only tests reach, each with the reason it
+# stays. test_test_only_defs_have_a_reason derives the set from the code:
+# a new def that only tests call fails until it gets a reason here or goes.
+TEST_ONLY_BY_DESIGN = {
+    "functions.sentiment._py_kernel": "independent Python reference of the SQL kernel; tests compare the SQL with it",
+    "functions.sentiment.pandas_kernel_library": "the real-library batch kernel a deployment with vaderSentiment/textblob wraps; no engine path may select it",
+    "functions.vectors.l2sq_literal": "bit-identity reference for l2sq() in the kcenter tests",
+    "operators.ann_index.build_ivf_index": "public build entry of the persisted IVF index",
+    "operators.ann_index.ivf_query": "public query entry of the persisted IVF index",
+    "operators.bpe.bpe_merges_py": "pure-Python replica that pins the BPE SQL's greedy merges and tie-breaks",
+    "operators.multimodal.decode_image_batch": "explicit stub marking the pixel-decode boundary this environment lacks",
+    "operators.multimodal.extract_features": "mapInPandas feature extraction over binary media, a public operator",
+    "operators.multimodal.synthetic_media": "deterministic media fixture generator for the multimodal operators",
+    "operators.pq_index.append_to_ivfpq_index": "public frozen-codebook append of the persisted IVF-PQ index",
+    "operators.pq_index.build_ivfpq_index": "public build entry of the persisted IVF-PQ index",
+    "operators.pq_index.ivfpq_query": "public ADC query entry of the persisted IVF-PQ index",
+    "operators.sketch.estimate_counts": "read side of the streamed Count-Min cells (point query)",
+    "operators.validate.sanitize_str": "public column cleaner (NUL strip + trim) of the validation layer",
+    "operators.validate.scrub_pii": "batch/stream projection of pii_redact's oracle-checked patterns",
+    "operators.validate.validate_articles": "the producers' combined field + URL check, a public operator",
+    "plans.monitors.BatchMetricsListener": "streaming progress listener a deployment attaches; public by design",
+    "plans.monitors.run_monitors": "the DAG's freshness/quality monitors, a public entry point",
+    "queries._embedding_dedup_pairs_live": "in-session equality witness for the persisted embedding-dedup table",
+    "queries._wminhash_core_collapsed": "collapsed-branch witness that tests compare with _wminhash_core",
+    "sources.files.read_csv": "file-format adapter, public source API",
+    "sources.files.read_jsonl": "file-format adapter, public source API",
+    "sources.files.read_orc": "file-format adapter, public source API",
+    "sources.files.write_csv": "file-format adapter, public sink API",
+    "sources.files.write_jsonl": "file-format adapter, public sink API",
+    "sources.files.write_orc": "file-format adapter, public sink API",
+    "sources.maintenance.compact_parquet": "small-file compaction for the append-only stores, a public maintenance call",
+    "sources.newsapi_source.GnewsFixtureDataSource": "offline stand-in for the GNews API source",
+    "sources.newsapi_source.NewsApiFixtureDataSource": "offline stand-in for the NewsAPI source",
+    "sources.newsapi_source.write_fixture_pages": "writes the NewsAPI stand-in's pages",
+    "sources.newsapi_source.write_gnews_fixture_pages": "writes the GNews stand-in's pages",
+    "sources.tables.compact_bucketed": "bucketed-index compaction that store compaction (ROADMAP direction 1) needs",
+    "streaming.ann_stream.run_streaming_vector_ingest": "stream runner, a public entry point",
+    "streaming.calibration_stream.compact_hist": "accumulator log compaction, public stream maintenance",
+    "streaming.calibration_stream.read_average_precision": "stream reader, a public entry point",
+    "streaming.calibration_stream.read_calibration": "stream reader, a public entry point",
+    "streaming.calibration_stream.read_cumulative_gains": "stream reader, a public entry point",
+    "streaming.calibration_stream.read_isotonic": "stream reader, a public entry point",
+    "streaming.calibration_stream.run_calibration_monitor": "stream runner, a public entry point",
+    "streaming.curation_stream.run_curation_stream": "stream runner, a public entry point",
+    "streaming.dedup_stream.run_streaming_dedup": "stream runner, a public entry point",
+    "streaming.dedup_stream.verify_candidates": "batch-vs-corpus exact verify, the reference the pipeline tests check the epoch against",
+    "streaming.drift_stream.compact_bands": "accumulator log compaction, public stream maintenance",
+    "streaming.drift_stream.read_psi": "stream reader, a public entry point",
+    "streaming.drift_stream.run_streaming_drift": "stream runner, a public entry point",
+    "streaming.experiment_stream.compact_daily": "accumulator log compaction, public stream maintenance",
+    "streaming.experiment_stream.read_sprt": "stream reader, a public entry point",
+    "streaming.experiment_stream.read_srm": "stream reader, a public entry point",
+    "streaming.experiment_stream.run_experiment_monitor": "stream runner, a public entry point",
+    "streaming.hdr_stream.compact_cells": "accumulator log compaction, public stream maintenance",
+    "streaming.hdr_stream.quantiles_from_hist": "stream reader (percentile serve), a public entry point",
+    "streaming.hdr_stream.run_streaming_hdr": "stream runner, a public entry point",
+    "streaming.hll_stream.compact_sketches": "accumulator log compaction, public stream maintenance",
+    "streaming.hll_stream.read_estimates": "stream reader, a public entry point",
+    "streaming.hll_stream.read_global_estimate": "stream reader, a public entry point",
+    "streaming.hll_stream.run_streaming_hll": "stream runner, a public entry point",
+    "streaming.reservoir_stream.compact_samples": "accumulator log compaction, public stream maintenance",
+    "streaming.reservoir_stream.run_streaming_reservoir": "stream runner, a public entry point",
+    "streaming.sketch_stream.compact_cells": "accumulator log compaction, public stream maintenance",
+    "streaming.sketch_stream.run_streaming_countmin": "stream runner, a public entry point",
+    "streaming.stateful.running_source_stats": "applyInPandasWithState stream operator, a public entry point",
+    "streaming.stateful.running_source_stats_tws": "transformWithState twin for Spark 4 sessions, a public entry point",
+}
+
+
+def test_test_only_defs_have_a_reason():
+    """Scan every top-level def and class of the package against the names
+    every `.py` in the repo uses (Name, attribute and import names; a def's
+    own body does not count). A def that only tests/ reaches must be a key
+    of TEST_ONLY_BY_DESIGN, and every key must still be one; a def nothing
+    reaches at all is dead code."""
+    import ast
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tests_dir = os.path.join(root, "tests")
+
+    def used_names(tree, skip=None) -> set[str]:
+        out, stack = set(), [tree]
+        while stack:
+            node = stack.pop()
+            if node is skip:
+                continue
+            if isinstance(node, ast.Name):
+                out.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                out.add(node.attr)
+            elif isinstance(node, ast.alias):
+                out.add(node.name.split(".")[-1])
+            stack.extend(ast.iter_child_nodes(node))
+        return out
+
+    trees = {}
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if not d.startswith(".") and d not in ("spark-warehouse", "__pycache__")]
+        for fname in files:
+            if fname.endswith(".py"):
+                path = os.path.join(dirpath, fname)
+                with open(path) as f:
+                    trees[path] = ast.parse(f.read())
+    uses = {path: used_names(tree) for path, tree in trees.items()}
+
+    test_only, dead = set(), set()
+    for path, pkg in _package_py_files():
+        module = os.path.relpath(path, pkg)[: -len(".py")].replace(os.sep, ".")
+        for node in trees[path].body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            reached_from = {
+                p
+                for p, names in uses.items()
+                if node.name in (used_names(trees[p], skip=node) if p == path else names)
+            }
+            if not reached_from:
+                dead.add(f"{module}.{node.name}")
+            elif all(p.startswith(tests_dir + os.sep) for p in reached_from):
+                test_only.add(f"{module}.{node.name}")
+    assert not dead, f"top-level defs nothing reaches: {sorted(dead)}"
+    assert test_only == set(TEST_ONLY_BY_DESIGN), (
+        f"test-only without a reason: {sorted(test_only - set(TEST_ONLY_BY_DESIGN))}; "
+        f"reasons for defs no longer test-only: {sorted(set(TEST_ONLY_BY_DESIGN) - test_only)}"
+    )
+
+
+def test_persisted_ivf_index_equals_registry_assignment(spark, tmp_path):
+    """build_ivf_index on sf0.001 `embeddings` persists exactly the codebook
+    and the (vec_id, cell) assignment the oracle-checked registry SQL
+    computes, and its cell populations are ivf_cell_balance's."""
+    from sentiment_analysis_data_pipeline_spark import queries as Q
+    from sentiment_analysis_data_pipeline_spark.operators.ann_index import build_ivf_index
+
+    sf = "/root/testdata/sf0.001"
+    idx = str(tmp_path / "ivf")
+    build_ivf_index(spark, spark.read.parquet(f"{sf}/embeddings.parquet"), idx)
+
+    Q._view(spark, sf, "embeddings")
+    ctes = f"WITH {Q._ivf_assign_ctes(Q.D.SPARK)}\n"
+    want_assign = spark.sql(ctes + "SELECT vec_id, cell FROM assign").collect()
+    want_cents = spark.sql(ctes + "SELECT label AS cell, cv FROM centv0").collect()
+    got_assign = spark.read.parquet(f"{idx}/assignments").select("vec_id", "cell").collect()
+    got_cents = spark.read.parquet(f"{idx}/centroids.parquet").collect()
+
+    assert len(want_assign) == 500
+    assert sorted(map(tuple, got_assign)) == sorted(map(tuple, want_assign))
+    assert sorted(map(tuple, got_cents)) == sorted(map(tuple, want_cents))
+    sizes = {}
+    for _, cell in got_assign:
+        sizes[cell] = sizes.get(cell, 0) + 1
+    balance = Q.REGISTRY["ivf_cell_balance"][0](spark, sf).collect()
+    assert sizes == {r["cell"]: r["n_vectors"] for r in balance}

@@ -131,20 +131,23 @@ def test_approx_stats_bounds(spark):
     (HLL++ default rsd 5%; approx_percentile here runs at its exact-accuracy
     threshold for the test row counts)."""
     from sentiment_analysis_data_pipeline_spark.queries import (
-        approx_stats_sketches,
+        APPROX_SKETCH_SQL,
         REGISTRY,
+        _events_view,
         q_approx_stats,
     )
 
     sf = "/root/testdata/sf0.001"
-    approx = {r["event_type"]: r for r in approx_stats_sketches(spark, sf).collect()}
     exact = {r["event_type"]: r for r in REGISTRY["value_stats"][0](spark, sf).collect()}
+    _events_view(spark, sf)
+    approx = {r["event_type"]: r for r in spark.sql(APPROX_SKETCH_SQL).collect()}
     assert set(approx) == set(exact)
     for et, a in approx.items():
         e = exact[et]
+        assert a["exact_users"] == e["n_users"]
         assert abs(a["approx_users"] - e["n_users"]) <= 0.15 * e["n_users"]
-        assert abs(a["approx_median"] - e["median_value"]) <= 0.2 * max(1.0, abs(e["median_value"]))
-        assert abs(a["approx_p90"] - e["p90_value"]) <= 0.2 * max(1.0, abs(e["p90_value"]))
+        assert abs(a["am"] - e["median_value"]) <= 0.2 * max(1.0, abs(e["median_value"]))
+        assert abs(a["a90"] - e["p90_value"]) <= 0.2 * max(1.0, abs(e["p90_value"]))
 
     # the driver-facing tolerance-checked form: every flag must be 1 (the
     # oracle emits literal 1s, so a 0 here is a future CORRECTNESS failure)

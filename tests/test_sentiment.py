@@ -13,7 +13,6 @@ from sentiment_analysis_data_pipeline_spark.functions.sentiment import (
     LEXICON,
     VADER_ALPHA,
     _py_kernel,
-    pandas_kernel,
 )
 from sentiment_analysis_data_pipeline_spark.plans.pipeline import sentiment_enrich
 
@@ -117,15 +116,6 @@ def test_native_matches_pandas_kernel(spark):
         vc, tb = _py_kernel(text)
         assert row["vader_compound"] == vc, text
         assert row["textblob_polarity"] == tb, text
-
-
-def test_pandas_kernel_batch_shape():
-    import pandas as pd
-
-    out = pandas_kernel(pd.Series(["good", None, "bad"]))
-    assert list(out.columns) == ["vader_compound", "textblob_polarity"]
-    assert len(out) == 3
-    assert out.iloc[1]["vader_compound"] == 0.0
 
 
 def test_lexicon_weights_are_dyadic():
@@ -377,7 +367,6 @@ def test_library_parity_side_by_side():
     a sign flip on a golden sentence would mean the re-implementation
     diverged in kind, not just in lexicon-subset degree."""
     from sentiment_analysis_data_pipeline_spark.functions.sentiment import (
-        pandas_kernel,
         pandas_kernel_library,
         real_libraries_available,
     )
@@ -390,11 +379,10 @@ def test_library_parity_side_by_side():
     import pandas as pd
 
     texts = pd.Series([t for t, _, _ in GOLDEN])
-    native = pandas_kernel(texts)
     library = pandas_kernel_library(texts)
     report = []
     for i, text in enumerate(texts):
-        nv = native.iloc[i]["vader_compound"]
+        nv = _py_kernel(text)[0]
         lv = library.iloc[i]["vader_compound"]
         report.append((text, round(nv, 4), round(lv, 4), round(abs(nv - lv), 4)))
         # directional parity: both neutral-ish, or same sign

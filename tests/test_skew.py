@@ -6,7 +6,7 @@ import re
 
 from pyspark.sql import functions as F
 
-from sentiment_analysis_data_pipeline_spark.operators.skew import salted_join, skewed_group_count
+from sentiment_analysis_data_pipeline_spark.operators.skew import salted_join
 
 
 def _skewed(spark):
@@ -32,13 +32,6 @@ def test_salted_left_join(spark):
     plain = left.join(right, "k", "left").count()
     salted = salted_join(left, right, "k", n_salts=4, how="left").count()
     assert salted == plain
-
-
-def test_skewed_group_count(spark):
-    df = _skewed(spark)
-    truth = {r["k"]: r["count"] for r in df.groupBy("k").count().collect()}
-    out = {r["k"]: r["n"] for r in skewed_group_count(df, "k").collect()}
-    assert out == truth
 
 
 def test_key_gini_drives_salting_decision(spark):

@@ -5,39 +5,56 @@ from __future__ import annotations
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
-from sentiment_analysis_data_pipeline_spark.operators import similarity, window_ops
+from sentiment_analysis_data_pipeline_spark import queries as Q
+from sentiment_analysis_data_pipeline_spark.functions import dialect as D
+from sentiment_analysis_data_pipeline_spark.operators import similarity
+
+T0 = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+MIN_NS = 60 * 10**9
 
 
-def _events(spark):
-    t0 = datetime.datetime(2024, 1, 1)
+@pytest.fixture
+def events(spark):
+    """The fixture as the `events` view, `ts` as epoch-ns BIGINT (the shape
+    queries._events_view gives the registry)."""
+    t0 = int(T0.timestamp()) * 10**9
     rows = []
     # user 1: two sessions (gap of 2 h between event 2 and 3)
     for i, mins in enumerate([0, 10, 20, 140, 150]):
-        rows.append((i, t0 + datetime.timedelta(minutes=mins), 1, "click", 1.0))
+        rows.append((i, t0 + mins * MIN_NS, 1, "click", 1.0))
     # user 2: one session
     rows.append((10, t0, 2, "view", 5.0))
-    return spark.createDataFrame(rows, "event_id long, ts timestamp, user_id long, event_type string, value double")
+    spark.createDataFrame(
+        rows, "event_id long, ts long, user_id long, event_type string, value double"
+    ).createOrReplaceTempView("events")
+    yield
+    spark.catalog.dropTempView("events")
 
 
-def test_sessionize(spark):
-    out = window_ops.session_stats(_events(spark), gap_minutes=30).collect()
+def test_sessionize(spark, events):
+    out = spark.sql(Q._sessions_sql(D.SPARK)).collect()
     stats = {r["user_id"]: (r["n_sessions"], r["n_events"]) for r in out}
     assert stats[1] == (2, 5)
     assert stats[2] == (1, 1)
 
 
-def test_tumbling_agg(spark):
-    out = window_ops.tumbling_agg(_events(spark), "ts", "hour").collect()
-    by_window = {r["window_start"].hour: r["n_events"] for r in out}
+def test_tumbling_agg(spark, events):
+    out = spark.sql(Q._hourly_window_sql(D.SPARK)).collect()
+    h0 = int(T0.timestamp()) // 3600
+    by_window = {r["hour_bucket"] - h0: r["n_events"] for r in out}
     assert by_window[0] == 4  # 0,10,20 min (user1) + user2
     assert by_window[2] == 2  # 140,150 min
 
 
-def test_topk_per_group(spark):
-    out = window_ops.topk_per_group(_events(spark), "user_id", "value", "event_id", k=1).collect()
-    assert len(out) == 2
+def test_topk_per_group(spark, events):
+    out = spark.sql(Q._topk_per_type_sql(D.SPARK)).collect()
+    by_type = {}
+    for r in out:
+        by_type.setdefault(r["event_type"], []).append(r["event_id"])
+    # top 3 per type; equal values tie-break on event_id ASC
+    assert sorted(by_type["click"]) == [0, 1, 2]
+    assert by_type["view"] == [10]
 
 
 def _embeddings(spark):
@@ -56,16 +73,6 @@ def test_brute_force_topk(spark):
     assert [r["vec_id"] for r in out] == [1, 4, 2]
     assert out[0]["cosine"] == pytest.approx(1 / (1.01) ** 0.5)
     assert out[2]["cosine"] == pytest.approx(0.0)
-
-
-def test_lsh_bucketed_topk_recall(spark):
-    emb = _embeddings(spark)
-    out = similarity.lsh_bucketed_topk(emb, emb.filter("vec_id = 0"), k=2, dim=4, planes=2)
-    rows = out.collect()
-    # bucketed candidates only; identical-direction vector must share bucket
-    found = {r["vec_id"] for r in rows}
-    assert 1 in found  # near-identical direction always lands in q's bucket
-    assert all(r["q_id"] == 0 for r in rows)
 
 
 def test_ann_recall_vs_brute_force(spark):
