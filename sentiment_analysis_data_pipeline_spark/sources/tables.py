@@ -128,11 +128,6 @@ def _clean_foreign_stragglers(spark: SparkSession, table: str, app: str) -> None
             fs.delete(hpath, True)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table. Plain parquet scan -- no driver-side I/O."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 # A source parquet file at least this large yields multiple scan splits on
 # its own (spark.sql.files.maxPartitionBytes default), so the scatter
 # repartition would be a pure extra shuffle -- skip it. Parameterized for
@@ -296,9 +291,10 @@ def swap_directory(spark: SparkSession, tmp_loc: str, final_loc: str) -> None:
     old aside, rename tmp into place (both single atomic FS renames), then
     delete the old files. A reader sees old-complete or new-complete files,
     never a half-written directory; a crash between the renames leaves
-    `final_loc` briefly absent but both complete file sets on disk. Shared
-    by write_bucketed_atomic (index builds) and the streaming accumulators'
-    compaction (sketch/hll/hdr/reservoir epoch logs)."""
+    `final_loc` absent but both complete file sets on disk. Shared by
+    write_bucketed_atomic (index builds; nothing recovers that crash yet)
+    and the streaming accumulators' compaction (`_log.compact_log`, whose
+    next append or compaction rolls the old log back)."""
     app = spark.sparkContext.applicationId.replace("-", "_").replace(".", "_")
     trash_loc = f"{final_loc.rstrip('/')}__old_{app}"
     fs, final_path = _fs_for(spark, final_loc)

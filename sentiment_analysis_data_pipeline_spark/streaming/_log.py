@@ -2,10 +2,16 @@
 this package: how an epoch is triggered and checkpointed (`drain`), how a
 sink guard reads what already landed (`landed_keys`), and the epoch log
 the accumulators (sketch/hll/hdr/reservoir/drift/calibration/experiment)
-append to (`guarded_append`, `compact_log`). End-to-end exactly-once needs
-both halves: a replayable, checkpointed source (`drain`) and a sink whose
-guard turns a replayed epoch into a no-op (`landed_keys`, the batch_id
-stamp).
+append to (`Accumulator`, over `guarded_append` and `compact_log`).
+End-to-end exactly-once needs both halves: a replayable, checkpointed
+source (`drain`) and a sink whose guard turns a replayed epoch into a
+no-op (`landed_keys`, the batch_id stamp).
+
+- `Accumulator` is one streamed accumulator: a micro-batch collapses to a
+  mergeable partial (`partial`), the log reads back through one merge
+  (`merge`), and compaction folds the log with that same merge. Each
+  stream module declares its value and keeps only its partial builder,
+  merge, schemas and serving reads.
 
 - `drain` runs an epoch function over a stream with a checkpoint and the
   availableNow trigger (drain what is present, then stop), or a
@@ -26,8 +32,12 @@ stamp).
 - `compact_log` stamps the merged partial COMPACTED_STAMP, stages it in a
   tmp dir and swaps it into place with two renames
   (sources.tables.swap_directory -- the compact_bucketed protocol). A
-  process killed between the renames leaves no live log: the old one
-  sits in `<log>__old_<app>` and nothing rolls it forward or back yet.
+  process killed between the renames leaves no live log, only the old
+  one in `<log>__old_<app>` and the staged fold in `<log>__compact_tmp`;
+  the next append or compaction that gets past the flags below (a killed
+  compactor's `__compacting` flag expires after STALE_FLAG_SEC) rolls it
+  back (`_recover_log`): under the flags no live compactor can be
+  between its renames.
 
 Concurrency contract: compaction folds every stamp to COMPACTED_STAMP,
 which defeats an IN-FLIGHT epoch's replay check, and an append landing
@@ -57,6 +67,7 @@ STALE_FLAG_SEC (appends and compactions are seconds-long).
 from __future__ import annotations
 
 import time
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -202,6 +213,7 @@ def guarded_append(
             raise CompactionInProgress(
                 f"epoch {batch_id}: compaction started under us on {log_path}"
             )
+        _recover_log(spark, log_path)
         if log_has_epoch(spark, log_path, schema, batch_id):
             return False
         partial.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
@@ -210,6 +222,25 @@ def guarded_append(
         return True
     finally:
         _remove_flag(spark, marker)
+
+
+def _recover_log(spark: SparkSession, log_path: str) -> None:
+    """Roll back a compaction killed between swap_directory's two renames:
+    when `<log>` is absent and a `<log>__old_*` dir exists, rename the
+    newest one back to `<log>` and delete `<log>__compact_tmp`. The fold
+    is recomputable from the old log, so rolling back loses nothing. Call
+    only under the flag protocol (module docstring)."""
+    fs, hlog = _fs_for(spark, log_path.rstrip("/"))
+    if fs.exists(hlog) or not fs.exists(hlog.getParent()):
+        return
+    prefix = hlog.getName() + "__old_"
+    olds = [
+        st for st in fs.listStatus(hlog.getParent()) if st.getPath().getName().startswith(prefix)
+    ]
+    if olds:
+        newest = max(olds, key=lambda st: st.getModificationTime())
+        fs.rename(newest.getPath(), hlog)
+        fs.delete(hlog.suffix("__compact_tmp"), True)
 
 
 def log_has_epoch(
@@ -258,6 +289,7 @@ def compact_log(
                 f"compaction refused: epoch append(s) in flight on {log_path}:"
                 f" {[m.rsplit('/', 1)[-1] for m in markers]}"
             )
+        _recover_log(spark, log_path)
         tmp = log_path.rstrip("/") + "__compact_tmp"
         # the listing AND the materialization both happen inside the
         # critical section: writing to tmp fully materializes the merged
@@ -269,3 +301,44 @@ def compact_log(
         swap_directory(spark, tmp, log_path.rstrip("/"))
     finally:
         _remove_flag(spark, compacting)
+
+
+@dataclass(frozen=True)
+class Accumulator:
+    """One streamed accumulator over an epoch log. `partial(batch)` collapses
+    a micro-batch to a mergeable partial (the log's columns minus
+    `batch_id`); `merge(log)` folds any set of logged partials to the
+    merged answer, and compaction folds with that same merge."""
+
+    stream_schema: str
+    log_schema: str
+    partial: Callable[[DataFrame], DataFrame]
+    merge: Callable[[DataFrame], DataFrame]
+
+    def append(
+        self, spark: SparkSession, batch: DataFrame, log_path: str, batch_id: int
+    ) -> bool:
+        """Land `batch`'s partial as epoch `batch_id`; False on a replay."""
+        return guarded_append(
+            spark, log_path, self.log_schema, batch_id, self.partial(batch)
+        )
+
+    def read(self, spark: SparkSession, log_path: str) -> DataFrame:
+        """The merged answer over every logged partial."""
+        return self.merge(spark.read.schema(self.log_schema).parquet(log_path))
+
+    def compact(self, spark: SparkSession, log_path: str) -> None:
+        """Fold the log to its merged partial (`compact_log`)."""
+        compact_log(spark, log_path, lambda: self.read(spark, log_path))
+
+    def run(
+        self, spark: SparkSession, source_dir: str, log_path: str, checkpoint_dir: str
+    ) -> StreamingQuery:
+        """Drain the json files in `source_dir`, appending each epoch's
+        partial to `log_path`."""
+
+        def epoch(batch: DataFrame, batch_id: int) -> None:
+            self.append(batch.sparkSession, batch, log_path, batch_id)
+
+        stream = spark.readStream.schema(self.stream_schema).json(source_dir)
+        return drain(stream, checkpoint_dir, epoch)

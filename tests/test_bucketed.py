@@ -6,15 +6,15 @@ from __future__ import annotations
 
 import re
 
-from sentiment_analysis_data_pipeline_spark.sources.tables import load_table, write_bucketed
+from sentiment_analysis_data_pipeline_spark.sources.tables import write_bucketed
 from sentiment_analysis_data_pipeline_spark.sources.tables import drop_table_with_files as _drop_with_files
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_bucketed_join_is_shuffle_free(spark):
-    write_bucketed(load_table(spark, SF, "lineitem"), "bkt_lineitem", "l_orderkey", 8)
-    write_bucketed(load_table(spark, SF, "orders"), "bkt_orders", "o_orderkey", 8)
+    write_bucketed(spark.read.parquet(f"{SF}/lineitem.parquet"), "bkt_lineitem", "l_orderkey", 8)
+    write_bucketed(spark.read.parquet(f"{SF}/orders.parquet"), "bkt_orders", "o_orderkey", 8)
     try:
         # MERGE hint: at sf0.001 the orders side is broadcast-sized, which
         # would ALSO be shuffle-free but wouldn't exercise bucketing; at real
@@ -31,7 +31,7 @@ def test_bucketed_join_is_shuffle_free(spark):
             f"bucketed join still shuffles:\n{plan}"
         )
 
-        li, od = load_table(spark, SF, "lineitem"), load_table(spark, SF, "orders")
+        li, od = spark.read.parquet(f"{SF}/lineitem.parquet"), spark.read.parquet(f"{SF}/orders.parquet")
         n_plain = li.join(od, li["l_orderkey"] == od["o_orderkey"]).count()
         assert joined.count() == n_plain
     finally:
@@ -45,7 +45,7 @@ def test_bucketed_band_key_candidate_join_is_shuffle_free(spark):
     then a zero-Exchange sort-merge self-join over bucket files."""
     from sentiment_analysis_data_pipeline_spark.operators.dedup import minhash_band_keys
 
-    docs = load_table(spark, SF, "documents")
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
     write_bucketed(minhash_band_keys(docs, "text", "doc_id"), "bkt_bands", "band_key", 8)
     try:
         joined = spark.sql(

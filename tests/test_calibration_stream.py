@@ -46,7 +46,7 @@ def test_streamed_suite_equals_batch_bit_for_bit(spark, tmp_path):
     hist = str(tmp_path / "hist")
     # the corpus lands in three epochs split by doc_id
     for i in range(3):
-        C.append_batch(spark, docs.filter(F.col("doc_id") % 3 == i), hist, i)
+        C.HIST.append(spark, docs.filter(F.col("doc_id") % 3 == i), hist, i)
     assert _served_outputs(spark, hist) == _batch_outputs(spark)
 
 
@@ -54,7 +54,7 @@ def test_histogram_log_is_bounded_and_exact(spark, tmp_path):
     docs = _docs(spark)
     hist = str(tmp_path / "hist")
     for i in range(4):
-        C.append_batch(spark, docs.filter(F.col("doc_id") % 4 == i), hist, i)
+        C.HIST.append(spark, docs.filter(F.col("doc_id") % 4 == i), hist, i)
     log = spark.read.schema(C.HIST_SCHEMA).parquet(hist)
     # bounded: at most (sources x distinct sq) cells per epoch
     Q._view(spark, SF, "documents")
@@ -66,7 +66,7 @@ def test_histogram_log_is_bounded_and_exact(spark, tmp_path):
     # exact: merged cells equal the batch histogram
     merged = {
         (r["source"], r["sq"]): (r["pos_s"], r["n_s"])
-        for r in C.read_hist(spark, hist).collect()
+        for r in C.HIST.read(spark, hist).collect()
     }
     batch = {
         (r["source"], r["sq"]): (r["pos_s"], r["n_s"])
@@ -80,10 +80,10 @@ def test_histogram_log_is_bounded_and_exact(spark, tmp_path):
 def test_replayed_epoch_lands_nothing(spark, tmp_path):
     docs = _docs(spark).filter(F.col("doc_id") % 5 == 0)
     hist = str(tmp_path / "hist")
-    C.append_batch(spark, docs, hist, 0)
-    before = {tuple(r) for r in C.read_hist(spark, hist).collect()}
-    C.append_batch(spark, docs, hist, 0)  # foreachBatch retry
-    assert {tuple(r) for r in C.read_hist(spark, hist).collect()} == before
+    C.HIST.append(spark, docs, hist, 0)
+    before = {tuple(r) for r in C.HIST.read(spark, hist).collect()}
+    C.HIST.append(spark, docs, hist, 0)  # foreachBatch retry
+    assert {tuple(r) for r in C.HIST.read(spark, hist).collect()} == before
 
 
 def test_stream_end_to_end_and_compaction(spark, tmp_path):
@@ -97,12 +97,12 @@ def test_stream_end_to_end_and_compaction(spark, tmp_path):
         with open(source / name, "w") as f:
             for r in chunk:
                 f.write(json.dumps(r.asDict()) + "\n")
-    q = C.run_calibration_monitor(spark, str(source), hist, ckpt)
+    q = C.HIST.run(spark, str(source), hist, ckpt)
     q.awaitTermination(120)
     served = _served_outputs(spark, hist)
     assert served == _batch_outputs(spark)
     # compaction folds the log without changing any served read
-    C.compact_hist(spark, hist)
+    C.HIST.compact(spark, hist)
     assert _served_outputs(spark, hist) == served
     log = spark.read.schema(C.HIST_SCHEMA).parquet(hist)
     assert log.select("batch_id").distinct().count() == 1  # one folded stamp

@@ -10,7 +10,7 @@ shuffles left are the final pair aggregations, which are inherent."""
 from __future__ import annotations
 
 from sentiment_analysis_data_pipeline_spark.operators import dedup_index as DX
-from sentiment_analysis_data_pipeline_spark.sources.tables import load_table, write_bucketed_atomic
+from sentiment_analysis_data_pipeline_spark.sources.tables import write_bucketed_atomic
 from sentiment_analysis_data_pipeline_spark.sources.tables import drop_table_with_files as _drop_with_files
 
 SF = "/root/testdata/sf0.001"
@@ -29,7 +29,7 @@ def _shuffle_exchanges(df) -> int:
 
 
 def test_embedding_band_index_candidates(spark):
-    emb = load_table(spark, SF, "embeddings")
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     write_bucketed_atomic(DX.embedding_band_relation(spark, emb), "t_emb_idx", "band_key", 8)
     try:
         cand = DX.embedding_candidate_pairs(spark, "t_emb_idx")
@@ -57,7 +57,7 @@ def test_embedding_band_index_candidates(spark):
 
 
 def test_winnow_index_pairs(spark):
-    docs = load_table(spark, SF, "documents")
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
     write_bucketed_atomic(DX.winnow_fp_relation(spark, docs), "t_winnow_idx", "mh", 8)
     try:
         pairs = spark.sql(DX.winnow_pairs_over("t_winnow_idx"))
@@ -83,7 +83,7 @@ def test_new_batch_candidates_corpus_side_stays_in_place(spark):
     from sentiment_analysis_data_pipeline_spark.operators.dedup import minhash_band_keys
     from sentiment_analysis_data_pipeline_spark.sources.tables import write_bucketed
 
-    docs = load_table(spark, SF, "documents")
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
     corpus = docs.where("doc_id % 5 != 0")
     batch = docs.where("doc_id % 5 = 0")
     write_bucketed(minhash_band_keys(corpus, "text", "doc_id"), "t_nbc_idx", "band_key", 8)

@@ -1,5 +1,5 @@
 """processingTime soak of the streaming experiment monitor (round-9 verdict
-item 8): timer-driven epochs overlapping live compact_daily calls must end
+item 8): timer-driven epochs overlapping live DAILY.compact calls must end
 in either a clean fold or a LOUD flag-file error -- never a silently
 dropped or double-counted partial. The availableNow tests prove the happy
 path on sequential epochs; this one proves the mutual-exclusion contract
@@ -76,7 +76,7 @@ def test_processing_time_soak_with_live_compaction(spark, tmp_path):
             # loud error or a clean fold is a contract violation.
             if i % 2 == 1:
                 try:
-                    X.compact_daily(spark, daily)
+                    X.DAILY.compact(spark, daily)
                     compactions_ok += 1
                 except (IngestInFlight, CompactionInProgress):
                     compactions_refused += 1
@@ -103,7 +103,7 @@ def test_processing_time_soak_with_live_compaction(spark, tmp_path):
                     processing_time="300 milliseconds",
                 )
             try:
-                got = X.read_daily(spark, daily).agg(F.sum("n")).collect()[0][0]
+                got = X.DAILY.read(spark, daily).agg(F.sum("n")).collect()[0][0]
             except Exception:
                 got = 0
             if got == len(rows):
@@ -116,7 +116,7 @@ def test_processing_time_soak_with_live_compaction(spark, tmp_path):
 
     # ZERO replay/compaction violations: exact totals, whatever interleaving
     # happened (drops lose rows; double-counts add them -- both move sums).
-    daily_df = X.read_daily(spark, daily)
+    daily_df = X.DAILY.read(spark, daily)
     assert daily_df.agg(F.sum("n")).collect()[0][0] == len(rows)
     n_purchases = sum(1 for r in rows if r["event_type"] == "purchase")
     assert daily_df.agg(F.sum("c")).collect()[0][0] == n_purchases
@@ -128,7 +128,7 @@ def test_processing_time_soak_with_live_compaction(spark, tmp_path):
 
     # a final quiescent compaction always succeeds and changes nothing
     board_before = [tuple(r) for r in X.read_sprt(spark, daily).collect()]
-    X.compact_daily(spark, daily)
+    X.DAILY.compact(spark, daily)
     assert [tuple(r) for r in X.read_sprt(spark, daily).collect()] == board_before
     stamps = (
         spark.read.schema(X.DAILY_SCHEMA)

@@ -25,13 +25,20 @@ def _events_us(spark):
     )
 
 
+def _land(spark, batch, daily: str, users: str, batch_id: int) -> None:
+    """One epoch as run_experiment_monitor lands it: daily partial, then
+    first-seen users."""
+    X.DAILY.append(spark, batch, daily, batch_id)
+    X.append_users(spark, batch, users, batch_id)
+
+
 def test_streamed_sprt_and_srm_equal_batch_bit_for_bit(spark, tmp_path):
     ev = _events_us(spark)
     daily = str(tmp_path / "daily")
     users = str(tmp_path / "users")
     # the corpus lands in three epochs split by event_id
     for i in range(3):
-        X.append_batch(spark, ev.filter(F.col("event_id") % 3 == i), daily, users, i)
+        _land(spark, ev.filter(F.col("event_id") % 3 == i), daily, users, i)
 
     streamed = [tuple(r) for r in X.read_sprt(spark, daily).collect()]
     batch = [tuple(r) for r in Q.REGISTRY["sprt_ab"][0](spark, SF).collect()]
@@ -47,8 +54,8 @@ def test_first_seen_user_log_never_duplicates(spark, tmp_path):
     daily = str(tmp_path / "daily")
     users = str(tmp_path / "users")
     # two epochs with heavily overlapping users
-    X.append_batch(spark, ev.filter(F.col("event_id") % 2 == 0), daily, users, 0)
-    X.append_batch(spark, ev.filter(F.col("event_id") % 2 == 1), daily, users, 1)
+    _land(spark, ev.filter(F.col("event_id") % 2 == 0), daily, users, 0)
+    _land(spark, ev.filter(F.col("event_id") % 2 == 1), daily, users, 1)
     log = spark.read.schema(X.USERS_SCHEMA).parquet(users)
     n_rows = log.count()
     n_distinct = log.select("user_id").distinct().count()
@@ -60,11 +67,11 @@ def test_replayed_epoch_lands_nothing(spark, tmp_path):
     ev = _events_us(spark).filter(F.col("event_id") % 5 == 0)
     daily = str(tmp_path / "daily")
     users = str(tmp_path / "users")
-    X.append_batch(spark, ev, daily, users, 0)
-    before_d = {tuple(r) for r in X.read_daily(spark, daily).collect()}
+    _land(spark, ev, daily, users, 0)
+    before_d = {tuple(r) for r in X.DAILY.read(spark, daily).collect()}
     before_u = spark.read.schema(X.USERS_SCHEMA).parquet(users).count()
-    X.append_batch(spark, ev, daily, users, 0)  # foreachBatch retry
-    assert {tuple(r) for r in X.read_daily(spark, daily).collect()} == before_d
+    _land(spark, ev, daily, users, 0)  # foreachBatch retry
+    assert {tuple(r) for r in X.DAILY.read(spark, daily).collect()} == before_d
     assert spark.read.schema(X.USERS_SCHEMA).parquet(users).count() == before_u
 
 
@@ -100,7 +107,7 @@ def test_stream_end_to_end_and_compaction(spark, tmp_path):
 
     # compaction folds the epoch log; the served board is unchanged
     before = [tuple(r) for r in board]
-    X.compact_daily(spark, daily)
+    X.DAILY.compact(spark, daily)
     assert [tuple(r) for r in X.read_sprt(spark, daily).collect()] == before
     log = spark.read.schema(X.DAILY_SCHEMA).parquet(daily)
     assert log.select("batch_id").distinct().count() == 1  # one merged stamp

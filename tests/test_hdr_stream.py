@@ -40,13 +40,13 @@ def test_streamed_hist_equals_batch_hist(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     _write_drop(str(source / "a.json"), EVENTS_A)
-    q = hdr_stream.run_streaming_hdr(spark, str(source), cells, ckpt)
+    q = hdr_stream.CELLS.run(spark, str(source), cells, ckpt)
     q.awaitTermination(120)
     _write_drop(str(source / "b.json"), EVENTS_B)
-    q = hdr_stream.run_streaming_hdr(spark, str(source), cells, ckpt)
+    q = hdr_stream.CELLS.run(spark, str(source), cells, ckpt)
     q.awaitTermination(120)
 
-    streamed = _cells_dict(hdr_stream.read_hist(spark, cells))
+    streamed = _cells_dict(hdr_stream.CELLS.read(spark, cells))
     batch = _cells_dict(
         hdr_cells(spark.createDataFrame(EVENTS_A + EVENTS_B, SCHEMA))
     )
@@ -67,12 +67,12 @@ def test_streamed_hist_equals_batch_hist(spark, tmp_path):
 def test_replayed_epoch_lands_nothing(spark, tmp_path):
     cells = str(tmp_path / "cells")
     batch = spark.createDataFrame(EVENTS_A, SCHEMA)
-    hdr_stream.append_batch_cells(spark, batch, cells, batch_id=0)
-    before = _cells_dict(hdr_stream.read_hist(spark, cells))
-    hdr_stream.append_batch_cells(spark, batch, cells, batch_id=0)
-    assert _cells_dict(hdr_stream.read_hist(spark, cells)) == before
-    hdr_stream.append_batch_cells(spark, batch, cells, batch_id=1)
-    after = _cells_dict(hdr_stream.read_hist(spark, cells))
+    hdr_stream.CELLS.append(spark, batch, cells, batch_id=0)
+    before = _cells_dict(hdr_stream.CELLS.read(spark, cells))
+    hdr_stream.CELLS.append(spark, batch, cells, batch_id=0)
+    assert _cells_dict(hdr_stream.CELLS.read(spark, cells)) == before
+    hdr_stream.CELLS.append(spark, batch, cells, batch_id=1)
+    after = _cells_dict(hdr_stream.CELLS.read(spark, cells))
     assert after == {k: 2 * v for k, v in before.items()}
 
 
@@ -81,13 +81,13 @@ def test_served_quantile_lower_bound_envelope(spark, tmp_path):
     within the 2^-HDR_SUB_BITS relative envelope of it."""
     cells = str(tmp_path / "cells")
     for i, ev in enumerate((EVENTS_A, EVENTS_B)):
-        hdr_stream.append_batch_cells(
+        hdr_stream.CELLS.append(
             spark, spark.createDataFrame(ev, SCHEMA), cells, i
         )
     served = {
         r["segment"]: (r["n"], r["p_est"])
         for r in hdr_stream.quantiles_from_hist(
-            hdr_stream.read_hist(spark, cells), percent=50
+            hdr_stream.CELLS.read(spark, cells), percent=50
         ).collect()
     }
     import math
@@ -108,12 +108,12 @@ def test_served_quantile_lower_bound_envelope(spark, tmp_path):
 def test_compaction_preserves_answers(spark, tmp_path):
     cells = str(tmp_path / "cells")
     for i, ev in enumerate((EVENTS_A, EVENTS_B)):
-        hdr_stream.append_batch_cells(
+        hdr_stream.CELLS.append(
             spark, spark.createDataFrame(ev, SCHEMA), cells, i
         )
-    before = _cells_dict(hdr_stream.read_hist(spark, cells))
-    hdr_stream.compact_cells(spark, cells)
-    assert _cells_dict(hdr_stream.read_hist(spark, cells)) == before
+    before = _cells_dict(hdr_stream.CELLS.read(spark, cells))
+    hdr_stream.CELLS.compact(spark, cells)
+    assert _cells_dict(hdr_stream.CELLS.read(spark, cells)) == before
     ids = (
         spark.read.schema(hdr_stream.CELLS_SCHEMA)
         .parquet(cells)

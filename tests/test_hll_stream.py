@@ -36,10 +36,10 @@ def test_streamed_estimates_exact_and_mergeable(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     _write_drop(str(source / "a.json"), EVENTS_A)
-    q = hll_stream.run_streaming_hll(spark, str(source), log, ckpt)
+    q = hll_stream.SKETCH.run(spark, str(source), log, ckpt)
     q.awaitTermination(120)
     _write_drop(str(source / "b.json"), EVENTS_B)
-    q = hll_stream.run_streaming_hll(spark, str(source), log, ckpt)
+    q = hll_stream.SKETCH.run(spark, str(source), log, ckpt)
     q.awaitTermination(120)
 
     # two epochs landed, one partial per (segment, epoch)
@@ -62,8 +62,8 @@ def test_streamed_union_equals_batch_union(spark, tmp_path):
     log = str(tmp_path / "hll_log")
     ba = spark.createDataFrame(EVENTS_A, hll_stream.EVENT_STREAM_SCHEMA)
     bb = spark.createDataFrame(EVENTS_B, hll_stream.EVENT_STREAM_SCHEMA)
-    hll_stream.append_batch_sketches(spark, ba, log, batch_id=0)
-    hll_stream.append_batch_sketches(spark, bb, log, batch_id=1)
+    hll_stream.SKETCH.append(spark, ba, log, batch_id=0)
+    hll_stream.SKETCH.append(spark, bb, log, batch_id=1)
     streamed = _est(hll_stream.read_estimates(spark, log))
     batch = {
         r["event_type"]: r["d"]
@@ -79,17 +79,17 @@ def test_streamed_union_equals_batch_union(spark, tmp_path):
 def test_replayed_epoch_lands_nothing_and_compact(spark, tmp_path):
     log = str(tmp_path / "hll_log")
     ba = spark.createDataFrame(EVENTS_A, hll_stream.EVENT_STREAM_SCHEMA)
-    hll_stream.append_batch_sketches(spark, ba, log, batch_id=0)
+    hll_stream.SKETCH.append(spark, ba, log, batch_id=0)
     n_before = spark.read.schema(hll_stream.SKETCH_SCHEMA).parquet(log).count()
     # a foreachBatch retry re-runs the epoch with the SAME batch_id
-    hll_stream.append_batch_sketches(spark, ba, log, batch_id=0)
+    hll_stream.SKETCH.append(spark, ba, log, batch_id=0)
     assert spark.read.schema(hll_stream.SKETCH_SCHEMA).parquet(log).count() == n_before
     # a NEW epoch still lands; estimates unchanged by the replay
     bb = spark.createDataFrame(EVENTS_B, hll_stream.EVENT_STREAM_SCHEMA)
-    hll_stream.append_batch_sketches(spark, bb, log, batch_id=1)
+    hll_stream.SKETCH.append(spark, bb, log, batch_id=1)
     before = _est(hll_stream.read_estimates(spark, log))
     # compaction folds the log to one partial per segment, same answers
-    hll_stream.compact_sketches(spark, log)
+    hll_stream.SKETCH.compact(spark, log)
     folded = spark.read.schema(hll_stream.SKETCH_SCHEMA).parquet(log).collect()
     assert {r["batch_id"] for r in folded} == {-1}
     assert len(folded) == 3  # click/view/buy

@@ -12,12 +12,13 @@ merged totals never drop or double-count a partial.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from sentiment_analysis_data_pipeline_spark.streaming import _log, drift_stream
+from sentiment_analysis_data_pipeline_spark.streaming import _log, drift_stream, hll_stream
 
 SCHEMA = drift_stream.BANDS_SCHEMA
 
@@ -162,3 +163,28 @@ def test_compaction_reads_fresh_listing_not_stale_snapshot(spark, tmp_path):
     assert _total(spark, log) == 15  # the late epoch survived the fold
     rows = spark.read.schema(SCHEMA).parquet(log).collect()
     assert {r["batch_id"] for r in rows} == {_log.COMPACTED_STAMP}
+
+
+def test_compaction_killed_mid_swap_rolls_back(spark, tmp_path):
+    """A compaction killed between swap_directory's two renames leaves no
+    live log: the old one sits in `<log>__old_<app>`, the staged fold in
+    `<log>__compact_tmp`. The next append rolls the old log back instead of
+    starting a fresh one, so no landed user is lost and nothing is left
+    behind."""
+    epochs = [
+        spark.range(i * 1000, (i + 1) * 1000).selectExpr("'view' AS event_type", "id AS user_id")
+        for i in range(3)
+    ]
+    crashed, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    for log in (crashed, clean):
+        for i, batch in enumerate(epochs[:2]):
+            hll_stream.SKETCH.append(spark, batch, log, i)
+    app = spark.sparkContext.applicationId.replace("-", "_").replace(".", "_")
+    shutil.copytree(crashed, crashed + "__compact_tmp")
+    os.rename(crashed, f"{crashed}__old_{app}")
+    for log in (crashed, clean):
+        assert hll_stream.SKETCH.append(spark, epochs[2], log, 2)
+    want = hll_stream.read_global_estimate(spark, clean)
+    assert want > 2_000
+    assert hll_stream.read_global_estimate(spark, crashed) == want
+    assert sorted(os.listdir(tmp_path)) == ["clean", "crashed"]

@@ -35,13 +35,13 @@ def test_streamed_reservoir_equals_batch_sample(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     _write_drop(str(source / "a.json"), DROP_A)
-    q = RS.run_streaming_reservoir(spark, str(source), sample, ckpt)
+    q = RS.SAMPLE.run(spark, str(source), sample, ckpt)
     q.awaitTermination(120)
     _write_drop(str(source / "b.json"), DROP_B)
-    q = RS.run_streaming_reservoir(spark, str(source), sample, ckpt)
+    q = RS.SAMPLE.run(spark, str(source), sample, ckpt)
     q.awaitTermination(120)
 
-    streamed = _rows(RS.read_sample(spark, sample))
+    streamed = _rows(RS.SAMPLE.read(spark, sample))
     batch = _rows(
         RS.batch_sample(spark.createDataFrame(DROP_A + DROP_B, SCHEMA))
     )
@@ -64,19 +64,19 @@ def test_streamed_reservoir_equals_batch_sample(spark, tmp_path):
 def test_replayed_epoch_lands_nothing(spark, tmp_path):
     sample = str(tmp_path / "sample")
     batch = spark.createDataFrame(DROP_A, SCHEMA)
-    RS.append_batch_sample(spark, batch, sample, batch_id=0)
-    before = _rows(RS.read_sample(spark, sample))
-    RS.append_batch_sample(spark, batch, sample, batch_id=0)  # retry
-    assert _rows(RS.read_sample(spark, sample)) == before
+    RS.SAMPLE.append(spark, batch, sample, batch_id=0)
+    before = _rows(RS.SAMPLE.read(spark, sample))
+    RS.SAMPLE.append(spark, batch, sample, batch_id=0)  # retry
+    assert _rows(RS.SAMPLE.read(spark, sample)) == before
 
 
 def test_compaction_preserves_sample_and_weighted_semantics(spark, tmp_path):
     sample = str(tmp_path / "sample")
     for i, drop in enumerate((DROP_A, DROP_B)):
-        RS.append_batch_sample(spark, spark.createDataFrame(drop, SCHEMA), sample, i)
-    before = _rows(RS.read_sample(spark, sample))
-    RS.compact_samples(spark, sample)
-    assert _rows(RS.read_sample(spark, sample)) == before
+        RS.SAMPLE.append(spark, spark.createDataFrame(drop, SCHEMA), sample, i)
+    before = _rows(RS.SAMPLE.read(spark, sample))
+    RS.SAMPLE.compact(spark, sample)
+    assert _rows(RS.SAMPLE.read(spark, sample)) == before
     ids = (
         spark.read.schema(RS.SAMPLE_SCHEMA)
         .parquet(sample)
@@ -88,8 +88,8 @@ def test_compaction_preserves_sample_and_weighted_semantics(spark, tmp_path):
     # weighted semantics ride along: a later giant-weight doc displaces a
     # reservoir member when it arrives
     giant = spark.createDataFrame([(999, "s0", 10_000_000)], SCHEMA)
-    RS.append_batch_sample(spark, giant, sample, batch_id=7)
-    after = {r["doc_id"] for r in RS.read_sample(spark, sample).collect()}
+    RS.SAMPLE.append(spark, giant, sample, batch_id=7)
+    after = {r["doc_id"] for r in RS.SAMPLE.read(spark, sample).collect()}
     assert 999 in after
 
 
@@ -108,6 +108,6 @@ def test_stream_matches_registry_batch_query(spark, tmp_path):
         "doc_id", "source", "n_chars"
     )
     sample = str(tmp_path / "sample")
-    RS.append_batch_sample(spark, docs, sample, batch_id=0)
-    got = {(r["segment"], r["doc_id"]) for r in RS.read_sample(spark, sample).collect()}
+    RS.SAMPLE.append(spark, docs, sample, batch_id=0)
+    got = {(r["segment"], r["doc_id"]) for r in RS.SAMPLE.read(spark, sample).collect()}
     assert got == want

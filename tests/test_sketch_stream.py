@@ -39,13 +39,13 @@ def test_streamed_sketch_equals_batch_sketch(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     _write_drop(str(source / "a.json"), DOCS_A)
-    q = sketch_stream.run_streaming_countmin(spark, str(source), cells, ckpt)
+    q = sketch_stream.CELLS.run(spark, str(source), cells, ckpt)
     q.awaitTermination(120)
     _write_drop(str(source / "b.json"), DOCS_B)
-    q = sketch_stream.run_streaming_countmin(spark, str(source), cells, ckpt)
+    q = sketch_stream.CELLS.run(spark, str(source), cells, ckpt)
     q.awaitTermination(120)
 
-    streamed = _cells_dict(sketch_stream.read_sketch(spark, cells))
+    streamed = _cells_dict(sketch_stream.CELLS.read(spark, cells))
     batch = _cells_dict(
         countmin_cells(
             spark.createDataFrame(DOCS_A + DOCS_B, "doc_id long, text string")
@@ -70,21 +70,21 @@ def test_streamed_sketch_equals_batch_sketch(spark, tmp_path):
 def test_replayed_epoch_lands_nothing(spark, tmp_path):
     cells = str(tmp_path / "cells")
     batch = spark.createDataFrame(DOCS_A, "doc_id long, text string")
-    sketch_stream.append_batch_cells(spark, batch, cells, batch_id=0)
-    before = _cells_dict(sketch_stream.read_sketch(spark, cells))
+    sketch_stream.CELLS.append(spark, batch, cells, batch_id=0)
+    before = _cells_dict(sketch_stream.CELLS.read(spark, cells))
     # a foreachBatch retry re-runs the epoch with the SAME batch_id
-    sketch_stream.append_batch_cells(spark, batch, cells, batch_id=0)
-    assert _cells_dict(sketch_stream.read_sketch(spark, cells)) == before
+    sketch_stream.CELLS.append(spark, batch, cells, batch_id=0)
+    assert _cells_dict(sketch_stream.CELLS.read(spark, cells)) == before
     # a NEW epoch still lands
-    sketch_stream.append_batch_cells(spark, batch, cells, batch_id=1)
-    after = _cells_dict(sketch_stream.read_sketch(spark, cells))
+    sketch_stream.CELLS.append(spark, batch, cells, batch_id=1)
+    after = _cells_dict(sketch_stream.CELLS.read(spark, cells))
     assert after == {k: 2 * v for k, v in before.items()}
 
 
 def test_estimates_never_underestimate_and_compaction(spark, tmp_path):
     cells = str(tmp_path / "cells")
     for i, docs in enumerate((DOCS_A, DOCS_B)):
-        sketch_stream.append_batch_cells(
+        sketch_stream.CELLS.append(
             spark, spark.createDataFrame(docs, "doc_id long, text string"), cells, i
         )
     toks = spark.createDataFrame(
@@ -93,7 +93,7 @@ def test_estimates_never_underestimate_and_compaction(spark, tmp_path):
     est = {
         r["token"]: r["cm_estimate"]
         for r in estimate_counts(
-            sketch_stream.read_sketch(spark, cells), toks
+            sketch_stream.CELLS.read(spark, cells), toks
         ).collect()
     }
     exact = {"apple": 5, "banana": 3, "cherry": 3, "missing": 0}
@@ -108,9 +108,9 @@ def test_estimates_never_underestimate_and_compaction(spark, tmp_path):
     # instead of vanishing (all 4 addressed cells empty here)
     assert est["missing"] == 0
     # compaction folds the log to one batch_id=-1 partial, same merged state
-    before = _cells_dict(sketch_stream.read_sketch(spark, cells))
-    sketch_stream.compact_cells(spark, cells)
-    assert _cells_dict(sketch_stream.read_sketch(spark, cells)) == before
+    before = _cells_dict(sketch_stream.CELLS.read(spark, cells))
+    sketch_stream.CELLS.compact(spark, cells)
+    assert _cells_dict(sketch_stream.CELLS.read(spark, cells)) == before
     ids = (
         spark.read.schema(sketch_stream.CELLS_SCHEMA)
         .parquet(cells)
@@ -135,7 +135,7 @@ def test_streamed_estimates_match_batch_audit_query(spark, tmp_path):
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     # two "epochs" of the corpus split by doc_id parity
     for i in (0, 1):
-        sketch_stream.append_batch_cells(
+        sketch_stream.CELLS.append(
             spark, docs.filter(F.col("doc_id") % 2 == i), cells, i
         )
     audit = Q.REGISTRY["countmin_heavy_hitters"][0](spark, sf).collect()
@@ -143,7 +143,7 @@ def test_streamed_estimates_match_batch_audit_query(spark, tmp_path):
     est = {
         r["token"]: r["cm_estimate"]
         for r in estimate_counts(
-            sketch_stream.read_sketch(spark, cells), toks
+            sketch_stream.CELLS.read(spark, cells), toks
         ).collect()
     }
     for r in audit:
@@ -176,12 +176,12 @@ def test_compact_is_swap_based_no_partial_live_state(spark, tmp_path):
 
     cells = str(tmp_path / "cells")
     for i, docs in enumerate((DOCS_A, DOCS_B)):
-        sketch_stream.append_batch_cells(
+        sketch_stream.CELLS.append(
             spark, spark.createDataFrame(docs, "doc_id long, text string"), cells, i
         )
-    before = _cells_dict(sketch_stream.read_sketch(spark, cells))
-    sketch_stream.compact_cells(spark, cells)
-    assert _cells_dict(sketch_stream.read_sketch(spark, cells)) == before
+    before = _cells_dict(sketch_stream.CELLS.read(spark, cells))
+    sketch_stream.CELLS.compact(spark, cells)
+    assert _cells_dict(sketch_stream.CELLS.read(spark, cells)) == before
     leftovers = [
         p
         for p in os.listdir(tmp_path)

@@ -1,16 +1,28 @@
 """The streaming contract (streaming/_log.py): every foreachBatch runner
 drains through `_log.drain`, every sink guard reads what already landed
-through `_log.landed_keys`, and the epoch log stamps its own batch_id."""
+through `_log.landed_keys`, the epoch log stamps its own batch_id, and
+every accumulator is an `_log.Accumulator` that keeps one
+append/read/compact/run contract."""
 
 from __future__ import annotations
 
 import ast
+import importlib
 import json
+import os
 import shutil
 from pathlib import Path
 
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, DoubleType, StringType
+
 from sentiment_analysis_data_pipeline_spark import streaming
-from sentiment_analysis_data_pipeline_spark.streaming._log import landed_keys
+from sentiment_analysis_data_pipeline_spark.streaming._log import (
+    COMPACTED_STAMP,
+    Accumulator,
+    landed_keys,
+)
 from sentiment_analysis_data_pipeline_spark.streaming.ingest import run_sentiment_stream
 
 STREAMING = Path(streaming.__file__).parent
@@ -60,8 +72,11 @@ def test_runners_drain_through_one_helper():
     }
     runners = {}
     for name, tree in _modules():
-        for top in tree.body:
-            if isinstance(top, ast.FunctionDef) and top.name.startswith("run_"):
+        tops = [t for t in tree.body if isinstance(t, ast.FunctionDef)]
+        for cls in (t for t in tree.body if isinstance(t, ast.ClassDef)):
+            tops += [f for f in cls.body if isinstance(f, ast.FunctionDef)]
+        for top in tops:
+            if top.name == "run" or top.name.startswith("run_"):
                 last = top.body[-1]
                 runners[top.name] = (
                     isinstance(last, ast.Return)
@@ -70,7 +85,8 @@ def test_runners_drain_through_one_helper():
                     and last.value.func.id == "drain"
                 )
     assert runners.pop("run_curation_stream") is False
-    assert len(runners) == 12 and all(runners.values()), runners
+    # six stream runners plus Accumulator.run, which runs all seven accumulators
+    assert len(runners) == 7 and runners.pop("run") and all(runners.values()), runners
 
 
 def test_sink_guards_read_through_landed_keys():
@@ -150,3 +166,107 @@ def test_sentiment_stream_lands_over_a_killed_first_processed_append(spark, tmp_
     assert query.exception() is None
     got = {r["url"] for r in spark.read.parquet(str(proc)).collect()}
     assert got == {"https://e.com/0", "https://e.com/1"}
+
+
+def _accumulators() -> list:
+    """Every module-level Accumulator value under streaming/."""
+    out = []
+    for path in sorted(STREAMING.glob("*.py")):
+        module = importlib.import_module(f"{streaming.__name__}.{path.stem}")
+        for name, value in sorted(vars(module).items()):
+            if isinstance(value, Accumulator):
+                out.append(pytest.param(value, id=f"{path.stem}.{name}"))
+    return out
+
+
+ACCUMULATORS = _accumulators()
+_WORDS = ["alpha beta", "beta gamma delta", "gamma"]
+
+
+def _drop(schema, start: int, n: int) -> list[dict]:
+    """n deterministic rows of a stream schema: strings cycle through three
+    phrases (segments, texts), doubles step by 0.75, longs are distinct."""
+
+    def value(field, i):
+        if isinstance(field.dataType, StringType):
+            return _WORDS[i % len(_WORDS)]
+        if isinstance(field.dataType, DoubleType):
+            return i * 0.75
+        return i * 7_919 + 1
+
+    return [{f.name: value(f, i) for f in schema.fields} for i in range(start, start + n)]
+
+
+def _read(acc: Accumulator, spark, log: str) -> list[tuple]:
+    """The merged read's sorted rows; a sketch column compares by its
+    HLL estimate (union order may change the bytes, not the estimate)."""
+    df = acc.read(spark, log)
+    cols = [
+        F.expr(f"hll_sketch_estimate({c.name})").alias(c.name)
+        if isinstance(c.dataType, BinaryType)
+        else F.col(c.name)
+        for c in df.schema.fields
+    ]
+    return sorted(map(tuple, df.select(cols).collect()))
+
+
+def _stamps(acc: Accumulator, spark, log: str) -> set[int]:
+    rows = spark.read.schema(acc.log_schema).parquet(log).select("batch_id").distinct()
+    return {r["batch_id"] for r in rows.collect()}
+
+
+def test_seven_accumulators():
+    assert len(ACCUMULATORS) == 7, [p.id for p in ACCUMULATORS]
+
+
+@pytest.mark.parametrize("acc", ACCUMULATORS)
+def test_accumulator_contract(spark, tmp_path, acc):
+    schema = spark.createDataFrame([], acc.stream_schema).schema
+    drops = [_drop(schema, 0, 40), _drop(schema, 40, 40)]
+    batches = [spark.createDataFrame(d, schema) for d in drops]
+    log = str(tmp_path / "log")
+
+    # a replayed batch_id lands nothing; a new one lands
+    assert acc.append(spark, batches[0], log, 0)
+    once = _read(acc, spark, log)
+    assert not acc.append(spark, batches[0], log, 0)
+    assert _read(acc, spark, log) == once
+    assert acc.append(spark, batches[1], log, 1)
+    assert _stamps(acc, spark, log) == {0, 1}
+    merged = _read(acc, spark, log)
+
+    # compaction keeps the read, folds every stamp, and leaves nothing staged
+    acc.compact(spark, log)
+    assert _read(acc, spark, log) == merged
+    assert _stamps(acc, spark, log) == {COMPACTED_STAMP}
+    assert os.listdir(tmp_path) == ["log"]
+
+    # one run over the two drops as json files reads as the two appends
+    source = tmp_path / "incoming"
+    source.mkdir()
+    for i, drop in enumerate(drops):
+        (source / f"{i}.json").write_text("".join(json.dumps(r) + "\n" for r in drop))
+    streamed = str(tmp_path / "streamed")
+    query = acc.run(spark, str(source), streamed, str(tmp_path / "ckpt"))
+    query.awaitTermination(120)
+    assert query.exception() is None
+    assert _read(acc, spark, streamed) == merged
+
+
+def test_log_protocol_runs_through_accumulator():
+    """Outside _log.py nothing calls compact_log, and guarded_append is
+    called only by experiment's first-seen user log, whose anti-join needs
+    the log itself."""
+    package = STREAMING.parent
+    calls = set()
+    for path in sorted(package.rglob("*.py")):
+        module = path.relative_to(package).as_posix()
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Call):
+                    continue
+                fn = node.func
+                name = fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)
+                if name in ("compact_log", "guarded_append") and module != "streaming/_log.py":
+                    calls.add((module, getattr(top, "name", None), name))
+    assert calls == {("streaming/experiment_stream.py", "append_users", "guarded_append")}
